@@ -188,8 +188,6 @@ object GraftRead {
       if (multiRun.isEmpty) None
       else {
         val fs = multiRun.values.flatten.toSeq
-        val bucketMergeOn =
-          !table.properties.get("graft.bucketMergeRead").contains("false")
         // bucket ids may legitimately EXCEED table.bucketNum mid
         // DOWN-re-bucket: the count flips before the rewrite, so a
         // snapshot read (and the rewrite's own read) sees old-mapping
@@ -207,7 +205,7 @@ object GraftRead {
         // prefer the shuffle-free bucket-aligned k-way merge (M1) — handles
         // schema evolution in-merge; the aggregate-based fallback covers
         // custom merge operators only
-        if (bucketMergeOn && BucketMergeRead.supports(tm, schema, fs)) {
+        if (BucketMergeRead.supports(tm, schema, fs)) {
           bucketMerged = true
           Some(BucketMergeRead.read(spark, tm, schema, fs))
         } else Some(mergeRead(spark, table, schema, fs))

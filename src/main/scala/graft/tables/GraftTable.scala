@@ -37,15 +37,13 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
     * pushdown, zone-map + runtime file pruning, KeyGroupedPartitioning, and
     * the COLUMNAR merge (batch pass-through on unique-key stretches) — the
     * identical surface `spark.table("graft_cat.ns.t")` uses. Agg-only
-    * custom merge operators (and an explicit bucketMergeRead=false) stay on
-    * the library path for the aggregate-merge fallback. */
+    * custom merge operators stay on the library path for the
+    * aggregate-merge fallback. */
   def toDF: DataFrame = {
     val t = info
-    val routeV2 =
-      !t.properties.get("graft.bucketMergeRead").contains("false") &&
-        (!t.hasPrimaryKey ||
-          t.properties.get(TableInfo.SkipMergeOnReadProp).contains("true") ||
-          GraftRead.bucketMergeSupported(t, schema))
+    val routeV2 = !t.hasPrimaryKey ||
+      t.properties.get(TableInfo.SkipMergeOnReadProp).contains("true") ||
+      GraftRead.bucketMergeSupported(t, schema)
     if (routeV2)
       org.apache.spark.sql.graft.StreamShim.dsv2Df(spark,
         new graft.catalog.GraftTableV2(spark, this, tablePath))
@@ -889,9 +887,8 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
         }
       }
       val rangeCols = info.rangeColumns
-      if (rangeCols.nonEmpty &&
-        !spark.conf.getOption("spark.graft.allowFullTableUpsert")
-          .exists(_.toBoolean)) {
+      if (rangeCols.nonEmpty && !GraftTable.boolSetting(
+          "spark.graft.allowFullTableUpsert", spark.conf.getOption).contains(true)) {
         val hasRangeConjunct = all.exists { c =>
           val refs = c.collect { case a: CUA => a.nameParts.head }.toSet
           refs.nonEmpty && refs.forall(r => rangeCols.exists(res(_, r)))
@@ -2846,9 +2843,9 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
       // behavior, where a typo'd batch column fails the write instead of
       // silently splitting the table.
       val allow = mergeSchemaOverride
-        .orElse(t.properties.get(GraftTable.AutoMergeProp).map(_.toBoolean))
-        .getOrElse(spark.conf.getOption(GraftTable.AutoMergeConf)
-          .forall(_.toBoolean))
+        .orElse(GraftTable.boolSetting(GraftTable.AutoMergeProp, t.properties.get))
+        .getOrElse(GraftTable.boolSetting(GraftTable.AutoMergeConf,
+          spark.conf.getOption).getOrElse(true))
       if (!allow) throw new IllegalArgumentException(
         s"batch adds columns not in the table schema " +
           s"(${added.map(_.name).mkString(", ")}) and schema merging is " +
@@ -2965,6 +2962,14 @@ object GraftTable {
   val AutoMergeProp = "graft.schema.autoMerge"
   /** Session-conf form of [[AutoMergeProp]]. */
   val AutoMergeConf = "spark.graft.schema.autoMerge"
+
+  /** The boolean setting `key` as found by `lookup` (a session conf or a
+    * table property map); a value other than true/false fails naming the
+    * key instead of surfacing mid-operation as a bare parse error. */
+  private[graft] def boolSetting(key: String,
+      lookup: String => Option[String]): Option[Boolean] =
+    lookup(key).map(v => v.toBooleanOption.getOrElse(
+      throw new IllegalArgumentException(s"$key must be true or false, got '$v'")))
 
   /** Resolve requested partition/key columns against the data's field
     * names, case-insensitively when the session is (the Spark default —

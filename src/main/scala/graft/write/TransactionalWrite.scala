@@ -287,42 +287,6 @@ object TransactionalWrite {
     }
   }
 
-  /** r17 (VERDICT r16 item 3): PREPARED-CHAIN CACHE. Every commit used to
-    * reconstruct the normalize -> preMerge -> dir-cols -> sort Dataset
-    * chain from scratch — ~10 intermediate Datasets, each paying an eager
-    * analyzer pass — for a batch whose LOGICAL PLAN is identical commit
-    * after commit (streaming sinks, upsert loops, CDC appliers). Cache the
-    * CONSTRUCTED chain keyed on (session, batch analyzed plan, table state,
-    * write flags): this memoizes plan STRUCTURE only — the chain is lazy,
-    * every commit still executes it from the parquet inputs, so no data or
-    * results are ever reused (probe: driver pre-job ~0.08-0.11 s ->
-    * ~0.05-0.08 s per commit; driver work is serial at any scale, guide
-    * §5). Invalidation is
-    * by key: any schema/bucket/property/flag change is a different
-    * TableInfo, and a different batch plan is a different key. Tables with
-    * QUARANTINE expectations are never cached (their normalize performs an
-    * eager side-effecting write per batch). Escape hatch:
-    * `spark.graft.write.planCache=false`. */
-  private final case class PreparedChain(
-      out: DataFrame,
-      partDirCols: Seq[String],
-      existCols: String,
-      mergedSchema: StructType,
-      inertInput: Boolean,
-      flatBuckets: Boolean)
-
-  private val chainCache =
-    new java.util.LinkedHashMap[AnyRef, PreparedChain](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[AnyRef, PreparedChain]): Boolean = size() > 16
-    }
-
-  /** Test/ops introspection: current number of cached chains. */
-  private[graft] def chainCacheSize: Int =
-    chainCache.synchronized(chainCache.size())
-  private[graft] def chainCacheClear(): Unit =
-    chainCache.synchronized(chainCache.clear())
-
   /** Write `df` as one commit's files. Returns the unpublished per-partition
     * commits; the caller publishes them via MetaStore.commit (optimistic CAS). */
   def writeFiles(
@@ -351,169 +315,123 @@ object TransactionalWrite {
     // CommitOp.Rewrite paths already avoid. Hard invariants still run.
     val ingestion = !internal &&
       (commitOp == CommitOp.Append || commitOp == CommitOp.Merge)
-    val flatPref = spark.conf
-      .getOption("spark.graft.write.flatBucketWrite").forall(_.toBoolean)
-    val skipAqePref = spark.conf
-      .getOption("spark.graft.write.skipAqeWhenInert").forall(_.toBoolean)
+    val df0 = if (tombstone) dfIn else normalize(table, dfIn, ingestion)
+    val df = if (table.hasPrimaryKey && !skipPreMerge) preMerge(table, df0) else df0
+    val existCols =
+      if (tombstone)
+        ((table.rangeColumns ++ table.hashColumns).distinct :+ Tombstone.Marker)
+          .mkString(",")
+      else df.columns.mkString(",")
 
-    def buildChain(): PreparedChain = {
-      val df0 = if (tombstone) dfIn else normalize(table, dfIn, ingestion)
-      val df = if (table.hasPrimaryKey && !skipPreMerge) preMerge(table, df0) else df0
-      val existCols =
-        if (tombstone)
-          ((table.rangeColumns ++ table.hashColumns).distinct :+ Tombstone.Marker)
-            .mkString(",")
-        else df.columns.mkString(",")
+    // Duplicate range values into string-typed directory columns with the
+    // reference's null/empty sentinels (TransactionalWrite.scala:188-203).
+    val rangeDirCols = table.rangeColumns.map { c =>
+      val rc = graft.util.SchemaUtil.qcol(c)
+      val s = rc.cast("string")
+      (RangePrefix + c,
+        when(rc.isNull, NullSentinel).when(s === "", EmptySentinel).otherwise(s))
+    }
+    var out = rangeDirCols.foldLeft(df) { case (d, (n, e)) => d.withColumn(n, e) }
 
-      // Duplicate range values into string-typed directory columns with the
-      // reference's null/empty sentinels (TransactionalWrite.scala:188-203).
-      val rangeDirCols = table.rangeColumns.map { c =>
-        val rc = graft.util.SchemaUtil.qcol(c)
-        val s = rc.cast("string")
-        (RangePrefix + c,
-          when(rc.isNull, NullSentinel).when(s === "", EmptySentinel).otherwise(s))
-      }
-      var out = rangeDirCols.foldLeft(df) { case (d, (n, e)) => d.withColumn(n, e) }
-
-      // AQE-inertness walk of the INPUT plan (see aqeInert below, and the
-      // flat-bucket gate right after): an allowlist of known-exchange-free
-      // nodes — any unrecognized node kind (MapGroups, CoGroup, Generate,
-      // Offset, future operators...) keeps AQE on (r17, VERDICT item 6 /
-      // ADVICE: the previous denylist treated unknown exchange-planning
-      // operators as inert and silently lost AQE where it matters). Leaf
-      // nodes (scans, LocalRelation, Range, LogicalRDD) plan no exchange
-      // by construction; Project/Filter/SubqueryAlias/Union/View are
-      // narrow; everything else is presumed exchange-capable. Expressions
-      // must carry no plan subquery.
-      val inertInput = {
-        import org.apache.spark.sql.catalyst.expressions.PlanExpression
-        import org.apache.spark.sql.catalyst.plans.logical._
-        !dfIn.queryExecution.analyzed.exists { p =>
-          val knownInert = p match {
-            case _: LeafNode | _: Project | _: Filter | _: SubqueryAlias |
-                _: Union | _: View => true
-            case _ => false
-          }
-          !knownInert ||
-            p.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]]))
+    // AQE-inertness walk of the INPUT plan (decides both the AQE skip
+    // below and the flat-bucket gate right after): an allowlist of
+    // known-exchange-free nodes, so any unrecognized node kind (MapGroups,
+    // CoGroup, Generate, Offset, future operators...) keeps AQE on. Leaf
+    // nodes (scans, LocalRelation, Range, LogicalRDD) plan no exchange
+    // by construction; Project/Filter/SubqueryAlias/Union/View are
+    // narrow; everything else is presumed exchange-capable. Expressions
+    // must carry no plan subquery.
+    val inertInput = {
+      import org.apache.spark.sql.catalyst.expressions.PlanExpression
+      import org.apache.spark.sql.catalyst.plans.logical._
+      !dfIn.queryExecution.analyzed.exists { p =>
+        val knownInert = p match {
+          case _: LeafNode | _: Project | _: Filter | _: SubqueryAlias |
+              _: Union | _: View => true
+          case _ => false
         }
+        !knownInert ||
+          p.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]]))
       }
-
-      // r17 FLAT-BUCKET WRITE (VERDICT r16 item 1, guide §6/§1.1): when the
-      // input's Spark partition INDEX is provably the bucket id — after
-      // preMerge (repartition(bucketNum, pk) uses the same murmur3-mod
-      // expression as bucketIdExpr), or under a group-aligned merge read
-      // (BucketMergeRead.readRdd's partition-index == bucket-id contract) —
-      // and the table has no range partitions, the dynamic-partition
-      // writer buys NOTHING: every task holds exactly one bucket. Skip it:
-      // write flat files and derive each file's bucket id from its
-      // part-NNNNN task index (listCommitFiles). This removes the dynamic
-      // writer's per-row partition projection/comparison and the
-      // committer's per-directory handling (WriteCostProbe: 0.93 -> 0.44 s
-      // task time per 32-bucket commit), and at scale drops one directory
-      // level of namenode round-trips per commit. The meta (DataFileInfo
-      // .bucketId) stays the source of truth for readers — no read-side
-      // change. Escape hatch: spark.graft.write.flatBucketWrite=false
-      // restores the __g_bucket=K directory layout.
-      //
-      // SAFETY GATE: index == bucket holds only while NO adaptive rule can
-      // re-shape the post-repartition stage (AQE's local shuffle reads /
-      // coalescing re-index partitions — observed: a view-refresh upsert
-      // whose delta plan carried joins had every row land in partition 0
-      // under AQE while its keys hashed to buckets 1 and 2). So flat mode
-      // additionally requires the write to run with AQE OFF, i.e. the
-      // skip-AQE-when-inert path is both enabled and applicable. Non-inert
-      // inputs (and AQE-forced sessions) keep the dynamic-partition
-      // writer, whose per-row bucket COLUMN is placement-independent.
-      val flatBuckets = flatPref && skipAqePref && inertInput &&
-        table.hasPrimaryKey &&
-        table.rangeColumns.isEmpty && (!skipPreMerge || inputBucketAligned)
-
-      val partDirCols: Seq[String] =
-        if (flatBuckets) {
-          val pk = table.hashColumns.map(graft.util.SchemaUtil.qcol)
-          // per-(bucket) pk sort-on-write — same sorted-run contract as the
-          // dynamic path; the bucket prefix is implicit (one bucket/task)
-          out = out.sortWithinPartitions(pk: _*)
-          Nil
-        } else if (table.hasPrimaryKey) {
-          val pk = table.hashColumns.map(graft.util.SchemaUtil.qcol)
-          val bucketed = out.withColumn(BucketCol, bucketIdExpr(pk, table.bucketNum))
-          // after preMerge the data is already HashPartitioning(pk, bucketNum)
-          // (partition index == bucket id); only re-shuffle when the batch
-          // bypassed preMerge (update/compaction rewrites) AND the caller
-          // cannot attest per-(partition, bucket) alignment. With
-          // inputBucketAligned (r16: compaction over an all-merge-path read,
-          // GraftRead.readAligned) every input partition holds exactly
-          // one (desc, bucket) group in key order, so the repartition would
-          // move every row of the table to the partition it is already in —
-          // at 100 TB a full-table shuffle paid for nothing. Correctness
-          // contract: a (desc, bucket) group split across TWO tasks would
-          // write two same-run files whose pk ranges interleave (breaking
-          // the sorted-run invariant the k-way merge reads by), so the flag
-          // is only ever set when the read guarantees group-aligned input.
-          val placed =
-            if (skipPreMerge && !inputBucketAligned)
-              bucketed.repartition(table.bucketNum, col(BucketCol))
-            else bucketed
-          // sort-on-write by (range-DIR cols, bucket, pk) — the format's
-          // sorted-run contract (LakeSoulFileWriter.scala:125-141). Sorting on
-          // the DIRECTORY columns (not the typed range columns) lets
-          // FileFormatWriter recognize the ordering as satisfying its
-          // dynamic-partition requirement and skip its own re-sort of every
-          // batch; per-(desc, bucket) pk order — the actual contract — is
-          // identical either way.
-          out = placed.sortWithinPartitions(
-            (rangeDirCols.map(c => graft.util.SchemaUtil.qcol(c._1)) ++
-              Seq(col(BucketCol)) ++ pk): _*)
-          rangeDirCols.map(_._1) :+ BucketCol
-        } else {
-          // non-PK clustering (GraftTable.cluster): per-task sort on
-          // (DIRECTORY columns, cluster columns) — the dir-column prefix
-          // satisfies the dynamic-partition writer's required ordering so the
-          // cluster-column suffix survives into the files
-          if (clusterCols.nonEmpty)
-            out = out.sortWithinPartitions(
-              (rangeDirCols.map(c => graft.util.SchemaUtil.qcol(c._1)) ++
-                clusterCols.map(graft.util.SchemaUtil.qcol)): _*)
-          rangeDirCols.map(_._1)
-        }
-
-      PreparedChain(out, partDirCols, existCols, df.schema, inertInput,
-        flatBuckets)
     }
 
-    // quarantine expectations perform an eager per-batch side-effect write
-    // inside normalize — those chains must be rebuilt every commit. Plans
-    // rooted in a LogicalRDD (micro-batch sinks, localCheckpoint inputs)
-    // are identity-keyed and never equal across batches: caching them is
-    // guaranteed misses that pin each batch's RDD lineage until 16 later
-    // writes evict it — skip (code-review finding).
-    val cacheable = spark.conf
-      .getOption("spark.graft.write.planCache").forall(_.toBoolean) &&
-      !(ingestion && !tombstone && table.properties.exists { case (k, v) =>
-        k.startsWith("graft.expect.") && k.endsWith(".action") && v == "quarantine"
-      }) &&
-      !dfIn.queryExecution.analyzed.exists(
-        _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-    val chain =
-      if (!cacheable) buildChain()
-      else {
-        val key: AnyRef = (spark, dfIn.queryExecution.analyzed, table,
-          ingestion, skipPreMerge, clusterCols, tombstone, inputBucketAligned,
-          flatPref, skipAqePref,
-          org.apache.spark.sql.internal.SQLConf.get.caseSensitiveAnalysis)
-        chainCache.synchronized(Option(chainCache.get(key))) match {
-          case Some(c) => c
-          case None =>
-            val built = buildChain()
-            chainCache.synchronized(chainCache.put(key, built))
-            built
-        }
+    // FLAT-BUCKET WRITE: when the input's Spark partition INDEX is
+    // provably the bucket id — after preMerge (repartition(bucketNum, pk)
+    // uses the same murmur3-mod expression as bucketIdExpr), or under a
+    // group-aligned merge read
+    // (BucketMergeRead.readRdd's partition-index == bucket-id contract) —
+    // and the table has no range partitions, the dynamic-partition
+    // writer buys NOTHING: every task holds exactly one bucket. Skip it:
+    // write flat files and derive each file's bucket id from its
+    // part-NNNNN task index (listCommitFiles). This removes the dynamic
+    // writer's per-row partition projection/comparison and the
+    // committer's per-directory handling (WriteCostProbe: 0.93 -> 0.44 s
+    // task time per 32-bucket commit), and at scale drops one directory
+    // level of namenode round-trips per commit. The meta (DataFileInfo
+    // .bucketId) stays the source of truth for readers — no read-side
+    // change.
+    //
+    // SAFETY GATE: index == bucket holds only while NO adaptive rule can
+    // re-shape the post-repartition stage (AQE's local shuffle reads /
+    // coalescing re-index partitions — observed: a view-refresh upsert
+    // whose delta plan carried joins had every row land in partition 0
+    // under AQE while its keys hashed to buckets 1 and 2). So flat mode
+    // requires an inert input, which is also exactly when the write runs
+    // with AQE OFF (aqeKey below). Non-inert inputs keep AQE and the
+    // dynamic-partition writer, whose per-row bucket COLUMN is
+    // placement-independent.
+    val flatBuckets = inertInput && table.hasPrimaryKey &&
+      table.rangeColumns.isEmpty && (!skipPreMerge || inputBucketAligned)
+
+    val partDirCols: Seq[String] =
+      if (flatBuckets) {
+        val pk = table.hashColumns.map(graft.util.SchemaUtil.qcol)
+        // per-(bucket) pk sort-on-write — same sorted-run contract as the
+        // dynamic path; the bucket prefix is implicit (one bucket/task)
+        out = out.sortWithinPartitions(pk: _*)
+        Nil
+      } else if (table.hasPrimaryKey) {
+        val pk = table.hashColumns.map(graft.util.SchemaUtil.qcol)
+        val bucketed = out.withColumn(BucketCol, bucketIdExpr(pk, table.bucketNum))
+        // after preMerge the data is already HashPartitioning(pk, bucketNum)
+        // (partition index == bucket id); only re-shuffle when the batch
+        // bypassed preMerge (update/compaction rewrites) AND the caller
+        // cannot attest per-(partition, bucket) alignment. With
+        // inputBucketAligned (compaction over an all-merge-path read,
+        // GraftRead.readAligned) every input partition holds exactly
+        // one (desc, bucket) group in key order, so the repartition would
+        // move every row of the table to the partition it is already in —
+        // at 100 TB a full-table shuffle paid for nothing. Correctness
+        // contract: a (desc, bucket) group split across TWO tasks would
+        // write two same-run files whose pk ranges interleave (breaking
+        // the sorted-run invariant the k-way merge reads by), so the flag
+        // is only ever set when the read guarantees group-aligned input.
+        val placed =
+          if (skipPreMerge && !inputBucketAligned)
+            bucketed.repartition(table.bucketNum, col(BucketCol))
+          else bucketed
+        // sort-on-write by (range-DIR cols, bucket, pk) — the format's
+        // sorted-run contract (LakeSoulFileWriter.scala:125-141). Sorting on
+        // the DIRECTORY columns (not the typed range columns) lets
+        // FileFormatWriter recognize the ordering as satisfying its
+        // dynamic-partition requirement and skip its own re-sort of every
+        // batch; per-(desc, bucket) pk order — the actual contract — is
+        // identical either way.
+        out = placed.sortWithinPartitions(
+          (rangeDirCols.map(c => graft.util.SchemaUtil.qcol(c._1)) ++
+            Seq(col(BucketCol)) ++ pk): _*)
+        rangeDirCols.map(_._1) :+ BucketCol
+      } else {
+        // non-PK clustering (GraftTable.cluster): per-task sort on
+        // (DIRECTORY columns, cluster columns) — the dir-column prefix
+        // satisfies the dynamic-partition writer's required ordering so the
+        // cluster-column suffix survives into the files
+        if (clusterCols.nonEmpty)
+          out = out.sortWithinPartitions(
+            (rangeDirCols.map(c => graft.util.SchemaUtil.qcol(c._1)) ++
+              clusterCols.map(graft.util.SchemaUtil.qcol)): _*)
+        rangeDirCols.map(_._1)
       }
-    val out = chain.out
-    val partDirCols = chain.partDirCols
-    val existCols = chain.existCols
 
     val commitDir = new File(new File(table.tablePath, "data"), commitId)
     var writer = out.write.mode("errorifexists")
@@ -578,27 +496,13 @@ object TransactionalWrite {
     // public per-execution conf; the refcounted session guard with a
     // single possible value is the safe approximation.)
     val aqeKey = "spark.sql.adaptive.enabled"
-    // escape hatch (and A/B probe switch): spark.graft.write.skipAqeWhenInert
-    // r17 (VERDICT item 6 / ADVICE): the walker (chain.inertInput, computed
-    // with the cached chain) is an ALLOWLIST of known-exchange-free nodes —
-    // any node kind it does not recognize (MapGroups, CoGroup, Generate,
-    // Offset, future operators...) keeps AQE on. The previous denylist
-    // enumeration treated unknown exchange-planning operators as inert and
-    // silently lost AQE for plans where it matters. Leaf nodes (scans,
-    // LocalRelation, Range, LogicalRDD) plan no exchange by construction;
-    // Project/Filter/SubqueryAlias/Union/View are narrow; everything else
-    // is presumed exchange-capable. Expressions must carry no plan subquery.
-    // uses the skipAqePref captured ONCE above (not a re-read): a
-    // concurrent conf flip between the chain build and here must not let
-    // a flat-bucket chain run with AQE on (the index==bucket invariant)
-    val aqeInert = skipAqePref && chain.inertInput
     var taskStats = Map.empty[String, String]
     var tsHeld = false
     var protoHeld = false
     var statsRegistered = false
     var aqeHeld = false
     try {
-      if (aqeInert) {
+      if (inertInput) {
         SessionConfGuard.acquire(spark, aqeKey, "false")
         aqeHeld = true
       }
@@ -607,7 +511,7 @@ object TransactionalWrite {
       // min/max stats are read inside the WRITE TASKS at task commit
       // (footer page-cache hot on the writing executor, zero driver IO) —
       // the commit protocol ships them back in the task commit messages
-      FileStatsCollector.specFor(table, chain.mergedSchema).foreach { sp =>
+      FileStatsCollector.specFor(table, df.schema).foreach { sp =>
         StatsCommitProtocol.register(commitDir.getAbsolutePath, sp)
         statsRegistered = true
         SessionConfGuard.acquire(spark, protoKey, classOf[StatsCommitProtocol].getName)
@@ -624,7 +528,7 @@ object TransactionalWrite {
 
     postWriteHook()
     val listed = listCommitFiles(commitDir.toPath, table, existCols,
-      chain.flatBuckets).map {
+      flatBuckets).map {
       case (desc, f) =>
         // task stats are keyed by output-relative path (partition dirs +
         // file name) — bare names collide across a task's partition dirs
@@ -633,7 +537,7 @@ object TransactionalWrite {
         (desc, f.copy(stats = taskStats.getOrElse(rel, "")))
     }
     // fallback only: any file the tasks didn't cover reads its footer here
-    val attached = FileStatsCollector.attach(spark, table, chain.mergedSchema, listed)
+    val attached = FileStatsCollector.attach(spark, table, df.schema, listed)
     // flat-bucket commits: FileFormatWriter's single-directory writer
     // creates a file even for an EMPTY partition (the dynamic-partition
     // writer created files lazily per partition value) — a small upsert
@@ -644,7 +548,7 @@ object TransactionalWrite {
     // (~1 ms each, page-cache hot, bounded by bucketNum); an unreadable
     // footer keeps the file (dropping is the optimization).
     val files =
-      if (!chain.flatBuckets) attached
+      if (!flatBuckets) attached
       else attached.filter { case (_, f) =>
         f.stats.nonEmpty || {
           val rows = FileStatsCollector.rowCount(f.path,

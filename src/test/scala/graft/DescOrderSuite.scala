@@ -104,4 +104,26 @@ class DescOrderSuite extends SparkFixture {
       assert(got == Set((ts1, "A"), (ts2, "B")), s"got $got")
     }
   }
+
+  test("re-upserting one DataFrame after a session time-zone change files " +
+      "its rows under the new zone's partition desc") {
+    withTempPath { path =>
+      val instant = Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z"))
+      def batch = Seq((1L, instant, "a")).toDF("id", "ts", "v")
+      val t = GraftTable.create(spark, batch, path,
+        rangeColumns = Seq("ts"), hashColumns = Seq("id"), bucketNum = 1)
+      def descs = t.partitions.map(_.partitionDesc).toSet
+      val same = batch
+      t.upsert(same)
+      assert(descs == Set("ts=2024-01-01 00:00:00"))
+      try {
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        t.upsert(same)
+        val afterSame = descs
+        t.upsert(batch) // an equal, freshly built DataFrame
+        assert(afterSame == descs, s"same DataFrame: $afterSame, fresh: $descs")
+        assert(descs == Set("ts=2024-01-01 00:00:00", "ts=2023-12-31 16:00:00"))
+      } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+    }
+  }
 }

@@ -59,8 +59,15 @@ class MergeOpSuite extends SparkFixture {
       val t = GraftTable.create(spark, onePartDf(Seq(Row(1L, 7.0)), dSchema), p,
         hashColumns = Seq("k"), bucketNum = 2,
         properties = Map(TableInfo.mergeOpProp("v") -> "keep_max_test"))
+      val created = t.lastCommitTs
       t.upsert(onePartDf(Seq(Row(1L, 3.0)), dSchema))
+      val firstUpsert = t.lastCommitTs
+      t.upsert(onePartDf(Seq(Row(1L, 5.0)), dSchema))
+      // an agg-only operator has no k-way merge: every read below takes
+      // the aggregate-merge fallback over two or more runs
       assertRows(t.toDF, Seq(Row(1L, 7.0)))
+      assertRows(t.snapshotAt(firstUpsert), Seq(Row(1L, 7.0)))
+      assertRows(t.incremental(created, t.lastCommitTs), Seq(Row(1L, 5.0)))
     }
   }
 

@@ -32,6 +32,36 @@ class SchemaMergeGateSuite extends SparkFixture {
     }
   }
 
+  test("a malformed boolean setting fails naming its key") {
+    def rejects(key: String)(write: => Unit): Unit = {
+      val e = intercept[IllegalArgumentException](write)
+      assert(e.getMessage.contains(key) && e.getMessage.contains("yes"),
+        e.getMessage)
+    }
+    withTempPath { path =>
+      val t = GraftTable.create(spark, base, path,
+        hashColumns = Seq("id"), bucketNum = 2,
+        properties = Map(GraftTable.AutoMergeProp -> "yes"))
+      rejects(GraftTable.AutoMergeProp)(t.upsert(extra))
+    }
+    withTempPath { path =>
+      val t = GraftTable.create(spark, base, path,
+        hashColumns = Seq("id"), bucketNum = 2)
+      spark.conf.set(GraftTable.AutoMergeConf, "yes")
+      try rejects(GraftTable.AutoMergeConf)(t.upsert(extra))
+      finally spark.conf.unset(GraftTable.AutoMergeConf)
+    }
+    withTempPath { path =>
+      val t = GraftTable.create(spark,
+        Seq((1L, "p1", 10)).toDF("id", "part", "v"), path,
+        rangeColumns = Seq("part"), hashColumns = Seq("id"), bucketNum = 1)
+      spark.conf.set("spark.graft.allowFullTableUpsert", "yes")
+      try rejects("spark.graft.allowFullTableUpsert")(
+        t.upsert(Seq((1L, "p1", 11)).toDF("id", "part", "v"), "v > 0"))
+      finally spark.conf.unset("spark.graft.allowFullTableUpsert")
+    }
+  }
+
   test("session conf rejects; writer option mergeSchema=true overrides") {
     withTempPath { path =>
       base.write.format("graft")
