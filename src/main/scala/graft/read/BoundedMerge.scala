@@ -55,7 +55,9 @@ object BoundedMerge {
     math.max(2, spark.conf.getOption(ConfKey).map(_.toInt).getOrElse(DefaultCap))
 
   /** Schema-aware default: the hazard being bounded is per-reader batch
-    * memory (~4096 rows x row width each), so the open-run budget scales
+    * memory (min(file rows, columnarReaderBatchSize) rows x row width each
+    * — the run reader sizes its batch to the file), so the open-run budget
+    * is derived from the worst case (a full 4096-row batch) and scales
     * inversely with schema width — a narrow 3-column table merges a
     * 100-run backlog with zero spill I/O (its 100 readers fit the budget),
     * a 100-column table clamps hard. An explicit maxOpenRuns conf wins. */

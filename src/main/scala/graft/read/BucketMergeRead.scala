@@ -201,7 +201,7 @@ object BucketMergeRead {
       table: TableInfo,
       schema: StructType,
       files: Seq[ResolvedFile]): DataFrame = {
-    val readFn = org.apache.spark.sql.graft.StreamShim.parquetReadFunction(spark, schema)
+    val reader = org.apache.spark.sql.graft.StreamShim.parquetReadFunction(spark, schema)
     val groups = files.groupBy(_.partitionDesc).toSeq.sortBy(_._1)
       .map { case (_, fs) =>
         val runs = fs.groupBy(f => (f.commitOrdinal, f.file.bucketId))
@@ -224,6 +224,7 @@ object BucketMergeRead {
     val rdd = spark.sparkContext
       .parallelize(groups, math.max(1, groups.size))
       .mapPartitions { it =>
+        val readFn = reader.forTask()
         val proj = UnsafeProjection.create(schema.fields.map(_.dataType))
         it.flatMap { g =>
           BoundedMerge.iterator(readFn, g.runs.map(_._1).toIndexedSeq,
@@ -273,7 +274,7 @@ object BucketMergeRead {
       epochs: Seq[(Int, Seq[ResolvedFile])]): DataFrame = {
     require(epochs.size >= 2,
       s"readSplitWindow needs >=2 epochs, got ${epochs.size}")
-    val readFn = org.apache.spark.sql.graft.StreamShim.parquetReadFunction(spark, schema)
+    val reader = org.apache.spark.sql.graft.StreamShim.parquetReadFunction(spark, schema)
     val (finalN, finalFiles) = epochs.last
     val nFields = schema.length
     val keyIdxArr = (table.rangeColumns ++ table.hashColumns)
@@ -310,6 +311,7 @@ object BucketMergeRead {
     val tagged = spark.sparkContext
       .parallelize(taskSpecs.toSeq, math.max(1, taskSpecs.size))
       .mapPartitions { it =>
+        val readFn = reader.forTask()
         val proj = UnsafeProjection.create(extTypes.toArray)
         val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
         val tag = new GenericInternalRow(1)
@@ -344,6 +346,7 @@ object BucketMergeRead {
     val nativeB = spark.sparkContext.broadcast(nativeByBucket)
     val synMetaB = spark.sparkContext.broadcast((synMasks, synTombs))
     val rdd = sorted.mapPartitionsWithIndex { (b, it) =>
+      val readFn = reader.forTask()
       val native = nativeB.value(b)
       val (sm, st) = synMetaB.value
       val proj = UnsafeProjection.create(outTypes)
@@ -365,7 +368,7 @@ object BucketMergeRead {
       schema: StructType,
       files: Seq[ResolvedFile])
     : org.apache.spark.rdd.RDD[InternalRow] = {
-    val readFn = org.apache.spark.sql.graft.StreamShim.parquetReadFunction(spark, schema)
+    val reader = org.apache.spark.sql.graft.StreamShim.parquetReadFunction(spark, schema)
     val groups = bucketGroups(table, schema, files)
 
     val keyIdx = (table.rangeColumns ++ table.hashColumns).map(schema.fieldIndex)
@@ -378,6 +381,7 @@ object BucketMergeRead {
     spark.sparkContext
       .parallelize(groups, math.max(1, groups.size))
       .mapPartitions { it =>
+        val readFn = reader.forTask()
         val proj = UnsafeProjection.create(schema.fields.map(_.dataType))
         it.flatMap { g =>
           BoundedMerge.iterator(readFn, g.runs.map(_._1).toIndexedSeq,
@@ -431,7 +435,7 @@ object BucketMergeRead {
       newFiles: Seq[ResolvedFile],
       bucketMerged: Boolean = false)
     : org.apache.spark.rdd.RDD[InternalRow] = {
-    val readFn = org.apache.spark.sql.graft.StreamShim.parquetReadFunction(spark, schema)
+    val reader = org.apache.spark.sql.graft.StreamShim.parquetReadFunction(spark, schema)
     // one diff task per TOUCHED (partition, bucket): a pair whose ordered
     // run structure is identical between the snapshots cannot differ, so
     // it is skipped without reading a byte — an append-only window over a
@@ -492,6 +496,7 @@ object BucketMergeRead {
     spark.sparkContext
       .parallelize(pairs, math.max(1, pairs.size))
       .mapPartitions { it =>
+        val readFn = reader.forTask()
         val proj = UnsafeProjection.create(dts :+ StringType)
         val keyComps = RowComp.makeComps(keyIdxArr, keyTypesArr)
         val fieldComps = dts.zipWithIndex.map { case (dt, i) =>

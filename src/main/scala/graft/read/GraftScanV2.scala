@@ -555,15 +555,23 @@ class GraftScan(
 
   override def supportedCustomMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new FilesReadMetric, new FilesSkippedMetric)
+    Array(new FilesReadMetric, new FilesSkippedMetric, new RunFilesOpenedMetric,
+      new ReaderOpenMsMetric)
 
-  /** Reported once per query on the driver: pruning effectiveness. The
-    * skipped count covers metadata zone maps AND runtime (join-driven)
-    * filtering — `files` reflects both by report time. */
+  /** Reported once per query on the driver: pruning effectiveness. Planned
+    * counts the files the input partitions actually carry, so the skipped
+    * count covers metadata zone maps, runtime (join-driven) filtering AND
+    * the single-bucket point prune of a full primary-key equality. */
   override def reportDriverMetrics()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(GraftDriverMetric("graftFilesPlanned", files.size.toLong),
-      GraftDriverMetric("graftFilesSkipped", (filesIn.size - files.size).toLong))
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    val planned = planInputPartitions().iterator.map {
+      case GraftBucketPartition(_, runs) => runs.iterator.map(_.files.length).sum
+      case _: GraftFilePartition => 1
+      case _ => 0
+    }.sum.toLong
+    Array(GraftMetricValue("graftFilesPlanned", planned),
+      GraftMetricValue("graftFilesSkipped", filesIn.size - planned))
+  }
 
   override def outputPartitioning(): Partitioning =
     if (bucketMergeable && mappingSettled && pkBucketEff.isEmpty)
@@ -668,7 +676,7 @@ class GraftScan(
     }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val readFn = org.apache.spark.sql.graft.StreamShim
+    val reader = org.apache.spark.sql.graft.StreamShim
       .parquetReadFunction(spark, schema, readerFilters)
     val keyIdx = (info.rangeColumns ++ info.hashColumns).map(schema.fieldIndex).toArray
     val keyTypes = keyIdx.map(schema.fields(_).dataType)
@@ -684,7 +692,7 @@ class GraftScan(
     // merge-free state can still carry cdc='delete' rows (partial/leveled
     // compaction output, skip_merge_on_read), and streaming batches
     // unfiltered would resurface deleted rows.
-    GraftPartitionReaderFactory(readFn, keyIdx, keyTypes, fieldMerges,
+    GraftPartitionReaderFactory(reader, keyIdx, keyTypes, fieldMerges,
       schema, cdcIdx,
       allowColumnar = cdcIdx < 0 &&
         org.apache.spark.sql.graft.StreamShim
@@ -704,9 +712,25 @@ private[read] class FilesReadMetric
 private[read] class FilesSkippedMetric
     extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = "graftFilesSkipped"
-  override def description(): String = "graft files skipped (zone maps + runtime)"
+  override def description(): String =
+    "graft files skipped (zone maps, runtime filters, PK bucket prune)"
 }
-private[read] case class GraftDriverMetric(override val name: String,
+/** Task side (summed over the scan's tasks): parquet files the merge
+  * readers opened, and the time spent opening them (footer read + reader
+  * init) — the per-run setup cost a deep MOR backlog multiplies. */
+private[read] class RunFilesOpenedMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = RunFilesOpenedMetric.Name
+  override def description(): String = "graft run files opened"
+}
+private[read] object RunFilesOpenedMetric { val Name = "graftRunFilesOpened" }
+private[read] class ReaderOpenMsMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = ReaderOpenMsMetric.Name
+  override def description(): String = "graft reader open time (ms)"
+}
+private[read] object ReaderOpenMsMetric { val Name = "graftReaderOpenMs" }
+private[read] case class GraftMetricValue(override val name: String,
     override val value: Long)
     extends org.apache.spark.sql.connector.metric.CustomTaskMetric
 
@@ -874,10 +898,10 @@ class GraftMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val readFn = org.apache.spark.sql.graft.StreamShim
+    val reader = org.apache.spark.sql.graft.StreamShim
       .parquetReadFunction(spark, schema, readerFilters)
     val keyIdx = (info.rangeColumns ++ info.hashColumns).map(schema.fieldIndex).toArray
-    GraftPartitionReaderFactory(readFn, keyIdx,
+    GraftPartitionReaderFactory(reader, keyIdx,
       keyIdx.map(schema.fields(_).dataType),
       BucketMergeRead.fieldMerges(info, schema), schema,
       cdcIdx = -1, // incremental semantics: tombstones kept (F6 exemption)
@@ -901,7 +925,7 @@ case class GraftFilePartition(file: PartitionedFile, mask: Array[Boolean])
     extends InputPartition
 
 case class GraftPartitionReaderFactory(
-    readFn: PartitionedFile => Iterator[InternalRow],
+    reader: org.apache.spark.sql.graft.ParquetRunReader,
     keyIdx: Array[Int],
     keyTypes: Array[org.apache.spark.sql.types.DataType],
     fieldMerges: Array[FieldMerge],
@@ -926,6 +950,7 @@ case class GraftPartitionReaderFactory(
 
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+    val readFn = reader.forTask(closeAtTaskEnd = false)
     // widen to Any BEFORE matching: the reader erases ColumnarBatch behind
     // Iterator[InternalRow], and a typed lambda param would checkcast
     // InternalRow first (same pitfall BucketMergeRead.flatten documents)
@@ -962,16 +987,11 @@ case class GraftPartitionReaderFactory(
         case other => throw new IllegalStateException(
           s"columnar read offered for unsupported partition $other")
       }
-    new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      private var current: org.apache.spark.sql.vectorized.ColumnarBatch = _
-      override def next(): Boolean =
-        if (batches.hasNext) { current = batches.next(); true } else false
-      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = current
-      override def close(): Unit = ()
-    }
+    new GraftPartitionReader(batches, readFn)
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val readFn = reader.forTask(closeAtTaskEnd = false)
     val rows: Iterator[InternalRow] = p match {
       case GraftBucketPartition(_, runs) =>
         BoundedMerge.iterator(readFn,
@@ -987,12 +1007,39 @@ case class GraftPartitionReaderFactory(
         rows.filter(r => r.isNullAt(cdcIdx) ||
           !r.getUTF8String(cdcIdx).equals(deleteTag))
       }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (visible.hasNext) { current = visible.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    new GraftPartitionReader(visible, readFn)
   }
+}
+
+/** One input partition's reader (rows or ColumnarBatches). Reports the
+  * task-side scan metrics of its [[org.apache.spark.sql.graft.ParquetTaskReader]];
+  * `initMetricsValues` carries the totals of earlier partitions Spark ran
+  * in the same task, so the task's sums stay cumulative. */
+private[read] class GraftPartitionReader[T](
+    it: Iterator[T],
+    readFn: org.apache.spark.sql.graft.ParquetTaskReader) extends PartitionReader[T] {
+  private var current: T = _
+  private var priorOpened = 0L
+  private var priorOpenMs = 0L
+
+  override def next(): Boolean =
+    if (it.hasNext) { current = it.next(); true } else false
+  override def get(): T = current
+  override def close(): Unit = readFn.close()
+
+  override def initMetricsValues(
+      metrics: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric]): Unit =
+    metrics.foreach { m =>
+      m.name match {
+        case RunFilesOpenedMetric.Name => priorOpened = m.value
+        case ReaderOpenMsMetric.Name => priorOpenMs = m.value
+        case _ =>
+      }
+    }
+
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(GraftMetricValue(RunFilesOpenedMetric.Name,
+        priorOpened + readFn.filesOpened),
+      GraftMetricValue(ReaderOpenMsMetric.Name, priorOpenMs + readFn.openMs))
 }

@@ -49,7 +49,7 @@ object Validator {
       return issues.take(maxIssues).toSeq
 
     // 2. distributed per-run checks
-    val readFn = org.apache.spark.sql.graft.StreamShim
+    val reader = org.apache.spark.sql.graft.StreamShim
       .parquetReadFunction(spark, schema)
     val keyIdx = (info.rangeColumns ++ info.hashColumns)
       .map(schema.fieldIndex).toArray
@@ -96,75 +96,78 @@ object Validator {
 
     val found = spark.sparkContext
       .parallelize(specs, math.max(1, math.min(specs.size, 256)))
-      .flatMap { spec =>
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        val keyComps = RowComp.makeComps(keyIdx, keyTypes)
-        val hash =
-          if (hasPk && spec.bucket >= 0 && spec.mapN > 0)
-            Some(new Murmur3Hash(pkIdx.zip(pkTypes).map { case (i, dt) =>
-              BoundReference(i, dt, nullable = true)
-            }.toSeq, 42))
-          else None
-        var prev: InternalRow = null
-        spec.files.foreach { case (path, size, expectRows) =>
-          var n = 0L
-          try {
-          val it = BucketMergeRead.flattenRows(readFn(
-            PartitionedFile(InternalRow.empty,
-              SparkPath.fromPathString(path), 0L, size)))
-          while (it.hasNext && out.size < 16) {
-            val row = it.next()
-            n += 1
-            if (prev != null) {
-              val c = RowComp.compare(keyComps, prev, row)
-              if (c > 0)
-                out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
-                  s"rows out of (range, pk) order in $path"
-              else if (hasPk && c == 0)
-                out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
-                  s"duplicate primary key within the run in $path"
-            }
-            hash.foreach { h =>
-              val b = ((h.eval(row).asInstanceOf[Int] % spec.mapN) + spec.mapN) % spec.mapN
-              if (b != spec.bucket)
-                out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
-                  s"row hashes to bucket $b but lives in ${spec.bucket} ($path)"
-            }
-            if (spec.tomb) {
-              var bad = false
-              var i = 0
-              while (i < valueIdx.length && !bad) {
-                if (!row.isNullAt(valueIdx(i))) bad = true
-                i += 1
+      .mapPartitions { specs =>
+        val readFn = reader.forTask()
+        specs.flatMap { spec =>
+          val out = scala.collection.mutable.ArrayBuffer[String]()
+          val keyComps = RowComp.makeComps(keyIdx, keyTypes)
+          val hash =
+            if (hasPk && spec.bucket >= 0 && spec.mapN > 0)
+              Some(new Murmur3Hash(pkIdx.zip(pkTypes).map { case (i, dt) =>
+                BoundReference(i, dt, nullable = true)
+              }.toSeq, 42))
+            else None
+          var prev: InternalRow = null
+          spec.files.foreach { case (path, size, expectRows) =>
+            var n = 0L
+            try {
+            val it = BucketMergeRead.flattenRows(readFn(
+              PartitionedFile(InternalRow.empty,
+                SparkPath.fromPathString(path), 0L, size)))
+            while (it.hasNext && out.size < 16) {
+              val row = it.next()
+              n += 1
+              if (prev != null) {
+                val c = RowComp.compare(keyComps, prev, row)
+                if (c > 0)
+                  out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
+                    s"rows out of (range, pk) order in $path"
+                else if (hasPk && c == 0)
+                  out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
+                    s"duplicate primary key within the run in $path"
               }
-              if (bad)
-                out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
-                  s"tombstone row carries a non-null value column ($path)"
+              hash.foreach { h =>
+                val b = ((h.eval(row).asInstanceOf[Int] % spec.mapN) + spec.mapN) % spec.mapN
+                if (b != spec.bucket)
+                  out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
+                    s"row hashes to bucket $b but lives in ${spec.bucket} ($path)"
+              }
+              if (spec.tomb) {
+                var bad = false
+                var i = 0
+                while (i < valueIdx.length && !bad) {
+                  if (!row.isNullAt(valueIdx(i))) bad = true
+                  i += 1
+                }
+                if (bad)
+                  out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
+                    s"tombstone row carries a non-null value column ($path)"
+              }
+              // the reader reuses row buffers; keep a stable copy for the
+              // next comparison
+              prev = row.copy()
             }
-            // the reader reuses row buffers; keep a stable copy for the
-            // next comparison
-            prev = row.copy()
+            expectRows.foreach { exp =>
+              if (out.size < 16 && it.isEmpty && n != exp)
+                out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
+                  s"footer row count $exp but read $n rows ($path)"
+            }
+            } catch {
+              // a file that cannot be decoded (corruption, checksum failure,
+              // truncation) IS a violation — report it, don't fail the check.
+              // Reset the order cursor: `prev` still holds the failed file's
+              // last row, which would spuriously flag the NEXT file as
+              // out-of-order or duplicate-PK (its footer count was already
+              // consumed above, so no stale count check fires either).
+              case e: Exception =>
+                prev = null
+                out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
+                  s"unreadable file $path: ${e.getClass.getSimpleName}: " +
+                  String.valueOf(e.getMessage).take(120)
+            }
           }
-          expectRows.foreach { exp =>
-            if (out.size < 16 && it.isEmpty && n != exp)
-              out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
-                s"footer row count $exp but read $n rows ($path)"
-          }
-          } catch {
-            // a file that cannot be decoded (corruption, checksum failure,
-            // truncation) IS a violation — report it, don't fail the check.
-            // Reset the order cursor: `prev` still holds the failed file's
-            // last row, which would spuriously flag the NEXT file as
-            // out-of-order or duplicate-PK (its footer count was already
-            // consumed above, so no stale count check fires either).
-            case e: Exception =>
-              prev = null
-              out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
-                s"unreadable file $path: ${e.getClass.getSimpleName}: " +
-                String.valueOf(e.getMessage).take(120)
-          }
+          out.toSeq
         }
-        out.toSeq
       }
       .take(maxIssues - issues.size)
     (issues ++ found).take(maxIssues).toSeq

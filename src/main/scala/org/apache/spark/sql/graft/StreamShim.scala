@@ -63,16 +63,20 @@ object StreamShim {
       new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
   }
 
-  /** Executor-safe parquet row-reader function (Spark's own vectorized
-    * parquet reader; the returned closure carries a broadcast hadoop conf).
-    * private[sql] in FileFormat, hence this shim. */
+  /** Executor-safe parquet run reader ([[ParquetRunReader]]): the driver
+    * resolves the reader settings and broadcasts one hadoop conf; each task
+    * calls `forTask()` once and gets a per-file open function backed by ONE
+    * `JobConf` for the whole task, whose vectorized readers size their
+    * batches to min(columnarReaderBatchSize, file rows). `filters` are
+    * converted per file against that file's parquet schema (row-group
+    * pruning). Schemas the vectorized reader cannot decode (nested types)
+    * read through Spark's own `ParquetFileFormat` reader. */
   def parquetReadFunction(
       session: org.apache.spark.sql.SparkSession,
       schema: org.apache.spark.sql.types.StructType,
-      filters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
-    : org.apache.spark.sql.execution.datasources.PartitionedFile =>
-        Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+      filters: Seq[org.apache.spark.sql.sources.Filter] = Nil): ParquetRunReader = {
     val spark = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val sql = spark.sessionState.conf
     val fmt = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
     // NULLABLE-relaxed request: a partial upsert batch legally omits table
     // columns — including NON-NULLABLE ones (file_exist_cols fall-through
@@ -87,15 +91,26 @@ object StreamShim {
     // the same shape the reference gets from its Arrow-native merge reader
     // (sorted_stream_merger.rs). Row mode only for nested/unsupported types.
     val batched = fmt.supportBatch(spark, readSchema)
-    fmt.buildReaderWithPartitionValues(
-      spark,
-      dataSchema = readSchema,
-      partitionSchema = new org.apache.spark.sql.types.StructType(),
-      requiredSchema = readSchema,
-      filters = filters,
-      options = Map(org.apache.spark.sql.execution.datasources.FileFormat
-        .OPTION_RETURNING_BATCH -> batched.toString),
-      hadoopConf = spark.sessionState.newHadoopConf())
+    val settings = ParquetRunReader.settings(sql)
+    if (org.apache.spark.sql.execution.datasources.parquet.ParquetUtils
+        .isBatchReadSupportedForSchema(sql, readSchema)) {
+      val conf = spark.sessionState.newHadoopConf()
+      ParquetRunReader.setupHadoopConf(conf, sql, readSchema)
+      new ParquetRunReader(
+        spark.sparkContext.broadcast(
+          new org.apache.spark.util.SerializableConfiguration(conf)),
+        filters, batched, settings, fallback = null)
+    } else
+      new ParquetRunReader(conf = null, filters, batched, settings,
+        fmt.buildReaderWithPartitionValues(
+          spark,
+          dataSchema = readSchema,
+          partitionSchema = new org.apache.spark.sql.types.StructType(),
+          requiredSchema = readSchema,
+          filters = filters,
+          options = Map(org.apache.spark.sql.execution.datasources.FileFormat
+            .OPTION_RETURNING_BATCH -> batched.toString),
+          hadoopConf = spark.sessionState.newHadoopConf()))
   }
 
   /** DataFrame over a DSv2 Table handle (logical DataSourceV2Relation —

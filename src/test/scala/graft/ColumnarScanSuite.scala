@@ -81,6 +81,40 @@ class ColumnarScanSuite extends SparkFixture {
       } finally spark.sql("DROP TABLE IF EXISTS graft_cat.cs.deep")
     }
   }
+
+  test("a reader batch size far below the file rows merges exactly like " +
+    "the default batch size") {
+    withTempPath { wh =>
+      useCatalog(wh)
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.cs")
+      try {
+        spark.sql("CREATE TABLE graft_cat.cs.small (id BIGINT, v STRING) " +
+          "PARTITIONED BY (bucket(2, id))")
+        // base run: ~100 rows per bucket, several 16-row reader batches
+        spark.sql("INSERT INTO graft_cat.cs.small " +
+          "SELECT id, concat('v', id) FROM range(0, 200)")
+        // 1-row delta runs: an update, an insert past the base range, and
+        // a second update of the same key
+        Seq("(17, 'u17')", "(500, 'new500')", "(17, 'u17b')", "(99, 'u99')")
+          .foreach(r => spark.sql(s"INSERT INTO graft_cat.cs.small VALUES $r"))
+        def read(): Array[String] =
+          spark.sql("SELECT * FROM graft_cat.cs.small").collect().map(_.toString).sorted
+        val default = read()
+        val key = "spark.sql.parquet.columnarReaderBatchSize"
+        spark.conf.set(key, "16")
+        val small = try {
+          val q = spark.sql("SELECT * FROM graft_cat.cs.small")
+          assert(q.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+            "expected the columnar merge path")
+          read()
+        } finally spark.conf.unset(key)
+        assert(small.toSeq == default.toSeq)
+        assert(default.length == 201)
+        assert(default.contains("[17,u17b]") && default.contains("[99,u99]") &&
+          default.contains("[500,new500]") && default.contains("[18,v18]"))
+      } finally spark.sql("DROP TABLE IF EXISTS graft_cat.cs.small")
+    }
+  }
 }
 
 /** Appended suite-level sanity kept in the same file for locality. */

@@ -39,6 +39,67 @@ class ConcurrencySuite extends SparkFixture {
     }
   }
 
+  test("concurrent filtered lookups and unfiltered scans on one session " +
+    "each read with their own task readers") {
+    withTempPath { wh =>
+      spark.conf.set("spark.sql.catalog.graft_cc", "graft.catalog.GraftCatalogV2")
+      spark.conf.set("spark.graft.warehouse", wh)
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cc.cc")
+      try {
+        spark.sql("CREATE TABLE graft_cc.cc.t (id BIGINT, v STRING) " +
+          "PARTITIONED BY (bucket(4, id))")
+        spark.sql("INSERT INTO graft_cc.cc.t " +
+          "SELECT id, concat('v', id) FROM range(0, 2000)")
+        // several runs per bucket: every read merges, every lookup pushes
+        // its own key predicate into the readers of the same table
+        (1 to 4).foreach { i =>
+          spark.sql(s"INSERT INTO graft_cc.cc.t SELECT id, concat('u$i-', id) " +
+            s"FROM range($i, 2000, ${i + 2})")
+        }
+        val keys = (0L until 2000L by 37L).toIndexedSeq
+        def lookup(k: Long): Seq[String] = spark.sql(
+          s"SELECT v FROM graft_cc.cc.t WHERE id = $k").collect().map(_.getString(0)).toSeq
+        def scan(): (Long, Long) = {
+          val r = spark.sql("SELECT count(*), sum(length(v)) FROM graft_cc.cc.t").head
+          (r.getLong(0), r.getLong(1))
+        }
+        // single-threaded answers first
+        val expectLookup = keys.map(k => k -> lookup(k)).toMap
+        val expectScan = scan()
+        assert(expectScan._1 == 2000L && expectLookup.values.forall(_.size == 1))
+
+        val pool = Executors.newFixedThreadPool(2)
+        val start = new CountDownLatch(1)
+        val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            start.await()
+            try (0 until 20).foreach { round =>
+              val k = keys((round * 7) % keys.size)
+              val got = lookup(k)
+              if (got != expectLookup(k))
+                errs.add(s"lookup $k round $round: $got != ${expectLookup(k)}")
+            } catch { case e: Throwable => errs.add(e.toString) }
+          }
+        })
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            start.await()
+            try (0 until 20).foreach { round =>
+              val got = scan()
+              if (got != expectScan)
+                errs.add(s"scan round $round: $got != $expectScan")
+            } catch { case e: Throwable => errs.add(e.toString) }
+          }
+        })
+        start.countDown()
+        pool.shutdown()
+        assert(pool.awaitTermination(300, TimeUnit.SECONDS))
+        assert(errs.isEmpty, errs.toArray.mkString("\n"))
+      } finally spark.sql("DROP TABLE IF EXISTS graft_cc.cc.t")
+    }
+  }
+
   test("concurrent clause-merges (copy-on-write) all land via CAS retry") {
     withTempPath { path =>
       import graft.tables.{GraftMerge, MergeMatchedClause, MergeNotMatchedClause}

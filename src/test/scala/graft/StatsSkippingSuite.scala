@@ -209,6 +209,40 @@ class StatsSkippingSuite extends SparkFixture {
     }
   }
 
+  test("a PK lookup plans only its bucket's files; the other buckets' " +
+    "files count as skipped and the readers open exactly the planned ones") {
+    withTempPath { path =>
+      val t = GraftTable.create(spark,
+        (1L to 400L).map(i => (i, s"v$i")).toDF("id", "v"), path,
+        hashColumns = Seq("id"), bucketNum = 4)
+      t.upsert((1L to 400L by 3).map(i => (i, s"u$i")).toDF("id", "v"))
+      t.upsert((2L to 400L by 5).map(i => (i, s"w$i")).toDF("id", "v"))
+      val k = 77L // 77 = 2 + 15 * 5: last written by the second upsert
+      val b = graft.write.TransactionalWrite.bucketOf(spark, t.schema,
+        Seq("id" -> k), 4)
+      val live = t.liveFiles
+      val mine = live.count(_.file.bucketId == b).toLong
+      assert(mine > 0 && mine < live.size, s"bucket $b holds $mine of ${live.size}")
+
+      spark.conf.set("spark.sql.catalog.g_stats", "graft.catalog.GraftCatalogV2")
+      graft.catalog.GraftCatalog.register(spark, "default.stats_pk", path)
+      val q = spark.sql(s"SELECT * FROM g_stats.default.stats_pk WHERE id = $k")
+      assert(q.collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+        Seq((k, s"w$k")))
+      val scan = q.queryExecution.executedPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }.getOrElse(fail("no BatchScanExec in plan"))
+      def metric(n: String): Long = scan.metrics(n).value
+      assert(metric("graftFilesPlanned") == mine,
+        s"planned = ${metric("graftFilesPlanned")}, bucket $b has $mine files")
+      assert(metric("graftFilesSkipped") == live.size - mine,
+        s"skipped = ${metric("graftFilesSkipped")}")
+      assert(metric("graftRunFilesOpened") == mine,
+        s"opened = ${metric("graftRunFilesOpened")}")
+      assert(scan.metrics.contains("graftReaderOpenMs"))
+    }
+  }
+
   test("MOR multi-run: value filters do NOT skip files, key filters do") {
     withTempPath { path =>
       val t = GraftTable.create(spark,
