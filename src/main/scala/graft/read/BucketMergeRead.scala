@@ -169,77 +169,12 @@ object BucketMergeRead {
       BucketGroup(b, runs)
     }
 
-  def read(
-      spark: SparkSession,
-      table: TableInfo,
-      schema: StructType,
-      files: Seq[ResolvedFile]): DataFrame =
-    org.apache.spark.sql.graft.StreamShim.dfFromInternalRows(
-      spark, readRdd(spark, table, schema, files), schema)
-
-  /** Merged rows of a file set whose runs STRADDLE a key->bucket mapping
-    * change (an incremental/change-feed window spanning a re-bucket —
-    * GraftTable.rebucketOverlaps): per-bucket dispatch is key-disjoint
-    * only under a single mapping, so here ONE task per range partition
-    * k-way-merges every (commit, bucket) subgroup as its own key-sorted
-    * run, ordered by commit ordinal — last-writer-wins stays exact even
-    * where old- and new-mapping runs overlap in key space. Without this,
-    * a key's pre-re-bucket row (old bucket) and post-re-bucket row (new
-    * bucket) land in different merge groups and BOTH surface (caught by
-    * the CDC model check: the change feed double-delivered straddling
-    * keys).
-    *
-    * Scale note: parallelism here is per RANGE PARTITION — on an
-    * unpartitioned table a re-bucket-spanning window merges in one task.
-    * That is the price of exactly one maintenance event inside exactly
-    * that window (re-buckets are rare, whole-table rewrites); consumers
-    * that cannot afford it should advance their cursor past the re-bucket
-    * boundary (two windows, each mapping-consistent, each fully
-    * bucket-parallel) — which is also what a strict stream re-pin does. */
-  def readCrossBucket(
-      spark: SparkSession,
-      table: TableInfo,
-      schema: StructType,
-      files: Seq[ResolvedFile]): DataFrame = {
-    val reader = org.apache.spark.sql.graft.StreamShim.parquetReadFunction(spark, schema)
-    val groups = files.groupBy(_.partitionDesc).toSeq.sortBy(_._1)
-      .map { case (_, fs) =>
-        val runs = fs.groupBy(f => (f.commitOrdinal, f.file.bucketId))
-          .toSeq.sortBy(_._1)
-          .flatMap { case (_, sub) =>
-            orderedRuns(table, schema, sub).map { case (run, mask, tomb) =>
-              (run.map { f =>
-                PartitionedFile(InternalRow.empty,
-                  SparkPath.fromPathString(f.file.path), 0L, f.file.size)
-              }, mask, tomb)
-            }
-          }
-        BucketGroup(-1, runs)
-      }
-    val keyIdxArr = (table.rangeColumns ++ table.hashColumns)
-      .map(schema.fieldIndex).toArray
-    val keyTypesArr = keyIdxArr.map(schema.fields(_).dataType)
-    val merges = fieldMerges(table, schema)
-    val cap = BoundedMerge.cap(spark, schema)
-    val rdd = spark.sparkContext
-      .parallelize(groups, math.max(1, groups.size))
-      .mapPartitions { it =>
-        val readFn = reader.forTask()
-        val proj = UnsafeProjection.create(schema.fields.map(_.dataType))
-        it.flatMap { g =>
-          BoundedMerge.iterator(readFn, g.runs.map(_._1).toIndexedSeq,
-            g.runs.map(_._2).toArray, g.runs.map(_._3).toArray,
-            keyIdxArr, keyTypesArr, merges, cap).map(proj)
-        }
-      }
-    org.apache.spark.sql.graft.StreamShim.dfFromInternalRows(spark, rdd, schema)
-  }
-
   /** Fully-parallel merged rows of a window whose runs straddle one or
     * more key->bucket mapping changes — the CURSOR-SPLIT alternative to
-    * [[readCrossBucket]]'s one-task-per-range-partition merge (the one
-    * remaining parallelism cliff before r15: an unpartitioned table's
-    * re-bucket-straddling window merged in ONE task).
+    * the scan's one-task-per-range-partition cross-bucket merge
+    * ([[GraftScan]] with `forceCrossBucket`; the one remaining parallelism
+    * cliff before r15: an unpartitioned table's re-bucket-straddling
+    * window merged in ONE task).
     *
     * `epochs` = (bucketNum, files) per mapping-consistent sub-window,
     * oldest first; the LAST epoch is the final mapping (cut points come
@@ -263,8 +198,8 @@ object BucketMergeRead {
     *
     * Cost at scale: the shuffle carries ONLY the non-final epochs' window
     * delta (the final epoch's runs are read in place, zero movement);
-    * parallelism is per-bucket on both sides vs readCrossBucket's
-    * per-range-partition. readCrossBucket remains the fallback for
+    * parallelism is per-bucket on both sides vs the cross-bucket merge's
+    * per-range-partition. The cross-bucket merge remains the fallback for
     * windows that cannot be cut (a delta commit inside the re-bucket's
     * clock-cushion zone, or an in-progress marker). */
   def readSplitWindow(

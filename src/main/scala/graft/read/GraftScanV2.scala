@@ -41,19 +41,57 @@ object ExtractMergeOpProjectionOption {
   val Key = "graft.mergeops"
 }
 
+/** Where a [[GraftScanBuilder]] takes its files from. */
+private[graft] sealed trait ScanSource
+
+/** The catalog table's snapshot resolvers: full, snapshot (`readtype` =
+  * snapshot) or incremental (`readtype` = incremental) per the read
+  * options; the only source that may answer aggregates from metadata. */
+private[graft] final case class CatalogFiles(table: GraftTable) extends ScanSource
+
+/** An already-resolved file set (the library reads, [[GraftRead.read]]).
+  * `forceCrossBucket` merges per range partition whatever the set's
+  * mapping, and turns off every optimization derived from bucket ids.
+  * Like the RDD reads it replaced, it answers no aggregate from metadata
+  * and pushes no predicate into the parquet readers. */
+private[graft] final case class FixedFiles(files: Seq[ResolvedFile],
+    keepCdcRows: Boolean, forceCrossBucket: Boolean) extends ScanSource
+
+/** Batch-only DSv2 table over a [[FixedFiles]] set: the library reads plan
+  * through the same [[GraftScanBuilder]] as `graft_cat.ns.t`. `info` may be
+  * a modified copy of the stored one (per-read merge operators, an epoch's
+  * bucket count). */
+private[graft] class FixedFilesTable(spark: SparkSession, info: TableInfo,
+    source: FixedFiles) extends connector.catalog.Table
+    with connector.catalog.SupportsRead {
+  override def name(): String = s"graft files of ${info.tablePath}"
+  override def schema(): StructType = BucketMergeRead.relaxMissing(
+    graft.util.SchemaUtil.fromJson(info.schemaJson), source.files)
+  override def capabilities(): java.util.Set[connector.catalog.TableCapability] =
+    java.util.EnumSet.of(connector.catalog.TableCapability.BATCH_READ)
+  override def newScanBuilder(
+      options: org.apache.spark.sql.util.CaseInsensitiveStringMap): ScanBuilder =
+    new GraftScanBuilder(spark, info, source,
+      scala.jdk.CollectionConverters.MapHasAsScala(options).asScala.toMap)
+}
+
 class GraftScanBuilder(
     spark: SparkSession,
-    table: GraftTable,
-    options: Map[String, String] = Map.empty)
+    tableInfo: TableInfo,
+    source: ScanSource,
+    options: Map[String, String])
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
+
+  def this(spark: SparkSession, table: GraftTable,
+      options: Map[String, String] = Map.empty) =
+    this(spark, table.info, CatalogFiles(table), options)
 
   // per-query merge-operator overrides arrive as the packed scan option
   // `graft.mergeops` = "col:op[,col:op...]" (set by the SQL extraction rule
   // ExtractMergeOpProjection or an explicit .option(...)) and override the
   // table-property defaults for THIS scan only (M4)
-  private val info = {
-    val t0 = table.info
+  private val info =
     options.get(ExtractMergeOpProjectionOption.Key).filter(_.nonEmpty) match {
       case Some(spec) =>
         val ops = spec.split(',').map { s =>
@@ -62,12 +100,11 @@ class GraftScanBuilder(
           s.substring(0, i) -> s.substring(i + 1)
         }
         ops.foreach { case (_, op) => graft.mergeop.MergeOps.forName(op) }
-        t0.copy(properties = t0.properties ++
+        tableInfo.copy(properties = tableInfo.properties ++
           ops.map { case (c, o) => graft.meta.TableInfo.mergeOpProp(c) -> o })
-      case None => t0
+      case None => tableInfo
     }
-  }
-  private val fullSchema = table.schema
+  private val fullSchema = graft.util.SchemaUtil.fromJson(tableInfo.schemaJson)
   private var requiredSchema: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
   private var partPred: String => Boolean = _ => true
@@ -105,8 +142,9 @@ class GraftScanBuilder(
     // still push everything at the reader level — they are just not
     // advertised here (understating is cosmetic, overstating is a lie).
     val keyCols = (info.rangeColumns ++ info.hashColumns).toSet
-    pushed = filters.filter(f => Filters.toColumn(f).isDefined &&
-      (!info.hasPrimaryKey || f.references.forall(keyCols.contains)))
+    pushed = if (!source.isInstanceOf[CatalogFiles]) Array.empty
+      else filters.filter(f => Filters.toColumn(f).isDefined &&
+        (!info.hasPrimaryKey || f.references.forall(keyCols.contains)))
     filters // all residual: Spark re-applies everything above the scan
   }
 
@@ -175,6 +213,10 @@ class GraftScanBuilder(
       : Option[(StructType, Array[InternalRow])] = {
     import org.apache.spark.sql.connector.expressions.aggregate._
     import org.apache.spark.sql.types._
+    val table = source match {
+      case CatalogFiles(t) => t
+      case _: FixedFiles => return None
+    }
     if (info.properties.get("graft.aggPushdown.enabled").contains("false"))
       return None
     if (info.cdcColumn.nonEmpty) return None
@@ -352,31 +394,35 @@ class GraftScanBuilder(
     // readendtime here defaults to lastCommitTs — a value only the builder
     // can resolve.
     var scanOpts = options
-    val (files, keepCdc) = options.getOrElse("readtype", "full") match {
-      case "snapshot" =>
-        (exactDescs match {
-          case Some(ds) =>
-            table.filesUptoTimeForDescs(options("readendtime").toLong, ds)
-          case None =>
-            table.filesUptoTime(options("readendtime").toLong, partPred)
-        }, false)
-      case "incremental" =>
-        val st = options.getOrElse("readstarttime", "0").toLong
-        val et = options.get("readendtime").map(_.toLong)
-          .getOrElse(table.lastCommitTs)
-        scanOpts = options +
-          ("readstarttime" -> st.toString, "readendtime" -> et.toString)
-        (exactDescs match {
-          case Some(ds) => table.incrementalFilesForDescs(st, et, ds)
-          case None => table.incrementalFiles(st, et, partPred)
-        }, true)
-      case _ => (exactDescs match {
-        case Some(ds) => table.liveFilesForDescs(ds)
-        case None => table.liveFiles(partPred)
-      }, false)
+    val (files, keepCdc, forceCross) = source match {
+      case FixedFiles(fs, keep, force) =>
+        (fs.filter(f => partPred(f.partitionDesc)), keep, force)
+      case CatalogFiles(table) => options.getOrElse("readtype", "full") match {
+        case "snapshot" =>
+          (exactDescs match {
+            case Some(ds) =>
+              table.filesUptoTimeForDescs(options("readendtime").toLong, ds)
+            case None =>
+              table.filesUptoTime(options("readendtime").toLong, partPred)
+          }, false, false)
+        case "incremental" =>
+          val st = options.getOrElse("readstarttime", "0").toLong
+          val et = options.get("readendtime").map(_.toLong)
+            .getOrElse(table.lastCommitTs)
+          scanOpts = options +
+            ("readstarttime" -> st.toString, "readendtime" -> et.toString)
+          (exactDescs match {
+            case Some(ds) => table.incrementalFilesForDescs(st, et, ds)
+            case None => table.incrementalFiles(st, et, partPred)
+          }, true, false)
+        case _ => (exactDescs match {
+          case Some(ds) => table.liveFilesForDescs(ds)
+          case None => table.liveFiles(partPred)
+        }, false, false)
+      }
     }
     new GraftScan(spark, info, readSchema, files, dataFilters, pkBucket, keepCdc,
-      scanOpts)
+      scanOpts, forceCross, pushToReaders = source.isInstanceOf[CatalogFiles])
   }
 }
 
@@ -399,7 +445,9 @@ class GraftScan(
     dataFilters: Seq[Filter],
     pkBucket: Option[Int],
     keepCdcRows: Boolean = false,
-    scanOptions: Map[String, String] = Map.empty)
+    scanOptions: Map[String, String] = Map.empty,
+    forceCrossBucket: Boolean = false,
+    pushToReaders: Boolean = true)
     extends Scan with Batch with SupportsReportPartitioning
     with SupportsReportOrdering
     with SupportsReportStatistics with SupportsRuntimeFiltering {
@@ -439,7 +487,7 @@ class GraftScan(
     * exceed info.bucketNum — grouping by raw id stays exact for any
     * mapping-consistent set, and rejecting them dropped concurrent SQL
     * reads to the plain branch, which cannot serve tombstone runs
-    * (r15 soak find, library-path twin in GraftRead.read). */
+    * (r15 soak find). */
   private val mergeBucketNum =
     if (filesIn.isEmpty) info.bucketNum
     else math.max(info.bucketNum, filesIn.iterator.map(_.file.bucketId).max + 1)
@@ -457,15 +505,16 @@ class GraftScan(
     * post-flip writes) or is ambiguous — per-bucket dispatch would
     * double-surface straddling keys. The DSv2 scan cannot compose the
     * library's cursor-split shuffle, so [[computePartitions]] routes such
-    * sets to the per-range-partition cross-bucket grouping (the same one
-    * the micro-batch stream uses for straddling batches). */
+    * sets — and every set read with `forceCrossBucket` — to the
+    * per-range-partition cross-bucket grouping (the same one the
+    * micro-batch stream uses for straddling batches). */
   private val epochsOpt
       : Option[Seq[(Int, Seq[graft.meta.ResolvedFile])]] =
     if (!info.hasPrimaryKey) Some(Seq(info.bucketNum -> filesIn))
     else graft.meta.RebucketLog.epochsOf(info.properties, info.bucketNum, filesIn)
 
   private val crossBucketNeeded: Boolean =
-    info.hasPrimaryKey && !epochsOpt.exists(_.size <= 1)
+    info.hasPrimaryKey && (forceCrossBucket || !epochsOpt.exists(_.size <= 1))
 
   /** The ID-DERIVED optimizations — the single-bucket point prune (M6)
     * and the reported KeyGroupedPartitioning (SPJ) — are valid only when
@@ -475,19 +524,36 @@ class GraftScan(
     * DIFFERENT mapping — pruning by the current count would miss the
     * key's actual bucket, and SPJ would pair partitions of two different
     * mappings (silently wrong join). Merge correctness is
-    * mapping-agnostic and stays on. */
-  private val mappingSettled =
+    * mapping-agnostic and stays on. A forced cross-bucket read claims no
+    * mapping at all. */
+  private val mappingSettled = !forceCrossBucket &&
     graft.meta.RebucketLog.settledAt(info.properties, info.bucketNum, filesIn) &&
       filesIn.forall(_.file.bucketId < info.bucketNum)
 
   private val pkBucketEff: Option[Int] = if (mappingSettled) pkBucket else None
 
+  /** GROUP-ALIGNED: input partition i is bucket i of the current mapping,
+    * in key order, holding every run of that bucket (and only those). It
+    * decides the reported KeyGroupedPartitioning, and lets a caller that
+    * rewrites the read verbatim (compaction) keep the placement instead of
+    * re-shuffling by bucket id
+    * ([[graft.write.TransactionalWrite.writeFiles]] inputBucketAligned).
+    * A single OLD-mapping set (a crashed re-bucket's flip before its
+    * rewrite) reads exactly by raw ids but is not aligned: a write keeping
+    * its placement would stamp old-mapping ids under the new count. */
+  private[graft] val groupAligned: Boolean =
+    bucketMergeable && mappingSettled && !crossBucketNeeded && pkBucketEff.isEmpty
+
   private val multiRun =
     files.groupBy(_.partitionDesc).values.exists(_.map(_.commitOrdinal).distinct.size > 1)
 
   // merge-safe reader-level filters: key-only always; everything once no
-  // merge can occur (single run everywhere or no PK)
-  private val readerFilters: Seq[Filter] = {
+  // merge can occur (single run everywhere or no PK). Off for fixed file
+  // sets (the library reads): zone maps and the bucket prune already
+  // apply the exact filters per file, and the per-file predicate costs
+  // more than it skips on the DML key reads (measured on a 4-core host:
+  // a 150-key IN-list added ~45 ms to each perfbench cdc_ingest delete)
+  private val readerFilters: Seq[Filter] = if (!pushToReaders) Nil else {
     val keyCols = (info.rangeColumns ++ info.hashColumns).toSet
     if (!info.hasPrimaryKey || !multiRun) dataFilters
     else dataFilters.filter(_.references.forall(keyCols.contains))
@@ -574,7 +640,7 @@ class GraftScan(
   }
 
   override def outputPartitioning(): Partitioning =
-    if (bucketMergeable && mappingSettled && pkBucketEff.isEmpty)
+    if (groupAligned)
       new KeyGroupedPartitioning(
         Array(graft.util.SchemaUtil.qbucket(info.bucketNum, info.hashColumns)),
         info.bucketNum)
@@ -610,43 +676,21 @@ class GraftScan(
   private def computePartitions(): Array[InputPartition] =
     if (bucketMergeable && crossBucketNeeded) {
       // flip-spanning or mapping-ambiguous file set (straddling
-      // incremental window, mid/crashed re-bucket snapshot): merge per
+      // incremental window, mid/crashed re-bucket snapshot), or a forced
+      // cross read (the cursor split's equivalence oracle): merge per
       // RANGE PARTITION (mapping-agnostic — partitions are key-disjoint
       // by range columns), every (commit, bucket) subgroup its own
-      // key-sorted run in commit order. Mirrors
-      // GraftMicroBatchStream.planInputPartitions exactly; such states
-      // are rare and transient, so the per-partition parallelism is
-      // acceptable where a silent duplicate is not.
-      files.groupBy(_.partitionDesc).toSeq.sortBy(_._1).zipWithIndex
-        .map { case ((_, fs), i) =>
-          val runs = fs.groupBy(f => (f.commitOrdinal, f.file.bucketId))
-            .toSeq.sortBy(_._1)
-            .flatMap { case (_, sub) =>
-              BucketMergeRead.orderedRuns(info, schema, sub) }
-            .map { case (rfs, mask, tomb) =>
-              GraftRunSpec(rfs.map(f =>
-                PartitionedFile(InternalRow.empty,
-                  SparkPath.fromPathString(f.file.path), 0L, f.file.size))
-                .toArray, mask, tomb)
-            }
-          GraftBucketPartition(i, runs.toArray): InputPartition
-        }.toArray
+      // key-sorted run in commit order (the grouping the micro-batch
+      // stream uses for straddling batches); such states are rare and
+      // transient, so the per-partition parallelism is acceptable where a
+      // silent duplicate is not.
+      GraftScan.crossBucketPartitions(info, schema, files)
     } else if (bucketMergeable) {
       // run split/order delegated to BucketMergeRead.orderedRuns: commit
       // ordinals are per-partition, so same-ordinal groups split by
       // (mask, tombstone) signature when partition histories diverge
-      val buckets = pkBucketEff.map(Seq(_)).getOrElse(0 until mergeBucketNum)
-      buckets.map { b =>
-        val mine = files.filter(_.file.bucketId == b)
-        val runs = BucketMergeRead.orderedRuns(info, schema, mine).map {
-          case (fs, mask, tomb) =>
-            GraftRunSpec(fs.map(f =>
-              PartitionedFile(InternalRow.empty,
-                SparkPath.fromPathString(f.file.path), 0L, f.file.size)).toArray,
-              mask, tomb)
-        }.toArray
-        GraftBucketPartition(b, runs): InputPartition
-      }.toArray
+      GraftScan.bucketPartitions(info, schema, files,
+        pkBucketEff.map(Seq(_)).getOrElse(0 until mergeBucketNum))
     } else {
       // plain scan: one partition per file (no merge semantics needed).
       // Tombstone runs require merge semantics — surfacing their key-only
@@ -667,12 +711,7 @@ class GraftScan(
           "are not supported by the SQL scan's k-way merge; read via " +
           "GraftTable.toDF (aggregate merge fallback) or run compaction() " +
           "first")
-      files.map { f =>
-        GraftFilePartition(
-          PartitionedFile(InternalRow.empty,
-            SparkPath.fromPathString(f.file.path), 0L, f.file.size),
-          BucketMergeRead.presentMask(schema, f.file.existCols)): InputPartition
-      }.toArray
+      GraftScan.filePartitions(schema, files)
     }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -843,19 +882,7 @@ class GraftMicroBatchStream(
     val live = table
     val liveInfo = live.info
     val files = live.incrementalFiles(s, e, strict = true)
-    def toSpec(rs: Seq[(Seq[graft.meta.ResolvedFile], Array[Boolean], Boolean)])
-        : Array[GraftRunSpec] =
-      rs.map { case (fs, mask, tomb) =>
-        GraftRunSpec(fs.map(f =>
-          PartitionedFile(InternalRow.empty,
-            SparkPath.fromPathString(f.file.path), 0L, f.file.size)).toArray,
-          mask, tomb)
-      }.toArray
-    if (!info.hasPrimaryKey)
-      files.map(f => GraftFilePartition(
-        PartitionedFile(InternalRow.empty,
-          SparkPath.fromPathString(f.file.path), 0L, f.file.size),
-        BucketMergeRead.presentMask(schema, f.file.existCols)): InputPartition).toArray
+    if (!info.hasPrimaryKey) GraftScan.filePartitions(schema, files)
     else graft.meta.RebucketLog.epochsOf(liveInfo.properties,
         liveInfo.bucketNum, files) match {
       case Some(epochs) if epochs.size <= 1 =>
@@ -868,32 +895,20 @@ class GraftMicroBatchStream(
         val n = math.max(
           epochs.headOption.map(_._1).getOrElse(liveInfo.bucketNum),
           files.iterator.map(_.file.bucketId).foldLeft(-1)(math.max) + 1)
-        (0 until n).map { b =>
-          val mine = files.filter(_.file.bucketId == b)
-          GraftBucketPartition(b,
-            toSpec(BucketMergeRead.orderedRuns(info, schema, mine))): InputPartition
-        }.toArray
+        GraftScan.bucketPartitions(info, schema, files, 0 until n)
       case _ =>
         // the window spans a key->bucket MAPPING change, or is
         // mapping-ambiguous (open marker, unknown commit provenance,
         // pre-horizon): per-bucket dispatch is key-disjoint only under one
         // mapping — a straddling key's old- and new-mapping rows would
         // land in different merge tasks and BOTH surface. Merge per RANGE
-        // PARTITION instead, every (commit, bucket) subgroup its own
-        // key-sorted run in commit order (readCrossBucket's grouping,
-        // through the same k-way partition reader). Reachable only from a
+        // PARTITION instead (GraftScan's cross-bucket grouping, through
+        // the same k-way partition reader). Reachable only from a
         // checkpoint committed ACROSS a flip before clamping existed, or
         // under an open/ambiguous marker where no cut is sound — rare and
         // transient, so the per-partition parallelism is acceptable where
         // a silent duplicate is not.
-        files.groupBy(_.partitionDesc).toSeq.sortBy(_._1).zipWithIndex
-          .map { case ((_, fs), i) =>
-            val runs = fs.groupBy(f => (f.commitOrdinal, f.file.bucketId))
-              .toSeq.sortBy(_._1)
-              .flatMap { case (_, sub) =>
-                BucketMergeRead.orderedRuns(info, schema, sub) }
-            GraftBucketPartition(i, toSpec(runs)): InputPartition
-          }.toArray
+        GraftScan.crossBucketPartitions(info, schema, files)
     }
   }
 
@@ -907,6 +922,48 @@ class GraftMicroBatchStream(
       cdcIdx = -1, // incremental semantics: tombstones kept (F6 exemption)
       maxOpenRuns = BoundedMerge.cap(spark, schema))
   }
+}
+
+/** Input-partition planning shared by the batch scan and the micro-batch
+  * stream. */
+private[read] object GraftScan {
+  private def partitionedFile(f: ResolvedFile): PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPathString(f.file.path),
+      0L, f.file.size)
+
+  private def runSpecs(runs: Seq[(Seq[ResolvedFile], Array[Boolean], Boolean)])
+      : Array[GraftRunSpec] =
+    runs.map { case (fs, mask, tomb) =>
+      GraftRunSpec(fs.map(partitionedFile).toArray, mask, tomb)
+    }.toArray
+
+  /** No merge: one partition per file. */
+  def filePartitions(schema: StructType, files: Seq[ResolvedFile])
+      : Array[InputPartition] =
+    files.map(f => GraftFilePartition(partitionedFile(f),
+      BucketMergeRead.presentMask(schema, f.file.existCols)): InputPartition).toArray
+
+  /** One partition per bucket id in `buckets`, holding that bucket's
+    * ordered runs (empty when it has no file). */
+  def bucketPartitions(info: TableInfo, schema: StructType,
+      files: Seq[ResolvedFile], buckets: Seq[Int]): Array[InputPartition] =
+    buckets.map { b =>
+      GraftBucketPartition(b, runSpecs(BucketMergeRead.orderedRuns(info,
+        schema, files.filter(_.file.bucketId == b)))): InputPartition
+    }.toArray
+
+  /** One partition per RANGE PARTITION, every (commit, bucket) subgroup its
+    * own key-sorted run in commit order: exact under any mix of
+    * key->bucket mappings. */
+  def crossBucketPartitions(info: TableInfo, schema: StructType,
+      files: Seq[ResolvedFile]): Array[InputPartition] =
+    files.groupBy(_.partitionDesc).toSeq.sortBy(_._1).zipWithIndex
+      .map { case ((_, fs), i) =>
+        GraftBucketPartition(i, runSpecs(
+          fs.groupBy(f => (f.commitOrdinal, f.file.bucketId)).toSeq.sortBy(_._1)
+            .flatMap { case (_, sub) =>
+              BucketMergeRead.orderedRuns(info, schema, sub) })): InputPartition
+      }.toArray
 }
 
 /** One sorted run of one bucket: files + physical-column presence mask +

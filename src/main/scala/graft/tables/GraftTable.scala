@@ -1608,13 +1608,11 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
       }
       if (merge.nonEmpty) {
         // zero-shuffle compaction (r16; attestation hardened r17): when the
-        // read dispatches every group through the bucket merge (one task
-        // per bucket, key-ordered, no group split), the write can keep that
-        // placement instead of re-shuffling the whole table by bucket id —
-        // never under re-bucketing (rows genuinely move to new buckets).
-        // The alignment flag is a PRODUCT of the read's own dispatch
-        // (GraftRead.readTracked), not a parallel predicate that could
-        // drift. The CDC rewrite below is a narrow map (filter +
+        // read's scan plans one key-ordered partition per bucket
+        // (GraftScan.groupAligned, via GraftRead.readTracked), the write can
+        // keep that placement instead of re-shuffling the whole table by
+        // bucket id — never under re-bucketing (rows genuinely move to new
+        // buckets). The CDC rewrite below is a narrow map (filter +
         // withColumn), so the alignment survives it.
         val (current, readAligned) =
           GraftRead.readTracked(spark, t, merge, keepCdcRows = true)
@@ -1808,27 +1806,23 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
       .select("__g_desc").collect().map(_.getString(0)).toSet
   }
 
-  /** Primary-key point lookup with bucket pruning (M6): only files of the
-    * bucket `pmod(hash(pkValues), bucketNum)` are read — the same expression
-    * the write path used, so they can never disagree (the reference had to
-    * re-implement Spark murmur3 in Rust for this, spark_murmur3.rs). */
+  /** Primary-key point lookup with bucket pruning (M6): the scan's pushed
+    * full-key equality reads only the files of bucket
+    * `pmod(hash(pkValues), bucketNum)` — the same expression the write path
+    * used, so they can never disagree (the reference had to re-implement
+    * Spark murmur3 in Rust for this, spark_murmur3.rs) — and only while the
+    * files' mapping is the current count's (mid re-bucket every bucket is
+    * read). */
   def lookupByPk(pkValues: Seq[Any]): DataFrame = {
     val t = info
     require(t.hasPrimaryKey, "lookupByPk requires a primary-key table")
     require(pkValues.length == t.hashColumns.length,
       s"expected ${t.hashColumns.length} pk values, got ${pkValues.length}")
-    val sch = schema
-    val lits = t.hashColumns.zip(pkValues).map { case (c, v) =>
-      lit(v).cast(sch(c).dataType)
-    }
-    val bucket = spark.range(1)
-      .select(TransactionalWrite.bucketIdExpr(lits, t.bucketNum).as("b"))
-      .head.getInt(0)
-    val files = resolver.currentFiles(tablePath)
-      .filter(f => f.file.bucketId == bucket || f.file.bucketId == -1)
-    val pred = t.hashColumns.zip(lits)
-      .map { case (c, l) => col(c) === l }.reduce(_ && _)
-    GraftRead.read(spark, t, files).filter(pred)
+    val sch = graft.util.SchemaUtil.fromJson(t.schemaJson)
+    val pred = t.hashColumns.zip(pkValues)
+      .map { case (c, v) => col(c) === lit(v).cast(sch(c).dataType) }
+      .reduce(_ && _)
+    GraftRead.read(spark, t, resolver.currentFiles(tablePath)).filter(pred)
   }
 
   /** Maintain a materialized JOIN table against a DIM-side delta (J2,

@@ -358,8 +358,8 @@ object TransactionalWrite {
     // FLAT-BUCKET WRITE: when the input's Spark partition INDEX is
     // provably the bucket id — after preMerge (repartition(bucketNum, pk)
     // uses the same murmur3-mod expression as bucketIdExpr), or under a
-    // group-aligned merge read
-    // (BucketMergeRead.readRdd's partition-index == bucket-id contract) —
+    // group-aligned merge read (GraftScan.groupAligned: input partition i
+    // is bucket i) —
     // and the table has no range partitions, the dynamic-partition
     // writer buys NOTHING: every task holds exactly one bucket. Skip it:
     // write flat files and derive each file's bucket id from its
@@ -397,8 +397,8 @@ object TransactionalWrite {
         // (partition index == bucket id); only re-shuffle when the batch
         // bypassed preMerge (update/compaction rewrites) AND the caller
         // cannot attest per-(partition, bucket) alignment. With
-        // inputBucketAligned (compaction over an all-merge-path read,
-        // GraftRead.readAligned) every input partition holds exactly
+        // inputBucketAligned (compaction over a group-aligned scan,
+        // GraftScan.groupAligned) every input partition holds exactly
         // one (desc, bucket) group in key order, so the repartition would
         // move every row of the table to the partition it is already in —
         // at 100 TB a full-table shuffle paid for nothing. Correctness

@@ -4,12 +4,12 @@ import org.apache.spark.sql.functions._
 
 import graft.tables.GraftTable
 
-/** Per-BUCKET merge dispatch (GraftRead.read): buckets are key-disjoint, so
-  * only the (partition, bucket) groups that actually carry >1 run or a
-  * tombstone pay the row-at-a-time merge; every untouched bucket streams
-  * through the plain vectorized parquet scan even when its partition has
-  * pending deltas elsewhere. At cluster scale this keeps a partition-local
-  * small upsert from dragging the partition's other buckets off the
+/** Per-BUCKET merge dispatch inside the DSv2 scan (GraftScan, which both
+  * `toDF` and the library reads plan through): buckets are key-disjoint,
+  * so only the buckets that actually carry >1 run or a tombstone pay the
+  * merge; every untouched bucket streams its reader batches untouched even
+  * when other buckets have pending deltas. At cluster scale this keeps a
+  * partition-local small upsert from dragging the other buckets off the
   * columnar path. */
 class BucketDispatchSuite extends SparkFixture {
 
@@ -31,13 +31,12 @@ class BucketDispatchSuite extends SparkFixture {
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("BatchScan") && plan.contains("GraftScan"),
         s"expected the DSv2 graft scan in:\n$plan")
-      // the library path keeps the explicit split: merge RDD for the
-      // touched bucket UNION plain parquet scan for the untouched ones
+      // the library path plans the same one scan over its resolved files
       val libPlan = t.toDF(_ => true).queryExecution.executedPlan.toString
-      assert(libPlan.contains("ExistingRDD"),
-        s"expected the k-way merge scan in:\n$libPlan")
-      assert(libPlan.contains("FileScan parquet"),
-        s"expected a plain vectorized scan of untouched buckets in:\n$libPlan")
+      assert(libPlan.contains("BatchScan") && libPlan.contains("GraftScan"),
+        s"expected the DSv2 graft scan in:\n$libPlan")
+      assert(!libPlan.contains("ExistingRDD") && !libPlan.contains("FileScan"),
+        s"expected no second scan in:\n$libPlan")
 
       // and the merged result is still exactly right
       val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

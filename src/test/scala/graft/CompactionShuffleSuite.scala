@@ -7,11 +7,11 @@ import graft.tables.GraftTable
 /** r16 zero-shuffle compaction pin: when every (partition, bucket) group
   * reads through the bucket merge, compaction's write keeps the read's
   * per-group placement — no bucket re-shuffle (at 100 TB the removed
-  * shuffle is a second full pass of the table over the network). r17: the
-  * alignment flag is produced by GraftRead.readTracked's own dispatch (no
-  * mirror predicate to drift), but the pins stay: if a group is silently
-  * routed to the plain scan while the write still skips its shuffle,
-  * either the shuffle-bytes pin or the result/row-order pins here fail. */
+  * shuffle is a second full pass of the table over the network). The
+  * alignment flag is the planned scan's own GraftScan.groupAligned (no
+  * mirror predicate to drift), but the pins stay: if a bucket were split
+  * across tasks while the write still skips its shuffle, either the
+  * shuffle-bytes pin or the result/row-order pins here fail. */
 class CompactionShuffleSuite extends SparkFixture {
 
   private def shuffleBytesDuring(body: => Unit): Long = {
@@ -88,20 +88,23 @@ class CompactionShuffleSuite extends SparkFixture {
     }
   }
 
-  test("leveled compaction with a plain-scan group keeps the shuffle") {
+  test("full compaction after a one-bucket delta writes zero shuffle bytes") {
     withTempPath { dir =>
       val orders = spark.read.parquet(s"$sfDir/orders.parquet")
       val t = GraftTable.create(spark, orders, dir,
         hashColumns = Seq("o_orderkey"), bucketNum = 4)
-      // readTracked must refuse a set with single-run groups: a bucket
-      // the deltas never touched reads through the plain scan
-      val tiny = orders.limit(1) // one key -> one bucket touched
-      t.upsert(tiny.withColumn("o_totalprice", lit(2.0)))
-      val files = t.liveFiles
-      assert(!graft.read.GraftRead.readTracked(spark, t.info, files,
-        keepCdcRows = true)._2)
+      // one key -> one bucket touched: the three untouched buckets are
+      // single-run, and they read through the same per-bucket scan
+      // partitions as the merged one, so the read stays group-aligned
+      t.upsert(orders.limit(1).withColumn("o_totalprice", lit(2.0)))
+      assert(t.liveFiles.groupBy(_.file.bucketId)
+        .count(_._2.map(_.commitOrdinal).distinct.size > 1) == 1)
       val before = t.toDF.collect().map(_.toString).sorted.toSeq
-      t.compaction()
+      val sb = shuffleBytesDuring { t.compaction() }
+      assert(sb == 0L, s"aligned compaction shuffled $sb bytes")
+      val byBucket = t.liveFiles.groupBy(_.file.bucketId)
+      assert(byBucket.size == 4 && byBucket.values.forall(_.size == 1),
+        s"expected one file per bucket, got ${byBucket.view.mapValues(_.size).toMap}")
       assert(t.toDF.collect().map(_.toString).sorted.toSeq == before)
     }
   }

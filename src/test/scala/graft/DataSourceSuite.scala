@@ -329,7 +329,13 @@ class DataSourceSuite extends SparkFixture {
       val df = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
       val t = GraftTable.create(spark, df, path,
         hashColumns = Seq("id"), bucketNum = 8)
-      assertRows(t.lookupByPk(Seq(42L)), Seq("[42,v42]"))
+      t.upsert(Seq((1L, "u1"), (42L, "u42")).toDF("id", "v"))
+      assertRows(t.lookupByPk(Seq(42L)), Seq("[42,u42]"))
+      val b = graft.write.TransactionalWrite.bucketOf(spark, t.schema,
+        Seq("id" -> 42L), 8)
+      val mine = t.liveFiles.count(_.file.bucketId == b).toLong
+      assert(mine > 0 && mine < t.liveFiles.size)
+      assert(graftFilesPlanned(t.lookupByPk(Seq(42L))) == mine)
       assert(t.lookupByPk(Seq(4242L)).count() == 0)
     }
   }

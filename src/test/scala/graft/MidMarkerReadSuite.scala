@@ -101,15 +101,77 @@ class MidMarkerReadSuite extends SparkFixture {
         hashColumns = Seq("id"), bucketNum = 2)
       forgeOpenMarker(path, 8)
       t.upsert((1 to 24).map(i => (i.toLong, i * 100)).toDF("id", "v"))
-      t.delete("id > 40")
-      def rows() = t.toDF.collect().map(_.toString).sorted.toSeq
-      val split = rows()
+      // a tombstone run keeps the set mixed (a rewriting delete would
+      // replace every file under the new mapping: one epoch, no split)
+      t.deleteTombstone($"id" > 40L)
+      // the library path: only it composes the cursor split (the DSv2
+      // catalog scan always merges such a set per range partition)
+      val splitDf = t.toDF(_ => true)
       graft.read.GraftRead.forceCrossBucketRead = true
-      val cross = try rows()
+      val crossDf = try t.toDF(_ => true)
         finally graft.read.GraftRead.forceCrossBucketRead = false
+      val splitPlan = splitDf.queryExecution.executedPlan.toString
+      assert(splitPlan.contains("ExistingRDD") && !splitPlan.contains("GraftScan"),
+        s"expected the cursor-split RDD in:\n$splitPlan")
+      val crossPlan = crossDf.queryExecution.executedPlan.toString
+      assert(crossPlan.contains("BatchScan") && crossPlan.contains("GraftScan"),
+        s"expected the cross-bucket scan in:\n$crossPlan")
+      val split = splitDf.collect().map(_.toString).sorted.toSeq
+      val cross = crossDf.collect().map(_.toString).sorted.toSeq
       assert(split == cross, s"split vs cross diverged\nsplit:\n" +
         s"${split.mkString("\n")}\ncross:\n${cross.mkString("\n")}")
       assert(split.length == 40)
+    }
+  }
+
+  test("lookupByPk mid-open-marker with a new-count delta finds every live key") {
+    withTempPath { path =>
+      val t = GraftTable.create(spark,
+        (1 to 32).map(i => (i.toLong, i)).toDF("id", "v"), path,
+        hashColumns = Seq("id"), bucketNum = 2)
+      forgeOpenMarker(path, 8)
+      t.upsert((1 to 16).map(i => (i.toLong, i * 100)).toDF("id", "v"))
+      // the current count (8) is not the mapping of the base files (2):
+      // pruning by it would miss keys whose old bucket differs
+      val got = (1 to 32).map(k =>
+        k -> t.lookupByPk(Seq(k.toLong)).collect().map(_.getInt(1)).toSeq)
+      val wrong = got.filter { case (k, vs) =>
+        vs != Seq(if (k <= 16) k * 100 else k) }
+      assert(wrong.isEmpty, s"lookups with a wrong answer: $wrong")
+    }
+  }
+
+  test("a forced cross-bucket read of a settled table claims no bucket layout") {
+    withTempPath { path =>
+      val t = GraftTable.create(spark,
+        (1 to 64).map(i => (i.toLong, i)).toDF("id", "v"), path,
+        hashColumns = Seq("id"), bucketNum = 4)
+      t.upsert((1 to 64 by 3).map(i => (i.toLong, i * 10)).toDF("id", "v"))
+      val files = t.liveFiles
+      // a rewritten key inside every file's id bounds: zone maps prune no
+      // file, so the planned count shows the bucket prune alone
+      val bounds = files.map { f =>
+        val cs = graft.meta.FileStats.decode(f.file.stats)("id")
+        (cs.mn.get.toLong, cs.mx.get.toLong)
+      }
+      val k = (1L to 64L by 3).find(k =>
+        bounds.forall { case (lo, hi) => lo <= k && k <= hi })
+        .getOrElse(fail(s"no key inside every file's bounds: $bounds"))
+      val b = graft.write.TransactionalWrite.bucketOf(spark, t.schema,
+        Seq("id" -> k), 4)
+      val (plain, plainAligned) =
+        graft.read.GraftRead.readTracked(spark, t.info, files)
+      assert(plainAligned, "a settled all-bucket read is group-aligned")
+      assert(graftFilesPlanned(plain.filter($"id" === k)) ==
+        files.count(_.file.bucketId == b))
+      val (cross, crossAligned) = graft.read.GraftRead.readTracked(spark,
+        t.info, files, crossBucketMerge = true)
+      assert(!crossAligned, "a forced cross-bucket read must not claim alignment")
+      assert(graftFilesPlanned(cross.filter($"id" === k)) == files.size,
+        "a forced cross-bucket read must not prune by bucket id")
+      assert(cross.filter($"id" === k).collect().map(_.getInt(1)).toSeq ==
+        Seq(k.toInt * 10))
+      assert(cross.count() == 64)
     }
   }
 

@@ -37,6 +37,20 @@ trait SparkFixture extends AnyFunSuite with BeforeAndAfterAll {
     val e = expected.map(_.toString).sorted
     assert(a == e, s"\nactual:\n${a.mkString("\n")}\nexpected:\n${e.mkString("\n")}")
   }
+
+  /** Runs `df` and returns the files its one graft DSv2 scan planned after
+    * every prune (the scan's `graftFilesPlanned` driver metric). `df` must
+    * not have run before: a second run resets the metric, and the scan
+    * posts it only once. */
+  def graftFilesPlanned(df: DataFrame): Long = {
+    df.collect()
+    val scans = df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+    assert(scans.size == 1,
+      s"expected one BatchScan in:\n${df.queryExecution.executedPlan}")
+    scans.head.metrics("graftFilesPlanned").value
+  }
 }
 
 object SparkFixture {
