@@ -235,12 +235,14 @@ object RebucketLog {
     })
   }
 
-  /** The set carries ONE mapping and it is the CURRENT count's — the
-    * precondition for every id-derived optimization (single-bucket point
-    * prune, reported KeyGroupedPartitioning / storage-partitioned joins,
-    * bucket-paired diffs and joins). */
+  /** The set carries ONE mapping, it is the CURRENT count's, and every
+    * bucket id is inside it — the precondition for every id-derived
+    * optimization (single-bucket point prunes, reported
+    * KeyGroupedPartitioning / storage-partitioned joins, bucket-paired
+    * diffs and joins). */
   def settledAt(props: Map[String, String], current: Int,
       files: Seq[ResolvedFile]): Boolean =
     epochsOf(props, current, files)
-      .exists(es => es.size <= 1 && es.forall(_._1 == current))
+      .exists(es => es.size <= 1 && es.forall(_._1 == current)) &&
+      files.forall(_.file.bucketId < current)
 }

@@ -88,9 +88,7 @@ class NearDupIndex private (
       .collect().map(_.getLong(0))
     val corpusSide =
       if (keys.length <= NearDupIndex.MaxPushdownKeys)
-        table.toDFWithFilters(_ => true, None,
-          Seq(org.apache.spark.sql.sources.In("bh",
-            keys.map(_.asInstanceOf[Any]))))
+        table.toDF.filter(col("bh").isin(keys.toSeq: _*))
       else table.toDF
     val hits = corpusSide
       .join(broadcast(bb), Seq("band", "bh"))

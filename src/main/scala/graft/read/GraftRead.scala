@@ -35,10 +35,15 @@ object GraftRead {
   def emptyDF(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
-  /** Whether a snapshot read of this table can route through the DSv2
-    * scan's k-way merge (see GraftTable.toDF). */
-  def bucketMergeSupported(table: TableInfo, schema: StructType): Boolean =
-    BucketMergeRead.opsSupported(table, schema)
+  /** Whether [[GraftScan]] can serve a merged read of this table: no
+    * primary key, merge skipped, or merge operators its k-way merge runs.
+    * Otherwise (agg-only custom operators) only the aggregate merge
+    * ([[mergeRead]]) can — `GraftTable.toDF` and `format("graft")` then
+    * plan the library read instead of the scan. */
+  def scanMerges(table: TableInfo, schema: StructType): Boolean =
+    !table.hasPrimaryKey ||
+      table.properties.get(TableInfo.SkipMergeOnReadProp).contains("true") ||
+      BucketMergeRead.opsSupported(table, schema)
 
   /** Read the given resolved file set as a merged DataFrame.
     * @param keepCdcRows when true (incremental/streaming reads), CDC `delete`
@@ -58,29 +63,26 @@ object GraftRead {
     val outputCols = requiredColumns.getOrElse(fullSchema.fieldNames.toSeq)
       .map(qcol)
     if (files.isEmpty) return emptyDF(spark, fullSchema).select(outputCols: _*)
+    val pruned = prunedSchema(table, fullSchema, requiredColumns)
+    if (!scanMerges(table, pruned))
+      return visible(table, keepCdcRows, mergeRead(spark, table,
+        BucketMergeRead.relaxMissing(pruned, files), files))
+        .select(outputCols: _*)
+    // a set spanning a re-bucket flip (post-flip writes under an open
+    // marker, a window across a re-bucket) is key-disjoint per bucket
+    // only within each mapping epoch: read it per epoch. Ambiguous sets
+    // (None) take the scan's mapping-agnostic cross-bucket merge.
     val merged = table.hasPrimaryKey &&
       !table.properties.get(TableInfo.SkipMergeOnReadProp).contains("true")
-    if (merged) {
-      val pruned = prunedSchema(table, fullSchema, requiredColumns)
-      // agg-only custom merge operators: the k-way merge cannot run them
-      if (!BucketMergeRead.opsSupported(table, pruned))
-        return visible(table, keepCdcRows, mergeRead(spark, table,
-          BucketMergeRead.relaxMissing(pruned, files), files))
-          .select(outputCols: _*)
-      // a set spanning a re-bucket flip (post-flip writes under an open
-      // marker, a window across a re-bucket) is key-disjoint per bucket
-      // only within each mapping epoch: read it per epoch. Ambiguous sets
-      // (None) take the scan's mapping-agnostic cross-bucket merge.
-      if (!crossBucketMerge)
-        RebucketLog.epochsOf(table.properties, table.bucketNum, files) match {
-          case Some(es) if es.size >= 2 =>
-            return readSplitEpochs(spark, table, es, keepCdcRows,
-              requiredColumns)
-          case _ =>
-        }
-    }
+    if (merged && !crossBucketMerge)
+      RebucketLog.epochsOf(table.properties, table.bucketNum, files) match {
+        case Some(es) if es.size >= 2 =>
+          return readSplitEpochs(spark, table, es, keepCdcRows,
+            requiredColumns)
+        case _ =>
+      }
     org.apache.spark.sql.graft.StreamShim.dsv2Df(spark,
-      new FixedFilesTable(spark, table,
+      new GraftReadTable(spark, table,
         FixedFiles(files, keepCdcRows, crossBucketMerge)))
       .select(outputCols: _*)
   }

@@ -57,18 +57,30 @@ private[graft] final case class CatalogFiles(table: GraftTable) extends ScanSour
 private[graft] final case class FixedFiles(files: Seq[ResolvedFile],
     keepCdcRows: Boolean, forceCrossBucket: Boolean) extends ScanSource
 
-/** Batch-only DSv2 table over a [[FixedFiles]] set: the library reads plan
-  * through the same [[GraftScanBuilder]] as `graft_cat.ns.t`. `info` may be
-  * a modified copy of the stored one (per-read merge operators, an epoch's
-  * bucket count). */
-private[graft] class FixedFilesTable(spark: SparkSession, info: TableInfo,
-    source: FixedFiles) extends connector.catalog.Table
+/** Read-only DSv2 table over a [[ScanSource]]: the library reads (a
+  * [[FixedFiles]] set) and `spark.read.format("graft")` (the table's
+  * [[CatalogFiles]], [[graft.sources.GraftDataSource]]) plan through the
+  * same [[GraftScanBuilder]] as `graft_cat.ns.t`. `info` may be a modified
+  * copy of the stored one (per-read merge operators, an epoch's bucket
+  * count). Without `batchRead` the table reports no capability, so Spark
+  * plans `format("graft")` through the DSv1 relation instead. */
+private[graft] class GraftReadTable(spark: SparkSession, info: TableInfo,
+    source: ScanSource, batchRead: Boolean = true) extends connector.catalog.Table
     with connector.catalog.SupportsRead {
-  override def name(): String = s"graft files of ${info.tablePath}"
-  override def schema(): StructType = BucketMergeRead.relaxMissing(
-    graft.util.SchemaUtil.fromJson(info.schemaJson), source.files)
+  override def name(): String = source match {
+    case _: CatalogFiles => info.tablePath
+    case _: FixedFiles => s"graft files of ${info.tablePath}"
+  }
+  override def schema(): StructType = {
+    val declared = graft.util.SchemaUtil.fromJson(info.schemaJson)
+    source match {
+      case FixedFiles(files, _, _) => BucketMergeRead.relaxMissing(declared, files)
+      case _: CatalogFiles => declared
+    }
+  }
   override def capabilities(): java.util.Set[connector.catalog.TableCapability] =
-    java.util.EnumSet.of(connector.catalog.TableCapability.BATCH_READ)
+    if (batchRead) java.util.EnumSet.of(connector.catalog.TableCapability.BATCH_READ)
+    else java.util.EnumSet.noneOf(classOf[connector.catalog.TableCapability])
   override def newScanBuilder(
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(spark, info, source,
@@ -107,28 +119,11 @@ class GraftScanBuilder(
   private val fullSchema = graft.util.SchemaUtil.fromJson(tableInfo.schemaJson)
   private var requiredSchema: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
-  private var partPred: String => Boolean = _ => true
-  private var exactDescs: Option[Seq[String]] = None
   private var dataFilters: Seq[Filter] = Nil
   private var pkBucket: Option[Int] = None
   private var aggResult: Option[(StructType, Array[InternalRow])] = None
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val rangeSets = Filters.rangeValueSets(filters.toSeq, info.rangeColumns)
-    val isStr = (c: String) => fullSchema.fields.find(_.name == c)
-      .exists(_.dataType == org.apache.spark.sql.types.StringType)
-    val setPred = Filters.partitionPredSets(rangeSets)
-    // ordering conjuncts on STRING range columns prune at the desc level
-    // too (dt >= .. AND dt < .. over a time-partitioned table)
-    val ordPred = Filters.rangeOrderingPred(filters.toSeq, info.rangeColumns, isStr)
-    partPred = d => setPred(d) && ordPred(d)
-    // every range column pinned to a bounded value set (equality or IN) ->
-    // the matching descs are fully determined: resolve files by META POINT
-    // LOOKUP instead of listing (and predicate-filtering) every partition
-    // head — at 100k+ partitions the listing is the latency (F4 /
-    // reference's indexed PG prune)
-    exactDescs = Filters.exactDescs(rangeSets, info.rangeColumns)
-      .map(_.filter(ordPred)) // an ordering conjunct can exclude a pinned desc
     // full PK equality -> single-bucket point read (M6)
     val eq = filters.collect { case EqualTo(a, v) => a -> v }.toMap
     if (info.hasPrimaryKey && info.hashColumns.forall(eq.contains))
@@ -149,6 +144,14 @@ class GraftScanBuilder(
   }
 
   override def pushedFilters(): Array[Filter] = pushed
+
+  /** Partition predicate + point-lookup descs (F4 / the reference's
+    * indexed PG prune) from the pushed filters and the `partitiondesc`
+    * option, which prunes on its own: Spark calls pushFilters only when
+    * the query has a filter. */
+  private def partitionPruning: (String => Boolean, Option[Seq[String]]) =
+    Filters.partitionPruning(dataFilters, info.rangeColumns, fullSchema,
+      options.get("partitiondesc"))
 
   override def pruneColumns(required: StructType): Unit =
     requiredSchema = required
@@ -227,6 +230,7 @@ class GraftScanBuilder(
     // full reads and snapshot (time-travel) reads resolve to a fixed file
     // set the same exactness argument covers; incremental reads keep CDC
     // tombstone semantics and never push
+    val (partPred, exactDescs) = partitionPruning
     val files = options.getOrElse("readtype", "full") match {
       case "full" => exactDescs match {
         case Some(ds) => table.liveFilesForDescs(ds)
@@ -394,6 +398,7 @@ class GraftScanBuilder(
     // readendtime here defaults to lastCommitTs — a value only the builder
     // can resolve.
     var scanOpts = options
+    val (partPred, exactDescs) = partitionPruning
     val (files, keepCdc, forceCross) = source match {
       case FixedFiles(fs, keep, force) =>
         (fs.filter(f => partPred(f.partitionDesc)), keep, force)
@@ -527,8 +532,7 @@ class GraftScan(
     * mapping-agnostic and stays on. A forced cross-bucket read claims no
     * mapping at all. */
   private val mappingSettled = !forceCrossBucket &&
-    graft.meta.RebucketLog.settledAt(info.properties, info.bucketNum, filesIn) &&
-      filesIn.forall(_.file.bucketId < info.bucketNum)
+    graft.meta.RebucketLog.settledAt(info.properties, info.bucketNum, filesIn)
 
   private val pkBucketEff: Option[Int] = if (mappingSettled) pkBucket else None
 

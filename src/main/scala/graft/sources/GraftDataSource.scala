@@ -1,16 +1,26 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableCatalog, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, WriteBuilder}
 import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.meta.RebucketLog
+import graft.read.{CatalogFiles, GraftRead, GraftReadTable}
 import graft.streaming.GraftSink
 import graft.tables.GraftTable
+import graft.util.Filters
 
 /** `format("graft")` — the reference's DataSource surface (SURVEY.md §3.1,
   * §3.3; sources/LakeSoulDataSource.scala):
@@ -27,17 +37,84 @@ import graft.tables.GraftTable
   *   df.writeStream.format("graft")                   // exactly-once sink
   *     .option("path", path).option("queryId", "q1")
   *
+  * Batch reads are DSv2 ([[TableProvider]]): `getTable` returns a read-only
+  * table over the table's snapshot resolvers, so the read plans the same
+  * [[graft.read.GraftScanBuilder]] as `graft_cat.ns.t` and
+  * `GraftTable.toDF`, with the read options pinning the snapshot. The
+  * reads that scan cannot plan get a table without `BATCH_READ`, and Spark
+  * falls back to the DSv1 [[GraftRelation]]: `readtype=diff`, tables whose
+  * merge operators only the aggregate merge runs, and incremental windows
+  * across a recorded re-bucket (the cursor split). Writes and streaming
+  * stay DSv1: the table reports neither `BATCH_WRITE` nor a streaming
+  * capability, so Spark calls `createRelation(mode, ...)`, `createSource`
+  * and `createSink`. A table registered in the session catalog
+  * (`saveAsTable`, `CREATE TABLE ... USING graft`) loads as its
+  * `V1Table`, so its commands, guard rails and reads stay DSv1 too.
+  *
   * Option names mirror the reference (LakeSoulDataSource.scala:121-148).
   */
-class GraftDataSource extends RelationProvider with CreatableRelationProvider
-    with StreamSourceProvider with StreamSinkProvider
-    with SchemaRelationProvider with DataSourceRegister {
+class GraftDataSource extends TableProvider with RelationProvider
+    with CreatableRelationProvider with StreamSourceProvider
+    with StreamSinkProvider with SchemaRelationProvider with DataSourceRegister {
 
   override def shortName(): String = "graft"
 
   private def pathOf(parameters: Map[String, String]): String =
     graft.util.PathUtil.local(parameters.getOrElse("path",
       throw new IllegalArgumentException("'path' option (or load(path)) required")))
+
+  /** The table schema; empty when no table exists yet (a first write or a
+    * streaming sink asks too), so the read falls back to the DSv1 relation
+    * and fails there with "no graft table at ...". */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val path = pathOf(options.asScala.toMap)
+    if (GraftTable.exists(path)) GraftTable.forPath(SparkSession.active, path).schema
+    else new StructType()
+  }
+
+  /** A user-specified schema is ignored, as [[SchemaRelationProvider]]
+    * ignores it. */
+  override def supportsExternalMetadata(): Boolean = true
+
+  override def getTable(userSchema: StructType, partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table = {
+    val spark = SparkSession.active
+    val parameters = CaseInsensitiveMap(properties.asScala.toMap)
+    // no table yet (a first write, a streaming sink, the session catalog's
+    // CTAS, which may not have placed a managed table yet): no read, and
+    // the CTAS writes through the DSv1 write
+    if (!parameters.get("path").exists(GraftTable.exists(_))) return new Table
+        with SupportsWrite {
+      override def name(): String = parameters.getOrElse("path", "")
+      override def schema(): StructType = userSchema
+      override def capabilities(): java.util.Set[TableCapability] =
+        java.util.EnumSet.of(TableCapability.V1_BATCH_WRITE)
+      override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+        new WriteBuilder {
+          override def build(): V1Write = () => (data, _) =>
+            createRelation(data.sparkSession.sqlContext, SaveMode.Append,
+              CaseInsensitiveMap(parameters ++ info.options.asScala), data)
+        }
+    }
+    // a table registered in the session catalog (`saveAsTable`; only the
+    // catalog's load passes its reserved provider property) keeps its V1
+    // commands, guard rails and relation
+    val path = pathOf(parameters)
+    if (properties.containsKey(TableCatalog.PROP_PROVIDER))
+      org.apache.spark.sql.graft.StreamShim.sessionCatalogV1Table(spark, path)
+        .foreach(return _)
+    val t = GraftTable.forPath(spark, path)
+    val ti = t.info
+    val scanPlans = parameters.getOrElse("readtype", "full") match {
+      case "diff" => false
+      case "incremental" => !RebucketLog.overlaps(ti.properties,
+        parameters.getOrElse("readstarttime", "0").toLong,
+        parameters.get("readendtime").map(_.toLong).getOrElse(t.lastCommitTs))
+      case _ => true
+    }
+    new GraftReadTable(spark, ti, CatalogFiles(t),
+      batchRead = scanPlans && GraftRead.scanMerges(ti, t.schema))
+  }
 
   override def createRelation(
       sqlContext: SQLContext,
@@ -148,15 +225,17 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
       parameters, outputMode)
 }
 
-/** Batch relation with column pruning; Spark re-applies filters above us, so
-  * pushdown is best-effort (partition pruning via `partitiondesc` option). */
+/** The DSv1 batch relation behind the reads [[graft.read.GraftScan]]
+  * cannot plan (see [[GraftDataSource]]). It returns the library read
+  * (`diff`, `snapshotAt`, `incremental`, `toDF`), which routes the
+  * aggregate merge and the cursor split. Spark re-applies every filter
+  * above the relation; the pushed ones also prune partitions here. */
 case class GraftRelation(
     sqlContext: SQLContext,
     path: String,
     parameters: Map[String, String]) extends BaseRelation with PrunedFilteredScan {
 
-  private def spark: SparkSession = sqlContext.sparkSession
-  private def table: GraftTable = GraftTable.forPath(spark, path)
+  private def table: GraftTable = GraftTable.forPath(sqlContext.sparkSession, path)
 
   override lazy val schema: StructType =
     if (parameters.get("readtype").contains("diff")) {
@@ -170,126 +249,23 @@ case class GraftRelation(
       base.add("_change_type", org.apache.spark.sql.types.StringType)
     } else table.schema
 
-  /** Live-file byte sum (scaled by the parquet compression factor) so the
-    * join planner can auto-broadcast small graft tables instead of assuming
-    * `defaultSizeInBytes` (the DSv1 default, effectively infinite). */
-  // lazy: resolved once per relation. sizeInBytes is an ESTIMATE (Spark
-  // uses it for broadcast decisions), so on partition-heavy tables it is
-  // computed from a deterministic sample of partitions instead of resolving
-  // every partition's commit files (1M partitions cold = 1M small meta
-  // reads for a number that only needs to be order-of-magnitude right).
-  override lazy val sizeInBytes: Long = {
-    val t = table
-    val heads = t.partitions
-    val s =
-      if (heads.size <= 2048) t.liveFiles.map(_.file.size).sum
-      else {
-        val step = math.max(1, heads.size / 1024)
-        val sample = heads.indices.by(step).map(i => heads(i).partitionDesc)
-        val sampled = t.liveFilesForDescs(sample).map(_.file.size).sum
-        (sampled.toDouble * heads.size / sample.size).toLong
-      }
-    if (s == 0) 1L
-    else (s * spark.sessionState.conf.fileCompressionFactor).toLong
-  }
-
-  private def baseDF(filters: Array[Filter],
-      requiredColumns: Array[String]): DataFrame = {
-    val t = table
-    val ti = t.info
-    // three-tier partition pruning (F4): explicit partitiondesc option, or
-    // range-column equality/IN/ordering filters pushed down by Catalyst
-    val rangeSets = graft.util.Filters.rangeValueSets(filters.toSeq, ti.rangeColumns)
-    val isStr = (c: String) => t.schema.fields.find(_.name == c)
-      .exists(_.dataType == org.apache.spark.sql.types.StringType)
-    val ordPred = graft.util.Filters.rangeOrderingPred(
-      filters.toSeq, ti.rangeColumns, isStr)
-    val partPred: String => Boolean = parameters.get("partitiondesc") match {
-      case Some(desc) => _ == desc
-      case None =>
-        val setPred = graft.util.Filters.partitionPredSets(rangeSets)
-        d => setPred(d) && ordPred(d)
-    }
-    // fully-pinned partitions (explicit desc option, or equality/IN filters
-    // covering every range column) resolve by META POINT LOOKUP — never a
-    // full head listing (F4 fast path at 100k+ partitions)
-    val exactDescs: Option[Seq[String]] = parameters.get("partitiondesc") match {
-      case Some(desc) => Some(Seq(desc))
-      case None => graft.util.Filters.exactDescs(rangeSets, ti.rangeColumns)
-        .map(_.filter(ordPred))
-    }
-    parameters.getOrElse("readtype", "full") match {
-      case "snapshot" => exactDescs match {
-        case Some(ds) =>
-          t.snapshotAtForDescs(parameters("readendtime").toLong, ds)
-        case None => t.snapshotAt(parameters("readendtime").toLong, partPred)
-      }
-      case "incremental" =>
-        val st = parameters.getOrElse("readstarttime", "0").toLong
-        val et = parameters.get("readendtime").map(_.toLong)
-          .getOrElse(t.lastCommitTs)
-        exactDescs match {
-          case Some(ds) => t.incrementalForDescs(st, et, ds)
-          case None => t.incremental(st, et, partPred)
-        }
-      case "diff" =>
-        // row-level change feed (full rows + _change_type) over
-        // (readstarttime, readendtime]; see GraftTable.diff
-        t.diff(parameters.getOrElse("readstarttime", "0").toLong,
-          parameters.get("readendtime").map(_.toLong)
-            .getOrElse(t.lastCommitTs))
-      case _ =>
-        // PK-equality on every hash column -> bucket-pruned point read (M6)
-        val eq = filters.collect { case EqualTo(a, v) => a -> v }.toMap
-        if (ti.hasPrimaryKey && ti.hashColumns.nonEmpty
-            && ti.hashColumns.forall(eq.contains))
-          t.lookupByPk(ti.hashColumns.map(eq))
-        else {
-          // column pruning (F1) + metadata file skipping on the pushed
-          // filters (min/max bounds; merge-safe inside)
-          val req = if (requiredColumns.nonEmpty
-              && requiredColumns.length < t.schema.length)
-            Some(requiredColumns.toSeq) else None
-          exactDescs match {
-            case Some(ds) => t.toDFWithFiltersForDescs(ds, req, filters.toSeq)
-            case None => t.toDFWithFilters(partPred, req, filters.toSeq)
-          }
-        }
-    }
-  }
-
-  /** Best-effort Filter -> Column translation so pushed data predicates are
-    * applied BELOW the RDD boundary, where Catalyst can sink them into the
-    * parquet scans (rowgroup/page pruning — F3). Untranslatable filters are
-    * skipped; Spark re-applies every filter above the relation anyway. */
-  private def filterToColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === lit(v))
-    case GreaterThan(a, v) => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v) => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case And(l, r) =>
-      for { lc <- filterToColumn(l); rc <- filterToColumn(r) } yield lc && rc
-    case Or(l, r) =>
-      for { lc <- filterToColumn(l); rc <- filterToColumn(r) } yield lc || rc
-    case Not(c) => filterToColumn(c).map(!_)
-    case StringStartsWith(a, v) => Some(col(a).startsWith(v))
-    case StringEndsWith(a, v) => Some(col(a).endsWith(v))
-    case StringContains(a, v) => Some(col(a).contains(v))
-    case _ => None
-  }
-
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
-    val df = baseDF(filters, requiredColumns)
-    val filtered = filters.flatMap(filterToColumn).foldLeft(df)(_ filter _)
-    val pruned =
-      if (requiredColumns.isEmpty) filtered
-      else filtered.select(requiredColumns.map(col).toIndexedSeq: _*)
-    pruned.rdd
+    val t = table
+    val (partPred, _) = Filters.partitionPruning(filters.toSeq,
+      t.info.rangeColumns, t.schema, parameters.get("partitiondesc"))
+    val start = parameters.getOrElse("readstarttime", "0").toLong
+    def end = parameters.get("readendtime").map(_.toLong).getOrElse(t.lastCommitTs)
+    val df = parameters.getOrElse("readtype", "full") match {
+      case "snapshot" => t.snapshotAt(parameters("readendtime").toLong, partPred)
+      case "incremental" => t.incremental(start, end, partPred)
+      // row-level change feed (full rows + _change_type) over
+      // (readstarttime, readendtime]; see GraftTable.diff
+      case "diff" => t.diff(start, end)
+      case _ => t.toDF(partPred)
+    }
+    filters.flatMap(Filters.toColumn).foldLeft(df)(_ filter _)
+      .select(requiredColumns.map(col).toIndexedSeq: _*).rdd
   }
 }
 

@@ -39,16 +39,11 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
     * identical surface `spark.table("graft_cat.ns.t")` uses. Agg-only
     * custom merge operators stay on the library path for the
     * aggregate-merge fallback. */
-  def toDF: DataFrame = {
-    val t = info
-    val routeV2 = !t.hasPrimaryKey ||
-      t.properties.get(TableInfo.SkipMergeOnReadProp).contains("true") ||
-      GraftRead.bucketMergeSupported(t, schema)
-    if (routeV2)
+  def toDF: DataFrame =
+    if (GraftRead.scanMerges(info, schema))
       org.apache.spark.sql.graft.StreamShim.dsv2Df(spark,
         new graft.catalog.GraftTableV2(spark, this, tablePath))
     else toDF(_ => true)
-  }
 
   /** Reference accessor parity (LakeSoulTable.scala): `data`/`path` and
     * `as`/`alias` — the aliased handle changes only what `toDF`/`data`
@@ -83,20 +78,6 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
     GraftRead.read(spark, info, resolver.currentFiles(tablePath, partitionPred),
       requiredColumns = Some(requiredColumns))
 
-  /** Predicate-aware read (the DSv1 relation's full-scan path): files whose
-    * min/max bounds prove no match are dropped before the scan
-    * ([[graft.read.StatsSkipping]] — merge-safe, three-valued, purely an
-    * optimization since the caller re-applies every filter). */
-  def toDFWithFilters(
-      partitionPred: String => Boolean,
-      requiredColumns: Option[Seq[String]],
-      dataFilters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
-    val t = info
-    val files = graft.read.StatsSkipping.prune(t, schema,
-      resolver.currentFiles(tablePath, partitionPred), dataFilters)
-    GraftRead.read(spark, t, files, requiredColumns = requiredColumns)
-  }
-
   /** Per-QUERY merge-operator selection (M4; reference
     * rules/ExtractMergeOperator.scala:20-88 extracts merge-op marker UDFs
     * from the projection at analysis time): read the current snapshot with
@@ -114,19 +95,6 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
       resolver.currentFiles(tablePath, partitionPred))
   }
 
-  /** [[toDFWithFilters]] with the partitions resolved by POINT LOOKUP (the
-    * equal-value prune fast path — no full head listing; F4 at 100k+
-    * partitions). */
-  def toDFWithFiltersForDescs(
-      descs: Seq[String],
-      requiredColumns: Option[Seq[String]],
-      dataFilters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
-    val t = info
-    val files = graft.read.StatsSkipping.prune(t, schema,
-      resolver.currentFilesForDescs(tablePath, descs), dataFilters)
-    GraftRead.read(spark, t, files, requiredColumns = requiredColumns)
-  }
-
   /** One partition pinned at a specific PARTITION version number
     * (reference `forPath(path, partitionDesc, partitionVersion)`,
     * LakeSoulTable.scala:683 / SnapshotManagement(p, desc, version)). */
@@ -141,10 +109,6 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
   /** Time travel (C1 forPathSnapshot): state as of `endTime` (ms). */
   def snapshotAt(endTime: Long, partitionPred: String => Boolean = _ => true): DataFrame =
     GraftRead.read(spark, info, resolver.filesUptoTime(tablePath, endTime, partitionPred))
-
-  def snapshotAtForDescs(endTime: Long, descs: Seq[String]): DataFrame =
-    GraftRead.read(spark, info,
-      resolver.filesUptoTimeForDescs(tablePath, endTime, descs))
 
   /** Incremental read over (startTime, endTime] (C1 forPathIncremental):
     * the merged delta; CDC marker rows are KEPT (F6 exemption). `strict`
@@ -165,22 +129,7 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
     // (CdcModelCheckSuite). Cut the window at the recorded boundaries into
     // mapping-consistent sub-windows (each fully bucket-parallel, composed
     // by one delta-only shuffle) when possible; else merge per partition
-    incrementalSplit(t, startTime, endTime, partitionPred, strict,
-      (a, b, pred) => resolver.incrementalFilesAll(tablePath, a, b, pred,
-        strict = strict))
-  }
-
-  def incrementalForDescs(startTime: Long, endTime: Long,
-      descs: Seq[String]): DataFrame = {
-    val t = info
-    if (!GraftTable.rebucketOverlaps(t.properties, startTime, endTime))
-      return GraftRead.read(spark, t,
-        resolver.incrementalFilesForDescs(tablePath, startTime, endTime, descs),
-        keepCdcRows = true)
-    val dset = descs.toSet
-    incrementalSplit(t, startTime, endTime, dset.contains, strict = false,
-      (a, b, pred) => resolver.incrementalFilesForDescs(tablePath, a, b,
-        descs.filter(pred)))
+    incrementalSplit(t, startTime, endTime, partitionPred, strict)
   }
 
   /** Incremental read over a window that OVERLAPS a recorded re-bucket:
@@ -189,8 +138,9 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
     * BucketMergeRead.readSplitWindow) — or, when the window cannot be cut,
     * fall back to the cross-bucket one-task-per-partition merge. */
   private def incrementalSplit(t: TableInfo, start: Long, end: Long,
-      partitionPred: String => Boolean, strict: Boolean,
-      resolve: (Long, Long, String => Boolean) => Seq[ResolvedFile]): DataFrame =
+      partitionPred: String => Boolean, strict: Boolean): DataFrame = {
+    def resolve(a: Long, b: Long, pred: String => Boolean) =
+      resolver.incrementalFilesAll(tablePath, a, b, pred, strict = strict)
     cuttableWindow(t, start, end)
       .flatMap { case (events, lineages) =>
         epochWindowsFrom(t, start, end, events).map((_, lineages)) }
@@ -222,6 +172,7 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
           epochWindows.map { case (n, a, b) => (n, resolve(a, b, pred2)) },
           keepCdcRows = true)
     }
+  }
 
   /** Shared cuttability analysis of (start, end] against `t`'s recorded
     * mapping-change events: Some((events, lineages)) when the window MAY
@@ -2701,7 +2652,10 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
         else partitionsMatching(partConj.reduce(_ && _), allDescs)
       }
 
-    // tier 2: single-bucket narrowing on a full PK-equality predicate
+    // tier 2: single-bucket narrowing on a full PK-equality predicate,
+    // only while the files' key->bucket mapping is the current count's:
+    // mid re-bucket a key's rows may sit in its old-mapping bucket, so
+    // every bucket is read
     val pkEq: Map[String, Any] =
       org.apache.spark.sql.graft.PredicateShim.equalities(cond)
         .filter { case (k, _) => t.hashColumns.contains(k) }
@@ -2710,13 +2664,17 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
         Some(TransactionalWrite.bucketOf(spark, schema,
           t.hashColumns.map(c => c -> pkEq(c)), t.bucketNum))
       else None
+    def inBucket(files: Seq[ResolvedFile]): Seq[ResolvedFile] = bucket match {
+      case Some(b) if RebucketLog.settledAt(t.properties, t.bucketNum, files) =>
+        files.filter(f => f.file.bucketId == b || f.file.bucketId < 0)
+      case _ => files
+    }
 
     // tier 3: probe only when several range partitions remain AND the
     // predicate has non-partition conjuncts (the probe scans candidates only)
     if (t.rangeColumns.nonEmpty && candidates.size > 1 &&
         conj.exists(n => !refNames(n).exists(_.subsetOf(rangeSet)))) {
-      val probeFiles = resolver.currentFiles(tablePath, candidates.contains)
-        .filter(f => bucket.forall(b => f.file.bucketId == b || f.file.bucketId < 0))
+      val probeFiles = inBucket(resolver.currentFiles(tablePath, candidates.contains))
       val hit = GraftRead.read(spark, t, probeFiles).filter(cond)
         .select(t.rangeColumns.map(c => col(c).cast("string")): _*)
         .distinct().collect().map { r =>
@@ -2733,8 +2691,7 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
     // tier 4: metadata file skipping on min/max stats — whole
     // (partition, bucket) groups only, so the rewrite invariant (all runs
     // of a targeted bucket replaced together) is preserved
-    val resolved = resolver.currentFiles(tablePath, candidates.contains)
-      .filter(f => bucket.forall(b => f.file.bucketId == b || f.file.bucketId < 0))
+    val resolved = inBucket(resolver.currentFiles(tablePath, candidates.contains))
     val filters = org.apache.spark.sql.graft.PredicateShim.sourceFilters(cond)
     graft.read.StatsSkipping.pruneGroups(t, schema, resolved, filters)
   }

@@ -212,7 +212,9 @@ object SecondaryIndex {
 
   /** Bucket-pruned multi-PK fetch: read only the pk buckets the postings
     * hash to, then keep exactly the requested keys. Bucket ids come from
-    * driver-local foldable eval — no Spark job before the actual read. */
+    * driver-local foldable eval — no Spark job before the actual read.
+    * Mid re-bucket (the files' mapping is not the current count's) a key's
+    * rows may sit in its old-mapping bucket: every bucket is read. */
   private def fetchByPks(spark: SparkSession, src: GraftTable,
       pk: String, pks: Array[Long]): DataFrame = {
     val t = src.info
@@ -223,8 +225,10 @@ object SecondaryIndex {
     }
     val buckets = pks.map(v => TransactionalWrite.bucketOf(
       spark, schema, Seq(pk -> narrowed(v)), t.bucketNum)).toSet
-    val files = src.liveFiles.filter(f =>
-      f.file.bucketId == -1 || buckets.contains(f.file.bucketId))
+    val live = src.liveFiles
+    val files =
+      if (!graft.meta.RebucketLog.settledAt(t.properties, t.bucketNum, live)) live
+      else live.filter(f => f.file.bucketId == -1 || buckets.contains(f.file.bucketId))
     GraftRead.read(spark, t, files)
       .filter(col(pk).cast("long").isin(pks.toSeq: _*))
   }

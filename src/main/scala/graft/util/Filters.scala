@@ -4,7 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 
-/** Shared source-Filter helpers for the DSv1 relation and DSv2 scan builder. */
+/** Shared source-Filter helpers for the DSv2 scan builder, the DSv1
+  * fallback relation and the catalog's write path. */
 object Filters {
 
   /** Best-effort Filter -> Column translation. Untranslatable filters map to
@@ -35,18 +36,10 @@ object Filters {
     else if (s.isEmpty) graft.write.TransactionalWrite.EmptySentinel else s
   }
 
-  /** Range-column equality values for partition pruning, with the write
-    * side's null/empty sentinels applied. */
-  def rangeEqualities(filters: Seq[Filter], rangeColumns: Seq[String])
-    : Map[String, String] =
-    filters.collect {
-      case EqualTo(a, v) if rangeColumns.contains(a) => a -> descValue(v)
-    }.toMap
-
-  /** Range-column admissible VALUE SETS from equality and IN conjuncts
+  /** Range-column admissible VALUE SETS from equality, IN and null
+    * conjuncts, with the write side's null/empty sentinels applied
     * (multiple conjuncts on one column intersect; an empty set = provably
-    * no partition matches). Strictly more filters prune than
-    * [[rangeEqualities]] — `p IN ('a','b')` prunes too. */
+    * no partition matches). */
   def rangeValueSets(filters: Seq[Filter], rangeColumns: Seq[String])
     : Map[String, Set[String]] = {
     val per = filters.collect {
@@ -60,10 +53,6 @@ object Filters {
     }
     per.groupBy(_._1).map { case (c, sets) => c -> sets.map(_._2).reduce(_ intersect _) }
   }
-
-  /** Partition-desc predicate from range equalities. */
-  def partitionPred(rangeEq: Map[String, String]): String => Boolean =
-    partitionPredSets(rangeEq.map { case (c, v) => c -> Set(v) })
 
   /** Partition-desc predicate from admissible value sets. */
   def partitionPredSets(sets: Map[String, Set[String]]): String => Boolean =
@@ -120,6 +109,31 @@ object Filters {
           raw != graft.write.TransactionalWrite.NullSentinel &&
             f(if (raw == graft.write.TransactionalWrite.EmptySentinel) "" else raw))
       }
+    }
+  }
+
+  /** The partition pruning of one read, from its pushed filters and the
+    * `partitiondesc` read option: the desc predicate, and the descs to
+    * resolve by META POINT LOOKUP when they are fully determined (every
+    * range column pinned to a bounded value set, or the option) — never a
+    * full head listing then (F4 at 100k+ partitions). Ordering conjuncts
+    * on STRING range columns prune at the desc level too (`dt >= .. AND
+    * dt < ..` over a time-partitioned table), and can exclude a pinned
+    * desc. */
+  def partitionPruning(
+      filters: Seq[Filter],
+      rangeColumns: Seq[String],
+      schema: org.apache.spark.sql.types.StructType,
+      partitionDesc: Option[String]): (String => Boolean, Option[Seq[String]]) = {
+    val rangeSets = rangeValueSets(filters, rangeColumns)
+    val isStr = (c: String) => schema.fields.find(_.name == c)
+      .exists(_.dataType == org.apache.spark.sql.types.StringType)
+    val setPred = partitionPredSets(rangeSets)
+    val ordPred = rangeOrderingPred(filters, rangeColumns, isStr)
+    val pred = (d: String) => setPred(d) && ordPred(d)
+    partitionDesc match {
+      case Some(desc) => ((d: String) => d == desc && pred(d), Some(Seq(desc).filter(pred)))
+      case None => (pred, exactDescs(rangeSets, rangeColumns).map(_.filter(ordPred)))
     }
   }
 

@@ -125,6 +125,19 @@ object StreamShim {
     ofRows(session, rel)
   }
 
+  /** The session catalog's entry for the graft table at `path` (found by
+    * location), as the V1Table (private[sql], hence this shim) that keeps
+    * the session catalog's commands and relation on DSv1. */
+  def sessionCatalogV1Table(session: org.apache.spark.sql.SparkSession,
+      path: String): Option[org.apache.spark.sql.connector.catalog.Table] = {
+    val external = session.sessionState.catalog.externalCatalog
+    external.listDatabases().iterator
+      .flatMap(db => external.getTablesByName(db, external.listTables(db)))
+      .find(t => t.provider.exists(_.equalsIgnoreCase("graft")) &&
+        t.storage.locationUri.exists(u => graft.util.PathUtil.local(u.toString) == path))
+      .map(org.apache.spark.sql.connector.catalog.V1Table(_))
+  }
+
   /** Executor-local scratch directory for merge spill files — Spark's own
     * configured local dir (spark.local.dir / YARN container dirs), the same
     * place shuffle and spill data land; java.io.tmpdir outside a Spark env. */

@@ -168,6 +168,26 @@ class CatalogV2Suite extends SparkFixture {
     }
   }
 
+  test("DSv2 read option partitiondesc prunes to one range partition") {
+    withTempPath { wh =>
+      useCatalog(wh)
+      import spark.implicits._
+      (1 to 12).map(i => (i.toLong, s"p${i % 3}", i)).toDF("id", "r", "v")
+        .createOrReplaceTempView("pd_src")
+      spark.sql("CREATE TABLE graft_cat.pd.t PARTITIONED BY (r, bucket(2, id)) " +
+        "AS SELECT * FROM pd_src")
+      val t = graft.tables.GraftTable.forName(spark, "pd.t")
+      val ts1 = t.lastCommitTs
+      spark.sql("INSERT INTO graft_cat.pd.t VALUES (1, 'p1', 100), (2, 'p2', 200)")
+      assertRows(spark.read.option("partitiondesc", "r=p1").table("graft_cat.pd.t"),
+        Seq("[1,p1,100]", "[4,p1,4]", "[7,p1,7]", "[10,p1,10]"))
+      // with a filter, and pinning a snapshot
+      assertRows(spark.read.option("partitiondesc", "r=p1")
+        .option("readtype", "snapshot").option("readendtime", ts1.toString)
+        .table("graft_cat.pd.t").filter($"v" > 4), Seq("[7,p1,7]", "[10,p1,10]"))
+    }
+  }
+
   test("SQL VERSION AS OF / TIMESTAMP AS OF + CALL graft.history") {
     withTempPath { wh =>
       useCatalog(wh)

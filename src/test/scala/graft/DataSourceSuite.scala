@@ -1,11 +1,110 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.tables.GraftTable
+import graft.tables.{CompactionOptions, GraftTable}
 
 class DataSourceSuite extends SparkFixture {
   import spark.implicits._
+
+  /** Whether `df` reads through the DSv2 GraftScan (true) or the DSv1
+    * fallback relation (false); exactly one of the two must be planned. */
+  private def plansGraftScan(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.optimizedPlan
+    val scan = plan.collect { case r: DataSourceV2ScanRelation => r.scan }
+      .exists(_.isInstanceOf[graft.read.GraftScan])
+    val relation = plan.collect { case l: LogicalRelation => l.relation }
+      .exists(_.isInstanceOf[graft.sources.GraftRelation])
+    assert(scan != relation, s"expected exactly one graft reader in:\n$plan")
+    if (scan) assert(df.queryExecution.executedPlan.toString.contains("BatchScan"))
+    scan
+  }
+
+  test("format(graft) full, snapshot and incremental reads plan the DSv2 " +
+    "GraftScan; a PK-equality read plans only its bucket's files") {
+    withTempPath { path =>
+      val t = GraftTable.create(spark,
+        (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v"), path,
+        hashColumns = Seq("id"), bucketNum = 8)
+      val ts1 = t.lastCommitTs
+      t.upsert(Seq((1L, "u1"), (42L, "u42")).toDF("id", "v"))
+      val full = spark.read.format("graft").load(path)
+      assert(plansGraftScan(full))
+      assertSameRows(full, t.toDF)
+      val snap = spark.read.format("graft").option("readtype", "snapshot")
+        .option("readendtime", ts1.toString).load(path)
+      assert(plansGraftScan(snap))
+      assertSameRows(snap, t.snapshotAt(ts1))
+      val incr = spark.read.format("graft").option("readtype", "incremental")
+        .option("readstarttime", ts1.toString).load(path)
+      assert(plansGraftScan(incr))
+      assertRows(incr, Seq("[1,u1]", "[42,u42]"))
+      // a user-specified schema is ignored, as the DSv1 relation ignored it
+      assert(plansGraftScan(spark.read.schema("id BIGINT").format("graft").load(path)))
+      val b = graft.write.TransactionalWrite.bucketOf(spark, t.schema,
+        Seq("id" -> 42L), 8)
+      val mine = t.liveFiles.count(_.file.bucketId == b).toLong
+      assert(mine > 0 && mine < t.liveFiles.size)
+      assert(graftFilesPlanned(spark.read.format("graft").load(path)
+        .filter($"id" === 42L)) == mine)
+      val missing = intercept[IllegalArgumentException](
+        spark.read.format("graft").load(s"$path-missing"))
+      assert(missing.getMessage.contains("no graft table at"))
+    }
+  }
+
+  test("format(graft) reads GraftScan cannot plan fall back to the DSv1 " +
+    "relation: diff, agg-only merge operators, incremental across a re-bucket") {
+    withTempPath { path =>
+      val t = GraftTable.create(spark,
+        (1 to 20).map(i => (i.toLong, s"v$i")).toDF("id", "v"), path,
+        hashColumns = Seq("id"), bucketNum = 2)
+      val ts1 = t.lastCommitTs
+      t.upsert(Seq((1L, "u1"), (21L, "v21")).toDF("id", "v"))
+      t.compaction(CompactionOptions(newBucketNum = Some(4)), _ => true)
+      t.upsert(Seq((2L, "u2")).toDF("id", "v"))
+      val diff = spark.read.format("graft").option("readtype", "diff")
+        .option("readstarttime", ts1.toString).load(path)
+      assert(!plansGraftScan(diff))
+      assertSameRows(diff, t.diff(ts1, t.lastCommitTs))
+      val incr = spark.read.format("graft").option("readtype", "incremental")
+        .option("readstarttime", ts1.toString).load(path)
+      assert(!plansGraftScan(incr))
+      assertSameRows(incr, t.incremental(ts1, t.lastCommitTs))
+    }
+    graft.mergeop.MergeOps.register(new graft.mergeop.MergeOp {
+      val name = "keep_max_ds"
+      def agg(value: Column, version: Column, present: Column,
+          dt: org.apache.spark.sql.types.DataType): Column =
+        max(when(present, value)).cast(dt)
+    })
+    withTempPath { path =>
+      val t = GraftTable.create(spark, Seq((1L, 7), (2L, 1)).toDF("id", "v"), path,
+        hashColumns = Seq("id"), bucketNum = 2,
+        properties = Map(graft.meta.TableInfo.mergeOpProp("v") -> "keep_max_ds"))
+      t.upsert(Seq((1L, 3), (2L, 5)).toDF("id", "v"))
+      val agg = spark.read.format("graft").load(path)
+      assert(!plansGraftScan(agg))
+      assertRows(agg, Seq("[1,7]", "[2,5]"))
+      assertSameRows(agg, t.toDF)
+    }
+  }
+
+  test("a table registered in the session catalog keeps its DSv1 surface: " +
+    "managed saveAsTable, append, SQL read") {
+    try {
+      Seq((5L, "e")).toDF("id", "v").write.format("graft")
+        .option("hashPartitions", "id").saveAsTable("ds_sat")
+      Seq((5L, "e2"), (6L, "f")).toDF("id", "v").write.format("graft")
+        .mode("append").saveAsTable("ds_sat")
+      val df = spark.sql("SELECT * FROM ds_sat")
+      assert(!plansGraftScan(df))
+      assertRows(df, Seq("[5,e2]", "[6,f]"))
+    } finally spark.sql("DROP TABLE IF EXISTS ds_sat")
+  }
 
   test("format(graft): write creates table, append upserts on PK, read back") {
     withTempPath { path =>
