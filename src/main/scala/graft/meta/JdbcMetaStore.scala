@@ -37,9 +37,9 @@ import org.json4s.jackson.Serialization.{read => jread, write => jwrite}
   *     JSON, immutable once written (cached forever)
   *   - graft_stream_batch(table_path, query_id PK, max_batch)
   *
-  * CONCURRENCY: `commit` verifies every touched partition still sits at the
-  * writer's expected version INSIDE the transaction, after taking the
-  * per-table lock row — a stale writer gets [[MetaRerunException]] and the
+  * CONCURRENCY: `commit` runs the protocol every store shares,
+  * [[MetaStore.publish]], INSIDE the transaction after taking the per-table
+  * lock row — a stale writer gets [[MetaRerunException]] and the
   * caller's retry loop re-reads and replays, exactly the reference's
   * conflict path (`appendConflict` retries, `MetaRerunException`
   * TransactionCommit.scala:398-427). Lock-timeout/deadlock SQLStates map to
@@ -325,45 +325,73 @@ class JdbcMetaStore(url: String) extends MetaStore {
     headRows(c, tp, descs).iterator.filter(_.version >= 0)
       .map(pi => pi.partitionDesc -> pi).toMap
 
-  private def insertLogRow(c: Connection, tp: String, seq: Long,
-      pi: PartitionInfo): Unit = {
-    val ps = c.prepareStatement(
+  /** The ONE log-append path, under the caller's held table lock: one log
+    * line per entry of `descs` (log order), built by `build` from the
+    * touched partitions' live heads and the allocated commit timestamp.
+    * JDBC-batched — a constant number of round trips however many lines
+    * (seq + one head-row read + batched log INSERT + batched head UPDATEs
+    * and INSERTs), not O(lines): the difference between ~180 and >10k
+    * partition-commits/s for a wide streaming ingest (see
+    * tools/JdbcCatalogProbe). Only the FINAL line per partition becomes its
+    * head pointer. Returns the appended lines. */
+  private def appendLines(c: Connection, tp: String, descs: Seq[String])(
+      build: (Map[String, PartitionInfo], Long) => Seq[PartitionInfo]): Seq[PartitionInfo] = {
+    val (seq0, ts) = allocate(c, tp, descs.size)
+    val rows = headRows(c, tp, descs.distinct)
+    val lines = build(rows.iterator.filter(_.version >= 0)
+      .map(pi => pi.partitionDesc -> pi).toMap, ts)
+    val finals = scala.collection.mutable.LinkedHashMap[String, (PartitionInfo, Long)]()
+    val insLog = c.prepareStatement(
       "INSERT INTO graft_partition_log (table_path, seq, partition_desc, " +
         "version, commit_op, ts, snapshot) VALUES (?,?,?,?,?,?,?)")
     try {
-      ps.setString(1, tp); ps.setLong(2, seq); ps.setString(3, pi.partitionDesc)
-      ps.setInt(4, pi.version); ps.setString(5, pi.commitOp)
-      ps.setLong(6, pi.timestamp); ps.setString(7, jwrite(pi.snapshot))
-      ps.executeUpdate()
-    } finally ps.close()
-  }
-
-  private def upsertHead(c: Connection, tp: String, pi: PartitionInfo,
-      seq: Long): Unit = {
-    val up = c.prepareStatement(
-      "UPDATE graft_partition_head SET version = ?, seq = ? " +
-        "WHERE table_path = ? AND partition_desc = ?")
-    val n = try {
-      up.setInt(1, pi.version); up.setLong(2, seq)
-      up.setString(3, tp); up.setString(4, pi.partitionDesc)
-      up.executeUpdate()
-    } finally up.close()
-    if (n == 0) {
+      lines.zipWithIndex.foreach { case (pi, i) =>
+        insLog.setString(1, tp); insLog.setLong(2, seq0 + i)
+        insLog.setString(3, pi.partitionDesc); insLog.setInt(4, pi.version)
+        insLog.setString(5, pi.commitOp); insLog.setLong(6, pi.timestamp)
+        insLog.setString(7, jwrite(pi.snapshot)); insLog.addBatch()
+        finals(pi.partitionDesc) = (pi, seq0 + i)
+      }
+      insLog.executeBatch()
+    } finally insLog.close()
+    // dropped partitions (version -1) still own a head ROW that a re-create
+    // must UPDATE, not re-INSERT
+    val existingRows = rows.iterator.map(_.partitionDesc).toSet
+    val (toUpdate, toInsert) = finals.toSeq.partition { case (d, _) => existingRows(d) }
+    if (toUpdate.nonEmpty) {
+      val up = c.prepareStatement(
+        "UPDATE graft_partition_head SET version = ?, seq = ? " +
+          "WHERE table_path = ? AND partition_desc = ?")
+      try {
+        toUpdate.foreach { case (d, (pi, s)) =>
+          up.setInt(1, pi.version); up.setLong(2, s)
+          up.setString(3, tp); up.setString(4, d); up.addBatch()
+        }
+        // JDBC allows drivers to report SUCCESS_NO_INFO (-2) for batch
+        // elements; only an explicit 0 means the head row vanished.
+        require(up.executeBatch().forall(n =>
+            n == 1 || n == java.sql.Statement.SUCCESS_NO_INFO),
+          s"head row vanished mid-commit for $tp")
+      } finally up.close()
+    }
+    if (toInsert.nonEmpty) {
       val ins = c.prepareStatement(
         "INSERT INTO graft_partition_head (table_path, partition_desc, " +
           "version, seq) VALUES (?,?,?,?)")
       try {
-        ins.setString(1, tp); ins.setString(2, pi.partitionDesc)
-        ins.setInt(3, pi.version); ins.setLong(4, seq)
-        ins.executeUpdate()
+        toInsert.foreach { case (d, (pi, s)) =>
+          ins.setString(1, tp); ins.setString(2, d)
+          ins.setInt(3, pi.version); ins.setLong(4, s); ins.addBatch()
+        }
+        ins.executeBatch()
       } catch {
         // lost a first-create race (other writer committed between our
-        // UPDATE miss and this INSERT — possible under READ_COMMITTED)
-        case e: SQLException if isDuplicate(e) =>
-          throw new MetaRerunException(
-            s"partition '${pi.partitionDesc}' created concurrently")
+        // existence read and this INSERT — possible under READ_COMMITTED)
+        case e: java.sql.BatchUpdateException if batchHasDuplicate(e) =>
+          throw new MetaRerunException("partition created concurrently")
       } finally ins.close()
     }
+    lines
   }
 
   // ---------------------------------------------------------------- tables
@@ -674,34 +702,14 @@ class JdbcMetaStore(url: String) extends MetaStore {
   }
 
   // ---------------------------------------------------------------- commit
-  /** One transaction, JDBC-BATCHED: a commit touching N partitions costs a
-    * constant number of statement round trips (lock + seq + 2 reads + 4
-    * batched writes), not O(N) — the difference between ~180 and >10k
-    * partition-commits/s when a wide streaming ingest (many range partitions
-    * per micro-batch) lands its files (see tools/JdbcCatalogProbe). */
+  /** A one-entry [[commitMany]]: one transaction, JDBC-batched. */
   override def commit(
       tablePath: String,
       commits: Seq[DataCommitInfo],
       expectedVersions: Map[String, Int],
-      expectedBucketNum: Option[Int]): Unit = {
-    val tp = canonical(tablePath)
-    requireVisible(tp, tablePath, fresh = true)
-    withTx { c =>
-      lockTable(c, tp)
-      // writer-side re-bucket CAS (MetaStore.commit scaladoc): read the
-      // info row on the SAME connection after taking the table lock so it
-      // serializes against rebucketIfNoPartitions
-      expectedBucketNum.foreach { exp =>
-        val cur = rawInfoIn(c, tp).map(_.bucketNum)
-        if (!cur.contains(exp))
-          throw new MetaRerunException(
-            s"table bucketNum moved: files written under $exp, table now " +
-              s"at ${cur.getOrElse(-1)} (concurrent re-bucket) — rerun",
-            bucketConflict = true)
-      }
-      commitLocked(c, tp, commits, expectedVersions)
-    }
-  }
+      expectedBucketNum: Option[Int]): Unit =
+    commitMany(Seq((tablePath, commits, expectedVersions)),
+      expectedBucketNum.map(tablePath -> _).toMap)
 
   override def rebucketIfNoPartitions(
       tablePath: String, newBucketNum: Int): Boolean = {
@@ -759,125 +767,47 @@ class JdbcMetaStore(url: String) extends MetaStore {
     withTx { c =>
       es.foreach { case (tp, _, _, _) => lockTable(c, tp) }
       es.foreach { case (tp, orig, cs, ev) =>
-        // same writer-side re-bucket CAS as single-table commit, checked
-        // per table after ALL locks are held (the staged files were
-        // bucketed at stage time; a conflicting entry names its table so
-        // the transaction retry re-stages just that one)
-        expectedBucketNums.get(orig).orElse(expectedBucketNums.get(tp))
-          .foreach { exp =>
-            val cur = rawInfoIn(c, tp).map(_.bucketNum)
-            if (!cur.contains(exp))
-              throw new MetaRerunException(
-                s"table bucketNum moved: files staged under $exp, table " +
-                  s"now at ${cur.getOrElse(-1)} (concurrent re-bucket)",
-                Some(orig), bucketConflict = true)
-          }
-        try commitLocked(c, tp, cs, ev)
+        // the bucket-count CAS runs per table after ALL locks are held,
+        // reading the info row on the SAME connection so it serializes
+        // against rebucketIfNoPartitions
+        try commitLocked(c, tp, cs, ev,
+          expectedBucketNums.get(orig).orElse(expectedBucketNums.get(tp)))
         catch {
           // name the losing table (by the caller's path) so the retry can
-          // re-stage just that table's files instead of the whole set
-          case e: MetaRerunException if e.conflictedTable.isEmpty =>
-            throw new MetaRerunException(e.getMessage, Some(orig), e)
+          // re-stage just that table's files instead of the whole set; a
+          // one-table commit has nothing to choose and reports as the file
+          // store does
+          case e: MetaRerunException if e.conflictedTable.isEmpty && es.size > 1 =>
+            throw new MetaRerunException(e.getMessage, Some(orig), e,
+              e.bucketConflict)
         }
       }
     }
   }
 
-  /** The body of [[commit]], run under an already-held table lock inside
-    * the caller's transaction. */
+  /** One table's share of [[commitMany]], under its already-held table
+    * lock inside the caller's transaction: allocate, decide
+    * ([[MetaStore.publish]]), write in batches. */
   private def commitLocked(c: Connection, tp: String,
-      commits: Seq[DataCommitInfo],
-      expectedVersions: Map[String, Int]): Unit = {
-      val (seq0, ts) = allocate(c, tp, commits.size)
-      val descs = commits.map(_.partitionDesc).distinct
-      val rows = headRows(c, tp, descs)
-      val heads = rows.iterator.filter(_.version >= 0)
-        .map(pi => pi.partitionDesc -> pi).toMap
-      // dropped partitions (version -1) still own a head ROW that re-create
-      // must UPDATE, not re-INSERT
-      val existingRows = rows.iterator.map(_.partitionDesc).toSet
-      commits.foreach { cm =>
-        val cur = heads.get(cm.partitionDesc).map(_.version).getOrElse(-1)
-        val exp = expectedVersions.getOrElse(cm.partitionDesc, -1)
-        if (cur != exp)
-          throw new MetaRerunException(
-            s"partition '${cm.partitionDesc}' moved: expected v$exp, found v$cur")
+      commits: Seq[DataCommitInfo], expectedVersions: Map[String, Int],
+      expectedBucketNum: Option[Int]): Unit = {
+    val lines = appendLines(c, tp, commits.map(_.partitionDesc)) { (heads, ts) =>
+      MetaStore.publish(heads, rawInfoIn(c, tp).map(_.bucketNum), commits,
+        expectedVersions, expectedBucketNum, ts)
+    }
+    val ins = c.prepareStatement(
+      "INSERT INTO graft_commit_info (table_path, commit_id, info) VALUES (?,?,?)")
+    try {
+      commits.zip(lines).foreach { case (cm, pi) =>
+        ins.setString(1, tp); ins.setString(2, cm.commitId)
+        ins.setString(3, jwrite(cm.copy(timestamp = pi.timestamp))); ins.addBatch()
       }
-      // fold sequentially so one atomic call may carry several commits for
-      // the same partition (mirrors FileMetaStore.commit); only the FINAL
-      // PartitionInfo per partition becomes the head pointer
-      var seq = seq0
-      val running = scala.collection.mutable.LinkedHashMap[String, (PartitionInfo, Long)]()
-      val insCommit = c.prepareStatement(
-        "INSERT INTO graft_commit_info (table_path, commit_id, info) " +
-          "VALUES (?,?,?)")
-      val insLog = c.prepareStatement(
-        "INSERT INTO graft_partition_log (table_path, seq, partition_desc, " +
-          "version, commit_op, ts, snapshot) VALUES (?,?,?,?,?,?,?)")
-      try {
-        commits.foreach { c0 =>
-          val cm = c0.copy(timestamp = ts)
-          insCommit.setString(1, tp); insCommit.setString(2, cm.commitId)
-          insCommit.setString(3, jwrite(cm)); insCommit.addBatch()
-          val prev = running.get(cm.partitionDesc).map(_._1)
-            .orElse(heads.get(cm.partitionDesc))
-          val snapshot = cm.commitOp match {
-            case CommitOp.Append | CommitOp.Merge | CommitOp.Rewrite =>
-              prev.map(_.snapshot).getOrElse(Nil) :+ cm.commitId
-            case CommitOp.Update | CommitOp.Compaction => Seq(cm.commitId)
-            case other => throw new IllegalArgumentException(s"unknown commitOp $other")
-          }
-          val pi = PartitionInfo(cm.partitionDesc,
-            prev.map(_.version + 1).getOrElse(0), snapshot, cm.commitOp, ts)
-          insLog.setString(1, tp); insLog.setLong(2, seq)
-          insLog.setString(3, pi.partitionDesc); insLog.setInt(4, pi.version)
-          insLog.setString(5, pi.commitOp); insLog.setLong(6, pi.timestamp)
-          insLog.setString(7, jwrite(pi.snapshot)); insLog.addBatch()
-          running(cm.partitionDesc) = (pi, seq)
-          seq += 1
-        }
-        insCommit.executeBatch()
-        insLog.executeBatch()
-      } catch {
-        case e: java.sql.BatchUpdateException if batchHasDuplicate(e) =>
-          // commit_id collision = a concurrent writer landed our retry's ids
-          throw new MetaRerunException(s"catalog contention: ${e.getMessage}")
-      } finally { insCommit.close(); insLog.close() }
-      val (toUpdate, toInsert) =
-        running.toSeq.partition { case (d, _) => existingRows(d) }
-      if (toUpdate.nonEmpty) {
-        val up = c.prepareStatement(
-          "UPDATE graft_partition_head SET version = ?, seq = ? " +
-            "WHERE table_path = ? AND partition_desc = ?")
-        try {
-          toUpdate.foreach { case (d, (pi, s)) =>
-            up.setInt(1, pi.version); up.setLong(2, s)
-            up.setString(3, tp); up.setString(4, d); up.addBatch()
-          }
-          // JDBC allows drivers to report SUCCESS_NO_INFO (-2) for batch
-          // elements; only an explicit 0 means the head row vanished.
-          require(up.executeBatch().forall(n =>
-              n == 1 || n == java.sql.Statement.SUCCESS_NO_INFO),
-            s"head row vanished mid-commit for $tp")
-        } finally up.close()
-      }
-      if (toInsert.nonEmpty) {
-        val ins = c.prepareStatement(
-          "INSERT INTO graft_partition_head (table_path, partition_desc, " +
-            "version, seq) VALUES (?,?,?,?)")
-        try {
-          toInsert.foreach { case (d, (pi, s)) =>
-            ins.setString(1, tp); ins.setString(2, d)
-            ins.setInt(3, pi.version); ins.setLong(4, s); ins.addBatch()
-          }
-          ins.executeBatch()
-        } catch {
-          // lost a first-create race (other writer committed between our
-          // existence read and this INSERT — possible under READ_COMMITTED)
-          case e: java.sql.BatchUpdateException if batchHasDuplicate(e) =>
-            throw new MetaRerunException("partition created concurrently")
-        } finally ins.close()
-      }
+      ins.executeBatch()
+    } catch {
+      case e: java.sql.BatchUpdateException if batchHasDuplicate(e) =>
+        // commit_id collision = a concurrent writer landed our retry's ids
+        throw new MetaRerunException(s"catalog contention: ${e.getMessage}")
+    } finally ins.close()
   }
 
   private def batchHasDuplicate(e: java.sql.BatchUpdateException): Boolean = {
@@ -1086,10 +1016,7 @@ class JdbcMetaStore(url: String) extends MetaStore {
         .find(_.version == toVersion)
         .getOrElse(throw new IllegalArgumentException(
           s"no version $toVersion for partition '$desc'"))
-      val (seq, ts) = allocate(c, tp, 1)
-      val pi = target.copy(timestamp = ts)
-      insertLogRow(c, tp, seq, pi)
-      upsertHead(c, tp, pi, seq)
+      appendLines(c, tp, Seq(desc))((_, ts) => Seq(target.copy(timestamp = ts)))
     }
   }
 
@@ -1100,17 +1027,8 @@ class JdbcMetaStore(url: String) extends MetaStore {
     withTx { c =>
       lockTable(c, tp)
       val appends = MetaStore.restoreAppends(logRows(c, tp, None), asOfTs)
-      val out =
-        if (appends.isEmpty) Nil
-        else {
-          val (seq0, ts) = allocate(c, tp, appends.size)
-          appends.zipWithIndex.map { case (pi0, i) =>
-            val pi = pi0.copy(timestamp = ts)
-            insertLogRow(c, tp, seq0 + i, pi)
-            upsertHead(c, tp, pi, seq0 + i)
-            pi
-          }
-        }
+      val out = appendLines(c, tp, appends.map(_.partitionDesc))((_, ts) =>
+        appends.map(_.copy(timestamp = ts)))
       // info flip in the SAME transaction as the repointing (trait
       // scaladoc): the table lock is held, so the plain rev bump cannot
       // race another writer
@@ -1129,17 +1047,8 @@ class JdbcMetaStore(url: String) extends MetaStore {
     }
   }
 
-  override def dropPartition(tablePath: String, desc: String): Unit = {
-    val tp = canonical(tablePath)
-    requireVisible(tp, tablePath)
-    withTx { c =>
-      lockTable(c, tp)
-      val (seq, ts) = allocate(c, tp, 1)
-      val pi = PartitionInfo(desc, -1, Nil, CommitOp.Update, ts)
-      insertLogRow(c, tp, seq, pi)
-      upsertHead(c, tp, pi, seq)
-    }
-  }
+  override def dropPartition(tablePath: String, desc: String): Unit =
+    dropPartitions(tablePath, Seq(desc))
 
   /** ONE transaction + ONE shared ts for the whole sweep (crash-atomic,
     * O(1) commits instead of O(descs)). */
@@ -1149,12 +1058,8 @@ class JdbcMetaStore(url: String) extends MetaStore {
     requireVisible(tp, tablePath)
     withTx { c =>
       lockTable(c, tp)
-      val (seq0, ts) = allocate(c, tp, descs.size)
-      descs.zipWithIndex.foreach { case (d, i) =>
-        val pi = PartitionInfo(d, -1, Nil, CommitOp.Update, ts)
-        insertLogRow(c, tp, seq0 + i, pi)
-        upsertHead(c, tp, pi, seq0 + i)
-      }
+      appendLines(c, tp, descs)((_, ts) =>
+        descs.map(PartitionInfo(_, -1, Nil, CommitOp.Update, ts)))
     }
   }
 

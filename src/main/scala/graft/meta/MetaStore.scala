@@ -29,7 +29,7 @@ class MetaRerunException(msg: String,
       * SAME commit can never succeed — the caller must re-stage the write
       * under the new count (or, for a planned streaming batch, fail the
       * batch so the restarted query re-plans). Typed so callers never
-      * match on message text (two stores word it independently). */
+      * match on message text. */
     val bucketConflict: Boolean = false) extends RuntimeException(msg, cause)
 
 /** Metadata store API — the same five logical tables as the reference's
@@ -81,7 +81,11 @@ trait MetaStore {
     * bucketed its files under a bucket count that [[rebucketIfNoPartitions]]
     * has since changed must rerun (mixed bucket counts duplicate PKs), and
     * the partition-version CAS alone cannot catch it because brand-new
-    * partitions carry expected version -1. */
+    * partitions carry expected version -1.
+    *
+    * Every store decides the commit with ONE function, [[MetaStore.publish]]
+    * (both CASes, the per-partition fold, the snapshot rule per commit
+    * kind); a store only supplies its lock, its clock and its storage. */
   def commit(
       tablePath: String,
       commits: Seq[DataCommitInfo],
@@ -281,8 +285,10 @@ class FileMetaStore extends MetaStore {
   // size — resolution is O(new lines), and O(1) stat when nothing changed.
   // Commit JSONs are immutable once written (UUID-keyed), so they cache
   // forever. Single-driver assumption as documented on the class.
+  // `maxTs` = the log max (drop tombstones included), extended with each
+  // tail read so the clock floor and maxCommitTs need no pass over the log
   private case class LogState(size: Long, lines: Vector[PartitionInfo],
-      lastByDesc: Map[String, PartitionInfo]) {
+      lastByDesc: Map[String, PartitionInfo], maxTs: Long) {
     // computed once per log state, not per call: at 100k partitions a
     // per-call filter+sort costs ~150 ms — the difference between a
     // sub-ms and a 100 ms warm partition prune
@@ -305,43 +311,34 @@ class FileMetaStore extends MetaStore {
   private def versionsPath(tp: String) = metaDir(tp).resolve("versions.jsonl")
   private def batchesPath(tp: String) = metaDir(tp).resolve("stream_batches.jsonl")
 
-  // Commit timestamps must be strictly increasing per store so that
-  // time-travel boundaries are well-defined even when commits land within the
-  // same millisecond (tests do).
   private var lastTs: Long = 0L
-  private def nextTs(): Long = synchronized {
-    lastTs = math.max(System.currentTimeMillis(), lastTs + 1); lastTs
-  }
 
-  /** [[nextTs]] bumped strictly past `floor` — used where the allocated
-    * timestamp must order after PERSISTED table state another process may
-    * have stamped (this instance's `lastTs` only covers its own
-    * allocations): data commits bump past the table's newest head line AND
-    * newest recorded flip boundary; flips bump past the heads. Together
-    * they make commit-vs-flip timestamp order a true happened-before
-    * order across store instances (the exactness epoch replay needs).
-    * Callers hold the table's file lock. */
-  private def nextTsPast(floor: Long): Long = synchronized {
-    lastTs = math.max(math.max(System.currentTimeMillis(), lastTs + 1),
-      floor + 1)
-    lastTs
-  }
-
-  /** Newest persisted timestamp for the table: head lines + recorded
-    * mapping-event boundaries. Under the file lock. */
-  private def persistedTsFloor(tablePath: String): Long = {
-    val headsMax = headMap(tablePath).values
-      .foldLeft(0L)((m, p) => math.max(m, p.timestamp))
-    val boundsMax = rawInfo(tablePath)
-      .map(t => RebucketLog.maxBoundary(t.properties)).getOrElse(0L)
-    math.max(headsMax, boundsMax)
+  /** The ONE file-store clock rule, for every log append and flip boundary:
+    * strictly past this instance's last stamp (commits within one
+    * millisecond stay ordered) AND past every stamp already persisted for
+    * the table by ANY store instance — the log max, drop tombstones
+    * included, and the newest recorded mapping-event boundary of `info`
+    * (the info the caller read under the lock). So log order is timestamp
+    * order across instances: commit-vs-flip order is happened-before order
+    * (exact epoch replay), and a drop or rollback never lands at or below
+    * an earlier commit, where `maxCommitTs` would not advance and a strict
+    * streaming reader's [[droppedBetween]] would miss it. Callers hold the
+    * table's file lock. */
+  private def nextStamp(tablePath: String, info: Option[TableInfo]): Long = {
+    val floor = math.max(logState(tablePath).maxTs,
+      info.map(t => RebucketLog.maxBoundary(t.properties)).getOrElse(0L))
+    synchronized {
+      lastTs = math.max(math.max(System.currentTimeMillis(), lastTs + 1),
+        floor + 1)
+      lastTs
+    }
   }
 
   override def updateInfoAtFlip(tablePath: String)(
       f: (TableInfo, Long) => TableInfo): Unit = withFileLock(tablePath) {
     val t = rawInfo(tablePath).getOrElse(
       throw new IllegalArgumentException(s"no graft table at $tablePath"))
-    val ts0 = nextTsPast(persistedTsFloor(tablePath))
+    val ts0 = nextStamp(tablePath, Some(t))
     writeInfoAtomic(tableInfoPath(tablePath), jwrite(f(t, ts0)))
     infoCache.remove(canonical(tablePath))
   }
@@ -428,7 +425,7 @@ class FileMetaStore extends MetaStore {
       // diff window may span from data that existed before a
       // truncate/drop to data written after this re-bucket. Boundary on
       // the store's commit clock (exact epoch replay).
-      val ts = nextTsPast(persistedTsFloor(tablePath))
+      val ts = nextStamp(tablePath, Some(t))
       writeInfoAtomic(tableInfoPath(tablePath),
         jwrite(t.copy(bucketNum = newBucketNum, properties =
           RebucketLog.appendClosed(t.properties, ts, ts,
@@ -468,14 +465,16 @@ class FileMetaStore extends MetaStore {
       commits: Seq[DataCommitInfo],
       expectedVersions: Map[String, Int],
       expectedBucketNum: Option[Int]): Unit = withFileLock(tablePath) {
-    // an unfinished restore (crash between its head repointing and its
-    // bucket-count flip) makes the count this commit bucketed under
-    // unresolvable — refuse loudly; re-running the restore recovers
-    // ONE uncached info read serves both guards below: the commit-side
-    // decisions must see the freshest state (a second store instance's
-    // (mtime, size) cache can revalidate a same-length re-bucket rewrite
-    // landing in the same millisecond)
+    // ONE uncached info read serves the guard, the bucket CAS and the
+    // clock: decisions under the lock must see the freshest state (a second
+    // store instance's (mtime, size) cache can revalidate a same-length
+    // re-bucket rewrite landing in the same millisecond)
     val freshInfo = rawInfo(tablePath)
+    // restore-pending guard — file store only: its restore repoints heads
+    // and flips the bucket count in two file writes, and a crash between
+    // them makes the count this commit bucketed under unresolvable (the
+    // JDBC store restores in ONE transaction and never sets the marker).
+    // Refuse loudly; re-running the restore recovers
     freshInfo.map(_.properties)
       .flatMap(_.get(MetaStore.RestorePendingProp)).foreach { pv =>
         val pts = pv.split(":").head
@@ -485,53 +484,12 @@ class FileMetaStore extends MetaStore {
             s"flip); re-run restoreToTimestamp($pts) to complete it " +
             "before writing")
       }
-    // writer-side re-bucket CAS (trait scaladoc): the bucket count these
-    // files were written under must still be the table's — checked inside
-    // the lock so it serializes against rebucketIfNoPartitions
-    expectedBucketNum.foreach { exp =>
-      val cur = freshInfo.map(_.bucketNum)
-      if (!cur.contains(exp))
-        throw new MetaRerunException(
-          s"table bucketNum moved: files written under $exp, table now at " +
-            s"${cur.getOrElse(-1)} (concurrent re-bucket) — rerun the write",
-          bucketConflict = true)
-    }
-    val heads = headMap(tablePath)
-    // CAS: every touched partition must still be at the version the writer saw.
-    commits.foreach { c =>
-      val cur = heads.get(c.partitionDesc).map(_.version).getOrElse(-1)
-      val exp = expectedVersions.getOrElse(c.partitionDesc, -1)
-      if (cur != exp)
-        throw new MetaRerunException(
-          s"partition '${c.partitionDesc}' moved: expected v$exp, found v$cur")
-    }
-    // strictly after every persisted head line AND recorded flip boundary
-    // (possibly stamped by ANOTHER process): commit-vs-flip timestamp
-    // order must be happened-before order for exact epoch replay
-    val ts = nextTsPast(math.max(
-      heads.values.foldLeft(0L)((m, p) => math.max(m, p.timestamp)),
-      freshInfo.map(t => RebucketLog.maxBoundary(t.properties)).getOrElse(0L)))
-    // fold sequentially so ONE atomic call may carry several commits for the
-    // same partition (e.g. a MERGE publishing an update delta plus a
-    // tombstone run): each commit extends the running head, not the
-    // pre-call snapshot (which would silently drop all but the last)
-    val running = scala.collection.mutable.Map[String, PartitionInfo]()
-    val newHeads = commits.map { c0 =>
-      val c = c0.copy(timestamp = ts)
-      Files.writeString(commitsDir(tablePath).resolve(s"${c.commitId}.json"), jwrite(c))
-      val prev = running.get(c.partitionDesc).orElse(heads.get(c.partitionDesc))
-      val snapshot = c.commitOp match {
-        case CommitOp.Append | CommitOp.Merge | CommitOp.Rewrite =>
-          prev.map(_.snapshot).getOrElse(Nil) :+ c.commitId
-        case CommitOp.Update | CommitOp.Compaction => Seq(c.commitId)
-        case other => throw new IllegalArgumentException(s"unknown commitOp $other")
-      }
-      val pi = PartitionInfo(c.partitionDesc, prev.map(_.version + 1).getOrElse(0),
-        snapshot, c.commitOp, ts)
-      running(c.partitionDesc) = pi
-      pi
-    }
-    appendVersions(tablePath, newHeads)
+    val ts = nextStamp(tablePath, freshInfo)
+    val lines = MetaStore.publish(headMap(tablePath), freshInfo.map(_.bucketNum),
+      commits, expectedVersions, expectedBucketNum, ts)
+    commits.foreach(c => Files.writeString(
+      commitsDir(tablePath).resolve(s"${c.commitId}.json"), jwrite(c.copy(timestamp = ts))))
+    appendVersions(tablePath, lines)
   }
 
   private def appendVersions(tablePath: String, infos: Seq[PartitionInfo]): Unit = {
@@ -686,11 +644,13 @@ class FileMetaStore extends MetaStore {
           val fresh = tail.split('\n').iterator.filter(_.nonEmpty)
             .map(jread[PartitionInfo](_)).toVector
           LogState(size, cached.lines ++ fresh,
-            cached.lastByDesc ++ fresh.map(pi => pi.partitionDesc -> pi))
+            cached.lastByDesc ++ fresh.map(pi => pi.partitionDesc -> pi),
+            fresh.foldLeft(cached.maxTs)((m, pi) => math.max(m, pi.timestamp)))
         } else {
           fullReads.incrementAndGet()
           val all = if (size == 0L) Vector.empty[PartitionInfo] else parseAll(p)
-          LogState(size, all, all.map(pi => pi.partitionDesc -> pi).toMap)
+          LogState(size, all, all.map(pi => pi.partitionDesc -> pi).toMap,
+            all.foldLeft(0L)((m, pi) => math.max(m, pi.timestamp)))
         }
       logCache.put(key, next)
       next
@@ -711,12 +671,9 @@ class FileMetaStore extends MetaStore {
   private def allVersionLines(tablePath: String): Seq[PartitionInfo] =
     logState(tablePath).lines
 
-  /** Log-max over the cached parsed log (monotonic across drops — see the
+  /** Log-max of the cached parsed log (monotonic across drops — see the
     * trait scaladoc); stat-warm like every other read here. */
-  override def maxCommitTs(tablePath: String): Long = {
-    val all = allVersionLines(tablePath)
-    if (all.isEmpty) 0L else all.map(_.timestamp).max
-  }
+  override def maxCommitTs(tablePath: String): Long = logState(tablePath).maxTs
 
   /** One pass over the cached log instead of per-desc scans (the
     * single-desc read filters the whole log per call — O(descs x lines)
@@ -820,7 +777,8 @@ class FileMetaStore extends MetaStore {
       val target = partitionVersions(tablePath, desc).find(_.version == toVersion)
         .getOrElse(throw new IllegalArgumentException(
           s"no version $toVersion for partition '$desc'"))
-      appendVersions(tablePath, Seq(target.copy(timestamp = nextTs())))
+      appendVersions(tablePath,
+        Seq(target.copy(timestamp = nextStamp(tablePath, rawInfo(tablePath)))))
     }
 
   override def restoreTable(tablePath: String, asOfTs: Long,
@@ -862,7 +820,7 @@ class FileMetaStore extends MetaStore {
           // eventual event covers the oldest possible head movement.
           val anchor = cur.properties.get(MetaStore.RestorePendingProp)
             .flatMap(_.split(":").lift(1)).map(_.toLong)
-            .getOrElse(nextTsPast(persistedTsFloor(tablePath)))
+            .getOrElse(nextStamp(tablePath, Some(cur)))
           writeInfoAtomic(tableInfoPath(tablePath), jwrite(
             cur.copy(properties = cur.properties +
               (MetaStore.RestorePendingProp -> s"$asOfTs:$anchor"))))
@@ -871,7 +829,7 @@ class FileMetaStore extends MetaStore {
       }
       // ONE commit timestamp for every appended line (like commit()): time
       // travel must never resolve a boundary INSIDE the restore
-      val ts = nextTsPast(persistedTsFloor(tablePath))
+      val ts = nextStamp(tablePath, rawInfo(tablePath))
       val appends = MetaStore.restoreAppends(allVersionLines(tablePath), asOfTs)
         .map(_.copy(timestamp = ts))
       if (appends.nonEmpty) appendVersions(tablePath, appends)
@@ -904,15 +862,12 @@ class FileMetaStore extends MetaStore {
   }
 
   override def dropPartition(tablePath: String, desc: String): Unit =
-    withFileLock(tablePath) {
-      appendVersions(tablePath,
-        Seq(PartitionInfo(desc, -1, Nil, CommitOp.Update, nextTs())))
-    }
+    dropPartitions(tablePath, Seq(desc))
 
   /** ONE lock + ONE append + ONE shared ts for the whole sweep. */
   override def dropPartitions(tablePath: String, descs: Seq[String]): Unit =
     if (descs.nonEmpty) withFileLock(tablePath) {
-      val ts = nextTs()
+      val ts = nextStamp(tablePath, rawInfo(tablePath))
       appendVersions(tablePath,
         descs.map(d => PartitionInfo(d, -1, Nil, CommitOp.Update, ts)))
     }
@@ -990,6 +945,62 @@ object MetaStore {
     * route to the mapping-agnostic cross-bucket paths); re-running the
     * restore completes the pair and clears it. */
   val RestorePendingProp = "graft.restore.pending"
+
+  /** THE commit decision — the one optimistic-CAS protocol (reference
+    * `DBManager.commitData`) every store runs inside its own critical
+    * section, with `heads` = the current LIVE heads of the touched
+    * partitions and `ts` = the commit timestamp the store allocated.
+    * Returns the new log lines in commit order, or throws
+    * [[MetaRerunException]]:
+    *   - bucket-count CAS (trait [[MetaStore.commit]] scaladoc), only when
+    *     `expectedBucketNum` is set — `currentBucketNum` is by-name so a
+    *     store reads its table info only then;
+    *   - version CAS: every touched partition must still be at the version
+    *     the writer read (-1 = absent);
+    *   - sequential fold: ONE call may carry several commits for the same
+    *     partition (a MERGE publishing an update delta plus a tombstone
+    *     run), and each extends the running head, not the pre-call one;
+    *   - snapshot rule: Append, Merge and Rewrite extend the snapshot;
+    *     Update and Compaction replace it; an unknown op is rejected.
+    * A protocol change (e.g. placing a compaction below deltas that won
+    * the race) is made here, once, for every backend. */
+  private[meta] def publish(
+      heads: Map[String, PartitionInfo],
+      currentBucketNum: => Option[Int],
+      commits: Seq[DataCommitInfo],
+      expectedVersions: Map[String, Int],
+      expectedBucketNum: Option[Int],
+      ts: Long): Seq[PartitionInfo] = {
+    expectedBucketNum.foreach { exp =>
+      val cur = currentBucketNum
+      if (!cur.contains(exp))
+        throw new MetaRerunException(
+          s"table bucketNum moved: files written under $exp, table now at " +
+            s"${cur.getOrElse(-1)} (concurrent re-bucket) — rerun the write",
+          bucketConflict = true)
+    }
+    commits.foreach { c =>
+      val cur = heads.get(c.partitionDesc).map(_.version).getOrElse(-1)
+      val exp = expectedVersions.getOrElse(c.partitionDesc, -1)
+      if (cur != exp)
+        throw new MetaRerunException(
+          s"partition '${c.partitionDesc}' moved: expected v$exp, found v$cur")
+    }
+    var running = heads
+    commits.map { c =>
+      val prev = running.get(c.partitionDesc)
+      val snapshot = c.commitOp match {
+        case CommitOp.Append | CommitOp.Merge | CommitOp.Rewrite =>
+          prev.map(_.snapshot).getOrElse(Nil) :+ c.commitId
+        case CommitOp.Update | CommitOp.Compaction => Seq(c.commitId)
+        case other => throw new IllegalArgumentException(s"unknown commitOp $other")
+      }
+      val pi = PartitionInfo(c.partitionDesc, prev.map(_.version + 1).getOrElse(0),
+        snapshot, c.commitOp, ts)
+      running += c.partitionDesc -> pi
+      pi
+    }
+  }
 
   /** Version-log retention contract, shared by every store so log pruning
     * and vacuum liveness can never disagree: per partition keep everything

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import org.apache.spark.sql.functions._
+import graft.meta.{JdbcMetaStore, MetaStore}
 import graft.tables.GraftTable
 
 /** Optimistic-commit correctness under concurrency (SURVEY.md §7.5 hard
@@ -9,10 +10,27 @@ import graft.tables.GraftTable
 class ConcurrencySuite extends SparkFixture {
   import spark.implicits._
 
-  test("concurrent upserts all land (CAS retry), no lost updates") {
+  /** Registers a concurrent-writer case once per metadata store. The body
+    * gets `store()`, which hands each writer its store: on the file store
+    * the one process-wide instance (two instances in one JVM cannot both
+    * hold the table's OS file lock); on JDBC a new instance per call over
+    * a Derby in-memory database of the case's own — separate connections,
+    * as on distinct hosts. */
+  private def onBothStores(fileName: String, jdbcName: String)(
+      body: (() => MetaStore) => Unit): Unit = {
+    test(fileName)(body(() => MetaStore.default))
+    test(jdbcName) {
+      val url = s"jdbc:derby:memory:conc${java.util.UUID.randomUUID().toString
+        .replace("-", "")};create=true"
+      body(() => new JdbcMetaStore(url))
+    }
+  }
+
+  onBothStores("concurrent upserts all land (CAS retry), no lost updates",
+    "jdbc: concurrent upserts all land, no lost updates") { store =>
     withTempPath { path =>
       val t = GraftTable.create(spark, Seq((0, 0)).toDF("id", "v"), path,
-        hashColumns = Seq("id"), bucketNum = 2)
+        hashColumns = Seq("id"), bucketNum = 2, store = store())
       val n = 6
       val pool = Executors.newFixedThreadPool(n)
       val start = new CountDownLatch(1)
@@ -21,7 +39,7 @@ class ConcurrencySuite extends SparkFixture {
         pool.submit(new Runnable {
           def run(): Unit = {
             start.await()
-            try GraftTable.forPath(spark, path)
+            try GraftTable.forPath(spark, path, store())
               .upsert(Seq((i, i * 10)).toDF("id", "v"))
             catch { case e: Throwable => errs.add(e) }
           }
@@ -100,12 +118,13 @@ class ConcurrencySuite extends SparkFixture {
     }
   }
 
-  test("concurrent clause-merges (copy-on-write) all land via CAS retry") {
+  onBothStores("concurrent clause-merges (copy-on-write) all land via CAS retry",
+    "jdbc: concurrent clause-merges all land via CAS retry") { store =>
     withTempPath { path =>
       import graft.tables.{GraftMerge, MergeMatchedClause, MergeNotMatchedClause}
       val t = GraftTable.create(spark,
         (1 to 20).map(i => (i.toLong, 0.0)).toDF("id", "bal"), path,
-        hashColumns = Seq("id"), bucketNum = 2)
+        hashColumns = Seq("id"), bucketNum = 2, store = store())
       val n = 4
       val pool = Executors.newFixedThreadPool(n)
       val start = new CountDownLatch(1)
@@ -116,7 +135,7 @@ class ConcurrencySuite extends SparkFixture {
             start.await()
             // each writer bumps a DISJOINT id range and inserts one new key,
             // so the merged end state is exact regardless of interleaving
-            try GraftTable.forPath(spark, path).mergeIntoClauses(
+            try GraftTable.forPath(spark, path, store()).mergeIntoClauses(
               Seq((i * 5L - 4, 1.0), (i * 5L - 3, 1.0), (100L + i, 7.0))
                 .toDF("k", "amt"),
               Map("id" -> "k"),
@@ -139,15 +158,17 @@ class ConcurrencySuite extends SparkFixture {
     }
   }
 
-  test("compaction racing concurrent upserts never loses a delta") {
+  onBothStores("compaction racing concurrent upserts never loses a delta",
+    "jdbc: compaction racing upserts never loses a delta") { store =>
     withTempPath { path =>
       val t = GraftTable.create(spark,
         (0 until 100).map(i => (i.toLong, 0L)).toDF("id", "v"), path,
-        hashColumns = Seq("id"), bucketNum = 2)
+        hashColumns = Seq("id"), bucketNum = 2, store = store())
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val upsertTable = GraftTable.forPath(spark, path, store())
       val upserter = new Thread(() => {
         try (1 to 8).foreach { k =>
-          t.upsert((0 until 100).map(i => (i.toLong, k.toLong)).toDF("id", "v"))
+          upsertTable.upsert((0 until 100).map(i => (i.toLong, k.toLong)).toDF("id", "v"))
         } catch { case e: Throwable => errs.add(e) }
       })
       upserter.start()

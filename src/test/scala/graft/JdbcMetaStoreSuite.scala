@@ -44,6 +44,7 @@ class JdbcMetaStoreSuite extends SparkFixture {
         // one atomic call carrying TWO commits for the same partition
         s.commit(path, Seq(commitOf("a", CommitOp.Merge, 2),
           commitOf("a", CommitOp.Merge, 3)), Map("a" -> 1))
+        val tsMid = s.maxCommitTs(path) // a at v3, the first b at v0
         // compaction collapses the snapshot
         s.commit(path, Seq(commitOf("a", CommitOp.Compaction, 4)), Map("a" -> 3))
         // rollback to v1 (re-appends v1; head = v1 by log order)
@@ -55,18 +56,85 @@ class JdbcMetaStoreSuite extends SparkFixture {
         val versA = s.partitionVersions(path, "a").map(strip)
         val versB = s.partitionVersions(path, "b").map(strip)
         val retainAll = s.retainedVersions(path, 0L).map(strip).sorted
+        // the same conflict, message and flags on both stores: a stale
+        // version, then a bucket conflict through commit and through a
+        // one-entry commitMany (table bucketNum is 2)
+        def rerun(body: => Unit) = {
+          val e = intercept[MetaRerunException](body)
+          (e.getMessage, e.bucketConflict, e.conflictedTable)
+        }
+        val conflicts = Seq(
+          rerun(s.commit(path, Seq(commitOf("a", CommitOp.Merge, 5)), Map("a" -> 0))),
+          rerun(s.commit(path, Seq(commitOf("a", CommitOp.Merge, 6)), Map("a" -> 1),
+            expectedBucketNum = Some(4))),
+          rerun(s.commitMany(Seq((path, Seq(commitOf("a", CommitOp.Merge, 7)),
+            Map("a" -> 1))), Map(path -> 4))))
+        // an Update folded after a Merge in ONE call replaces the snapshot
+        s.commit(path, Seq(commitOf("a", CommitOp.Merge, 8),
+          commitOf("a", CommitOp.Update, 9)), Map("a" -> 1))
+        val folded = s.partitionHead(path, "a").map(strip)
+        // a restore over 3 partitions (a and b repointed, c created after
+        // the boundary is tombstoned), then a bulk drop with a repeated
+        // desc and a never-created one
+        s.commit(path, Seq(commitOf("c", CommitOp.Append, 0)), Map.empty)
+        val restored = s.restoreTable(path, tsMid).map(strip)
+        s.dropPartitions(path, Seq("b", "z", "b"))
+        val log = s.rawVersionLines(path).map(strip)
+        val tombstoned = s.droppedBetween(path, 0L, Long.MaxValue).map(_._1).distinct.sorted
+        val headsAfter = s.listPartitionHeads(path).map(strip)
         val dropped = s.compactVersionLog(path, Long.MaxValue)
         val afterCompact = s.listPartitionHeads(path).map(strip)
         val versAfterA = s.partitionVersions(path, "a").map(strip)
         s.dropTable(path)
-        (heads, versA, versB, retainAll, dropped, afterCompact, versAfterA)
+        ((heads, versA, versB, retainAll), (conflicts, folded, restored, log,
+          tombstoned, headsAfter), (dropped, afterCompact, versAfterA))
       }
       assert(results(0) == results(1),
         s"\nfile: ${results(0)}\njdbc: ${results(1)}")
       // the parity script must also exercise the lineage rules themselves
-      val (heads, versA, _, _, _, _, _) = results(0)
+      val ((heads, versA, _, _),
+        (conflicts, folded, restored, _, tombstoned, headsAfter), _) = results(0)
       assert(heads.find(_._1 == "a").get._2 == 1) // rollback repointed head
       assert(versA.map(_._2) == Seq(0, 1)) // history cut to the head lineage
+      assert(conflicts == Seq(
+        ("partition 'a' moved: expected v0, found v1", false, None)) ++
+        Seq.fill(2)(("table bucketNum moved: files written under 4, table now " +
+          "at 2 (concurrent re-bucket) — rerun the write", true, None)))
+      assert(folded == Some(("a", 3, 1, CommitOp.Update)))
+      assert(restored.map(r => (r._1, r._2)) == Seq(("a", 4), ("b", 1), ("c", -1)))
+      assert(tombstoned == Seq("b", "c", "z"))
+      assert(headsAfter.map(_._1) == Seq("a"))
+    }
+  }
+
+  /** A second store instance's rollback and drop must stamp past every
+    * persisted stamp, not just its own clock: a closed re-bucket event
+    * whose boundary is 60 s ahead makes store `a`'s next commit land past
+    * it, so a `b` stamping from its own clock alone would land 60 s
+    * "before" that commit — `maxCommitTs` would not advance and the strict
+    * streaming gate (`droppedBetween`) would miss the drop. */
+  test("second instance stamps drops past persisted commits") {
+    withTempPath { path =>
+      Seq[() => MetaStore](() => new FileMetaStore, () => freshStore("stamps"))
+        .foreach { mk =>
+          val (a, b) = (mk(), mk())
+          a.createTable(ti(path))
+          a.commit(path, Seq(commitOf("p", CommitOp.Append, 0)), Map.empty)
+          val ahead = System.currentTimeMillis() + 60000L
+          a.updateInfo(path)(t => t.copy(properties =
+            RebucketLog.appendClosed(t.properties, ahead, ahead, 2, 2)))
+          a.commit(path, Seq(commitOf("p", CommitOp.Merge, 1)), Map("p" -> 0))
+          val before = b.maxCommitTs(path)
+          b.rollbackPartition(path, "p", 0)
+          b.dropPartition(path, "p")
+          val ts = b.rawVersionLines(path).map(_.timestamp)
+          assert(ts.size == 4 && ts.zip(ts.tail).forall { case (x, y) => x < y },
+            s"${b.getClass.getSimpleName}: log timestamps must strictly increase in log order: $ts")
+          assert(b.droppedBetween(path, before, Long.MaxValue).map(_._1) == Seq("p"),
+            s"${b.getClass.getSimpleName}: the drop must be visible past the previous maxCommitTs")
+          assert(b.maxCommitTs(path) > before)
+          b.dropTable(path)
+        }
     }
   }
 
@@ -216,36 +284,6 @@ class JdbcMetaStoreSuite extends SparkFixture {
           hashColumns = Seq("id"), bucketNum = 2, store = s)
       }
       s.dropTable(path)
-    }
-  }
-
-  test("concurrent upserts through the jdbc catalog: CAS retry, no losses") {
-    withTempPath { path =>
-      // separate store instances = separate connections, as on distinct hosts
-      val create = freshStore("conc")
-      val t = GraftTable.create(spark, Seq((0L, 0)).toDF("id", "v"), path,
-        hashColumns = Seq("id"), bucketNum = 2, store = create)
-      val n = 6
-      val pool = Executors.newFixedThreadPool(n)
-      val start = new CountDownLatch(1)
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      (1 to n).foreach { i =>
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            start.await()
-            try GraftTable.forPath(spark, path, store = freshStore("conc"))
-              .upsert(Seq((i.toLong, i * 10)).toDF("id", "v"))
-            catch { case e: Throwable => errs.add(e) }
-          }
-        })
-      }
-      start.countDown()
-      pool.shutdown()
-      assert(pool.awaitTermination(120, TimeUnit.SECONDS))
-      assert(errs.isEmpty, s"concurrent upserts failed: ${errs.peek()}")
-      assertRows(t.toDF.select("id", "v"), (0 to n).map(i => s"[$i,${i * 10}]"))
-      assert(t.partitions.head.version == n)
-      create.dropTable(path)
     }
   }
 
