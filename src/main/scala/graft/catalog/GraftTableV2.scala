@@ -127,7 +127,8 @@ class GraftTableV2(spark: SparkSession, val table: GraftTable, ident: String,
             ti.tablePath, ti.schemaJson, ti.rangeColumns, ti.hashColumns,
             ti.bucketNum, info.queryId(), overwriteAll,
             org.apache.spark.sql.graft.StreamShim.parquetRowWriters(
-              spark, graft.util.SchemaUtil.fromJson(ti.schemaJson)))
+              spark, graft.util.SchemaUtil.fromJson(ti.schemaJson),
+              graft.write.TransactionalWrite.writeOptions(spark, ti)))
         }
       }
     }

@@ -202,21 +202,25 @@ class JdbcMetaStore(url: String) extends MetaStore {
        domain VARCHAR(200) NOT NULL)""")
 
   locally {
-    // Run EVERY CREATE unconditionally, relying on the "already exists"
-    // SQLState guard for idempotence. Gating all DDL on graft_table_info's
-    // presence had a bootstrap race: a second host connecting while the
-    // first is mid-DDL would see graft_table_info, skip the rest, and fail
-    // on the still-missing tables.
+    // CREATE only what is missing, probed through DatabaseMetaData, which
+    // takes no DDL locks. Re-running every CREATE on a live database
+    // stalled the constructor: a CREATE INDEX on an existing table waits
+    // for the table lock that any open commit transaction holds, up to
+    // Derby's lock-wait timeout (~60 s) while writers keep committing.
+    // Each missing object is still created under the "already exists"
+    // SQLState guard: a second host bootstrapping at the same time may
+    // create it between the probe and the CREATE. (Gating all DDL on
+    // graft_table_info's presence instead had a bootstrap race: a host
+    // connecting while the first is mid-DDL would see graft_table_info,
+    // skip the rest, and fail on the still-missing tables.)
     //
-    // BOUNDED CONTENTION RETRY: a store connecting while other connections
-    // hold in-flight commit transactions can hit dictionary-lock timeouts
-    // on the (redundant) CREATEs — Derby's DDL waits on locks the data
-    // transactions hold, times out (40XL1), and a constructor has no
-    // caller-side retry loop to absorb it (the 6-writer concurrency suite
-    // reproduced this as a rare flake). Each statement retries briefly;
-    // contention here is transient by construction (commits finish in ms).
+    // BOUNDED CONTENTION RETRY: a bootstrap CREATE can still hit a
+    // dictionary-lock timeout (40XL1) against a concurrent bootstrap, and
+    // a constructor has no caller-side retry loop to absorb it. Each
+    // statement retries briefly; contention here is transient.
     withConn { c =>
-      ddl.foreach { stmt =>
+      val existing = existingObjects(c)
+      ddl.filterNot(stmt => existing(objectName(stmt))).foreach { stmt =>
         var attempts = 0
         var done = false
         while (!done) {
@@ -231,6 +235,25 @@ class JdbcMetaStore(url: String) extends MetaStore {
         }
       }
     }
+  }
+
+  /** Lower-cased name of the table or index a [[ddl]] statement creates. */
+  private def objectName(stmt: String): String =
+    "CREATE (?:TABLE|INDEX) (\\w+)".r.findFirstMatchIn(stmt).get.group(1).toLowerCase
+
+  /** Lower-cased names of the graft tables and their indexes in the
+    * connection's schema, read through DatabaseMetaData. */
+  private def existingObjects(c: Connection): Set[String] = {
+    val md = c.getMetaData
+    def names(rs: java.sql.ResultSet, col: String): Seq[String] =
+      try Iterator.continually(rs).takeWhile(_.next()).map(_.getString(col)).toList
+      finally rs.close()
+    val ours = ddl.map(objectName).toSet
+    val tables = names(md.getTables(null, c.getSchema, "%", Array("TABLE")), "TABLE_NAME")
+      .filter(t => ours(t.toLowerCase))
+    (tables ++ tables.flatMap(t =>
+      names(md.getIndexInfo(null, c.getSchema, t, false, true), "INDEX_NAME")))
+      .filter(_ != null).map(_.toLowerCase).toSet
   }
 
   private def existsAlready(e: SQLException): Boolean = {
@@ -252,8 +275,11 @@ class JdbcMetaStore(url: String) extends MetaStore {
   }
 
   /** Allocate `n` log sequence numbers and one strictly-increasing commit
-    * timestamp. Caller holds the lock row. Returns (firstSeq, ts). */
-  private def allocate(c: Connection, tp: String, n: Int): (Long, Long) = {
+    * timestamp, past [[MetaStore.stampFloor]] of the persisted `last_ts`
+    * and `info`, the table info the caller read in this transaction.
+    * Caller holds the lock row. Returns (firstSeq, ts). */
+  private def allocate(c: Connection, tp: String, n: Int,
+      info: Option[TableInfo]): (Long, Long) = {
     val rd = c.prepareStatement(
       "SELECT next_seq, last_ts FROM graft_seq WHERE table_path = ?")
     val (seq0, lastTs) = try {
@@ -262,7 +288,8 @@ class JdbcMetaStore(url: String) extends MetaStore {
       require(rs.next(), s"no graft table at $tp")
       val r = (rs.getLong(1), rs.getLong(2)); rs.close(); r
     } finally rd.close()
-    val ts = math.max(System.currentTimeMillis(), lastTs + 1)
+    val ts = math.max(System.currentTimeMillis(),
+      MetaStore.stampFloor(lastTs, info) + 1)
     val up = c.prepareStatement(
       "UPDATE graft_seq SET next_seq = ?, last_ts = ? WHERE table_path = ?")
     try {
@@ -334,9 +361,10 @@ class JdbcMetaStore(url: String) extends MetaStore {
     * partition-commits/s for a wide streaming ingest (see
     * tools/JdbcCatalogProbe). Only the FINAL line per partition becomes its
     * head pointer. Returns the appended lines. */
-  private def appendLines(c: Connection, tp: String, descs: Seq[String])(
+  private def appendLines(c: Connection, tp: String, descs: Seq[String],
+      info: Option[TableInfo])(
       build: (Map[String, PartitionInfo], Long) => Seq[PartitionInfo]): Seq[PartitionInfo] = {
-    val (seq0, ts) = allocate(c, tp, descs.size)
+    val (seq0, ts) = allocate(c, tp, descs.size, info)
     val rows = headRows(c, tp, descs.distinct)
     val lines = build(rows.iterator.filter(_.version >= 0)
       .map(pi => pi.partitionDesc -> pi).toMap, ts)
@@ -676,19 +704,19 @@ class JdbcMetaStore(url: String) extends MetaStore {
   }
 
   /** Flip-timestamp variant: ONE transaction holding the table lock —
-    * `allocate(c, tp, 0)` both yields the flip boundary and persists it as
-    * `last_ts`, so every earlier commit is ≤ the previous last_ts < ts0
-    * and every later commit allocates > ts0, across processes (the DB's
-    * persisted sequence is the clock). */
+    * `allocate(c, tp, 0, info)` both yields the flip boundary and persists
+    * it as `last_ts`, so every earlier commit is ≤ the previous last_ts <
+    * ts0 and every later commit allocates > ts0, across processes (the
+    * DB's persisted sequence is the clock). */
   override def updateInfoAtFlip(tablePath: String)(
       f: (TableInfo, Long) => TableInfo): Unit = {
     val tp = canonical(tablePath)
     requireVisible(tp, tablePath)
     withTx { c =>
       lockTable(c, tp)
-      val (_, ts0) = allocate(c, tp, 0)
       val t = rawInfoIn(c, tp).getOrElse(
         throw new IllegalArgumentException(s"no graft table at $tablePath"))
+      val (_, ts0) = allocate(c, tp, 0, Some(t))
       val updated = f(t, ts0)
       val up = c.prepareStatement(
         "UPDATE graft_table_info SET info = ?, rev = rev + 1 " +
@@ -736,7 +764,7 @@ class JdbcMetaStore(url: String) extends MetaStore {
         // flip: diff windows spanning a truncate -> re-bucket -> rewrite
         // sequence need the recorded boundary even though no files moved.
         // Boundary from the persisted sequence (exact epoch replay).
-        val ts = allocate(c, tp, 0)._2
+        val ts = allocate(c, tp, 0, Some(t))._2
         try {
           up.setString(1, jwrite(t.copy(bucketNum = newBucketNum,
             properties = RebucketLog.appendClosed(t.properties, ts, ts,
@@ -791,8 +819,9 @@ class JdbcMetaStore(url: String) extends MetaStore {
   private def commitLocked(c: Connection, tp: String,
       commits: Seq[DataCommitInfo], expectedVersions: Map[String, Int],
       expectedBucketNum: Option[Int]): Unit = {
-    val lines = appendLines(c, tp, commits.map(_.partitionDesc)) { (heads, ts) =>
-      MetaStore.publish(heads, rawInfoIn(c, tp).map(_.bucketNum), commits,
+    val info = rawInfoIn(c, tp)
+    val lines = appendLines(c, tp, commits.map(_.partitionDesc), info) { (heads, ts) =>
+      MetaStore.publish(heads, info.map(_.bucketNum), commits,
         expectedVersions, expectedBucketNum, ts)
     }
     val ins = c.prepareStatement(
@@ -1016,7 +1045,8 @@ class JdbcMetaStore(url: String) extends MetaStore {
         .find(_.version == toVersion)
         .getOrElse(throw new IllegalArgumentException(
           s"no version $toVersion for partition '$desc'"))
-      appendLines(c, tp, Seq(desc))((_, ts) => Seq(target.copy(timestamp = ts)))
+      appendLines(c, tp, Seq(desc), rawInfoIn(c, tp))((_, ts) =>
+        Seq(target.copy(timestamp = ts)))
     }
   }
 
@@ -1027,13 +1057,14 @@ class JdbcMetaStore(url: String) extends MetaStore {
     withTx { c =>
       lockTable(c, tp)
       val appends = MetaStore.restoreAppends(logRows(c, tp, None), asOfTs)
-      val out = appendLines(c, tp, appends.map(_.partitionDesc))((_, ts) =>
+      val info = rawInfoIn(c, tp)
+      val out = appendLines(c, tp, appends.map(_.partitionDesc), info)((_, ts) =>
         appends.map(_.copy(timestamp = ts)))
       // info flip in the SAME transaction as the repointing (trait
       // scaladoc): the table lock is held, so the plain rev bump cannot
       // race another writer
       infoUpdate.foreach { f =>
-        val t = rawInfoIn(c, tp).getOrElse(
+        val t = info.getOrElse(
           throw new IllegalArgumentException(s"no graft table at $tablePath"))
         val up = c.prepareStatement(
           "UPDATE graft_table_info SET info = ?, rev = rev + 1 " +
@@ -1058,7 +1089,7 @@ class JdbcMetaStore(url: String) extends MetaStore {
     requireVisible(tp, tablePath)
     withTx { c =>
       lockTable(c, tp)
-      appendLines(c, tp, descs)((_, ts) =>
+      appendLines(c, tp, descs, rawInfoIn(c, tp))((_, ts) =>
         descs.map(PartitionInfo(_, -1, Nil, CommitOp.Update, ts)))
     }
   }

@@ -325,8 +325,7 @@ class FileMetaStore extends MetaStore {
     * streaming reader's [[droppedBetween]] would miss it. Callers hold the
     * table's file lock. */
   private def nextStamp(tablePath: String, info: Option[TableInfo]): Long = {
-    val floor = math.max(logState(tablePath).maxTs,
-      info.map(t => RebucketLog.maxBoundary(t.properties)).getOrElse(0L))
+    val floor = MetaStore.stampFloor(logState(tablePath).maxTs, info)
     synchronized {
       lastTs = math.max(math.max(System.currentTimeMillis(), lastTs + 1),
         floor + 1)
@@ -946,6 +945,15 @@ object MetaStore {
     * restore completes the pair and clears it. */
   val RestorePendingProp = "graft.restore.pending"
 
+  /** The commit clock's floor, for both stores: the newest stamp already
+    * persisted for the table (`logMax`, drop tombstones included) and the
+    * newest mapping-event boundary recorded in `info`, the table info read
+    * under the table lock. Every new stamp goes strictly past it, so
+    * commit-vs-flip timestamp order is happened-before order across store
+    * instances and processes. */
+  def stampFloor(logMax: Long, info: Option[TableInfo]): Long =
+    math.max(logMax, info.map(t => RebucketLog.maxBoundary(t.properties)).getOrElse(0L))
+
   /** THE commit decision — the one optimistic-CAS protocol (reference
     * `DBManager.commitData`) every store runs inside its own critical
     * section, with `heads` = the current LIVE heads of the touched
@@ -953,8 +961,7 @@ object MetaStore {
     * Returns the new log lines in commit order, or throws
     * [[MetaRerunException]]:
     *   - bucket-count CAS (trait [[MetaStore.commit]] scaladoc), only when
-    *     `expectedBucketNum` is set — `currentBucketNum` is by-name so a
-    *     store reads its table info only then;
+    *     `expectedBucketNum` is set;
     *   - version CAS: every touched partition must still be at the version
     *     the writer read (-1 = absent);
     *   - sequential fold: ONE call may carry several commits for the same
@@ -966,17 +973,16 @@ object MetaStore {
     * the race) is made here, once, for every backend. */
   private[meta] def publish(
       heads: Map[String, PartitionInfo],
-      currentBucketNum: => Option[Int],
+      currentBucketNum: Option[Int],
       commits: Seq[DataCommitInfo],
       expectedVersions: Map[String, Int],
       expectedBucketNum: Option[Int],
       ts: Long): Seq[PartitionInfo] = {
     expectedBucketNum.foreach { exp =>
-      val cur = currentBucketNum
-      if (!cur.contains(exp))
+      if (!currentBucketNum.contains(exp))
         throw new MetaRerunException(
           s"table bucketNum moved: files written under $exp, table now at " +
-            s"${cur.getOrElse(-1)} (concurrent re-bucket) — rerun the write",
+            s"${currentBucketNum.getOrElse(-1)} (concurrent re-bucket) — rerun the write",
           bucketConflict = true)
     }
     commits.foreach { c =>

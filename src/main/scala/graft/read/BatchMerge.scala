@@ -324,7 +324,7 @@ final class BatchMergeIterator(
 
 object BatchMergeIterator {
   /** Rows moved by the column-major slice copier in this JVM (local-mode
-    * test/ops gauge, like [[graft.write.StatsCommitProtocol.collectedFiles]]:
+    * test/ops gauge, like [[graft.write.FileStatsCollector.collectedFiles]]:
     * proves overlap regions actually take the columnar path — an assertion
     * on its delta fails if someone silently disables the fast path). */
   val sliceCopiedRows = new java.util.concurrent.atomic.LongAdder

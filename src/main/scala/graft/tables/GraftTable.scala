@@ -1613,7 +1613,9 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
       // the rewrite published every partition under the new mapping: CLOSE
       // the open marker (and any marker a crashed earlier attempt left
       // open — the table is mapping-consistent from here on), bounding the
-      // interval diff/incremental windows must treat as cross-bucket.
+      // interval diff/incremental windows must treat as cross-bucket. The
+      // close boundary is stamped on the store's commit clock, like the
+      // open's, so a commit after it is stamped after it on either store.
       // A plain FULL whole-table compaction closes orphaned markers too:
       // it leaves every partition a single run bucketed under the current
       // count, which is exactly the consistency a re-bucket's own publish
@@ -1625,8 +1627,8 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
         opts.fileNumLimit.isEmpty
       if (isRebucket ||
           (fullWholeTable && graft.meta.RebucketLog.hasOpen(info.properties)))
-        store.updateProperties(tablePath)(
-          graft.meta.RebucketLog.close(_, System.currentTimeMillis()))
+        store.updateInfoAtFlip(tablePath)((cur, ts1) =>
+          cur.copy(properties = graft.meta.RebucketLog.close(cur.properties, ts1)))
       published
     } else {
       // no live partitions (under re-bucketing descs == all live descs:

@@ -1,5 +1,6 @@
 package graft.write
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -9,17 +10,22 @@ import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.meta.{ColStats, DataFileInfo, FileStats}
 
 /** Write-side collection of per-file column min/max from parquet footers.
   *
-  * Runs after [[TransactionalWrite.writeFiles]] has produced a commit's
-  * files: the footers were just written and are page-cache hot, so reading
-  * them costs ~1 ms each. Small commits read on the driver; large commits
-  * fan the footer reads out as a Spark job so collection scales with the
-  * cluster, not the driver.
+  * The write tasks read each file's footer as they close it, while it is
+  * page-cache hot on the writing executor ([[FooterStatsTracker]], a Spark
+  * `WriteJobStatsTracker` that [[TransactionalWrite.writeFiles]] hands to
+  * `FileFormatWriter`); Spark returns the stats of committed tasks to the
+  * driver. [[attach]] is the driver-side fallback for any file whose task
+  * read failed: small commits read on the driver, large ones fan the footer
+  * reads out as a Spark job.
   *
   * Only top-level columns with a stable, order-preserving parquet encoding
   * are collected (int/long/float/double/date/string, timestamp when written
@@ -35,11 +41,18 @@ object FileStatsCollector {
 
   private val DriverReadLimit = 256
 
+  /** What to collect: indexed column types + whether the reserved
+    * row-count key is shadowed by a real column. Serialized to tasks. */
+  case class Spec(indexed: Map[String, DataType], rowCountShadowed: Boolean)
+
+  /** Files whose stats the write tasks collected in this JVM (ops/test
+    * introspection: proves the driver fallback stayed idle). */
+  val collectedFiles = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** The collection spec for a table+schema, or None when collection is
     * disabled / nothing is indexable. Shared between driver-side [[attach]]
-    * and the task-side [[StatsCommitProtocol]]. */
-  def specFor(table: graft.meta.TableInfo,
-      schema: StructType): Option[StatsCommitProtocol.Spec] = {
+    * and the task-side [[FooterStatsTracker]]. */
+  def specFor(table: graft.meta.TableInfo, schema: StructType): Option[Spec] = {
     if (table.properties.get(EnabledProp).contains("false")) return None
     val nCols = table.properties.get(NumColsProp).map(_.toInt).getOrElse(DefaultNumCols)
     // leading-columns cap (same idea as Delta's dataSkippingNumIndexedCols):
@@ -51,8 +64,7 @@ object FileStatsCollector {
     // the synthetic row-count entry must never collide with a REAL column of
     // the reserved name anywhere in the schema (not just the indexed prefix):
     // a shadowed entry would feed bogus bounds to StatsSkipping.mightMatch
-    else Some(StatsCommitProtocol.Spec(indexed,
-      schema.fieldNames.contains(FileStats.RowCountKey)))
+    else Some(Spec(indexed, schema.fieldNames.contains(FileStats.RowCountKey)))
   }
 
   def attach(
@@ -67,8 +79,6 @@ object FileStatsCollector {
       case Some(s) => s
       case None => return allFiles
     }
-    val indexed = sp.indexed
-    val rowCountShadowed = sp.rowCountShadowed
 
     val paths = files.map(f => f._2.path -> f._2.size)
     val statsByPath: Map[String, String] =
@@ -85,7 +95,7 @@ object FileStatsCollector {
         try {
           paths.map { case (p, len) =>
             p -> pool.submit(new java.util.concurrent.Callable[String] {
-              def call(): String = readFileStats(rawInputFile(fs, p, len), indexed, rowCountShadowed)
+              def call(): String = readFooter(rawInputFile(fs, p, len), Some(sp))._1
             })
           }.map { case (p, f) => p -> f.get() }.toMap
         } finally pool.shutdown()
@@ -94,9 +104,9 @@ object FileStatsCollector {
         spark.sparkContext
           .parallelize(paths, math.min(paths.size, 64))
           .map { case (p, _) =>
-            p -> readFileStats(
+            p -> readFooter(
               HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p),
-                new Configuration()), indexed, rowCountShadowed)
+                new Configuration()), Some(sp))._1
           }
           .collect().toMap
       }
@@ -106,44 +116,21 @@ object FileStatsCollector {
     }
   }
 
-  /** Single-file footer read for the task-side collector: raw local FS
-    * when the path is a plain local file (skips the .crc companion reads),
-    * the Hadoop path otherwise. */
+  /** Single-file footer read for the task-side tracker: raw local FS
+    * when the path is a local file, bare or `file:` qualified as write
+    * tasks see it (skips the .crc companion reads), the Hadoop path
+    * otherwise. */
   private[write] def readLocalOrHadoop(path: String, conf: Configuration,
-      indexed: Map[String, DataType], rowCountShadowed: Boolean): String = {
-    val local = new java.io.File(path)
+      spec: Option[Spec]): (String, Long) = {
+    val uri = new org.apache.hadoop.fs.Path(path).toUri
+    val local = new java.io.File(uri.getPath)
     val in =
-      if (local.isFile) {
+      if ((uri.getScheme == null || uri.getScheme == "file") && local.isFile) {
         val fs = new org.apache.hadoop.fs.RawLocalFileSystem()
         fs.initialize(java.net.URI.create("file:///"), conf)
-        rawInputFile(fs, path, local.length())
+        rawInputFile(fs, local.getPath, local.length())
       } else HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf)
-    readFileStats(in, indexed, rowCountShadowed)
-  }
-
-  /** Exact footer row count (driver-side, ~1 ms on a page-cache-hot local
-    * file). Used by the flat-bucket write to drop the zero-row files
-    * FileFormatWriter creates for empty partitions; -1 on read failure
-    * (caller must then keep the file — dropping is the optimization,
-    * keeping is the safe default). */
-  // one raw local FS for the row-count probes (stateless over local files;
-  // constructing + initializing one per footer was pure churn)
-  private lazy val sharedRawFs: org.apache.hadoop.fs.FileSystem = {
-    val fs = new org.apache.hadoop.fs.RawLocalFileSystem()
-    fs.initialize(java.net.URI.create("file:///"), new Configuration())
-    fs
-  }
-
-  private[graft] def rowCount(path: String, conf: Configuration): Long = {
-    try {
-      val local = new java.io.File(path)
-      val in =
-        if (local.isFile) rawInputFile(sharedRawFs, path, local.length())
-        else HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf)
-      val reader = ParquetFileReader.open(in)
-      try reader.getFooter.getBlocks.asScala.iterator.map(_.getRowCount).sum
-      finally reader.close()
-    } catch { case _: Exception => -1L }
+    readFooter(in, spec)
   }
 
   /** Parquet InputFile over a raw (checksum-free) local FS with a known
@@ -163,22 +150,24 @@ object FileStatsCollector {
     case _ => false
   }
 
-  /** Aggregate row-group statistics to file-level bounds; a column whose
-    * stats are missing/invalid in ANY row group is dropped entirely. */
-  private def readFileStats(
+  /** One footer's (encoded file-level bounds, row count). The bounds
+    * aggregate row-group statistics; a column whose stats are missing or
+    * invalid in ANY row group is dropped entirely. Bounds are "" when
+    * `spec` is None or the file has no rows; ("", -1) when the footer is
+    * unreadable. */
+  private def readFooter(
       in: org.apache.parquet.io.InputFile,
-      indexed: Map[String, DataType],
-      rowCountShadowed: Boolean): String = {
+      spec: Option[Spec]): (String, Long) = {
     try {
       val reader = ParquetFileReader.open(in)
       try {
         val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        if (blocks.isEmpty) return ""
+        val totalRows = blocks.iterator.map(_.getRowCount).sum
+        if (blocks.isEmpty || spec.isEmpty) return ("", totalRows)
+        val Spec(indexed, rowCountShadowed) = spec.get
         var acc = Map.empty[String, (String, String, Long)] // (min, max, nulls)
         var bad = Set.empty[String]
-        var totalRows = 0L
         blocks.foreach { b =>
-          totalRows += b.getRowCount
           b.getColumns.asScala.foreach { c =>
             val name = c.getPath.toDotString
             indexed.get(name).foreach { dt =>
@@ -215,9 +204,9 @@ object FileStatsCollector {
           if (rowCountShadowed) out
           else out + (FileStats.RowCountKey ->
             ColStats(Some(totalRows.toString), None, hn = false, an = false))
-        FileStats.encode(withRows)
+        (FileStats.encode(withRows), totalRows)
       } finally reader.close()
-    } catch { case _: Exception => "" } // stats are an optimization, never fail a write
+    } catch { case _: Exception => ("", -1L) } // stats are an optimization, never fail a write
   }
 
   /** The physical encoding must be one whose sort order maps onto our
@@ -271,6 +260,49 @@ object FileStatsCollector {
     if (a == null) b else if (b == null) a
     else if (StatsCompare.compare(dt, a, b) >= 0) a else b
 }
+
+/** The task side of [[FileStatsCollector]]: the write stats tracker that
+  * [[TransactionalWrite.writeFiles]] hands to `FileFormatWriter` for one
+  * write job. Each write task reads the footer of every file it closes,
+  * while the footer is page-cache hot, and returns output-relative path ->
+  * (encoded bounds, row count). Spark passes the driver instance only the
+  * stats of committed tasks, so a failed or retried attempt's files never
+  * show. The output-relative path is the last `partitionDepth + 1`
+  * segments of the staging path (partition directories and file name),
+  * which the committer keeps when it moves the file. A file whose footer
+  * read failed is absent and falls to [[FileStatsCollector.attach]]. */
+private[write] final class FooterStatsTracker(
+    spec: Option[FileStatsCollector.Spec],
+    partitionDepth: Int,
+    conf: SerializableConfiguration) extends WriteJobStatsTracker {
+
+  @transient @volatile private var collected = Map.empty[String, (String, Long)]
+
+  /** Driver side, after the job: output-relative path -> (bounds, rows). */
+  def files: Map[String, (String, Long)] = collected
+
+  override def newTaskInstance(): WriteTaskStatsTracker = new WriteTaskStatsTracker {
+    private val files = mutable.Map.empty[String, (String, Long)]
+    override def newPartition(partitionValues: InternalRow): Unit = ()
+    override def newFile(filePath: String): Unit = ()
+    override def newRow(filePath: String, row: InternalRow): Unit = ()
+    override def closeFile(filePath: String): Unit = {
+      val read = FileStatsCollector.readLocalOrHadoop(filePath, conf.value, spec)
+      if (read._2 >= 0)
+        files(filePath.split('/').takeRight(partitionDepth + 1).mkString("/")) = read
+    }
+    override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
+      FooterStats(files.toMap)
+  }
+
+  override def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit = {
+    collected = stats.iterator.collect { case FooterStats(fs) => fs }.flatten.toMap
+    FileStatsCollector.collectedFiles.addAndGet(collected.count(_._2._1.nonEmpty))
+  }
+}
+
+private[write] case class FooterStats(files: Map[String, (String, Long)])
+  extends WriteTaskStats
 
 /** Comparison over the string-encoded stats domain. Strings compare as
   * unsigned UTF-8 bytes — the same total order Spark's UTF8String and

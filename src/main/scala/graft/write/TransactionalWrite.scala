@@ -287,8 +287,46 @@ object TransactionalWrite {
     }
   }
 
+  /** Parquet write options of `table`'s data files: codec, rolling file
+    * size and bloom filters. Batch writes ([[writeFiles]]) and the DSv2
+    * streaming writer share them. */
+  def writeOptions(spark: SparkSession, table: TableInfo): Map[String, String] = {
+    // zstd data files (guide §6: smaller than snappy at similar read
+    // speed; r16 WriteCostProbe also measured the snappy ENCODER as the
+    // slower one on this write shape — 1.37 s vs 0.95 s of task time per
+    // 32-bucket commit; documented divergence — the reference defaults to
+    // snappy). Per-table property wins over the session conf so tables
+    // interoperating with reference-written data can pin their codec.
+    val codec = table.properties.get(CodecProp)
+      .orElse(spark.conf.getOption("spark.graft.write.codec"))
+      .getOrElse("zstd")
+    // size-capped rolling writer (S15, LakeSoulFileWriter.scala:96-141):
+    // files roll at N records; rolled parts sort after each other by path
+    // suffix, so per-run pk order is preserved across the splits
+    val rolling = table.properties.get(MaxRecordsPerFileProp)
+      .map(n => "maxRecordsPerFile" -> n.toLong.toString)
+    // parquet bloom filters (BloomColumnsProp): the reader side is free —
+    // Spark's parquet scan feeds pushed equality predicates to parquet-mr,
+    // which consults the bloom before decoding a row group
+    val blooms = table.properties.get(BloomColumnsProp).toSeq
+      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).flatMap { c =>
+        (s"parquet.bloom.filter.enabled#$c" -> "true") +:
+          table.properties.get(BloomNdvProp)
+            .map(n => s"parquet.bloom.filter.expected.ndv#$c" -> n).toSeq
+      }
+    Map("compression" -> codec) ++ rolling ++ blooms
+  }
+
   /** Write `df` as one commit's files. Returns the unpublished per-partition
-    * commits; the caller publishes them via MetaStore.commit (optimistic CAS). */
+    * commits; the caller publishes them via MetaStore.commit (optimistic CAS).
+    *
+    * The files come from one `FileFormatWriter` job
+    * ([[org.apache.spark.sql.graft.WriteShim.write]]) whose settings are its
+    * own arguments: the graft parquet format (INT64 micros timestamps), a
+    * plan that keeps adaptive execution only for inputs that plan their own
+    * exchanges, Spark's default committer, and a [[FooterStatsTracker]]
+    * that returns each file's stats and row count from the write tasks. No
+    * session conf changes while the write runs. */
   def writeFiles(
       spark: SparkSession,
       table: TableInfo,
@@ -376,10 +414,10 @@ object TransactionalWrite {
     // coalescing re-index partitions — observed: a view-refresh upsert
     // whose delta plan carried joins had every row land in partition 0
     // under AQE while its keys hashed to buckets 1 and 2). So flat mode
-    // requires an inert input, which is also exactly when the write runs
-    // with AQE OFF (aqeKey below). Non-inert inputs keep AQE and the
-    // dynamic-partition writer, whose per-row bucket COLUMN is
-    // placement-independent.
+    // requires an inert input, which is also exactly when the write plans
+    // without adaptive execution (WriteShim.write below). Non-inert inputs
+    // keep AQE and the dynamic-partition writer, whose per-row bucket
+    // COLUMN is placement-independent.
     val flatBuckets = inertInput && table.hasPrimaryKey &&
       table.rangeColumns.isEmpty && (!skipPreMerge || inputBucketAligned)
 
@@ -434,50 +472,16 @@ object TransactionalWrite {
       }
 
     val commitDir = new File(new File(table.tablePath, "data"), commitId)
-    var writer = out.write.mode("errorifexists")
-    // zstd data files (guide §6: smaller than snappy at similar read
-    // speed; r16 WriteCostProbe also measured the snappy ENCODER as the
-    // slower one on this write shape — 1.37 s vs 0.95 s of task time per
-    // 32-bucket commit; documented divergence — the reference defaults to
-    // snappy). Per-table property wins over the session conf so tables
-    // interoperating with reference-written data can pin their codec.
-    writer = writer.option("compression",
-      table.properties.get(CodecProp)
-        .orElse(spark.conf.getOption("spark.graft.write.codec"))
-        .getOrElse("zstd"))
-    // size-capped rolling writer (S15, LakeSoulFileWriter.scala:96-141):
-    // files roll at N records; rolled parts sort after each other by path
-    // suffix, so per-run pk order is preserved across the splits
-    table.properties.get(MaxRecordsPerFileProp).foreach(n =>
-      writer = writer.option("maxRecordsPerFile", n.toLong))
-    // parquet bloom filters (BloomColumnsProp): the reader side is free —
-    // Spark's parquet scan feeds pushed equality predicates to parquet-mr,
-    // which consults the bloom before decoding a row group
-    table.properties.get(BloomColumnsProp).toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).foreach { c =>
-        writer = writer.option(s"parquet.bloom.filter.enabled#$c", "true")
-        table.properties.get(BloomNdvProp).foreach(n =>
-          writer = writer.option(s"parquet.bloom.filter.expected.ndv#$c", n))
-      }
-    // timestamps as INT64 micros: INT96 (Spark's default) has no usable
-    // parquet statistics, which would blind the file-skipping bounds.
-    // Both conf swaps go through the REFCOUNTED guard: concurrent
-    // writeFiles on one SparkSession (the repo runs concurrent
-    // transactions) each set the same session-constant values, and the
-    // conf is only restored when the LAST writer leaves — a plain
-    // save/set/restore let one writer's finally unset the protocol class
-    // mid-plan for another, silently dropping that write to the
-    // driver-side stats fallback.
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val protoKey = "spark.sql.sources.commitProtocolClass"
-    // taking the stats in the finally (not after it) guarantees the
-    // `pending` spec registration is cleared even when the write job
-    // fails or aborts — a long-lived driver with repeated failed writes
-    // must not accumulate registrations. Both acquires happen INSIDE the
-    // try with per-hold flags: if specFor/register/the second acquire
-    // throws, only the holds actually taken are released — an unguarded
-    // acquire before the try would leak its refcount forever (and a blind
-    // release in the finally would steal another writer's hold).
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    // min/max stats and row counts are read inside the WRITE TASKS as each
+    // file closes (footer page-cache hot on the writing executor, zero
+    // driver IO); the flat-bucket sweep below needs the row counts even
+    // when stats collection is off
+    val spec = FileStatsCollector.specFor(table, df.schema)
+    val tracker =
+      if (spec.isEmpty && !flatBuckets) None
+      else Some(new FooterStatsTracker(spec, partDirCols.size,
+        new org.apache.spark.util.SerializableConfiguration(hadoopConf)))
     // AQE is provably INERT for this write when the input plan is
     // exchange-free: the written plan's only exchange is then the
     // fixed-width bucket repartition (user-specified partitioning — AQE
@@ -488,77 +492,39 @@ object TransactionalWrite {
     // UpsertPhaseProbe: 0.43 s -> 0.38 s per sf0.1 upsert, 2 jobs -> 1).
     // Inputs that plan their own exchanges (joins, aggregates, windows,
     // set ops, plan subqueries) keep AQE: skew/strategy adaptivity there
-    // is worth the barrier at any scale. Session-scoped via the
-    // refcounted guard; only the value "false" is ever acquired, so
-    // concurrent writers can never conflict. (A truly execution-scoped
-    // toggle would be better — a concurrent query planned on this session
-    // during the write loses AQE for that window — but Spark exposes no
-    // public per-execution conf; the refcounted session guard with a
-    // single possible value is the safe approximation.)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    var taskStats = Map.empty[String, String]
-    var tsHeld = false
-    var protoHeld = false
-    var statsRegistered = false
-    var aqeHeld = false
-    try {
-      if (inertInput) {
-        SessionConfGuard.acquire(spark, aqeKey, "false")
-        aqeHeld = true
-      }
-      SessionConfGuard.acquire(spark, tsKey, "TIMESTAMP_MICROS")
-      tsHeld = true
-      // min/max stats are read inside the WRITE TASKS at task commit
-      // (footer page-cache hot on the writing executor, zero driver IO) —
-      // the commit protocol ships them back in the task commit messages
-      FileStatsCollector.specFor(table, df.schema).foreach { sp =>
-        StatsCommitProtocol.register(commitDir.getAbsolutePath, sp)
-        statsRegistered = true
-        SessionConfGuard.acquire(spark, protoKey, classOf[StatsCommitProtocol].getName)
-        protoHeld = true
-      }
-      (if (partDirCols.nonEmpty) writer.partitionBy(partDirCols: _*) else writer)
-        .parquet(commitDir.getAbsolutePath)
-    } finally {
-      if (aqeHeld) SessionConfGuard.release(spark, aqeKey)
-      if (tsHeld) SessionConfGuard.release(spark, tsKey)
-      if (protoHeld) SessionConfGuard.release(spark, protoKey)
-      if (statsRegistered) taskStats = StatsCommitProtocol.take(commitDir.getAbsolutePath)
-    }
+    // is worth the barrier at any scale. The choice is this write's own
+    // plan; the session's conf is untouched.
+    org.apache.spark.sql.graft.WriteShim.write(out, commitDir.getAbsolutePath,
+      partDirCols, writeOptions(spark, table), tracker.toSeq, adaptive = !inertInput)
 
     postWriteHook()
+    val taskFiles = tracker.map(_.files).getOrElse(Map.empty)
     val listed = listCommitFiles(commitDir.toPath, table, existCols,
       flatBuckets).map {
       case (desc, f) =>
-        // task stats are keyed by output-relative path (partition dirs +
+        // task results are keyed by output-relative path (partition dirs +
         // file name) — bare names collide across a task's partition dirs
         val rel = commitDir.toPath.relativize(java.nio.file.Paths.get(f.path))
           .iterator().asScala.mkString("/")
-        (desc, f.copy(stats = taskStats.getOrElse(rel, "")))
+        val (stats, rows) = taskFiles.getOrElse(rel, ("", -1L))
+        (desc, f.copy(stats = stats), rows)
     }
-    // fallback only: any file the tasks didn't cover reads its footer here
-    val attached = FileStatsCollector.attach(spark, table, df.schema, listed)
     // flat-bucket commits: FileFormatWriter's single-directory writer
     // creates a file even for an EMPTY partition (the dynamic-partition
     // writer created files lazily per partition value) — a small upsert
     // touching k of N buckets would otherwise accrete N-k zero-row files
-    // per commit in the meta and on disk. Drop them, footer-exactly: a
-    // file with non-empty stats has rows (readFileStats yields "" on zero
-    // row groups), so only stats-less files pay a driver row-count read
-    // (~1 ms each, page-cache hot, bounded by bucketNum); an unreadable
-    // footer keeps the file (dropping is the optimization).
-    val files =
-      if (!flatBuckets) attached
-      else attached.filter { case (_, f) =>
-        f.stats.nonEmpty || {
-          val rows = FileStatsCollector.rowCount(f.path,
-            spark.sparkContext.hadoopConfiguration)
-          val empty = rows == 0L
-          if (empty) { try Files.delete(java.nio.file.Paths.get(f.path))
-            catch { case _: Exception => () } }
-          !empty
-        }
-      }
+    // per commit in the meta and on disk. Drop the files the write tasks
+    // counted zero rows in, through the commit dir's FileSystem; a file
+    // with an unknown count is kept (dropping is the optimization).
+    val commitFs = new org.apache.hadoop.fs.Path(commitDir.getAbsolutePath)
+      .getFileSystem(hadoopConf)
+    val nonEmpty = listed.filter { case (_, f, rows) =>
+      val empty = flatBuckets && rows == 0L
+      if (empty) scala.util.Try(commitFs.delete(new org.apache.hadoop.fs.Path(f.path), false))
+      !empty
+    }.map { case (desc, f, _) => (desc, f) }
+    // fallback only: any file the tasks didn't cover reads its footer here
+    val files = FileStatsCollector.attach(spark, table, df.schema, nonEmpty)
     // One DataCommitInfo per touched range partition (TransactionCommit.scala:268-376).
     files.groupBy(_._1).map { case (desc, fs) =>
       DataCommitInfo(if (desc == TableInfo.RootPartition) commitId

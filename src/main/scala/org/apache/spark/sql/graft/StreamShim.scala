@@ -47,18 +47,20 @@ object StreamShim {
     org.apache.spark.sql.classic.Dataset.ofRows(spark, plan)
   }
 
-  /** Serializable executor-side parquet row writer (Spark's own
-    * ParquetFileFormat output path — OutputWriterFactory is private[sql],
-    * hence this shim): `open(path, partitionId, taskId)` returns
-    * (write(row), close) closures usable from a DSv2 streaming DataWriter. */
+  /** Serializable executor-side parquet row writer (the graft parquet
+    * format's output path, [[GraftParquetFormat]] — OutputWriterFactory is
+    * private[sql], hence this shim): `open(path, partitionId, taskId)`
+    * returns (write(row), close) closures usable from a DSv2 streaming
+    * DataWriter. `options` are the table's write options (codec, parquet
+    * keys), as for a batch write. */
   def parquetRowWriters(
       session: org.apache.spark.sql.SparkSession,
-      schema: org.apache.spark.sql.types.StructType): ParquetRowWriters = {
+      schema: org.apache.spark.sql.types.StructType,
+      options: Map[String, String]): ParquetRowWriters = {
     val spark = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
-      spark.sessionState.newHadoopConf())
-    val factory = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+      spark.sessionState.newHadoopConfWithOptions(options))
+    val factory = new GraftParquetFormat().prepareWrite(spark, job, options, schema)
     new ParquetRowWriters(factory, schema,
       new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
   }

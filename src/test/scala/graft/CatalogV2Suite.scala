@@ -547,6 +547,51 @@ class CatalogV2Suite extends SparkFixture {
     }
   }
 
+  test("DSv2 streaming write: files carry INT64 micros timestamps and the " +
+    "table's codec") {
+    withTempPath { wh =>
+      withTempPath { ckpt =>
+        useCatalog(wh)
+        import spark.implicits._
+        import scala.jdk.CollectionConverters._
+        import org.apache.parquet.schema.LogicalTypeAnnotation
+        Seq((1L, java.sql.Timestamp.valueOf("2024-01-02 03:04:05"))).toDF("id", "ts")
+          .createOrReplaceTempView("swts_src")
+        spark.sql("CREATE TABLE graft_cat.swts.src PARTITIONED BY (bucket(2, id)) " +
+          "AS SELECT * FROM swts_src")
+        // gzip: neither graft's default codec (zstd) nor the session's (snappy)
+        spark.sql("CREATE TABLE graft_cat.swts.dst (id BIGINT, ts TIMESTAMP) " +
+          "PARTITIONED BY (bucket(2, id)) TBLPROPERTIES ('graft.write.codec'='gzip')")
+        spark.readStream.table("graft_cat.swts.src")
+          .writeStream
+          .option("checkpointLocation", s"$ckpt/q")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .toTable("graft_cat.swts.dst")
+          .awaitTermination(120000)
+        assertRows(spark.sql("SELECT id FROM graft_cat.swts.dst"), Seq("[1]"))
+        val files = graft.tables.GraftTable.forPath(spark, s"$wh/swts/dst")
+          .liveFiles.map(_.file.path)
+        assert(files.nonEmpty)
+        files.foreach { f =>
+          val footer = parquetFooter(f)
+          val ts = footer.getFileMetaData.getSchema.getType(Seq("ts"): _*).asPrimitiveType
+          assert(ts.getPrimitiveTypeName ==
+            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 &&
+            (ts.getLogicalTypeAnnotation match {
+              case a: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+                a.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
+              case _ => false
+            }), s"streamed timestamp column is $ts, want INT64 TIMESTAMP(MICROS)")
+          val codecs = footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
+            .map(_.getCodec).toSet
+          assert(codecs == Set(
+            org.apache.parquet.hadoop.metadata.CompressionCodecName.GZIP),
+            s"streamed file codecs $codecs, want the table's gzip")
+        }
+      }
+    }
+  }
+
   test("atomic CTAS / RTAS: mid-write failure leaves no table; replace swaps") {
     withTempPath { wh =>
       useCatalog(wh)

@@ -549,31 +549,6 @@ class CommandSuite extends SparkFixture {
     assert(calls.get() >= 4, "daemon must keep sweeping after tablePaths() throws")
   }
 
-  test("SessionConfGuard: conf stays swapped until the LAST concurrent " +
-    "writer releases; mismatched values are rejected") {
-    import graft.write.SessionConfGuard
-    val key = "spark.graft.test.guardKey"
-    spark.conf.set(key, "orig")
-    SessionConfGuard.acquire(spark, key, "swapped")
-    assert(spark.conf.get(key) == "swapped")
-    SessionConfGuard.acquire(spark, key, "swapped") // second concurrent writer
-    intercept[IllegalArgumentException] {
-      SessionConfGuard.acquire(spark, key, "different")
-    }
-    SessionConfGuard.release(spark, key)
-    assert(spark.conf.get(key) == "swapped",
-      "first release must NOT restore while another writer still holds")
-    SessionConfGuard.release(spark, key)
-    assert(spark.conf.get(key) == "orig", "last release restores the original")
-    assert(SessionConfGuard.heldKeys(spark).isEmpty)
-    spark.conf.unset(key)
-
-    // no prior value -> last release unsets
-    SessionConfGuard.acquire(spark, key, "v")
-    SessionConfGuard.release(spark, key)
-    assert(spark.conf.getOption(key).isEmpty)
-  }
-
   test("size-capped rolling writer splits files, merge read stays correct") {
     withTempPath { p =>
       import spark.implicits._

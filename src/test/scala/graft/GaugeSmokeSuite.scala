@@ -10,8 +10,8 @@ import graft.tables.GraftTable
   *   - [[graft.read.BatchMergeIterator.sliceCopiedRows]]: overlap regions
   *     take the COLUMNAR slice copier (a refactor that silently falls back
   *     to the row-based merge keeps answers right and loses the speed);
-  *   - [[graft.write.StatsCommitProtocol.collectedFiles]]: file min/max
-  *     stats ride the TASK commit messages (falling back to driver-side
+  *   - [[graft.write.FileStatsCollector.collectedFiles]]: file min/max
+  *     stats come back from the WRITE TASKS (falling back to driver-side
   *     footer reads keeps answers right and makes commit O(files) driver
   *     IO at scale).
   * Unit suites assert each gauge on synthetic frames; this pins them on
@@ -21,14 +21,14 @@ class GaugeSmokeSuite extends SparkFixture {
   test("smoke pipeline moves the columnar-slice and task-stats gauges") {
     withTempPath { path =>
       val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-      val statsBefore = graft.write.StatsCommitProtocol.collectedFiles.get()
+      val statsBefore = graft.write.FileStatsCollector.collectedFiles.get()
       val t = GraftTable.create(spark, orders, path,
         hashColumns = Seq("o_orderkey"), bucketNum = 4)
       t.upsert(orders.filter(col("o_orderkey") % 10 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2))
-      assert(graft.write.StatsCommitProtocol.collectedFiles.get() > statsBefore,
+      assert(graft.write.FileStatsCollector.collectedFiles.get() > statsBefore,
         "write path stopped collecting file stats in the tasks — the " +
-          "commit protocol fast path went dark")
+          "task-side stats fast path went dark")
       val sliceBefore = graft.read.BatchMergeIterator.sliceCopiedRows.sum()
       val merged = t.toDF
       merged.foreach(_ => ())

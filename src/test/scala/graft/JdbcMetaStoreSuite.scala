@@ -110,9 +110,9 @@ class JdbcMetaStoreSuite extends SparkFixture {
   /** A second store instance's rollback and drop must stamp past every
     * persisted stamp, not just its own clock: a closed re-bucket event
     * whose boundary is 60 s ahead makes store `a`'s next commit land past
-    * it, so a `b` stamping from its own clock alone would land 60 s
-    * "before" that commit — `maxCommitTs` would not advance and the strict
-    * streaming gate (`droppedBetween`) would miss the drop. */
+    * it (on both stores), so a `b` stamping from its own clock alone would
+    * land 60 s "before" that commit — `maxCommitTs` would not advance and
+    * the strict streaming gate (`droppedBetween`) would miss the drop. */
   test("second instance stamps drops past persisted commits") {
     withTempPath { path =>
       Seq[() => MetaStore](() => new FileMetaStore, () => freshStore("stamps"))
@@ -124,6 +124,9 @@ class JdbcMetaStoreSuite extends SparkFixture {
           a.updateInfo(path)(t => t.copy(properties =
             RebucketLog.appendClosed(t.properties, ahead, ahead, 2, 2)))
           a.commit(path, Seq(commitOf("p", CommitOp.Merge, 1)), Map("p" -> 0))
+          assert(a.rawVersionLines(path).last.timestamp > ahead,
+            s"${a.getClass.getSimpleName}: a commit after a recorded boundary " +
+              "must be stamped past it")
           val before = b.maxCommitTs(path)
           b.rollbackPartition(path, "p", 0)
           b.dropPartition(path, "p")
@@ -135,6 +138,40 @@ class JdbcMetaStoreSuite extends SparkFixture {
           assert(b.maxCommitTs(path) > before)
           b.dropTable(path)
         }
+    }
+  }
+
+  test("a store constructed beside an open commit transaction does not " +
+    "wait on its locks") {
+    withTempPath { path =>
+      val url = "jdbc:derby:memory:ddlwait;create=true"
+      val s = new JdbcMetaStore(url)
+      s.createTable(ti(path))
+      s.commit(path, Seq(commitOf("p", CommitOp.Append, 0)), Map.empty)
+      // another connection holds a commit mid-flight: the table's
+      // serializer row locked and uncommitted log and head rows
+      val c = java.sql.DriverManager.getConnection(url)
+      val pool = Executors.newSingleThreadExecutor()
+      try {
+        c.setAutoCommit(false)
+        val st = c.createStatement()
+        st.executeUpdate("UPDATE graft_seq SET next_seq = next_seq + 0")
+        st.executeUpdate("INSERT INTO graft_partition_log VALUES " +
+          "('held', 1, 'p', 0, 'Merge', 1, '[]')")
+        st.executeUpdate("INSERT INTO graft_partition_head VALUES ('held', 'p', 0, 1)")
+        val built = pool.submit(() => new JdbcMetaStore(url))
+        try built.get(10, TimeUnit.SECONDS)
+        catch {
+          case _: java.util.concurrent.TimeoutException =>
+            fail("the constructor waited > 10 s on an open commit transaction")
+        }
+      } finally {
+        c.rollback(); c.close()
+        pool.shutdown()
+        pool.awaitTermination(120, TimeUnit.SECONDS)
+      }
+      assert(s.partitionHead(path, "p").map(_.version) == Some(0))
+      s.dropTable(path)
     }
   }
 

@@ -51,13 +51,21 @@ trait SparkFixture extends AnyFunSuite with BeforeAndAfterAll {
       s"expected one BatchScan in:\n${df.queryExecution.executedPlan}")
     scans.head.metrics("graftFilesPlanned").value
   }
+
+  /** The footer of the parquet file at `path`. */
+  def parquetFooter(path: String): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
 }
 
 object SparkFixture {
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       // local[threads, maxFailures]: task retries ON so retry/speculation
-      // interactions (e.g. StatsCommitProtocol under a failed first
+      // interactions (e.g. task-side write stats under a failed first
       // attempt) are testable; tests that expect failing jobs still fail,
       // they just pay one extra attempt
       .master("local[4, 2]")

@@ -31,13 +31,13 @@ class StatsSkippingSuite extends SparkFixture {
 
   test("stats come from the write tasks, not the driver fallback") {
     withTempPath { path =>
-      val before = graft.write.StatsCommitProtocol.collectedFiles.get()
+      val before = graft.write.FileStatsCollector.collectedFiles.get()
       val t = GraftTable.create(spark,
         (1L to 200L).map(i => (i, i * 1.5)).toDF("id", "v"),
         path, hashColumns = Seq("id"), bucketNum = 4)
       t.upsert(Seq((5L, 99.0)).toDF("id", "v"))
       val taskCollected =
-        graft.write.StatsCommitProtocol.collectedFiles.get() - before
+        graft.write.FileStatsCollector.collectedFiles.get() - before
       val live = t.liveFiles
       assert(live.forall(_.file.stats.nonEmpty), "every file needs stats")
       assert(taskCollected == live.size.toLong,
@@ -49,7 +49,7 @@ class StatsSkippingSuite extends SparkFixture {
     "first-attempt entries (fixture runs local[4,2] so tasks retry)") {
     withTempPath { path =>
       import spark.implicits._
-      val before = graft.write.StatsCommitProtocol.collectedFiles.get()
+      val before = graft.write.FileStatsCollector.collectedFiles.get()
       // single-stage write (non-PK, no range dirs: no exchange between the
       // source and FileFormatWriter) so the throw fails the WRITE task
       // itself — late in the partition, after the task opened its temp
@@ -69,7 +69,7 @@ class StatsSkippingSuite extends SparkFixture {
       assert(live.nonEmpty && live.forall(_.file.stats.nonEmpty),
         "every file needs stats despite the retried first attempts")
       val taskCollected =
-        graft.write.StatsCommitProtocol.collectedFiles.get() - before
+        graft.write.FileStatsCollector.collectedFiles.get() - before
       assert(taskCollected == live.size.toLong,
         s"expected ${live.size} files collected task-side, got $taskCollected")
       // row counts exact: per-file footer counts must sum to the real total
@@ -86,12 +86,12 @@ class StatsSkippingSuite extends SparkFixture {
     }
   }
 
-  test("CONCURRENT writes both stay on the task-side stats path (the " +
-    "refcounted conf guard keeps the protocol class set for both)") {
+  test("CONCURRENT writes both stay on the task-side stats path (each " +
+    "write job carries its own stats tracker)") {
     withTempPath { pa =>
       withTempPath { pb =>
         import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-        val before = graft.write.StatsCommitProtocol.collectedFiles.get()
+        val before = graft.write.FileStatsCollector.collectedFiles.get()
         val pool = Executors.newFixedThreadPool(2)
         val start = new CountDownLatch(1)
         val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -113,7 +113,7 @@ class StatsSkippingSuite extends SparkFixture {
           GraftTable.forPath(spark, pb).liveFiles
         assert(files.forall(_.file.stats.nonEmpty), "stats missing")
         val collected =
-          graft.write.StatsCommitProtocol.collectedFiles.get() - before
+          graft.write.FileStatsCollector.collectedFiles.get() - before
         assert(collected == files.size.toLong,
           s"expected all ${files.size} files collected task-side " +
             s"(no writer dropped to the driver fallback), got $collected")
