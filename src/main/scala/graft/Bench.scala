@@ -391,16 +391,15 @@ object Bench {
       System.err.println(s"[bench] mor scenario failed: ${e.getMessage}")
     }
 
-    // r15 (VERDICT item 5): the re-bucket-straddling window read. Before
-    // the cursor split this path merged in ONE task per range partition
-    // (one task total on this unpartitioned table) and no bench entry
-    // exercised it — a regression there was invisible. History: init ->
-    // upsert -> re-bucket -> upsert, then an incremental window spanning
-    // all three. The untimed sleeps step the commits past the re-bucket
-    // clock cushion so the planner can cut (the production shape: a
+    // r15 (VERDICT item 5): the re-bucket-straddling window read. It once
+    // merged in ONE task per range partition (one task total on this
+    // unpartitioned table) and no bench entry exercised it — a regression
+    // there was invisible. History: init -> upsert -> re-bucket -> upsert,
+    // then an incremental window spanning all three, read one task per
+    // new bucket. The untimed sleeps keep the production shape (a
     // consumer's cursor lags a re-bucket by more than a second). The
     // `_plain` twin times the same-shape window on a no-re-bucket table —
-    // post-split the two should sit near each other.
+    // the two should sit near each other.
     try {
       def min3(name: String)(body: => Unit): Double = {
         val ts = Seq.fill(3)(time(body))

@@ -363,20 +363,17 @@ object Demo {
           graft.meta.Tombstone.isTombstone(f.file))} (expect true)")
     }
 
-    // r15: incremental window SPANNING a re-bucket — the cursor-split read
-    // (bucket-parallel sides + one delta-only shuffle) instead of the
+    // r15: incremental window SPANNING a re-bucket — one scan task per new
+    // bucket, old-mapping runs filtered into it, instead of the
     // one-task-per-partition cross merge; last epoch must win per key
     locally {
       val rb = GraftTable.create(spark, orders.limit(300)
         .select(col("o_orderkey"), col("o_totalprice")), s"$dir/rb_t",
         hashColumns = Seq("o_orderkey"), bucketNum = 4)
       val w0 = rb.lastCommitTs
-      Thread.sleep(1100) // step past the re-bucket clock cushion
       rb.upsert(orders.limit(300).select(col("o_orderkey"),
         (col("o_totalprice") + 1).as("o_totalprice")))
-      Thread.sleep(1100)
       rb.compaction(graft.tables.CompactionOptions(newBucketNum = Some(8)), _ => true)
-      Thread.sleep(1100)
       rb.upsert(orders.limit(300).select(col("o_orderkey"),
         (col("o_totalprice") + 2).as("o_totalprice")))
       val win = rb.incremental(w0, rb.lastCommitTs)

@@ -1955,25 +1955,19 @@ object SparkEntry {
       t.incremental(ts1, t.lastCommitTs)
     }),
     "rebucket_incremental_read" -> q((s, d) => {
-      // r15: an incremental window SPANNING a re-bucket — the cursor-split
-      // read (GraftRead.readSplitEpochs / BucketMergeRead.readSplitWindow):
-      // epoch-1 delta under the old 4-bucket mapping, epoch-2 under the
-      // new 8-bucket one, composed per key with last-writer-wins. The
-      // sleeps step each commit past the re-bucket clock cushion so the
-      // planner CUTS instead of taking the cross-bucket fallback (both are
-      // correct; this row pins the split path end-to-end under the
-      // driver's DuckDB oracle).
+      // an incremental window SPANNING a re-bucket: epoch-1 delta under
+      // the old 4-bucket mapping, epoch-2 under the new 8-bucket one,
+      // composed per key with last-writer-wins in one scan task per new
+      // bucket (GraftScan.epochPartitions); this row pins that read
+      // end-to-end under the driver's DuckDB oracle
       val o = rd(s, d, "orders")
       val t = GraftTable.create(s, o.filter(col("o_orderstatus") === "O"),
         tmp("rbincr"), hashColumns = Seq("o_orderkey"), bucketNum = 4)
       val ts1 = t.lastCommitTs
-      Thread.sleep(1100)
       t.upsert(o.filter(col("o_orderstatus") === "F")
         .withColumn("o_totalprice", col("o_totalprice") * 2))
-      Thread.sleep(1100)
       t.compaction(graft.tables.CompactionOptions(newBucketNum = Some(8)),
         _ => true)
-      Thread.sleep(1100)
       t.upsert(o.filter(col("o_orderstatus") === "F" &&
           col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 3))

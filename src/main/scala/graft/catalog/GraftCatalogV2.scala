@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Murmur3Hash, Pmod, Literal => CLiteral}
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.{Literal, NamedReference, Transform}
@@ -407,11 +407,11 @@ object GraftBucketFunction extends UnboundFunction {
     override def canonicalName(): String = "graft.bucket"
     override def isResultNullable: Boolean = false
 
-    // args = (numBuckets literal, key columns...) — same murmur3(seed 42)
-    // + pmod as the write-side bucketIdExpr, evaluated interpreted
+    // args = (numBuckets literal, key columns...), evaluated interpreted
     @transient private lazy val expr = {
       val keys = types.indices.drop(1).map(i => BoundReference(i, types(i), true))
-      Pmod(Murmur3Hash(keys, 42), BoundReference(0, types(0), false))
+      graft.write.TransactionalWrite.bucketExpr(keys,
+        BoundReference(0, types(0), false))
     }
     override def produceResult(input: InternalRow): Integer =
       expr.eval(input).asInstanceOf[Number].intValue()

@@ -11,11 +11,12 @@ package graft.meta
   * completed re-bucket closes it (conservative: cross-bucket merge, never
   * a double-surfaced key).
   *
-  * Consumers: incremental/diff windows overlapping an event must not pair
+  * Consumers: reads and diffs of a file set spanning an event must not pair
   * merge groups per bucket id (ids are not comparable across a mapping
-  * change — GraftTable splits the window at the boundary or falls back to
-  * the cross-bucket merge), and restore replays the log to recover the
-  * bucketNum in effect at its target boundary.
+  * change — the scan plans such a set under its final mapping
+  * ([[epochsOf]]), the diff segments the window at the boundary, and both
+  * fall back to the cross-bucket merge), and restore replays the log to
+  * recover the bucketNum in effect at its target boundary.
   *
   * The log keeps the newest [[MaxEvents]] entries; when pruning drops an
   * event the horizon property records the dropped boundary, and restores
@@ -180,8 +181,9 @@ object RebucketLog {
     *    merge runs by raw bucket id is exact for such a set.
     *  - size ≥ 2 — the set SPANS a flip (mid/crashed re-bucket with
     *    post-flip writes, straddling incremental windows): per-bucket
-    *    dispatch would double-surface straddling keys; read per epoch
-    *    (cursor split) or cross-bucket.
+    *    dispatch under one count would double-surface straddling keys;
+    *    the scan plans the final epoch's buckets, each reading every
+    *    older run that can hold its keys.
     *  - `None` — mapping-AMBIGUOUS: an unfinished restore is pending, a
     *    file's commit timestamp is unknown (0), within [[cushionMs]] of a
     *    flip, or at/under the prune horizon. Only the mapping-agnostic

@@ -71,11 +71,22 @@ object BoundedMerge {
       math.max(8, math.min(256, derived)).toInt
     }
 
-  /** One run of one bucket after bounding: parquet files, or a spill file
-    * holding the pre-merged rows of a group of runs. */
+  /** One run of one bucket after bounding: parquet files (with the run's
+    * row filter, if any), or a spill file holding the pre-merged rows of a
+    * group of runs. */
   private[read] case class RunSource(files: Seq[PartitionedFile], spill: File,
-      mask: Array[Boolean], tomb: Boolean) {
+      mask: Array[Boolean], tomb: Boolean,
+      filter: Option[InternalRow => Boolean] = None) {
     def isParquet: Boolean = spill == null
+  }
+
+  /** The rows of a parquet run, through its row filter. */
+  private[read] def parquetRows(
+      readFn: PartitionedFile => Iterator[InternalRow],
+      s: RunSource): Iterator[InternalRow] = {
+    val rows = MergeReaderGauge.tracked(
+      s.files.iterator.flatMap(pf => BucketMergeRead.flattenRows(readFn(pf))))
+    s.filter.fold(rows)(rows.filter)
   }
 
   /** Bound a bucket's ordered runs (oldest first): when more than `cap`
@@ -83,7 +94,9 @@ object BoundedMerge {
     * (each <= cap wide, drained sequentially) into local spill files until
     * at most `cap` parquet runs remain. Spill-file cleanup registers on the
     * task; results feed either [[KWayMergeIterator]] (rows) or
-    * [[BatchMergeIterator]] (columnar) — the bound is shared. */
+    * [[BatchMergeIterator]] (columnar) — the bound is shared. `filters`
+    * (row path only; empty = none) keeps a run's rows that pass its filter:
+    * a filtered run stays key-sorted and key-unique. */
   private[read] def sources(
       readFn: PartitionedFile => Iterator[InternalRow],
       runFiles: IndexedSeq[Seq[PartitionedFile]],
@@ -92,16 +105,18 @@ object BoundedMerge {
       keyIdx: Array[Int],
       keyTypes: Array[DataType],
       merges: Array[FieldMerge],
-      capIn: Int): IndexedSeq[RunSource] = {
+      capIn: Int,
+      filters: IndexedSeq[Option[InternalRow => Boolean]] = IndexedSeq.empty)
+      : IndexedSeq[RunSource] = {
     val nFields = merges.length
     val dts = merges.map(_.dt)
     val k = runFiles.size
     val cap = math.max(2, capIn)
     var runs: Vector[RunSource] = (0 until k).map(i =>
-      RunSource(runFiles(i), null, masks(i), tombs(i))).toVector
+      RunSource(runFiles(i), null, masks(i), tombs(i),
+        filters.lift(i).flatten)).toVector
     if (k <= cap) return runs
-    def pq(s: RunSource): Iterator[InternalRow] = MergeReaderGauge.tracked(
-      s.files.iterator.flatMap(pf => BucketMergeRead.flattenRows(readFn(pf))))
+    def pq(s: RunSource): Iterator[InternalRow] = parquetRows(readFn, s)
     var parquetCount = k
     val spills = scala.collection.mutable.ArrayBuffer.empty[File]
     // Register cleanup BEFORE writing any spill: if writeSpill throws
@@ -137,7 +152,8 @@ object BoundedMerge {
 
   /** Merge a bucket's ordered runs (oldest first) with at most `cap` open
     * parquet readers. Drop-in replacement for constructing KWayMergeIterator
-    * directly; also canonicalizes the 0/1-run fast paths. */
+    * directly; also canonicalizes the 0/1-run fast paths. `filters` as in
+    * [[sources]]. */
   def iterator(
       readFn: PartitionedFile => Iterator[InternalRow],
       runFiles: IndexedSeq[Seq[PartitionedFile]],
@@ -146,59 +162,23 @@ object BoundedMerge {
       keyIdx: Array[Int],
       keyTypes: Array[DataType],
       merges: Array[FieldMerge],
-      capIn: Int): Iterator[InternalRow] = {
+      capIn: Int,
+      filters: IndexedSeq[Option[InternalRow => Boolean]] = IndexedSeq.empty)
+      : Iterator[InternalRow] = {
     val nFields = merges.length
     val k = runFiles.size
-    def pq(i: Int): Iterator[InternalRow] = MergeReaderGauge.tracked(
-      runFiles(i).iterator.flatMap(pf => BucketMergeRead.flattenRows(readFn(pf))))
     if (k == 0) return Iterator.empty
-    if (k == 1) return if (tombs(0)) Iterator.empty else pq(0)
+    if (k == 1) return if (tombs(0)) Iterator.empty
+      else parquetRows(readFn,
+        RunSource(runFiles(0), null, masks(0), tombs(0), filters.lift(0).flatten))
     val bounded = sources(readFn, runFiles, masks, tombs, keyIdx, keyTypes,
-      merges, capIn)
+      merges, capIn, filters)
     val iters = bounded.map { s =>
-      if (s.isParquet) MergeReaderGauge.tracked(
-        s.files.iterator.flatMap(pf => BucketMergeRead.flattenRows(readFn(pf))))
+      if (s.isParquet) parquetRows(readFn, s)
       else readSpill(s.spill, nFields)
     }
     new KWayMergeIterator(iters, keyIdx, keyTypes, merges, nFields,
       bounded.map(_.mask).toArray, bounded.map(_.tomb).toArray)
-  }
-
-  /** [[iterator]] with one SYNTHETIC run prepended as the OLDEST: the
-    * shuffled old-epoch stream of a re-bucket-split window read
-    * ([[BucketMergeRead.readSplitWindow]]). The synthetic run is already
-    * key-sorted (runId-sub-sorted for equal keys) and carries per-row
-    * (mask, tombstone) metadata via `synMeta` — its rows come from many
-    * original runs, so static per-run flags cannot describe it.
-    * `synMaybeTomb` must be true when ANY origin run was a tombstone (it
-    * gates the merge's tombstone-aware scan). The file runs get the same
-    * open-reader bound as [[iterator]]. */
-  def iteratorWithSyntheticOldest(
-      synthetic: Iterator[InternalRow],
-      synMeta: graft.read.RowRunMeta,
-      synMaybeTomb: Boolean,
-      readFn: PartitionedFile => Iterator[InternalRow],
-      runFiles: IndexedSeq[Seq[PartitionedFile]],
-      masks: Array[Array[Boolean]],
-      tombs: Array[Boolean],
-      keyIdx: Array[Int],
-      keyTypes: Array[DataType],
-      merges: Array[FieldMerge],
-      capIn: Int): Iterator[InternalRow] = {
-    val nFields = merges.length
-    val bounded = sources(readFn, runFiles, masks, tombs, keyIdx, keyTypes,
-      merges, capIn)
-    val fileIters = bounded.map { s =>
-      if (s.isParquet) MergeReaderGauge.tracked(
-        s.files.iterator.flatMap(pf => BucketMergeRead.flattenRows(readFn(pf))))
-      else readSpill(s.spill, nFields)
-    }
-    new KWayMergeIterator(
-      synthetic +: fileIters,
-      keyIdx, keyTypes, merges, nFields,
-      (Array.fill(nFields)(true) +: bounded.map(_.mask)).toArray,
-      (synMaybeTomb +: bounded.map(_.tomb)).toArray,
-      rowMeta = (synMeta +: bounded.map(_ => null: graft.read.RowRunMeta)).toArray)
   }
 
   /** Length-prefixed LZ4 UnsafeRow stream; -1 sentinel terminates. */

@@ -37,6 +37,13 @@ import graft.write.TransactionalWrite
   * exact — an absent column never overwrites, unlike an explicit null
   * (MergeParquetScan.scala:211-257). The aggregate fallback remains only
   * for custom/user-registered merge operators.
+  *
+  * This object holds the run planning ([[orderedRuns]]) and the merge
+  * kernel ([[KWayMergeIterator]], [[GroupMerger]]) that [[GraftScan]]'s
+  * partition readers run for every merged read, a file set spanning a
+  * re-bucket included. Its two RDD entry points serve what the scan does
+  * not plan yet: [[readRdd]] (the bucketed join) and [[diffRdd]] (the
+  * snapshot diff kernel).
   */
 object BucketMergeRead {
 
@@ -102,7 +109,7 @@ object BucketMergeRead {
 
   private def mergeSupported(table: TableInfo, f: StructField): Boolean =
     TransactionalWrite.mergeOpFor(table, f.name) match {
-      case MergeOps.UseLast | MergeOps.UseLastNotNull => orderableOrAny(f.dataType)
+      case MergeOps.UseLast | MergeOps.UseLastNotNull => true
       case MergeOps.SumAll | MergeOps.SumLast | MergeOps.SumNotNull =>
         f.dataType match {
           case IntegerType | LongType | DoubleType | FloatType | ShortType => true
@@ -120,8 +127,6 @@ object BucketMergeRead {
       case _: graft.mergeop.RowMergeOp => true // row-level custom operator
       case _ => false // agg-only user ops route to the aggregate merge
     }
-
-  private def orderableOrAny(dt: DataType): Boolean = true
 
   /** Ordered runs of one bucket's files. A "run" = all ordinal-r files
     * sharing one (presence-mask, tombstone) SIGNATURE, concatenated in TYPED
@@ -168,132 +173,6 @@ object BucketMergeRead {
         }
       BucketGroup(b, runs)
     }
-
-  /** Fully-parallel merged rows of a window whose runs straddle one or
-    * more key->bucket mapping changes — the CURSOR-SPLIT alternative to
-    * the scan's one-task-per-range-partition cross-bucket merge
-    * ([[GraftScan]] with `forceCrossBucket`; the one remaining parallelism
-    * cliff before r15: an unpartitioned table's re-bucket-straddling
-    * window merged in ONE task).
-    *
-    * `epochs` = (bucketNum, files) per mapping-consistent sub-window,
-    * oldest first; the LAST epoch is the final mapping (cut points come
-    * from the RebucketLog — GraftTable.planEpochWindows). Shape:
-    *
-    *  1. Every non-final epoch reads its runs BUCKET-PARALLEL under its
-    *     own bucket count — raw rows, tagged with a global run id that
-    *     encodes (epoch, run order within the key's bucket), preserving
-    *     the one-merge per-key fold order.
-    *  2. ONE shuffle moves those rows into the FINAL mapping
-    *     (pmod(murmur3(pk), finalN) — the writer's own bucket expression,
-    *     TransactionalWrite.bucketIdExpr), each reduce partition sorted by
-    *     (merge key, run id).
-    *  3. One task per FINAL bucket k-way-merges [the synthetic old-epoch
-    *     stream as the OLDEST run, per-row mask/tombstone resolved through
-    *     the run id ([[RowRunMeta]])] ++ [the final epoch's native file
-    *     runs]. The fold visits the same rows in the same order as the
-    *     one-merge, so GroupMerger state (contributed/poisoned, tombstone
-    *     revive, schema-evolution masks) is bit-identical — pinned by the
-    *     split-vs-cross equivalence property in CdcModelCheckSuite.
-    *
-    * Cost at scale: the shuffle carries ONLY the non-final epochs' window
-    * delta (the final epoch's runs are read in place, zero movement);
-    * parallelism is per-bucket on both sides vs the cross-bucket merge's
-    * per-range-partition. The cross-bucket merge remains the fallback for
-    * windows that cannot be cut (a delta commit inside the re-bucket's
-    * clock-cushion zone, or an in-progress marker). */
-  def readSplitWindow(
-      spark: SparkSession,
-      table: TableInfo,
-      schema: StructType,
-      epochs: Seq[(Int, Seq[ResolvedFile])]): DataFrame = {
-    require(epochs.size >= 2,
-      s"readSplitWindow needs >=2 epochs, got ${epochs.size}")
-    val reader = org.apache.spark.sql.graft.StreamShim.parquetReadFunction(spark, schema)
-    val (finalN, finalFiles) = epochs.last
-    val nFields = schema.length
-    val keyIdxArr = (table.rangeColumns ++ table.hashColumns)
-      .map(schema.fieldIndex).toArray
-    val keyTypesArr = keyIdxArr.map(schema.fields(_).dataType)
-    val merges = fieldMerges(table, schema)
-    val cap = BoundedMerge.cap(spark, schema)
-
-    // 1. old epochs -> tagged raw rows, one read task per (epoch, bucket).
-    // Run ids grow epoch-major then run-order within a bucket; a key lives
-    // in exactly one bucket per epoch, so its rows' ids are monotone in
-    // fold order (cross-bucket id interleaving is key-disjoint, harmless).
-    val runMasks = scala.collection.mutable.ArrayBuffer.empty[Array[Boolean]]
-    val runTombs = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    val taskSpecs =
-      scala.collection.mutable.ArrayBuffer.empty[Seq[(Int, Seq[PartitionedFile])]]
-    epochs.dropRight(1).foreach { case (n, files) =>
-      val te = table.copy(bucketNum = n)
-      (0 until n).foreach { b =>
-        val runs = orderedRuns(te, schema, files.filter(_.file.bucketId == b))
-        if (runs.nonEmpty) taskSpecs += runs.map { case (fs, mask, tomb) =>
-          val id = runMasks.size
-          runMasks += mask
-          runTombs += tomb
-          id -> fs.map(f => PartitionedFile(InternalRow.empty,
-            SparkPath.fromPathString(f.file.path), 0L, f.file.size))
-        }
-      }
-    }
-    val synMasks = runMasks.toArray
-    val synTombs = runTombs.toArray
-    val synMaybeTomb = synTombs.exists(identity)
-    val extTypes: Seq[DataType] = schema.fields.map(_.dataType).toSeq :+ IntegerType
-    val tagged = spark.sparkContext
-      .parallelize(taskSpecs.toSeq, math.max(1, taskSpecs.size))
-      .mapPartitions { it =>
-        val readFn = reader.forTask()
-        val proj = UnsafeProjection.create(extTypes.toArray)
-        val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-        val tag = new GenericInternalRow(1)
-        it.flatMap(_.iterator.flatMap { case (id, pfs) =>
-          pfs.iterator.flatMap(pf => flatten(readFn(pf))).map { r =>
-            tag.update(0, id)
-            // copy: the projection buffer is reused per row and the
-            // shuffle writer buffers records
-            (proj(joined(r, tag)).copy(), null: Any)
-          }
-        })
-      }
-    // 2. one shuffle into the final mapping, (key, runId)-sorted
-    implicit val ord: Ordering[org.apache.spark.sql.catalyst.expressions.UnsafeRow] =
-      new KeyRunOrdering(keyIdxArr, keyTypesArr, nFields)
-    val sorted = tagged.repartitionAndSortWithinPartitions(
-      new PkBucketPartitioner(schema, table.hashColumns, finalN))
-    // 3. per final bucket: synthetic oldest run + native file runs
-    val tf = table.copy(bucketNum = finalN)
-    val nativeByBucket: Array[IndexedSeq[(Seq[PartitionedFile], Array[Boolean], Boolean)]] =
-      (0 until finalN).map { b =>
-        orderedRuns(tf, schema, finalFiles.filter(_.file.bucketId == b)).map {
-          case (fs, m, tb) => (fs.map(f => PartitionedFile(InternalRow.empty,
-            SparkPath.fromPathString(f.file.path), 0L, f.file.size)), m, tb)
-        }.toIndexedSeq
-      }.toArray
-    val outTypes = schema.fields.map(_.dataType)
-    // broadcast, not closure-capture: the closure would serialize EVERY
-    // bucket's file metadata into EVERY task (O(window files) per task —
-    // real weight on a 100 TB table's wide window); a broadcast ships one
-    // copy per executor
-    val nativeB = spark.sparkContext.broadcast(nativeByBucket)
-    val synMetaB = spark.sparkContext.broadcast((synMasks, synTombs))
-    val rdd = sorted.mapPartitionsWithIndex { (b, it) =>
-      val readFn = reader.forTask()
-      val native = nativeB.value(b)
-      val (sm, st) = synMetaB.value
-      val proj = UnsafeProjection.create(outTypes)
-      BoundedMerge.iteratorWithSyntheticOldest(
-        it.map(_._1: InternalRow),
-        new RowRunMeta(sm, st, nFields), synMaybeTomb,
-        readFn, native.map(_._1), native.map(_._2).toArray,
-        native.map(_._3).toArray, keyIdxArr, keyTypesArr, merges, cap
-      ).map(proj)
-    }
-    org.apache.spark.sql.graft.StreamShim.dfFromInternalRows(spark, rdd, schema)
-  }
 
   /** The merged rows as an RDD whose partition index == bucket id (the
     * basis for co-located bucketed joins, SURVEY.md §2.4 J4). */
@@ -782,20 +661,6 @@ object RowComp {
   }
 }
 
-/** Per-ROW run metadata for a SYNTHETIC merge run whose rows come from
-  * many original runs (the shuffled old-epoch stream of a re-bucket-split
-  * window read): each row carries its origin run id in a trailing int
-  * field, and mask/tombstone resolve per row instead of per run. The
-  * synthetic run's static `runTombs` entry must be true when ANY origin
-  * run is a tombstone (it gates the merge's tombstone-aware path). */
-final class RowRunMeta(
-    val masks: Array[Array[Boolean]],
-    val tombs: Array[Boolean],
-    val idField: Int) extends Serializable {
-  def mask(r: InternalRow): Array[Boolean] = masks(r.getInt(idField))
-  def tomb(r: InternalRow): Boolean = tombs(r.getInt(idField))
-}
-
 class KWayMergeIterator(
     runs: IndexedSeq[Iterator[InternalRow]],
     keyIdx: Array[Int],
@@ -803,28 +668,7 @@ class KWayMergeIterator(
     fields: Array[FieldMerge],
     nFields: Int,
     runMasks: Array[Array[Boolean]],
-    runTombs: Array[Boolean],
-    /** Per-run PER-ROW metadata overrides; null (or a null entry) = the
-      * static runMasks/runTombs govern that run. Only synthetic shuffled
-      * runs pay the per-row lookup — file-backed runs keep the static
-      * fast path. */
-    rowMeta: Array[RowRunMeta] = null) extends Iterator[InternalRow] {
-
-  /** Dynamic-metadata run: per-row mask/tomb AND possibly DUPLICATE keys
-    * (one row per origin run) — such a run must never take the unique-key
-    * or slice fast paths, which assume within-run key uniqueness (true for
-    * file runs by dedup-on-write) and would emit consecutive same-key rows
-    * separately instead of folding them. mergeGroup handles same-run
-    * duplicates exactly: after each advance the winner is re-evaluated,
-    * and a same-key next row of the same run folds in stream order =
-    * (key, runId) sort order. */
-  private def dynRun(i: Int): Boolean = rowMeta != null && rowMeta(i) != null
-
-  private def maskOf(i: Int, row: InternalRow): Array[Boolean] =
-    if (dynRun(i)) rowMeta(i).mask(row) else runMasks(i)
-
-  private def tombOf(i: Int, row: InternalRow): Boolean =
-    if (dynRun(i)) rowMeta(i).tomb(row) else runTombs(i)
+    runTombs: Array[Boolean]) extends Iterator[InternalRow] {
 
   def this(runs: IndexedSeq[Iterator[InternalRow]], keyIdx: Array[Int],
       keyTypes: Array[DataType], fields: Array[FieldMerge], nFields: Int,
@@ -991,8 +835,7 @@ class KWayMergeIterator(
       val w = loserTree(0)
       val first = heads(w)
       val ru = runnerUp(w)
-      if (!dynRun(w) &&
-          (ru < 0 || heads(ru) == null || compareKeys(heads(ru), first) != 0)) {
+      if (ru < 0 || heads(ru) == null || compareKeys(heads(ru), first) != 0) {
         // unique key: emit the live row, defer the advance until it's
         // consumed (absent evolved columns surface as nulls from the
         // reader — correct for a single contributor), and OPEN a slice:
@@ -1021,12 +864,11 @@ class KWayMergeIterator(
       if (w < 0 || heads(w) == null) return null
       val first = heads(w)
       val ru = runnerUp(w)
-      if (!dynRun(w) &&
-          (ru < 0 || heads(ru) == null || compareKeys(heads(ru), first) != 0)) {
-        if (tombOf(w, first)) advanceNow(w) // deleted key, no other holder: skip
+      if (ru < 0 || heads(ru) == null || compareKeys(heads(ru), first) != 0) {
+        if (runTombs(w)) advanceNow(w) // deleted key, no other holder: skip
         else { pendingRun = w; return first }
       } else {
-        val r = mergeGroup(w, first, firstTomb = tombOf(w, first))
+        val r = mergeGroup(w, first, firstTomb = runTombs(w))
         if (r != null) return r
       }
     }
@@ -1040,13 +882,12 @@ class KWayMergeIterator(
     * null when the newest holder was a tombstone (key deleted). */
   private def mergeGroup(w0: Int, first: InternalRow,
       firstTomb: Boolean): InternalRow = {
-    grouper.start(first, maskOf(w0, first), firstTomb)
+    grouper.start(first, runMasks(w0), firstTomb)
     advanceNow(w0)
     var w2 = loserTree(0)
     while (w2 >= 0 && heads(w2) != null &&
         compareKeys(heads(w2), grouper.keyRow) == 0) {
-      grouper.add(heads(w2), maskOf(w2, heads(w2)),
-        anyTomb && tombOf(w2, heads(w2)))
+      grouper.add(heads(w2), runMasks(w2), anyTomb && runTombs(w2))
       advanceNow(w2)
       w2 = loserTree(0)
     }
@@ -1221,46 +1062,5 @@ final class GroupMerger(fields: Array[FieldMerge], nFields: Int) {
       }
       i += 1
     }
-  }
-}
-
-/** Shuffle partitioner for the re-bucket split read: routes a row to
-  * `pmod(murmur3(hashCols, seed=42), n)` — the SAME expression the writer
-  * buckets with (TransactionalWrite.bucketIdExpr), so the reduce partition
-  * index IS the final-mapping bucket id and the synthetic stream lands
-  * exactly where the final epoch's native runs for each key live. */
-private[read] class PkBucketPartitioner(
-    schema: org.apache.spark.sql.types.StructType,
-    hashCols: Seq[String],
-    n: Int) extends org.apache.spark.Partitioner {
-  override def numPartitions: Int = n
-  @transient private lazy val proj = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Murmur3Hash, Pmod}
-    val exprs = hashCols.map { c =>
-      val i = schema.fieldIndex(c)
-      BoundReference(i, schema(i).dataType, nullable = true)
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
-      Seq(Pmod(Murmur3Hash(exprs, 42), Literal(n))))
-  }
-  override def getPartition(key: Any): Int =
-    proj(key.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]).getInt(0)
-}
-
-/** Shuffle-sort ordering for the re-bucket split read: merge key first,
-  * then the trailing run-id field — equal keys surface oldest-run-first in
-  * the synthetic stream, the order the per-key fold requires. */
-private[read] class KeyRunOrdering(
-    keyIdx: Array[Int],
-    keyTypes: Array[org.apache.spark.sql.types.DataType],
-    runIdField: Int)
-    extends Ordering[org.apache.spark.sql.catalyst.expressions.UnsafeRow]
-    with Serializable {
-  @transient private lazy val comps = RowComp.makeComps(keyIdx, keyTypes)
-  override def compare(a: org.apache.spark.sql.catalyst.expressions.UnsafeRow,
-      b: org.apache.spark.sql.catalyst.expressions.UnsafeRow): Int = {
-    val c = RowComp.compare(comps, a, b)
-    if (c != 0) c
-    else Integer.compare(a.getInt(runIdField), b.getInt(runIdField))
   }
 }

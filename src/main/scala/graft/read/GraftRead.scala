@@ -17,19 +17,19 @@ import graft.write.TransactionalWrite
   * through LakeSoulScanBuilder.build (catalog/LakeSoulScanBuilder.scala:
   * 104-134) — so the mapping-consistency gate, the widened bucket count,
   * the tombstone refusal, the nullable relaxation, the CDC filter and the
-  * bucket prune exist once. Only two reads plan elsewhere:
-  *   - custom merge operators the k-way merge cannot run (agg-only) take
-  *     the aggregate merge ([[mergeRead]]): tagged per-commit parquet
-  *     scans, unioned and collapsed per key by codegen'd aggregates;
-  *   - a set cut into two or more mapping epochs (a window spanning a
-  *     re-bucket) takes the cursor-split merge ([[readSplitEpochs]]).
+  * bucket prune exist once. A set spanning a re-bucket plans there too,
+  * one task per bucket of the final mapping. Only custom merge operators
+  * the k-way merge cannot run (agg-only) plan elsewhere: the aggregate
+  * merge ([[mergeRead]]), tagged per-commit parquet scans unioned and
+  * collapsed per key by codegen'd aggregates.
   */
 object GraftRead {
 
-  /** Test toggle: route every multi-epoch window through the cross-bucket
-    * one-task-per-partition merge instead of the cursor split — the
-    * equivalence ORACLE of SplitWindowSuite / CdcModelCheckSuite (the two
-    * paths must agree row-for-row on any history). Plan-time only. */
+  /** Test toggle: plan every merged PK read through the scan's
+    * one-task-per-range-partition merge, claiming no bucket layout — the
+    * equivalence ORACLE of SplitWindowSuite / CdcModelCheckSuite (a set
+    * spanning a re-bucket must read row-for-row the same through its
+    * final-mapping partitions). Plan-time only. */
   @volatile private[graft] var forceCrossBucketRead = false
 
   def emptyDF(spark: SparkSession, schema: StructType): DataFrame =
@@ -47,18 +47,13 @@ object GraftRead {
 
   /** Read the given resolved file set as a merged DataFrame.
     * @param keepCdcRows when true (incremental/streaming reads), CDC `delete`
-    *                    marker rows are kept (F6 exemption).
-    * @param crossBucketMerge merge per range partition with every (commit,
-    *                    bucket) subgroup its own run, whatever the set's
-    *                    mapping (windows spanning a re-bucket that cannot be
-    *                    cut into epochs). */
+    *                    marker rows are kept (F6 exemption). */
   def read(
       spark: SparkSession,
       table: TableInfo,
       files: Seq[ResolvedFile],
       keepCdcRows: Boolean = false,
-      requiredColumns: Option[Seq[String]] = None,
-      crossBucketMerge: Boolean = false): DataFrame = {
+      requiredColumns: Option[Seq[String]] = None): DataFrame = {
     val fullSchema = graft.util.SchemaUtil.fromJson(table.schemaJson)
     val outputCols = requiredColumns.getOrElse(fullSchema.fieldNames.toSeq)
       .map(qcol)
@@ -68,22 +63,8 @@ object GraftRead {
       return visible(table, keepCdcRows, mergeRead(spark, table,
         BucketMergeRead.relaxMissing(pruned, files), files))
         .select(outputCols: _*)
-    // a set spanning a re-bucket flip (post-flip writes under an open
-    // marker, a window across a re-bucket) is key-disjoint per bucket
-    // only within each mapping epoch: read it per epoch. Ambiguous sets
-    // (None) take the scan's mapping-agnostic cross-bucket merge.
-    val merged = table.hasPrimaryKey &&
-      !table.properties.get(TableInfo.SkipMergeOnReadProp).contains("true")
-    if (merged && !crossBucketMerge)
-      RebucketLog.epochsOf(table.properties, table.bucketNum, files) match {
-        case Some(es) if es.size >= 2 =>
-          return readSplitEpochs(spark, table, es, keepCdcRows,
-            requiredColumns)
-        case _ =>
-      }
     org.apache.spark.sql.graft.StreamShim.dsv2Df(spark,
-      new GraftReadTable(spark, table,
-        FixedFiles(files, keepCdcRows, crossBucketMerge)))
+      new GraftReadTable(spark, table, FixedFiles(files, keepCdcRows)))
       .select(outputCols: _*)
   }
 
@@ -93,16 +74,15 @@ object GraftRead {
     * re-shuffle on the write side
     * ([[graft.write.TransactionalWrite.writeFiles]] inputBucketAligned) —
     * at 100 TB that shuffle is a second full pass of the table over the
-    * network. The aggregate merge and the cursor split are never aligned. */
+    * network. The aggregate merge and a set spanning a re-bucket are never
+    * aligned. */
   def readTracked(
       spark: SparkSession,
       table: TableInfo,
       files: Seq[ResolvedFile],
       keepCdcRows: Boolean = false,
-      requiredColumns: Option[Seq[String]] = None,
-      crossBucketMerge: Boolean = false): (DataFrame, Boolean) = {
-    val df = read(spark, table, files, keepCdcRows, requiredColumns,
-      crossBucketMerge)
+      requiredColumns: Option[Seq[String]] = None): (DataFrame, Boolean) = {
+    val df = read(spark, table, files, keepCdcRows, requiredColumns)
     val scans = df.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan
     }
@@ -110,57 +90,6 @@ object GraftRead {
       case Seq(s: GraftScan) => s.groupAligned
       case _ => false
     })
-  }
-
-  /** Read a window RESOLVED PER MAPPING-CONSISTENT SUB-WINDOW (epoch):
-    * `epochs` = (bucketNum, files) oldest -> newest, the last being the
-    * final mapping (GraftTable cuts the window at recorded re-bucket
-    * boundaries). A single live epoch takes the NORMAL scan under that
-    * epoch's count — fully parallel, zero shuffle; multi-epoch windows
-    * take the cursor-split merge (BucketMergeRead.readSplitWindow —
-    * bucket-parallel sides, one delta-only shuffle); anything the split
-    * kernel can't serve (custom agg-only merge ops, skip-merge, bucket ids
-    * inconsistent with their epoch's count) falls back to [[read]]'s
-    * cross-bucket one-task-per-partition merge. */
-  def readSplitEpochs(
-      spark: SparkSession,
-      table: TableInfo,
-      epochs: Seq[(Int, Seq[ResolvedFile])],
-      keepCdcRows: Boolean = false,
-      requiredColumns: Option[Seq[String]] = None): DataFrame = {
-    val live = epochs.filter(_._2.nonEmpty)
-    if (live.size <= 1) {
-      val (n, fs) = live.headOption.getOrElse((table.bucketNum, Seq.empty[ResolvedFile]))
-      return read(spark, table.copy(bucketNum = n), fs, keepCdcRows,
-        requiredColumns)
-    }
-    // commit ordinals restart at 0 per sub-window resolution: REBASE them
-    // into one global sequence before any whole-window use — the
-    // cross-bucket fallback groups runs by ordinal, and an epoch-1/epoch-2
-    // ordinal collision would concatenate runs from different epochs into
-    // one, folding same-key rows in file order instead of commit order
-    val allFiles = {
-      var base = 0
-      live.flatMap { case (_, fs) =>
-        val out = fs.map(f => f.copy(commitOrdinal = f.commitOrdinal + base))
-        base += fs.iterator.map(_.commitOrdinal).max + 1
-        out
-      }
-    }
-    val fullSchema = graft.util.SchemaUtil.fromJson(table.schemaJson)
-    val outputCols = requiredColumns.getOrElse(fullSchema.fieldNames.toSeq)
-    val schema = BucketMergeRead.relaxMissing(
-      prunedSchema(table, fullSchema, requiredColumns), allFiles)
-    val skipMerge = table.properties.get(TableInfo.SkipMergeOnReadProp).contains("true")
-    val splitOk = table.hasPrimaryKey && !skipMerge &&
-      live.forall { case (n, fs) =>
-        BucketMergeRead.supports(table.copy(bucketNum = n), schema, fs) }
-    if (!splitOk || forceCrossBucketRead)
-      return read(spark, table, allFiles, keepCdcRows, requiredColumns,
-        crossBucketMerge = true)
-    visible(table, keepCdcRows, BucketMergeRead.readSplitWindow(spark,
-      table.copy(bucketNum = live.last._1), schema, live))
-      .select(outputCols.map(qcol).toSeq: _*)
   }
 
   /** Column pruning (F1): the requested columns + merge keys + the CDC

@@ -50,12 +50,10 @@ private[graft] sealed trait ScanSource
 private[graft] final case class CatalogFiles(table: GraftTable) extends ScanSource
 
 /** An already-resolved file set (the library reads, [[GraftRead.read]]).
-  * `forceCrossBucket` merges per range partition whatever the set's
-  * mapping, and turns off every optimization derived from bucket ids.
   * Like the RDD reads it replaced, it answers no aggregate from metadata
   * and pushes no predicate into the parquet readers. */
 private[graft] final case class FixedFiles(files: Seq[ResolvedFile],
-    keepCdcRows: Boolean, forceCrossBucket: Boolean) extends ScanSource
+    keepCdcRows: Boolean) extends ScanSource
 
 /** Read-only DSv2 table over a [[ScanSource]]: the library reads (a
   * [[FixedFiles]] set) and `spark.read.format("graft")` (the table's
@@ -74,7 +72,7 @@ private[graft] class GraftReadTable(spark: SparkSession, info: TableInfo,
   override def schema(): StructType = {
     val declared = graft.util.SchemaUtil.fromJson(info.schemaJson)
     source match {
-      case FixedFiles(files, _, _) => BucketMergeRead.relaxMissing(declared, files)
+      case FixedFiles(files, _) => BucketMergeRead.relaxMissing(declared, files)
       case _: CatalogFiles => declared
     }
   }
@@ -399,9 +397,9 @@ class GraftScanBuilder(
     // can resolve.
     var scanOpts = options
     val (partPred, exactDescs) = partitionPruning
-    val (files, keepCdc, forceCross) = source match {
-      case FixedFiles(fs, keep, force) =>
-        (fs.filter(f => partPred(f.partitionDesc)), keep, force)
+    val (files, keepCdc) = source match {
+      case FixedFiles(fs, keep) =>
+        (fs.filter(f => partPred(f.partitionDesc)), keep)
       case CatalogFiles(table) => options.getOrElse("readtype", "full") match {
         case "snapshot" =>
           (exactDescs match {
@@ -409,7 +407,7 @@ class GraftScanBuilder(
               table.filesUptoTimeForDescs(options("readendtime").toLong, ds)
             case None =>
               table.filesUptoTime(options("readendtime").toLong, partPred)
-          }, false, false)
+          }, false)
         case "incremental" =>
           val st = options.getOrElse("readstarttime", "0").toLong
           val et = options.get("readendtime").map(_.toLong)
@@ -419,15 +417,15 @@ class GraftScanBuilder(
           (exactDescs match {
             case Some(ds) => table.incrementalFilesForDescs(st, et, ds)
             case None => table.incrementalFiles(st, et, partPred)
-          }, true, false)
+          }, true)
         case _ => (exactDescs match {
           case Some(ds) => table.liveFilesForDescs(ds)
           case None => table.liveFiles(partPred)
-        }, false, false)
+        }, false)
       }
     }
     new GraftScan(spark, info, readSchema, files, dataFilters, pkBucket, keepCdc,
-      scanOpts, forceCross, pushToReaders = source.isInstanceOf[CatalogFiles])
+      scanOpts, pushToReaders = source.isInstanceOf[CatalogFiles])
   }
 }
 
@@ -451,7 +449,6 @@ class GraftScan(
     pkBucket: Option[Int],
     keepCdcRows: Boolean = false,
     scanOptions: Map[String, String] = Map.empty,
-    forceCrossBucket: Boolean = false,
     pushToReaders: Boolean = true)
     extends Scan with Batch with SupportsReportPartitioning
     with SupportsReportOrdering
@@ -508,18 +505,26 @@ class GraftScan(
     * exact, whatever the count); multi/None = the set spans a flip
     * boundary (straddling incremental window, mid/crashed re-bucket with
     * post-flip writes) or is ambiguous — per-bucket dispatch would
-    * double-surface straddling keys. The DSv2 scan cannot compose the
-    * library's cursor-split shuffle, so [[computePartitions]] routes such
-    * sets — and every set read with `forceCrossBucket` — to the
-    * per-range-partition cross-bucket grouping (the same one the
-    * micro-batch stream uses for straddling batches). */
+    * double-surface straddling keys, so [[computePartitions]] plans such
+    * sets under the final epoch's mapping, or per range partition. */
   private val epochsOpt
       : Option[Seq[(Int, Seq[graft.meta.ResolvedFile])]] =
     if (!info.hasPrimaryKey) Some(Seq(info.bucketNum -> filesIn))
     else graft.meta.RebucketLog.epochsOf(info.properties, info.bucketNum, filesIn)
 
+  /** The test toggle [[GraftRead.forceCrossBucketRead]], read at plan
+    * time: merge per range partition whatever the set's mapping, and claim
+    * no mapping at all (the equivalence oracle of the epoch partitions). */
+  private val forceCrossBucket = GraftRead.forceCrossBucketRead
+
   private val crossBucketNeeded: Boolean =
     info.hasPrimaryKey && (forceCrossBucket || !epochsOpt.exists(_.size <= 1))
+
+  /** The mapping epochs a set spanning a re-bucket plans by
+    * ([[GraftScan.epochPartitions]]); None for a single-epoch or ambiguous
+    * set, and under the toggle. */
+  private val splitEpochs: Option[Seq[(Int, Seq[graft.meta.ResolvedFile])]] =
+    if (forceCrossBucket) None else epochsOpt.filter(_.size >= 2)
 
   /** The ID-DERIVED optimizations — the single-bucket point prune (M6)
     * and the reported KeyGroupedPartitioning (SPJ) — are valid only when
@@ -629,16 +634,19 @@ class GraftScan(
       new ReaderOpenMsMetric)
 
   /** Reported once per query on the driver: pruning effectiveness. Planned
-    * counts the files the input partitions actually carry, so the skipped
-    * count covers metadata zone maps, runtime (join-driven) filtering AND
-    * the single-bucket point prune of a full primary-key equality. */
+    * counts the distinct files the input partitions actually carry (a set
+    * spanning a re-bucket reads an old file in several partitions), so the
+    * skipped count covers metadata zone maps, runtime (join-driven)
+    * filtering AND the single-bucket point prune of a full primary-key
+    * equality. */
   override def reportDriverMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-    val planned = planInputPartitions().iterator.map {
-      case GraftBucketPartition(_, runs) => runs.iterator.map(_.files.length).sum
-      case _: GraftFilePartition => 1
-      case _ => 0
-    }.sum.toLong
+    val planned = planInputPartitions().iterator.flatMap {
+      case GraftBucketPartition(_, runs) =>
+        runs.iterator.flatMap(_.files.iterator.map(_.filePath))
+      case GraftFilePartition(f, _) => Iterator.single(f.filePath)
+      case _ => Iterator.empty
+    }.toSet.size.toLong
     Array(GraftMetricValue("graftFilesPlanned", planned),
       GraftMetricValue("graftFilesSkipped", filesIn.size - planned))
   }
@@ -677,18 +685,19 @@ class GraftScan(
     computed
   }
 
+  /** Input partitions by the set's mapping: one per bucket for one
+    * mapping; one per bucket of the FINAL mapping for a set spanning two
+    * or more epochs (straddling incremental window, mid/crashed re-bucket
+    * with post-flip writes); one per range partition for an ambiguous set
+    * or a forced cross read; one per file when nothing merges. */
   private def computePartitions(): Array[InputPartition] =
     if (bucketMergeable && crossBucketNeeded) {
-      // flip-spanning or mapping-ambiguous file set (straddling
-      // incremental window, mid/crashed re-bucket snapshot), or a forced
-      // cross read (the cursor split's equivalence oracle): merge per
-      // RANGE PARTITION (mapping-agnostic — partitions are key-disjoint
-      // by range columns), every (commit, bucket) subgroup its own
-      // key-sorted run in commit order (the grouping the micro-batch
-      // stream uses for straddling batches); such states are rare and
-      // transient, so the per-partition parallelism is acceptable where a
-      // silent duplicate is not.
-      GraftScan.crossBucketPartitions(info, schema, files)
+      // the per-range-partition merge is mapping-agnostic (partitions are
+      // key-disjoint by range columns) but runs one task per range
+      // partition: only ambiguous sets, which are rare and transient, and
+      // the oracle take it
+      splitEpochs.flatMap(GraftScan.epochPartitions(info, schema, files, _))
+        .getOrElse(GraftScan.crossBucketPartitions(info, schema, files))
     } else if (bucketMergeable) {
       // run split/order delegated to BucketMergeRead.orderedRuns: commit
       // ordinals are per-partition, so same-ordinal groups split by
@@ -727,6 +736,10 @@ class GraftScan(
     val cdcIdx =
       if (keepCdcRows) -1 // incremental reads keep tombstones (F6 exemption)
       else info.cdcColumn.map(schema.fieldIndex).getOrElse(-1)
+    // a run read into another mapping's bucket filters per row, which only
+    // the row path does
+    val filteredRuns = splitEpochs.exists(es =>
+      es.exists(e => GraftScan.keyFiltered(e._1, es.last._1)))
     // COLUMNAR whenever the reader batches and the per-row CDC delete
     // filter is a no-op: merge-free partitions stream reader batches
     // untouched, merge-pending buckets go through BatchMergeIterator
@@ -737,10 +750,11 @@ class GraftScan(
     // unfiltered would resurface deleted rows.
     GraftPartitionReaderFactory(reader, keyIdx, keyTypes, fieldMerges,
       schema, cdcIdx,
-      allowColumnar = cdcIdx < 0 &&
+      allowColumnar = cdcIdx < 0 && !filteredRuns &&
         org.apache.spark.sql.graft.StreamShim
           .parquetSupportsBatch(spark, schema),
-      maxOpenRuns = BoundedMerge.cap(spark, schema))
+      maxOpenRuns = BoundedMerge.cap(spark, schema),
+      hashIdx = info.hashColumns.map(schema.fieldIndex).toArray)
   }
 }
 
@@ -900,18 +914,19 @@ class GraftMicroBatchStream(
           epochs.headOption.map(_._1).getOrElse(liveInfo.bucketNum),
           files.iterator.map(_.file.bucketId).foldLeft(-1)(math.max) + 1)
         GraftScan.bucketPartitions(info, schema, files, 0 until n)
+      case Some(epochs) if !GraftRead.forceCrossBucketRead =>
+        // the window spans a key->bucket MAPPING change (a checkpoint
+        // committed across a flip before clamping existed, post-flip
+        // writes under an open marker): per-bucket dispatch under one
+        // count would surface a straddling key's old- and new-mapping rows
+        // in different tasks, so plan the final epoch's buckets
+        GraftScan.epochPartitions(info, schema, files, epochs)
+          .getOrElse(GraftScan.crossBucketPartitions(info, schema, files))
       case _ =>
-        // the window spans a key->bucket MAPPING change, or is
-        // mapping-ambiguous (open marker, unknown commit provenance,
-        // pre-horizon): per-bucket dispatch is key-disjoint only under one
-        // mapping — a straddling key's old- and new-mapping rows would
-        // land in different merge tasks and BOTH surface. Merge per RANGE
-        // PARTITION instead (GraftScan's cross-bucket grouping, through
-        // the same k-way partition reader). Reachable only from a
-        // checkpoint committed ACROSS a flip before clamping existed, or
-        // under an open/ambiguous marker where no cut is sound — rare and
+        // mapping-ambiguous (unknown commit provenance, pre-horizon, an
+        // unfinished restore): merge per RANGE PARTITION — rare and
         // transient, so the per-partition parallelism is acceptable where
-        // a silent duplicate is not.
+        // a silent duplicate is not
         GraftScan.crossBucketPartitions(info, schema, files)
     }
   }
@@ -924,7 +939,8 @@ class GraftMicroBatchStream(
       keyIdx.map(schema.fields(_).dataType),
       BucketMergeRead.fieldMerges(info, schema), schema,
       cdcIdx = -1, // incremental semantics: tombstones kept (F6 exemption)
-      maxOpenRuns = BoundedMerge.cap(spark, schema))
+      maxOpenRuns = BoundedMerge.cap(spark, schema),
+      hashIdx = info.hashColumns.map(schema.fieldIndex).toArray)
   }
 }
 
@@ -935,10 +951,10 @@ private[read] object GraftScan {
     PartitionedFile(InternalRow.empty, SparkPath.fromPathString(f.file.path),
       0L, f.file.size)
 
-  private def runSpecs(runs: Seq[(Seq[ResolvedFile], Array[Boolean], Boolean)])
-      : Array[GraftRunSpec] =
+  private def runSpecs(runs: Seq[(Seq[ResolvedFile], Array[Boolean], Boolean)],
+      keep: Option[KeyBucketFilter] = None): Array[GraftRunSpec] =
     runs.map { case (fs, mask, tomb) =>
-      GraftRunSpec(fs.map(partitionedFile).toArray, mask, tomb)
+      GraftRunSpec(fs.map(partitionedFile).toArray, mask, tomb, keep)
     }.toArray
 
   /** No merge: one partition per file. */
@@ -956,6 +972,46 @@ private[read] object GraftScan {
         schema, files.filter(_.file.bucketId == b)))): InputPartition
     }.toArray
 
+  /** Whether a run written under `n` buckets, read into a bucket of the
+    * final count `finalN`, needs a row filter: unless `finalN` divides `n`,
+    * its file also holds keys of other final buckets. */
+  def keyFiltered(n: Int, finalN: Int): Boolean = n % finalN != 0
+
+  /** One partition per bucket b of the FINAL mapping (count N) for a set
+    * spanning two or more mapping epochs (`epochs` = (count, files), oldest
+    * first, from [[graft.meta.RebucketLog.epochsOf]]; `files` is a subset
+    * of their union). A file written under count n with bucket id ob can
+    * hold keys of b iff ob ≡ b (mod gcd(n, N)); such a run joins partition
+    * b, read through the filter `bucket(key, N) == b` when
+    * [[keyFiltered]]. Runs group by (commit ordinal, bucket id, epoch
+    * count) — a key's holders in one range partition are distinct
+    * commits, so ordinal order is fold order — and each group splits by
+    * [[BucketMergeRead.orderedRuns]]. None when a file's bucket id lies
+    * outside its epoch's count. */
+  def epochPartitions(info: TableInfo, schema: StructType,
+      files: Seq[ResolvedFile], epochs: Seq[(Int, Seq[ResolvedFile])])
+      : Option[Array[InputPartition]] = {
+    val n = epochs.last._1
+    val countOf: Map[String, Int] = epochs.iterator.flatMap { case (c, fs) =>
+      fs.iterator.map(_.file.path -> c)
+    }.toMap
+    if (files.exists(f => f.file.bucketId < 0 ||
+        f.file.bucketId >= countOf(f.file.path))) return None
+    val groups = files
+      .groupBy(f => (f.commitOrdinal, f.file.bucketId, countOf(f.file.path)))
+      .toSeq.sortBy(_._1).map { case ((_, ob, c), fs) =>
+        (ob, c, BucketMergeRead.orderedRuns(info, schema, fs))
+      }
+    Some((0 until n).map { b =>
+      GraftBucketPartition(b, groups.flatMap { case (ob, c, runs) =>
+        val g = BigInt(c).gcd(n).toInt
+        if (ob % g != b % g) Nil
+        else runSpecs(runs,
+          if (keyFiltered(c, n)) Some(KeyBucketFilter(n, b)) else None)
+      }.toArray): InputPartition
+    }.toArray)
+  }
+
   /** One partition per RANGE PARTITION, every (commit, bucket) subgroup its
     * own key-sorted run in commit order: exact under any mix of
     * key->bucket mappings. */
@@ -971,9 +1027,13 @@ private[read] object GraftScan {
 }
 
 /** One sorted run of one bucket: files + physical-column presence mask +
-  * whether the run is a key-only tombstone run ([[graft.meta.Tombstone]]). */
+  * whether the run is a key-only tombstone run ([[graft.meta.Tombstone]]) +
+  * the row filter of a run read into another mapping's bucket. */
 case class GraftRunSpec(files: Array[PartitionedFile], mask: Array[Boolean],
-    tomb: Boolean = false)
+    tomb: Boolean = false, keep: Option[KeyBucketFilter] = None)
+
+/** Keep the rows whose key lies in bucket `bucket` of `numBuckets`. */
+case class KeyBucketFilter(numBuckets: Int, bucket: Int)
 
 case class GraftBucketPartition(bucket: Int, runs: Array[GraftRunSpec])
     extends InputPartition with HasPartitionKey {
@@ -993,9 +1053,19 @@ case class GraftPartitionReaderFactory(
     schema: org.apache.spark.sql.types.StructType,
     cdcIdx: Int,
     allowColumnar: Boolean = false,
-    maxOpenRuns: Int = BoundedMerge.DefaultCap) extends PartitionReaderFactory {
+    maxOpenRuns: Int = BoundedMerge.DefaultCap,
+    hashIdx: Array[Int] = Array.empty) extends PartitionReaderFactory {
 
   private def nFields: Int = schema.length
+
+  /** The row predicate of a run's [[KeyBucketFilter]]. */
+  private def keyFilter(f: KeyBucketFilter): InternalRow => Boolean = {
+    val bucketOf = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(Seq(TransactionalWrite.bucketExpr(hashIdx.toSeq.map(i =>
+        org.apache.spark.sql.catalyst.expressions.BoundReference(i,
+          schema(i).dataType, nullable = true)), f.numBuckets)))
+    r => bucketOf(r).getInt(0) == f.bucket
+  }
 
   /** COLUMNAR path: merge-free partitions (plain files, single-run buckets)
     * stream the vectorized reader's batches untouched; merge-PENDING
@@ -1032,6 +1102,8 @@ case class GraftPartitionReaderFactory(
           else if (runs.length == 1) // merge-free: reader batches untouched
             runs.head.files.iterator.flatMap(batchesOf)
           else {
+            require(runs.forall(_.keep.isEmpty),
+              "a filtered run reads on the row path only")
             val bounded = BoundedMerge.sources(readFn,
               runs.map(_.files.toSeq).toIndexedSeq, runs.map(_.mask),
               runs.map(_.tomb), keyIdx, keyTypes, fieldMerges, maxOpenRuns)
@@ -1057,7 +1129,8 @@ case class GraftPartitionReaderFactory(
       case GraftBucketPartition(_, runs) =>
         BoundedMerge.iterator(readFn,
           runs.map(_.files.toSeq).toIndexedSeq, runs.map(_.mask),
-          runs.map(_.tomb), keyIdx, keyTypes, fieldMerges, maxOpenRuns)
+          runs.map(_.tomb), keyIdx, keyTypes, fieldMerges, maxOpenRuns,
+          runs.map(_.keep.map(keyFilter)).toIndexedSeq)
       case GraftFilePartition(f, _) =>
         BucketMergeRead.flattenRows(readFn(f))
     }

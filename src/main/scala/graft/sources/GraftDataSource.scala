@@ -16,7 +16,6 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.meta.RebucketLog
 import graft.read.{CatalogFiles, GraftRead, GraftReadTable}
 import graft.streaming.GraftSink
 import graft.tables.GraftTable
@@ -42,9 +41,8 @@ import graft.util.Filters
   * [[graft.read.GraftScanBuilder]] as `graft_cat.ns.t` and
   * `GraftTable.toDF`, with the read options pinning the snapshot. The
   * reads that scan cannot plan get a table without `BATCH_READ`, and Spark
-  * falls back to the DSv1 [[GraftRelation]]: `readtype=diff`, tables whose
-  * merge operators only the aggregate merge runs, and incremental windows
-  * across a recorded re-bucket (the cursor split). Writes and streaming
+  * falls back to the DSv1 [[GraftRelation]]: `readtype=diff` and tables
+  * whose merge operators only the aggregate merge runs. Writes and streaming
   * stay DSv1: the table reports neither `BATCH_WRITE` nor a streaming
   * capability, so Spark calls `createRelation(mode, ...)`, `createSource`
   * and `createSink`. A table registered in the session catalog
@@ -105,15 +103,9 @@ class GraftDataSource extends TableProvider with RelationProvider
         .foreach(return _)
     val t = GraftTable.forPath(spark, path)
     val ti = t.info
-    val scanPlans = parameters.getOrElse("readtype", "full") match {
-      case "diff" => false
-      case "incremental" => !RebucketLog.overlaps(ti.properties,
-        parameters.getOrElse("readstarttime", "0").toLong,
-        parameters.get("readendtime").map(_.toLong).getOrElse(t.lastCommitTs))
-      case _ => true
-    }
     new GraftReadTable(spark, ti, CatalogFiles(t),
-      batchRead = scanPlans && GraftRead.scanMerges(ti, t.schema))
+      batchRead = !parameters.get("readtype").contains("diff") &&
+        GraftRead.scanMerges(ti, t.schema))
   }
 
   override def createRelation(
@@ -226,10 +218,11 @@ class GraftDataSource extends TableProvider with RelationProvider
 }
 
 /** The DSv1 batch relation behind the reads [[graft.read.GraftScan]]
-  * cannot plan (see [[GraftDataSource]]). It returns the library read
-  * (`diff`, `snapshotAt`, `incremental`, `toDF`), which routes the
-  * aggregate merge and the cursor split. Spark re-applies every filter
-  * above the relation; the pushed ones also prune partitions here. */
+  * cannot plan (see [[GraftDataSource]]): the change feed (`diff`) and
+  * tables whose agg-only merge operators need the aggregate merge, which
+  * the library read (`snapshotAt`, `incremental`, `toDF`) routes. Spark
+  * re-applies every filter above the relation; the pushed ones also prune
+  * partitions here. */
 case class GraftRelation(
     sqlContext: SQLContext,
     path: String,
@@ -326,10 +319,11 @@ class GraftStreamSource(
     val s = math.max(handedOut,
       Option(start).map(_.json.trim.toLong).getOrElse(startTime))
     // cut candidate windows at re-bucket flip boundaries: each side is
-    // then mapping-consistent, so the batch reads bucket-parallel under
-    // its own mapping instead of paying the cursor-split shuffle (or, for
-    // diff mode, the per-partition bucket-merged pairing) — matters for a
-    // catch-up batch after a restart from a pre-re-bucket checkpoint
+    // then mapping-consistent, so the batch reads each file once under its
+    // own mapping instead of reading old-mapping files into several final
+    // buckets (or, for diff mode, the per-partition bucket-merged
+    // pairing) — matters for a catch-up batch after a restart from a
+    // pre-re-bucket checkpoint
     def clamp(cand: Long): Long =
       graft.meta.RebucketLog.clampAtFlip(table.info.properties, s, cand)
     if (newest <= s || StreamPacing.unpaced(maxCommits, maxFiles, maxBytes)) {
@@ -371,16 +365,23 @@ class GraftStreamSource(
   override def stop(): Unit = ()
 }
 
-/** Streaming sink (S11) — exactly-once via (queryId, batchId) bookkeeping. */
+/** Streaming sink (S11) — exactly-once via (queryId, batchId) bookkeeping.
+  * Without a `queryId` option the id is the streaming query's own, which
+  * its checkpoint keeps across restarts: two queries writing one table
+  * never share a batch-id sequence. */
 class GraftStreamSink(
     spark: SparkSession,
     path: String,
     parameters: Map[String, String],
     outputMode: OutputMode) extends Sink {
 
-  private val queryId = parameters.getOrElse("queryId", "graft-stream")
-
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
+    // the query's id is a local property of its execution thread, which
+    // runs addBatch (the sink is created on the thread that starts it)
+    val queryId = parameters.getOrElse("queryId",
+      Option(spark.sparkContext.getLocalProperty(
+        org.apache.spark.sql.execution.streaming.runtime.StreamExecution
+          .QUERY_ID_KEY)).getOrElse("graft-stream"))
     // DSv1 hands us a streaming DF; re-plan it as a batch DF without
     // collecting to the driver
     val batch = org.apache.spark.sql.graft.StreamShim.asBatch(data)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal, Murmur3Hash, Pmod, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
@@ -131,11 +131,10 @@ class GraftStreamDataWriter(
     val i = schema.fieldIndex(c)
     BoundReference(i, schema.fields(i).dataType, schema.fields(i).nullable)
   }
-  // same murmur3-mod expression as the batch write side (bucketIdExpr)
   private val bucketProj =
     if (hashCols.isEmpty) null
-    else UnsafeProjection.create(
-      Seq(Pmod(Murmur3Hash(hashCols.map(ref), 42), Literal(bucketNum))))
+    else UnsafeProjection.create(Seq(
+      graft.write.TransactionalWrite.bucketExpr(hashCols.map(ref), bucketNum)))
   private val keyProj =
     if (hashCols.isEmpty) null
     else UnsafeProjection.create((rangeCols ++ hashCols).map(ref))

@@ -118,83 +118,30 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
   def incremental(startTime: Long, endTime: Long,
       partitionPred: String => Boolean = _ => true,
       strict: Boolean = false): DataFrame = {
-    val t = info
-    if (!GraftTable.rebucketOverlaps(t.properties, startTime, endTime))
-      return GraftRead.read(spark, t,
-        resolver.incrementalFilesAll(tablePath, startTime, endTime,
-          partitionPred, strict = strict),
-        keepCdcRows = true)
-    // a window spanning a re-bucket delivers runs from BOTH mappings: the
-    // per-bucket merge dispatch would double-surface straddling keys
-    // (CdcModelCheckSuite). Cut the window at the recorded boundaries into
-    // mapping-consistent sub-windows (each fully bucket-parallel, composed
-    // by one delta-only shuffle) when possible; else merge per partition
-    incrementalSplit(t, startTime, endTime, partitionPred, strict)
+    val files = resolver.incrementalFilesAll(tablePath, startTime, endTime,
+      partitionPred, strict = strict)
+    // read after the files, the info records every re-bucket flip a
+    // resolved commit can follow: a window spanning one delivers runs of
+    // both mappings, which the scan plans under the final mapping
+    GraftRead.read(spark, info, files, keepCdcRows = true)
   }
 
-  /** Incremental read over a window that OVERLAPS a recorded re-bucket:
-    * cut at the event boundaries (planEpochWindows) and read per epoch —
-    * every side fully bucket-parallel (GraftRead.readSplitEpochs /
-    * BucketMergeRead.readSplitWindow) — or, when the window cannot be cut,
-    * fall back to the cross-bucket one-task-per-partition merge. */
-  private def incrementalSplit(t: TableInfo, start: Long, end: Long,
-      partitionPred: String => Boolean, strict: Boolean): DataFrame = {
-    def resolve(a: Long, b: Long, pred: String => Boolean) =
-      resolver.incrementalFilesAll(tablePath, a, b, pred, strict = strict)
-    cuttableWindow(t, start, end)
-      .flatMap { case (events, lineages) =>
-        epochWindowsFrom(t, start, end, events).map((_, lineages)) }
-      match {
-      case None =>
-        GraftRead.read(spark, t, resolve(start, end, partitionPred),
-          keepCdcRows = true, crossBucketMerge = true)
-      case Some((epochWindows, lineages)) =>
-        // whole-window per-partition abort must survive the cut: a
-        // partition with a non-delta (Update/Rewrite) commit ANYWHERE in
-        // (start, end] delivers nothing from the whole window, but each
-        // sub-resolution only aborts within its OWN sub-window — resolving
-        // per epoch without this mask would leak the other sub-windows'
-        // files for that partition. Strict mode must NOT mask: masking
-        // would HIDE the partition from the sub-resolutions and silently
-        // skip where the whole-window contract is to THROW
-        // NonIncrementalWindowException — the unmasked sub-window holding
-        // the non-delta commit raises it exactly like the one-call form.
-        // The lineages were already fetched by the cuttability probe.
-        val abort: Set[String] = if (strict) Set.empty else
-          lineages.collect {
-            case (d, vs) if partitionPred(d) && vs.exists(v =>
-              v.timestamp > start && v.timestamp <= end &&
-                (v.commitOp == CommitOp.Update ||
-                  v.commitOp == CommitOp.Rewrite)) => d
-          }.toSet
-        val pred2 = (d: String) => partitionPred(d) && !abort.contains(d)
-        GraftRead.readSplitEpochs(spark, t,
-          epochWindows.map { case (n, a, b) => (n, resolve(a, b, pred2)) },
-          keepCdcRows = true)
-    }
-  }
-
-  /** Shared cuttability analysis of (start, end] against `t`'s recorded
-    * mapping-change events: Some((events, lineages)) when the window MAY
-    * be cut around every overlapping event — all events closed, their
-    * cushion zones pairwise separated, the window not reaching past the
-    * event-log prune horizon, and no non-compaction commit inside any
-    * zone (the bucketNum flip lands somewhere inside, so such a commit
-    * could carry either mapping). ONE store fetch covers every zone AND
-    * the whole window, and the fetched lineages are returned so callers
-    * (the incremental abort mask) never re-query. None -> the window is
-    * genuinely ambiguous; callers fall back to the cross-bucket merge /
-    * bucket-merged diff pairing, which are mapping-agnostic. Evaluated
-    * against the CALLER's TableInfo snapshot — mixing the caller's
-    * properties with a fresh info.bucketNum under a concurrent re-bucket
-    * would pair old-epoch files with the wrong final mapping. */
-  private def cuttableWindow(t: TableInfo, start: Long, end: Long,
-      fetchWholeWindow: Boolean = true)
-      : Option[(Seq[(Long, Long, Int, Int)],
-                Map[String, Seq[PartitionInfo]])] = {
+  /** Cuttability of (start, end] for a segmented diff: the recorded
+    * mapping-change events overlapping the window, when the diff may cut
+    * around every one — all events closed, their cushion zones pairwise
+    * separated, the window not reaching past the event-log prune horizon,
+    * and no non-compaction commit inside any zone (the bucketNum flip
+    * lands somewhere inside, so such a commit could carry either mapping).
+    * One store fetch covers every zone. None -> the window is genuinely
+    * ambiguous; the diff falls back to the mapping-agnostic bucket-merged
+    * pairing. Evaluated against the CALLER's TableInfo snapshot — mixing
+    * the caller's properties with a fresh info.bucketNum under a
+    * concurrent re-bucket would pair files with the wrong mapping. */
+  private def cuttableWindow(t: TableInfo, start: Long, end: Long)
+      : Option[Seq[(Long, Long, Int, Int)]] = {
     val cu = RebucketLog.cushionMs
     // past the prune horizon an event may have existed that the log no
-    // longer records — neither cutting nor plain per-bucket dispatch is
+    // longer records — neither cutting nor plain per-bucket pairing is
     // safe there (RebucketLog scaladoc contract); likewise under an
     // unfinished file-store restore the mapping is unresolvable
     if (RebucketLog.horizon(t.properties).exists(start < _)) return None
@@ -206,48 +153,16 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
       case _ => true
     }
     if (!separated) return None
-    // incremental callers reuse the lineages for their whole-window abort
-    // mask; diff needs only the event zones — fetching a wide window's
-    // changed-partition lineages for it would be O(window) meta I/O spent
-    // on an O(zones) question
-    val (f0, f1) =
-      if (fetchWholeWindow)
-        ((start +: events.map(_._1 - cu)).min,
-          (end +: events.map(_._2 + cu)).max)
-      else if (events.isEmpty) return Some((events, Map.empty))
-      else (events.map(_._1 - cu).min, events.map(_._2 + cu).max)
-    val descs = store.partitionsChangedBetween(tablePath, f0, f1)
+    if (events.isEmpty) return Some(events)
+    val descs = store.partitionsChangedBetween(tablePath,
+      events.map(_._1 - cu).min, events.map(_._2 + cu).max)
     val lineages = store.partitionVersionsBulk(tablePath, descs)
     val ambiguous = events.exists { case (ts0, ts1, _, _) =>
       lineages.values.flatten.exists(v =>
         v.timestamp > ts0 - cu && v.timestamp <= ts1 + cu &&
           v.commitOp != CommitOp.Compaction)
     }
-    if (ambiguous) None else Some((events, lineages))
-  }
-
-  /** Cut (start, end] at the (pre-validated) events into mapping-
-    * consistent sub-windows: (bucketNum, from, to) oldest -> newest,
-    * contiguous, covering the window. Edge-overlapping events leave every
-    * in-window delta on one side and need no cut; the per-epoch mapping
-    * is evaluated just before each cut event's zone (or at `end`, unless
-    * a terminal event overlaps it). */
-  private def epochWindowsFrom(t: TableInfo, start: Long, end: Long,
-      events: Seq[(Long, Long, Int, Int)]): Option[Seq[(Int, Long, Long)]] = {
-    val cu = RebucketLog.cushionMs
-    val cuts = events.collect { case (ts0, ts1, _, _)
-      if start < ts0 - cu && end > ts1 + cu => (ts0, ts1 + cu) }
-    val terminal = events.find { case (ts0, ts1, _, _) =>
-      end > ts0 - cu && end <= ts1 + cu }
-    val bounds = start +: cuts.map(_._2) :+ end
-    if (bounds.sliding(2).exists { case Seq(a, b) => a >= b; case _ => false })
-      return None // defensive: cut points must strictly increase
-    Some(bounds.sliding(2).toSeq.zipWithIndex.map { case (Seq(a, b), i) =>
-      val evalTs =
-        if (i < cuts.size) cuts(i)._1 - cu - 1 // just before the cut event
-        else terminal.map(_._1 - cu - 1).getOrElse(end)
-      (RebucketLog.bucketNumAt(evalTs, t.properties, t.bucketNum), a, b)
-    })
+    if (ambiguous) None else Some(events)
   }
 
   /** Row-level change feed over (startTime, endTime] — the CDF shape
@@ -309,7 +224,7 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
         // fabricate a delete+insert pair for every unchanged key. SEGMENT
         // the window at the event boundaries when possible — the re-bucket
         // is a pure rewrite (snapshot DATA identical on both sides of its
-        // zone, enforced by planEpochWindows' ambiguity probe), so
+        // zone, enforced by cuttableWindow's ambiguity probe), so
         // diff(start, end) == compose(diff per same-mapping segment), each
         // segment zero-shuffle per-bucket parallel and the composition
         // touching DELTAS only. Unsegmentable windows fall back to the
@@ -335,8 +250,8 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
   private def diffSegments(t: TableInfo,
       start: Long, end: Long): Option[Seq[(Long, Long)]] = {
     val cu = RebucketLog.cushionMs
-    cuttableWindow(t, start, end, fetchWholeWindow = false)
-      .flatMap { case (events, _) =>
+    cuttableWindow(t, start, end)
+      .flatMap { events =>
       // a diff can only cut around events lying STRICTLY inside: an
       // endpoint inside a zone leaves that snapshot's mapping ambiguous
       if (events.exists { case (ts0, ts1, _, _) =>

@@ -3,7 +3,7 @@ package graft.tables
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Murmur3Hash}
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.types._
 
@@ -101,11 +101,12 @@ object Validator {
         specs.flatMap { spec =>
           val out = scala.collection.mutable.ArrayBuffer[String]()
           val keyComps = RowComp.makeComps(keyIdx, keyTypes)
-          val hash =
+          val bucketOf =
             if (hasPk && spec.bucket >= 0 && spec.mapN > 0)
-              Some(new Murmur3Hash(pkIdx.zip(pkTypes).map { case (i, dt) =>
-                BoundReference(i, dt, nullable = true)
-              }.toSeq, 42))
+              Some(graft.write.TransactionalWrite.bucketExpr(
+                pkIdx.zip(pkTypes).map { case (i, dt) =>
+                  BoundReference(i, dt, nullable = true)
+                }.toSeq, spec.mapN))
             else None
           var prev: InternalRow = null
           spec.files.foreach { case (path, size, expectRows) =>
@@ -126,8 +127,8 @@ object Validator {
                   out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
                     s"duplicate primary key within the run in $path"
               }
-              hash.foreach { h =>
-                val b = ((h.eval(row).asInstanceOf[Int] % spec.mapN) + spec.mapN) % spec.mapN
+              bucketOf.foreach { e =>
+                val b = e.eval(row).asInstanceOf[Int]
                 if (b != spec.bucket)
                   out += s"run (${spec.desc}, b${spec.bucket}, r${spec.ordinal}): " +
                     s"row hashes to bucket $b but lives in ${spec.bucket} ($path)"

@@ -5,22 +5,18 @@ import org.apache.spark.sql.functions._
 
 import graft.tables.{CompactionOptions, GraftTable}
 
-/** Scale probe for the r15 cursor-split window read: an incremental window
-  * spanning a RE-BUCKET, measured through BOTH read paths on the same
-  * synthesized table —
+/** Scale probe for an incremental window spanning a RE-BUCKET, measured
+  * through both read plans on the same synthesized table:
   *
-  *  - SPLIT (default): each mapping-consistent sub-window reads
-  *    bucket-parallel; one shuffle of just the old-epoch delta into the
-  *    final mapping ([[graft.read.BucketMergeRead.readSplitWindow]]).
-  *  - CROSS (forced via the plan-time toggle): the pre-r15 fallback —
-  *    one k-way merge task per RANGE PARTITION, i.e. ONE task total on
-  *    this unpartitioned table, regardless of cores.
+  *  - SCAN (default): one task per bucket of the final mapping, each
+  *    reading every older run that can hold its keys through a row filter
+  *    ([[graft.read.GraftScan.epochPartitions]]).
+  *  - ORACLE (forced via the plan-time toggle): one k-way merge task per
+  *    RANGE PARTITION, i.e. ONE task total on this unpartitioned table,
+  *    regardless of cores.
   *
-  * The table deliberately scales past the gate data (default 4M + 2x2M
-  * incremental rows, the 100x shape of the sf0.01 bench entry) because the
-  * thing under test is the parallelism CLIFF: the cross path's wall-clock
-  * is bound by one core's merge throughput while the split path divides by
-  * bucketNum. Results land in README's r15 paragraph.
+  * Runs on every local core (`local[*]`). The oracle's wall-clock is bound
+  * by one core's merge throughput while the scan divides by bucketNum.
   *
   * args: [initRows] [rowsPerUpsert] [oldBuckets] [newBuckets]
   * (defaults 4M / 2M / 16 / 32). Prints one summary line. */
@@ -31,8 +27,7 @@ object RebucketWindowProbe {
     val oldN = args.lift(2).map(_.toInt).getOrElse(16)
     val newN = args.lift(3).map(_.toInt).getOrElse(32)
     val spark = SparkSession.builder()
-      .appName("graft-rebucket-window-probe").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .appName("graft-rebucket-window-probe").master("local[*]")
       .config("spark.ui.enabled", false)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -47,7 +42,7 @@ object RebucketWindowProbe {
     val t = GraftTable.create(spark, rows(initRows, 0, 0), dir,
       hashColumns = Seq("k"), bucketNum = oldN)
     val w0 = t.lastCommitTs
-    Thread.sleep(1100) // step past the re-bucket clock cushion
+    Thread.sleep(1100) // untimed: commits a second apart
     t.upsert(rows(perUpsert, initRows, 1)) // old-mapping delta
     Thread.sleep(1100)
     t.compaction(CompactionOptions(newBucketNum = Some(newN)), _ => true)
@@ -62,16 +57,16 @@ object RebucketWindowProbe {
     def readWindow(): Unit =
       t.incremental(w0, w1).agg(sum("v")).collect()
 
-    readWindow() // untimed warmup (JIT + page cache, split path)
-    val split = Seq.fill(3)(time(readWindow())).min
+    readWindow() // untimed warmup (JIT + page cache, scan path)
+    val scan = Seq.fill(3)(time(readWindow())).min
     graft.read.GraftRead.forceCrossBucketRead = true
-    val cross = try Seq.fill(3)(time(readWindow())).min
+    val oracle = try Seq.fill(3)(time(readWindow())).min
     finally graft.read.GraftRead.forceCrossBucketRead = false
     val n = t.incremental(w0, w1).count()
     println(f"""{"probe":"rebucket_window","rows":$n,"init":$initRows,""" +
       f""""per_upsert":$perUpsert,"old_buckets":$oldN,"new_buckets":$newN,""" +
-      f""""split_sec":$split%.2f,"cross_sec":$cross%.2f,""" +
-      f""""speedup":${cross / split}%.1f}""")
+      f""""scan_sec":$scan%.2f,"oracle_sec":$oracle%.2f,""" +
+      f""""speedup":${oracle / scan}%.1f}""")
     spark.stop()
   }
 }

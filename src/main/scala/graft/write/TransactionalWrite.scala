@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Murmur3Hash, Pmod}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -75,6 +76,15 @@ object TransactionalWrite {
   def bucketIdExpr(pkCols: Seq[Column], n: Int): Column =
     pmod(hash(pkCols: _*), lit(n))
 
+  /** [[bucketIdExpr]] in catalyst form over resolved key expressions:
+    * `pmod(murmur3(keys, seed 42), n)`. The one definition every reader,
+    * validator and non-DataFrame writer of bucket ids evaluates. */
+  def bucketExpr(keys: Seq[Expression], n: Expression): Expression =
+    Pmod(Murmur3Hash(keys, 42), n)
+
+  def bucketExpr(keys: Seq[Expression], n: Int): Expression =
+    bucketExpr(keys, Literal(n))
+
   /** Bucket id for concrete primary-key values (point reads / DSv2 bucket
     * pruning) — evaluated through the same expression as the write side so
     * the two can never diverge. Driver-local foldable eval: a point lookup
@@ -85,13 +95,11 @@ object TransactionalWrite {
       keyValues: Seq[(String, Any)],
       bucketNum: Int): Int = {
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash, Pmod}
-    // the resolved catalyst form of bucketIdExpr: pmod(hash(seed=42), n)
+    import org.apache.spark.sql.catalyst.expressions.Cast
     val exprs = keyValues.map { case (c, v) =>
       Cast(Literal(v), schema(c).dataType)
     }
-    Pmod(Murmur3Hash(exprs, 42), Literal(bucketNum))
-      .eval(InternalRow.empty).asInstanceOf[Int]
+    bucketExpr(exprs, bucketNum).eval(InternalRow.empty).asInstanceOf[Int]
   }
 
   def mergeOpFor(table: TableInfo, column: String): MergeOp =

@@ -28,9 +28,10 @@ class CdcModelCheckSuite extends SparkFixture {
     super.afterAll()
   }
 
-  /** r15: the cursor-split read must be ROW-IDENTICAL to the cross-bucket
-    * one-task merge on every window of every random history — the split is
-    * a parallelism optimization, never a semantics change. */
+  /** A window spanning re-buckets, read one task per final bucket, must be
+    * ROW-IDENTICAL to the cross-bucket one-task merge on every window of
+    * every random history — the split is a parallelism optimization, never
+    * a semantics change. */
   private def assertSplitEqualsCross(t: GraftTable, start: Long, end: Long,
       ctx: => String): Unit = {
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
@@ -117,7 +118,7 @@ class CdcModelCheckSuite extends SparkFixture {
         }
         assert(t.validate() == Nil, s"round $round: validate")
         // every recorded boundary -> head window, under BOTH read paths:
-        // the cursor split must byte-equal the cross-bucket merge on the
+        // the final-bucket split must byte-equal the cross-bucket merge on the
         // same random re-bucket/restore history (r15)
         val head = t.lastCommitTs
         (Seq(0L) ++ snapshots.map(_._1).distinct.takeRight(3)).distinct

@@ -57,7 +57,7 @@ class DataSourceSuite extends SparkFixture {
   }
 
   test("format(graft) reads GraftScan cannot plan fall back to the DSv1 " +
-    "relation: diff, agg-only merge operators, incremental across a re-bucket") {
+    "relation: diff and agg-only merge operators") {
     withTempPath { path =>
       val t = GraftTable.create(spark,
         (1 to 20).map(i => (i.toLong, s"v$i")).toDF("id", "v"), path,
@@ -70,9 +70,10 @@ class DataSourceSuite extends SparkFixture {
         .option("readstarttime", ts1.toString).load(path)
       assert(!plansGraftScan(diff))
       assertSameRows(diff, t.diff(ts1, t.lastCommitTs))
+      // an incremental window across the re-bucket is the scan's
       val incr = spark.read.format("graft").option("readtype", "incremental")
         .option("readstarttime", ts1.toString).load(path)
-      assert(!plansGraftScan(incr))
+      assert(plansGraftScan(incr))
       assertSameRows(incr, t.incremental(ts1, t.lastCommitTs))
     }
     graft.mergeop.MergeOps.register(new graft.mergeop.MergeOp {
@@ -90,6 +91,65 @@ class DataSourceSuite extends SparkFixture {
       assert(!plansGraftScan(agg))
       assertRows(agg, Seq("[1,7]", "[2,5]"))
       assertSameRows(agg, t.toDF)
+    }
+  }
+
+  test("format(graft) incremental across an 8->16 re-bucket of an " +
+    "unpartitioned table plans GraftScan with 16 tasks, rows equal to the " +
+    "per-range-partition merge") {
+    withTempPath { path =>
+      val t = GraftTable.create(spark,
+        (1 to 200).map(i => (i.toLong, s"a$i")).toDF("id", "v"), path,
+        hashColumns = Seq("id"), bucketNum = 8)
+      val ts1 = t.lastCommitTs
+      t.upsert((1 to 200 by 2).map(i => (i.toLong, s"b$i")).toDF("id", "v"))
+      t.compaction(CompactionOptions(newBucketNum = Some(16)), _ => true)
+      t.upsert((1 to 200 by 3).map(i => (i.toLong, s"c$i")).toDF("id", "v"))
+      def read(): (Boolean, Int, Seq[String]) = {
+        val df = spark.read.format("graft").option("readtype", "incremental")
+          .option("readstarttime", ts1.toString).load(path)
+        (plansGraftScan(df), df.rdd.getNumPartitions,
+          df.collect().map(_.toString).sorted.toSeq)
+      }
+      val (scan, tasks, rows) = read()
+      assert(scan && tasks == 16, s"GraftScan $scan with $tasks tasks")
+      graft.read.GraftRead.forceCrossBucketRead = true
+      val (oracleScan, oracleTasks, oracle) =
+        try read() finally graft.read.GraftRead.forceCrossBucketRead = false
+      assert(oracleScan && oracleTasks == 1)
+      assert(rows == oracle)
+      // every key the window touched, the last writer winning
+      assert(rows == (1 to 200).filter(i => i % 2 == 1 || i % 3 == 1)
+        .map(i => s"[$i,${if (i % 3 == 1) "c" else "b"}$i]").sorted)
+    }
+  }
+
+  test("format(graft) stream sink: queries without a queryId option keep " +
+    "their own batch ids, so a second query's first batches land") {
+    withTempPath { srcA =>
+      withTempPath { srcB =>
+        withTempPath { dst =>
+          withTempPath { ckpt =>
+            GraftTable.create(spark, Seq((1L, "a")).toDF("id", "v"), srcA,
+              hashColumns = Seq("id"), bucketNum = 1)
+            GraftTable.create(spark, Seq((2L, "b")).toDF("id", "v"), srcB,
+              hashColumns = Seq("id"), bucketNum = 1)
+            def pipe(src: String, checkpoint: String): Unit =
+              spark.readStream.format("graft").load(src)
+                .writeStream.format("graft")
+                .option("path", dst)
+                .option("hashPartitions", "id").option("hashBucketNum", "1")
+                .option("checkpointLocation", checkpoint)
+                .trigger(Trigger.AvailableNow())
+                .start().awaitTermination(60000)
+            pipe(srcA, s"$ckpt/a")
+            assertRows(spark.read.format("graft").load(dst), Seq("[1,a]"))
+            pipe(srcB, s"$ckpt/b")
+            assertRows(spark.read.format("graft").load(dst),
+              Seq("[1,a]", "[2,b]"))
+          }
+        }
+      }
     }
   }
 

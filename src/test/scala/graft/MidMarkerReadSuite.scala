@@ -12,8 +12,8 @@ import graft.tables.{CompactionOptions, GraftTable}
   * reachable by a normal re-bucket retrying after a heads-CAS conflict
   * with a concurrent upsert, not just by crashes. The fix cuts every
   * merged read at the recorded flip boundaries (RebucketLog.epochsOf):
-  * cleanly mixed sets take the cursor-split read, ambiguous ones the
-  * cross-bucket merge. */
+  * cleanly mixed sets plan one scan task per bucket of the final mapping,
+  * ambiguous ones the cross-bucket merge. */
 class MidMarkerReadSuite extends SparkFixture {
   import spark.implicits._
 
@@ -104,20 +104,24 @@ class MidMarkerReadSuite extends SparkFixture {
       // a tombstone run keeps the set mixed (a rewriting delete would
       // replace every file under the new mapping: one epoch, no split)
       t.deleteTombstone($"id" > 40L)
-      // the library path: only it composes the cursor split (the DSv2
-      // catalog scan always merges such a set per range partition)
-      val splitDf = t.toDF(_ => true)
+      // both plan the scan: one partition per bucket of the final (8)
+      // mapping, or, forced, one per range partition. The toggle is read
+      // whenever a plan builds its scan, so the forced read runs inside it
+      def planned(): (String, Int, Seq[String]) = {
+        val df = t.toDF(_ => true)
+        (df.queryExecution.executedPlan.toString, df.rdd.getNumPartitions,
+          df.collect().map(_.toString).sorted.toSeq)
+      }
+      val (splitPlan, splitParts, split) = planned()
       graft.read.GraftRead.forceCrossBucketRead = true
-      val crossDf = try t.toDF(_ => true)
+      val (crossPlan, crossParts, cross) = try planned()
         finally graft.read.GraftRead.forceCrossBucketRead = false
-      val splitPlan = splitDf.queryExecution.executedPlan.toString
-      assert(splitPlan.contains("ExistingRDD") && !splitPlan.contains("GraftScan"),
-        s"expected the cursor-split RDD in:\n$splitPlan")
-      val crossPlan = crossDf.queryExecution.executedPlan.toString
+      assert(splitPlan.contains("BatchScan") && splitPlan.contains("GraftScan"),
+        s"expected the scan in:\n$splitPlan")
+      assert(splitParts == 8, s"$splitParts partitions")
       assert(crossPlan.contains("BatchScan") && crossPlan.contains("GraftScan"),
         s"expected the cross-bucket scan in:\n$crossPlan")
-      val split = splitDf.collect().map(_.toString).sorted.toSeq
-      val cross = crossDf.collect().map(_.toString).sorted.toSeq
+      assert(crossParts == 1, s"$crossParts partitions")
       assert(split == cross, s"split vs cross diverged\nsplit:\n" +
         s"${split.mkString("\n")}\ncross:\n${cross.mkString("\n")}")
       assert(split.length == 40)
@@ -203,14 +207,18 @@ class MidMarkerReadSuite extends SparkFixture {
       assert(plainAligned, "a settled all-bucket read is group-aligned")
       assert(graftFilesPlanned(plain.filter($"id" === k)) ==
         files.count(_.file.bucketId == b))
-      val (cross, crossAligned) = graft.read.GraftRead.readTracked(spark,
-        t.info, files, crossBucketMerge = true)
-      assert(!crossAligned, "a forced cross-bucket read must not claim alignment")
-      assert(graftFilesPlanned(cross.filter($"id" === k)) == files.size,
-        "a forced cross-bucket read must not prune by bucket id")
-      assert(cross.filter($"id" === k).collect().map(_.getInt(1)).toSeq ==
-        Seq(k.toInt * 10))
-      assert(cross.count() == 64)
+      // the toggle is read whenever a plan builds its scan
+      graft.read.GraftRead.forceCrossBucketRead = true
+      try {
+        val (cross, crossAligned) =
+          graft.read.GraftRead.readTracked(spark, t.info, files)
+        assert(!crossAligned, "a forced cross-bucket read must not claim alignment")
+        assert(graftFilesPlanned(cross.filter($"id" === k)) == files.size,
+          "a forced cross-bucket read must not prune by bucket id")
+        assert(cross.filter($"id" === k).collect().map(_.getInt(1)).toSeq ==
+          Seq(k.toInt * 10))
+        assert(cross.count() == 64)
+      } finally graft.read.GraftRead.forceCrossBucketRead = false
     }
   }
 

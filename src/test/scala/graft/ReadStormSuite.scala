@@ -8,9 +8,9 @@ import graft.tables.{CompactionOptions, GraftTable}
   * marker LIFECYCLE — writers upsert while a re-bucketer repeatedly flips
   * the bucket count (open marker appears, rewrite publishes, marker
   * closes), and reader threads continuously plan full snapshots AND
-  * full-history incremental reads (the straddling windows route through
-  * readSplitWindow / the cross fallback depending on where the marker is
-  * when the plan lands). Invariants asserted on EVERY read:
+  * full-history incremental reads (the straddling windows plan one scan
+  * task per final bucket or the cross fallback depending on where the
+  * marker is when the plan lands). Invariants asserted on EVERY read:
   *
   *  - no duplicate primary keys (the bug class every mapping gate guards);
   *  - atomic cut: each writer's batch is one commit over one range

@@ -1,18 +1,20 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.DataFrame
 
 import graft.meta.TableInfo
 import graft.read.GraftRead
 import graft.tables.{CompactionOptions, GraftTable}
 
-/** The cursor-split read for re-bucket-straddling windows (r15, VERDICT
-  * item 1 — BucketMergeRead.readSplitWindow): every assertion here runs
-  * the SAME window twice, once through the split and once through the
-  * cross-bucket one-task-per-partition merge (the r14-proven oracle,
-  * forced via the plan-time toggles), and demands row-identical results —
-  * plus the parallelism claim that motivates the split. */
+/** The split read for re-bucket-straddling windows (one scan task per
+  * bucket of the final mapping, GraftScan.epochPartitions): every
+  * assertion here runs the SAME window twice, once through the split and
+  * once through the cross-bucket one-task-per-partition merge (the
+  * r14-proven oracle, forced via the plan-time toggles), and demands
+  * row-identical results — plus the parallelism claim that motivates the
+  * split. */
 class SplitWindowSuite extends SparkFixture {
   import spark.implicits._
 
@@ -94,7 +96,7 @@ class SplitWindowSuite extends SparkFixture {
                 newBucketNum = Some(1 + rnd.nextInt(5))), _ => true)
             case 4 => t.compaction()
             case 5 => // schema evolution mid-history: absent-column masks
-              // must survive the split's synthetic-run transport
+              // must survive the split
               val k = keys(rnd.nextInt(keys.size)).toLong
               t.upsert(Seq((k, s"w${rnd.nextInt(9)}", "insert",
                 rnd.nextInt(100))).toDF("id", "data", "op", s"extra$round"))
@@ -213,8 +215,8 @@ class SplitWindowSuite extends SparkFixture {
     }
   }
 
-  test("straddling window on an 8-bucket table runs >=8 tasks per side " +
-    "(the parallelism the split exists for)") {
+  test("straddling window on an 8-bucket table re-bucketed to 16 runs one " +
+    "stage of >=16 tasks and no shuffle") {
     withTempPath { path =>
       val t = GraftTable.create(spark,
         (1 to 400).map(i => (i.toLong, s"a$i")).toDF("id", "data"), path,
@@ -226,24 +228,40 @@ class SplitWindowSuite extends SparkFixture {
       t.compaction(CompactionOptions(newBucketNum = Some(16)), _ => true)
       tick()
       t.upsert((1 to 400).map(i => (i.toLong, s"c$i")).toDF("id", "data"))
-      val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      // the read's own jobs (by job group) and every completed stage
+      val readStages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val completed =
+        new java.util.concurrent.ConcurrentHashMap[Int, StageInfo]()
       val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(
+              _.getProperty("spark.jobGroup.id") == "split-window"))
+            e.stageIds.foreach(readStages.add(_))
         override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-          stages.add(e.stageInfo.numTasks)
+          completed.put(e.stageInfo.stageId, e.stageInfo)
       }
       spark.sparkContext.addSparkListener(listener)
       try {
         GraftRead.forceCrossBucketRead = false
-        val got = t.incremental(t0, t.lastCommitTs).collect()
+        spark.sparkContext.setJobGroup("split-window", "split-window read")
+        val got = try t.incremental(t0, t.lastCommitTs).collect()
+          finally spark.sparkContext.clearJobGroup()
         // listener events are async; give the bus a moment to drain
         Thread.sleep(500)
         assert(got.length == 400)
         assert(got.map(_.getString(1)).forall(_.startsWith("c")),
           "last epoch must win per key")
-        val wide = stages.toArray(Array.empty[Integer]).count(_ >= 8)
-        assert(wide >= 2,
-          s"expected >=8 tasks on both the old-epoch side and the final " +
-            s"merge side; stage task counts: ${stages.toArray.mkString(",")}")
+        val seen = readStages.toArray(Array.empty[Integer]).toSeq
+          .flatMap(id => Option(completed.get(id.intValue)))
+        val shape = seen.map(st => (st.numTasks,
+          st.taskMetrics.shuffleReadMetrics.recordsRead,
+          st.taskMetrics.shuffleWriteMetrics.recordsWritten))
+        assert(seen.size == 1 && seen.head.numTasks >= 16,
+          s"expected one stage of >=16 tasks; (tasks, shuffle read, " +
+            s"shuffle write) per stage: $shape")
+        assert(shape.forall { case (_, r, w) => r == 0 && w == 0 },
+          s"expected no shuffle; (tasks, shuffle read, shuffle write) per " +
+            s"stage: $shape")
       } finally spark.sparkContext.removeSparkListener(listener)
     }
   }

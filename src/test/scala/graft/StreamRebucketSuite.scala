@@ -66,8 +66,8 @@ class StreamRebucketSuite extends SparkFixture {
     }
   }
 
-  test("a checkpointed window already straddling the flip still cross-groups " +
-    "(no duplicate keys) — the pre-clamp fallback stays sound") {
+  test("a checkpointed window already straddling the flip plans one " +
+    "partition per final bucket and reads the model's rows") {
     withTempPath { path =>
       val t = GraftTable.create(spark,
         (1 to 12).map(i => (i.toLong, i)).toDF("id", "v"), path,
@@ -80,13 +80,24 @@ class StreamRebucketSuite extends SparkFixture {
       val stream = new GraftMicroBatchStream(spark, t.info,
         t.toDF.schema, Nil, t.tablePath)
       // a checkpoint committed across the flip (written before clamping
-      // existed) replays the straddling window as one batch: plan must
-      // fall back to the mapping-agnostic per-range-partition grouping —
-      // this unpartitioned table has ONE range partition, so one task
+      // existed) replays the straddling window as one batch: it plans the
+      // final (5-bucket) mapping, each partition reading the old 3-bucket
+      // runs through a key filter
       val parts = stream.planInputPartitions(GraftStreamOffset(0L),
         GraftStreamOffset(t.lastCommitTs))
-      assert(parts.length == 1 && parts.head.isInstanceOf[GraftBucketPartition],
-        s"straddling window must cross-group per range partition, got ${parts.toSeq}")
+      assert(parts.collect { case b: GraftBucketPartition => b.bucket }
+          .sameElements(0 until 5),
+        s"straddling window must plan the final buckets, got ${parts.toSeq}")
+      val factory = stream.createReaderFactory()
+      val got = parts.toSeq.flatMap { p =>
+        val r = factory.createReader(p)
+        try Iterator.continually(r.next()).takeWhile(identity)
+          .map(_ => (r.get().getLong(0), r.get().getInt(1))).toList
+        finally r.close()
+      }
+      // the window's model: the initial insert, then the upsert wins
+      assert(got.sorted == (1 to 12).map(i =>
+        (i.toLong, if (i <= 6) i * 10 else i)), got)
     }
   }
 
