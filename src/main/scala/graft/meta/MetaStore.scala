@@ -940,8 +940,8 @@ object MetaStore {
     * in one transaction and never sets this): present = a restore may
     * have crashed between them. Writers REFUSE while it is set (a commit
     * could bucket under the wrong count) and readers treat the table as
-    * mapping-ambiguous (RebucketLog.epochsOf / GraftTable.cuttableWindow
-    * route to the mapping-agnostic cross-bucket paths); re-running the
+    * mapping-ambiguous (RebucketLog.epochsOf routes reads and diffs to
+    * the mapping-agnostic cross-bucket merge); re-running the
     * restore completes the pair and clears it. */
   val RestorePendingProp = "graft.restore.pending"
 

@@ -6,17 +6,18 @@ package graft.meta
   * flight carries `ts1 = "open"`: the marker is written ATOMICALLY WITH
   * the bucketNum flip (before any file is rewritten) and closed when the
   * rewrite publishes, so a crash between the two can never leave a
-  * re-bucketed table with no recorded interval — readers see the open
-  * marker and treat every window past ts0 as mapping-ambiguous until a
-  * completed re-bucket closes it (conservative: cross-bucket merge, never
-  * a double-surfaced key).
+  * re-bucketed table with no recorded interval — readers see the flip
+  * boundary ts0 whether or not the marker is closed, and plan a file set
+  * spanning it under both mappings ([[epochsOf]]), never a
+  * double-surfaced key.
   *
   * Consumers: reads and diffs of a file set spanning an event must not pair
   * merge groups per bucket id (ids are not comparable across a mapping
-  * change — the scan plans such a set under its final mapping
-  * ([[epochsOf]]), the diff segments the window at the boundary, and both
-  * fall back to the cross-bucket merge), and restore replays the log to
-  * recover the bucketNum in effect at its target boundary.
+  * change — the scan plans such a set, and the diff the union of its two
+  * snapshots, under the final mapping ([[epochsOf]]), falling back to the
+  * per-range-partition merge when the mapping is ambiguous), and restore
+  * replays the log to recover the bucketNum in effect at its target
+  * boundary.
   *
   * The log keeps the newest [[MaxEvents]] entries; when pruning drops an
   * event the horizon property records the dropped boundary, and restores
@@ -36,13 +37,6 @@ object RebucketLog {
   val MaxEvents = 256
 
   private val OpenMark = "open"
-
-  /** Clock cushion (ms) applied around every event when deciding overlap /
-    * ambiguity: commit timestamps are store-stamped (monotonic bump) and
-    * may drift slightly off the event recorder's clock. Test hook — suites
-    * that build multi-epoch histories in milliseconds shrink it; real
-    * deployments keep the 1 s default. */
-  @volatile var cushionMs: Long = 1000L
 
   /** (ts0, ts1, oldN, newN); ts1 = Long.MaxValue for an open marker. */
   private[meta] def parse(props: Map[String, String]): Seq[(Long, Long, Int, Int)] =
@@ -96,34 +90,6 @@ object RebucketLog {
       case (a, b, o, n) if b == Long.MaxValue => (a, ts1, o, n)
       case e => e
     })
-
-  /** Does (tsA, tsB] overlap any mapping-change event? [[cushionMs]]
-    * cushion each side. An open marker overlaps every window reaching
-    * past its start, and a window starting BEFORE the prune horizon
-    * conservatively overlaps too: an event may have existed there that
-    * the log no longer records, and treating such a window as
-    * single-mapping would pair merge groups per bucket id across unknown
-    * mappings (duplicate keys) — the mapping-agnostic cross-bucket path
-    * costs parallelism, never correctness. */
-  def overlaps(props: Map[String, String], tsA: Long, tsB: Long): Boolean =
-    horizon(props).exists(tsA < _) ||
-      // an unfinished file-store restore (MetaStore.RestorePendingProp):
-      // heads may already carry the restored mapping while the count/event
-      // flip is missing — every window is mapping-ambiguous until the
-      // re-run completes it
-      props.contains(MetaStore.RestorePendingProp) ||
-      parse(props).exists { case (ts0, ts1, _, _) =>
-        tsA < (if (ts1 == Long.MaxValue) Long.MaxValue else ts1 + cushionMs) &&
-          tsB >= ts0 - cushionMs
-      }
-
-  /** The events overlapping (tsA, tsB] under the same cushion. */
-  def overlapping(props: Map[String, String], tsA: Long,
-      tsB: Long): Seq[(Long, Long, Int, Int)] =
-    parse(props).filter { case (ts0, ts1, _, _) =>
-      tsA < (if (ts1 == Long.MaxValue) Long.MaxValue else ts1 + cushionMs) &&
-        tsB >= ts0 - cushionMs
-    }
 
   /** bucketNum in effect at wall-clock `ts`, replayed from the recorded
     * events: the value at `ts` is the OLD count of the first event
@@ -184,9 +150,9 @@ object RebucketLog {
     *    dispatch under one count would double-surface straddling keys;
     *    the scan plans the final epoch's buckets, each reading every
     *    older run that can hold its keys.
-    *  - `None` — mapping-AMBIGUOUS: an unfinished restore is pending, a
-    *    file's commit timestamp is unknown (0), within [[cushionMs]] of a
-    *    flip, or at/under the prune horizon. Only the mapping-agnostic
+    *  - `None` — mapping-AMBIGUOUS: an unfinished restore is pending, or a
+    *    file's commit timestamp is unknown (0), equal to a flip boundary,
+    *    or at/under the prune horizon. Only the mapping-agnostic
     *    cross-bucket merge is safe.
     *
     * Why per-commit replay is sound: the count changes at an event's ts0

@@ -1,7 +1,7 @@
 package graft.read
 
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.TypeUtils
@@ -41,17 +41,18 @@ import graft.write.TransactionalWrite
   * This object holds the run planning ([[orderedRuns]]) and the merge
   * kernel ([[KWayMergeIterator]], [[GroupMerger]]) that [[GraftScan]]'s
   * partition readers run for every merged read, a file set spanning a
-  * re-bucket included. Its two RDD entry points serve what the scan does
-  * not plan yet: [[readRdd]] (the bucketed join) and [[diffRdd]] (the
-  * snapshot diff kernel).
+  * re-bucket included, and the snapshot diff kernel
+  * ([[SnapshotDiffIterator]], [[TeeIterator]]) that [[GraftDiffScan]]'s
+  * readers run. Its RDD entry point serves what no scan plans yet:
+  * [[readRdd]] (the bucketed join).
   */
 object BucketMergeRead {
 
   /** Test toggle: force the exact two-merge diff path even for windows the
-    * delta-shape gate would accept. Captured at PLAN time (outside the RDD
-    * closure) so it serializes with the task and behaves identically in
-    * distributed mode. The ModelCheck diff property routes each randomized
-    * window through both paths and asserts equal output. */
+    * delta-shape gate would accept. Captured when the diff scan builds its
+    * reader factory, so it serializes with the task and behaves identically
+    * in distributed mode. The ModelCheck diff property routes each
+    * randomized window through both paths and asserts equal output. */
   @volatile private[graft] var forceExactDiffPath: Boolean = false
 
   /** Test gauge: fast-path windows taken since last reset (guards the
@@ -201,169 +202,6 @@ object BucketMergeRead {
           BoundedMerge.iterator(readFn, g.runs.map(_._1).toIndexedSeq,
             g.runs.map(_._2).toArray, g.runs.map(_._3).toArray,
             keyIdxArr, keyTypesArr, merges, cap).map(proj)
-        }
-      }
-  }
-
-  /** ZERO-SHUFFLE snapshot diff (the scale path behind GraftTable.diff):
-    * both snapshots of a bucketed PK table share the bucket layout, so one
-    * task per bucket merges the OLD file set and the NEW file set
-    * independently (the same loser-tree merge reads use) and walks the two
-    * key-sorted streams in lockstep — keys only in old emit `delete`, only
-    * in new `insert`, value-changed keys the `update_preimage`/
-    * `update_postimage` pair, unchanged keys nothing. No exchange at all:
-    * the join-based form shuffles BOTH full snapshots on the PK; here cost
-    * is one narrow stage reading each snapshot's files once, and at
-    * 1000-executor scale the diff stays proportional to bucket data with
-    * zero network. Works across any commit mix (upserts, UPDATE/DELETE
-    * rewrites, compaction) because it compares the two MERGED states, not
-    * the file deltas. */
-  def diffRead(
-      spark: SparkSession,
-      table: TableInfo,
-      schema: StructType,
-      oldFiles: Seq[ResolvedFile],
-      newFiles: Seq[ResolvedFile],
-      bucketMerged: Boolean = false): DataFrame = {
-    val outSchema = schema.add("_change_type", StringType)
-    org.apache.spark.sql.graft.StreamShim.dfFromInternalRows(
-      spark,
-      diffRdd(spark, table, schema, oldFiles, newFiles, bucketMerged),
-      outSchema)
-  }
-
-  /** `bucketMerged = true` pairs the snapshots per PARTITION with all
-    * buckets k-way-merged into one global key order on each side, instead
-    * of the default per-(partition, bucket) pairing. Required when the
-    * diff window contains a RE-BUCKET: bucket-id pairing assumes the
-    * key->bucket mapping is stable across the window, and a changed
-    * bucketNum moves every key to a different bucket — the per-bucket diff
-    * then fabricates a delete+insert pair for every UNCHANGED key (caught
-    * by the ModelCheck re-bucket op). Costs bucket-level diff parallelism
-    * for exactly those windows, never the common case. */
-  def diffRdd(
-      spark: SparkSession,
-      table: TableInfo,
-      schema: StructType,
-      oldFiles: Seq[ResolvedFile],
-      newFiles: Seq[ResolvedFile],
-      bucketMerged: Boolean = false)
-    : org.apache.spark.rdd.RDD[InternalRow] = {
-    val reader = org.apache.spark.sql.graft.StreamShim.parquetReadFunction(spark, schema)
-    // one diff task per TOUCHED (partition, bucket): a pair whose ordered
-    // run structure is identical between the snapshots cannot differ, so
-    // it is skipped without reading a byte — an append-only window over a
-    // partitioned table diffs only the touched partitions' buckets
-    // (O(changed data), not O(table))
-    def byPB(fs: Seq[ResolvedFile]) =
-      if (bucketMerged) fs.groupBy(f => (f.partitionDesc, -1))
-      else fs.groupBy(f => (f.partitionDesc, f.file.bucketId))
-    def runSig(fs: Seq[ResolvedFile]) = fs.groupBy(_.commitOrdinal)
-      .toSeq.sortBy(_._1).map(_._2.map(_.file.path).sorted)
-    def toPf(run: Seq[ResolvedFile]) = run.map { f =>
-      PartitionedFile(InternalRow.empty, SparkPath.fromPathString(f.file.path),
-        0L, f.file.size)
-    }
-    // run split via orderedRuns, NOT a bare commitOrdinal groupBy: ordinals
-    // are per-partition, so a same-ordinal group may mix a tombstone commit
-    // with a data commit (or two schema-evolution states) across divergent
-    // partition histories. byPB keys by partitionDesc first, which makes
-    // single-partition groups today — but orderedRuns is the invariant, not
-    // an accident of the caller's grouping.
-    //
-    // bucketMerged: a run must stay KEY-SORTED for the k-way merge, and a
-    // commit's files concatenated across buckets are not — so each
-    // (commit, bucket) subgroup becomes its own run, ordered by commit
-    // ordinal first (merge precedence = run index; the rewrite that
-    // changed the mapping is itself the later commit, so last-wins stays
-    // exact even where old- and new-mapping runs overlap in key space).
-    def runsOf(fs: Seq[ResolvedFile])
-        : Seq[(Seq[PartitionedFile], Array[Boolean], Boolean)] =
-      if (bucketMerged)
-        fs.groupBy(f => (f.commitOrdinal, f.file.bucketId)).toSeq.sortBy(_._1)
-          .flatMap { case (_, sub) =>
-            orderedRuns(table, schema, sub).map { case (run, mask, tomb) =>
-              (toPf(run), mask, tomb)
-            }
-          }
-      else
-        orderedRuns(table, schema, fs).map { case (run, mask, tomb) =>
-          (toPf(run), mask, tomb)
-        }
-    val oldBy = byPB(oldFiles); val newBy = byPB(newFiles)
-    val pairs: Seq[(BucketGroup, BucketGroup)] =
-      (oldBy.keySet ++ newBy.keySet).toSeq.sorted
-        .filter { k =>
-          runSig(oldBy.getOrElse(k, Nil)) != runSig(newBy.getOrElse(k, Nil))
-        }
-        .map { case k @ (_, b) =>
-          (BucketGroup(b, runsOf(oldBy.getOrElse(k, Nil))),
-            BucketGroup(b, runsOf(newBy.getOrElse(k, Nil))))
-        }
-    val keyIdxArr = (table.rangeColumns ++ table.hashColumns)
-      .map(schema.fieldIndex).toArray
-    val keyTypesArr = keyIdxArr.map(schema.fields(_).dataType)
-    val merges = fieldMerges(table, schema)
-    val dts = schema.fields.map(_.dataType)
-    val cap = BoundedMerge.cap(spark, schema)
-    val forceExact = forceExactDiffPath
-    spark.sparkContext
-      .parallelize(pairs, math.max(1, pairs.size))
-      .mapPartitions { it =>
-        val readFn = reader.forTask()
-        val proj = UnsafeProjection.create(dts :+ StringType)
-        val keyComps = RowComp.makeComps(keyIdxArr, keyTypesArr)
-        val fieldComps = dts.zipWithIndex.map { case (dt, i) =>
-          RowComp.makeComp(i, dt)
-        }
-        it.flatMap { case (og, ng) =>
-          def mk(g: BucketGroup): Iterator[InternalRow] =
-            BoundedMerge.iterator(readFn, g.runs.map(_._1).toIndexedSeq,
-              g.runs.map(_._2).toArray, g.runs.map(_._3).toArray,
-              keyIdxArr, keyTypesArr, merges, cap)
-          def pq(r: (Seq[PartitionedFile], Array[Boolean], Boolean)) =
-            MergeReaderGauge.tracked(
-              r._1.iterator.flatMap(pf => flattenRows(readFn(pf))))
-          // DELTA-SHAPE fast path: when the old snapshot's runs are a strict
-          // PREFIX of the new's (the incremental-refresh / delta-DML window:
-          // every commit only ADDED runs), the shared runs are read ONCE —
-          // the merged old stream feeds the diff's old side AND, through a
-          // small tee, stands in as run 0 of the new-side merge. Exact by
-          // the same left-fold-prefix argument BoundedMerge's spill
-          // pre-merge relies on (fold(shared) then fold the delta runs on
-          // top IS the full fold). Gated on a uniform old mask so the
-          // pre-merged contribution's column-presence stays exact (same
-          // condition BoundedMerge groups on), on the delta run count
-          // fitting the open-reader budget (run 0 is the tee, so cap-1
-          // parquet runs remain), and on NO TOMBSTONE delta runs: the
-          // new-side merge drains tombstoned shared keys without emitting,
-          // so a tombstone deleting a long key range would pile the whole
-          // drained stretch into the tee's old-side buffer — the lockstep
-          // bound the tee depends on only holds when every consumed shared
-          // key produces an output row. Tombstone windows fall back to the
-          // exact two-merge path below.
-          def runSigOf(r: (Seq[PartitionedFile], Array[Boolean], Boolean)) =
-            (r._1.map(_.filePath.toString).sorted, r._2.toSeq, r._3)
-          val deltaShape = !forceExact &&
-            og.runs.nonEmpty && ng.runs.size > og.runs.size &&
-            og.runs.map(runSigOf) == ng.runs.take(og.runs.size).map(runSigOf) &&
-            og.runs.forall(r => java.util.Arrays.equals(r._2, og.runs.head._2)) &&
-            (ng.runs.size - og.runs.size) <= (cap - 1) &&
-            ng.runs.drop(og.runs.size).forall(!_._3)
-          if (deltaShape) {
-            deltaShapeCount.incrementAndGet()
-            val (oldSide, sharedAsRun) = TeeIterator.split(mk(og))
-            val deltaRuns = ng.runs.drop(og.runs.size)
-            val newIt = new KWayMergeIterator(
-              (sharedAsRun +: deltaRuns.map(pq)).toIndexedSeq,
-              keyIdxArr, keyTypesArr, merges, merges.length,
-              (og.runs.head._2 +: deltaRuns.map(_._2)).toArray,
-              (false +: deltaRuns.map(_._3)).toArray)
-            new SnapshotDiffIterator(oldSide, newIt, keyComps, fieldComps,
-              dts, proj)
-          } else
-            new SnapshotDiffIterator(mk(og), mk(ng), keyComps, fieldComps,
-              dts, proj)
         }
       }
   }

@@ -1012,25 +1012,34 @@ private[read] object GraftScan {
     }.toArray)
   }
 
-  /** One partition per RANGE PARTITION, every (commit, bucket) subgroup its
-    * own key-sorted run in commit order: exact under any mix of
-    * key->bucket mappings. */
+  /** One partition per RANGE PARTITION ([[crossBucketRuns]]): exact under
+    * any mix of key->bucket mappings. */
   def crossBucketPartitions(info: TableInfo, schema: StructType,
       files: Seq[ResolvedFile]): Array[InputPartition] =
     files.groupBy(_.partitionDesc).toSeq.sortBy(_._1).zipWithIndex
       .map { case ((_, fs), i) =>
-        GraftBucketPartition(i, runSpecs(
-          fs.groupBy(f => (f.commitOrdinal, f.file.bucketId)).toSeq.sortBy(_._1)
-            .flatMap { case (_, sub) =>
-              BucketMergeRead.orderedRuns(info, schema, sub) })): InputPartition
+        GraftBucketPartition(i, crossBucketRuns(info, schema, fs)): InputPartition
       }.toArray
+
+  /** The runs of one range partition's files, every (commit, bucket)
+    * subgroup its own key-sorted run in commit order. */
+  def crossBucketRuns(info: TableInfo, schema: StructType,
+      files: Seq[ResolvedFile]): Array[GraftRunSpec] =
+    runSpecs(files.groupBy(f => (f.commitOrdinal, f.file.bucketId)).toSeq
+      .sortBy(_._1).flatMap { case (_, sub) =>
+        BucketMergeRead.orderedRuns(info, schema, sub) })
 }
 
 /** One sorted run of one bucket: files + physical-column presence mask +
   * whether the run is a key-only tombstone run ([[graft.meta.Tombstone]]) +
   * the row filter of a run read into another mapping's bucket. */
 case class GraftRunSpec(files: Array[PartitionedFile], mask: Array[Boolean],
-    tomb: Boolean = false, keep: Option[KeyBucketFilter] = None)
+    tomb: Boolean = false, keep: Option[KeyBucketFilter] = None) {
+  /** Value identity (the arrays compare by reference): runs with equal
+    * signatures read the same rows. */
+  def signature: (Seq[String], Seq[Boolean], Boolean, Option[KeyBucketFilter]) =
+    (files.toSeq.map(_.filePath.toString), mask.toSeq, tomb, keep)
+}
 
 /** Keep the rows whose key lies in bucket `bucket` of `numBuckets`. */
 case class KeyBucketFilter(numBuckets: Int, bucket: Int)
@@ -1054,7 +1063,8 @@ case class GraftPartitionReaderFactory(
     cdcIdx: Int,
     allowColumnar: Boolean = false,
     maxOpenRuns: Int = BoundedMerge.DefaultCap,
-    hashIdx: Array[Int] = Array.empty) extends PartitionReaderFactory {
+    hashIdx: Array[Int] = Array.empty,
+    exactDiff: Boolean = false) extends PartitionReaderFactory {
 
   private def nFields: Int = schema.length
 
@@ -1123,16 +1133,77 @@ case class GraftPartitionReaderFactory(
     new GraftPartitionReader(batches, readFn)
   }
 
+  private def merged(readFn: PartitionedFile => Iterator[InternalRow],
+      runs: Array[GraftRunSpec]): Iterator[InternalRow] =
+    BoundedMerge.iterator(readFn,
+      runs.map(_.files.toSeq).toIndexedSeq, runs.map(_.mask),
+      runs.map(_.tomb), keyIdx, keyTypes, fieldMerges, maxOpenRuns,
+      runs.map(_.keep.map(keyFilter)).toIndexedSeq)
+
+  /** The snapshot diff of one [[GraftDiffPartition]]: both sides merged
+    * with the same loser-tree merge reads use, walked in lockstep by
+    * [[SnapshotDiffIterator]] — keys only in old emit `delete`, only in new
+    * `insert`, value-changed keys the `update_preimage`/`update_postimage`
+    * pair, unchanged keys nothing. It compares the two MERGED states, not
+    * the file deltas, so it is exact across any commit mix (upserts,
+    * UPDATE/DELETE rewrites, compaction, re-buckets).
+    *
+    * DELTA-SHAPE fast path: when the old side's runs are a strict PREFIX of
+    * the new side's (the incremental-refresh / delta-DML window: every
+    * commit only ADDED runs), the shared runs are read ONCE — the merged
+    * old stream feeds the diff's old side AND, through a small tee, stands
+    * in as run 0 of the new-side merge. Exact by the same left-fold-prefix
+    * argument BoundedMerge's spill pre-merge relies on (fold(shared) then
+    * fold the delta runs on top IS the full fold). Gated on a uniform old
+    * mask so the pre-merged contribution's column-presence stays exact
+    * (same condition BoundedMerge groups on), on the delta run count
+    * fitting the open-reader budget (run 0 is the tee, so cap-1 parquet
+    * runs remain), and on NO TOMBSTONE delta runs: the new-side merge
+    * drains tombstoned shared keys without emitting, so a tombstone
+    * deleting a long key range would pile the whole drained stretch into
+    * the tee's old-side buffer — the lockstep bound the tee depends on only
+    * holds when every consumed shared key produces an output row. Tombstone
+    * windows take the exact two-merge path. */
+  private def diffRows(readFn: PartitionedFile => Iterator[InternalRow],
+      oldRuns: Array[GraftRunSpec],
+      newRuns: Array[GraftRunSpec]): Iterator[InternalRow] = {
+    val dts = schema.fields.map(_.dataType)
+    val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(dts :+ org.apache.spark.sql.types.StringType)
+    val keyComps = RowComp.makeComps(keyIdx, keyTypes)
+    val fieldComps = dts.zipWithIndex.map { case (dt, i) => RowComp.makeComp(i, dt) }
+    val shared = oldRuns.length
+    val deltaShape = !exactDiff &&
+      shared > 0 && newRuns.length > shared &&
+      oldRuns.map(_.signature).sameElements(newRuns.take(shared).map(_.signature)) &&
+      oldRuns.forall(r => java.util.Arrays.equals(r.mask, oldRuns.head.mask)) &&
+      (newRuns.length - shared) <= (maxOpenRuns - 1) &&
+      newRuns.drop(shared).forall(!_.tomb)
+    if (deltaShape) {
+      BucketMergeRead.deltaShapeCount.incrementAndGet()
+      val (oldSide, sharedAsRun) = TeeIterator.split(merged(readFn, oldRuns))
+      val deltaRuns = newRuns.drop(shared)
+      val newIt = new KWayMergeIterator(
+        (sharedAsRun +: deltaRuns.toSeq.map(r => BoundedMerge.parquetRows(readFn,
+          BoundedMerge.RunSource(r.files.toSeq, null, r.mask, r.tomb,
+            r.keep.map(keyFilter))))).toIndexedSeq,
+        keyIdx, keyTypes, fieldMerges, nFields,
+        (oldRuns.head.mask +: deltaRuns.map(_.mask)),
+        (false +: deltaRuns.map(_.tomb)))
+      new SnapshotDiffIterator(oldSide, newIt, keyComps, fieldComps, dts, proj)
+    } else
+      new SnapshotDiffIterator(merged(readFn, oldRuns), merged(readFn, newRuns),
+        keyComps, fieldComps, dts, proj)
+  }
+
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val readFn = reader.forTask(closeAtTaskEnd = false)
     val rows: Iterator[InternalRow] = p match {
-      case GraftBucketPartition(_, runs) =>
-        BoundedMerge.iterator(readFn,
-          runs.map(_.files.toSeq).toIndexedSeq, runs.map(_.mask),
-          runs.map(_.tomb), keyIdx, keyTypes, fieldMerges, maxOpenRuns,
-          runs.map(_.keep.map(keyFilter)).toIndexedSeq)
+      case GraftBucketPartition(_, runs) => merged(readFn, runs)
       case GraftFilePartition(f, _) =>
         BucketMergeRead.flattenRows(readFn(f))
+      case GraftDiffPartition(oldRuns, newRuns) =>
+        diffRows(readFn, oldRuns, newRuns)
     }
     val visible =
       if (cdcIdx < 0) rows

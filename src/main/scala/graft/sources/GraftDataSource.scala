@@ -321,8 +321,7 @@ class GraftStreamSource(
     // cut candidate windows at re-bucket flip boundaries: each side is
     // then mapping-consistent, so the batch reads each file once under its
     // own mapping instead of reading old-mapping files into several final
-    // buckets (or, for diff mode, the per-partition bucket-merged
-    // pairing) — matters for a catch-up batch after a restart from a
+    // buckets — matters for a catch-up batch after a restart from a
     // pre-re-bucket checkpoint
     def clamp(cand: Long): Long =
       graft.meta.RebucketLog.clampAtFlip(table.info.properties, s, cand)

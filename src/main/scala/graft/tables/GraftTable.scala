@@ -126,45 +126,6 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
     GraftRead.read(spark, info, files, keepCdcRows = true)
   }
 
-  /** Cuttability of (start, end] for a segmented diff: the recorded
-    * mapping-change events overlapping the window, when the diff may cut
-    * around every one — all events closed, their cushion zones pairwise
-    * separated, the window not reaching past the event-log prune horizon,
-    * and no non-compaction commit inside any zone (the bucketNum flip
-    * lands somewhere inside, so such a commit could carry either mapping).
-    * One store fetch covers every zone. None -> the window is genuinely
-    * ambiguous; the diff falls back to the mapping-agnostic bucket-merged
-    * pairing. Evaluated against the CALLER's TableInfo snapshot — mixing
-    * the caller's properties with a fresh info.bucketNum under a
-    * concurrent re-bucket would pair files with the wrong mapping. */
-  private def cuttableWindow(t: TableInfo, start: Long, end: Long)
-      : Option[Seq[(Long, Long, Int, Int)]] = {
-    val cu = RebucketLog.cushionMs
-    // past the prune horizon an event may have existed that the log no
-    // longer records — neither cutting nor plain per-bucket pairing is
-    // safe there (RebucketLog scaladoc contract); likewise under an
-    // unfinished file-store restore the mapping is unresolvable
-    if (RebucketLog.horizon(t.properties).exists(start < _)) return None
-    if (t.properties.contains(MetaStore.RestorePendingProp)) return None
-    val events = RebucketLog.overlapping(t.properties, start, end).sortBy(_._1)
-    if (events.exists(_._2 == Long.MaxValue)) return None // in progress
-    val separated = events.sliding(2).forall {
-      case Seq((_, e1, _, _), (s2, _, _, _)) => s2 - cu > e1 + cu
-      case _ => true
-    }
-    if (!separated) return None
-    if (events.isEmpty) return Some(events)
-    val descs = store.partitionsChangedBetween(tablePath,
-      events.map(_._1 - cu).min, events.map(_._2 + cu).max)
-    val lineages = store.partitionVersionsBulk(tablePath, descs)
-    val ambiguous = events.exists { case (ts0, ts1, _, _) =>
-      lineages.values.flatten.exists(v =>
-        v.timestamp > ts0 - cu && v.timestamp <= ts1 + cu &&
-          v.commitOp != CommitOp.Compaction)
-    }
-    if (ambiguous) None else Some(events)
-  }
-
   /** Row-level change feed over (startTime, endTime] — the CDF shape
     * (Delta's `table_changes`, Iceberg's changelog scan; beyond the
     * reference, which stops at the file-level incremental read): full rows
@@ -175,13 +136,16 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
     * marker IS the change type, O(delta) cost (the format stores
     * postimages only, so no preimage rows by construction). Non-CDC PK
     * tables reconstruct exact row changes by comparing the two snapshots
-    * on the primary key: one full-outer sort-merge join, a single PK
-    * shuffle per side — exact for every commit type (upsert, UPDATE/DELETE
-    * rewrites, compaction), where marking every row of a rewritten file —
-    * the naive incremental-files approach — would fabricate updates for
-    * untouched rows that merely rode along in a rewrite. Both snapshots
-    * read under the CURRENT schema (per-file evolution null-fills), so the
-    * comparison is well-typed across schema changes. */
+    * on the merge key: one DSv2 scan ([[graft.read.GraftDiffScan]]) whose
+    * every input partition merges one key range of both snapshots and
+    * walks them in lockstep — no shuffle, and a key range whose runs are
+    * unchanged is not read. Exact for every commit type (upsert,
+    * UPDATE/DELETE rewrites, compaction, re-bucket), where marking every
+    * row of a rewritten file — the naive incremental-files approach —
+    * would fabricate updates for untouched rows that merely rode along in
+    * a rewrite. Both snapshots read under the CURRENT schema (per-file
+    * evolution null-fills), so the comparison is well-typed across schema
+    * changes. */
   def diff(startTime: Long, endTime: Long, strict: Boolean = false): DataFrame = {
     val ct = "_change_type"
     info.cdcColumn match {
@@ -198,164 +162,28 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
       case None =>
         require(info.hasPrimaryKey,
           s"diff requires a primary-key or CDC table: $tablePath")
+        val oldFiles = resolver.filesUptoTime(tablePath, startTime)
+        val newFiles = resolver.filesUptoTime(tablePath, endTime)
+        // read after the files, the info records every re-bucket flip a
+        // resolved commit can follow: the scan pairs both snapshots under
+        // the mapping of their union
         val t = info
-        if (!GraftTable.rebucketOverlaps(t.properties, startTime, endTime)) {
-          // scale path: both snapshots share the bucket layout, so the
-          // diff runs as one task per bucket walking two loser-tree merges
-          // in lockstep — ZERO shuffle (diffViaJoin shuffles both
-          // snapshots; it remains only for custom agg-only merge ops).
-          // Widen the id bound like GraftRead.read: a window entirely
-          // BEFORE an in-flight down-re-bucket carries old-mapping ids
-          // that exceed the already-flipped count — raw-id pairing stays
-          // exact (no mapping change inside the window), and without the
-          // widening every such diff paid diffViaJoin's double shuffle.
-          val oldFiles = resolver.filesUptoTime(tablePath, startTime)
-          val newFiles = resolver.filesUptoTime(tablePath, endTime)
-          val maxId = (oldFiles.iterator ++ newFiles.iterator)
-            .map(_.file.bucketId).foldLeft(-1)(math.max)
-          val tw = if (maxId >= t.bucketNum) t.copy(bucketNum = maxId + 1) else t
-          if (graft.read.BucketMergeRead.supports(tw, schema, oldFiles) &&
-              graft.read.BucketMergeRead.supports(tw, schema, newFiles))
-            return graft.read.BucketMergeRead.diffRead(
-              spark, tw, schema, oldFiles, newFiles)
-          return diffViaJoin(startTime, endTime)
-        }
-        // the window crosses a re-bucket: bucket-id snapshot pairing would
-        // fabricate a delete+insert pair for every unchanged key. SEGMENT
-        // the window at the event boundaries when possible — the re-bucket
-        // is a pure rewrite (snapshot DATA identical on both sides of its
-        // zone, enforced by cuttableWindow's ambiguity probe), so
-        // diff(start, end) == compose(diff per same-mapping segment), each
-        // segment zero-shuffle per-bucket parallel and the composition
-        // touching DELTAS only. Unsegmentable windows fall back to the
-        // per-partition bucket-merged pairing.
-        diffSegments(t, startTime, endTime)
-          .filter(_ => !GraftTable.forceBucketMergedDiff) // test oracle
-          .map(_.map { case (a, b) => diffSegment(t, a, b) })
-          .filter(_.forall(_.nonEmpty))
-          .map(parts => composeDiffs(parts.flatten))
-          .getOrElse(diffFallback(t, startTime, endTime))
+        val s = graft.util.SchemaUtil.fromJson(t.schemaJson)
+        if (graft.read.BucketMergeRead.opsSupported(t, s) &&
+            (oldFiles.iterator ++ newFiles.iterator).forall(_.file.bucketId >= 0))
+          graft.read.GraftDiffScan.read(spark, t, oldFiles, newFiles)
+        else diffViaJoin(startTime, endTime)
     }
   }
 
-  /** Same-mapping snapshot points cutting (start, end] around each
-    * re-bucket event: (start, e1.ts0-1000], [e1.ts1+1000, e2.ts0-1000],
-    * ..., [em.ts1+1000, end]. Valid because each event's cushion zone
-    * contains ONLY compaction commits (checked) — the data at a zone's two
-    * edges is identical, so the zone contributes no changes and skipping
-    * it loses nothing. None when any overlapping event is open, not
-    * strictly inside the window (an endpoint lands in a zone — that
-    * snapshot's mapping is ambiguous), zones collide, or a zone holds a
-    * non-compaction commit. */
-  private def diffSegments(t: TableInfo,
-      start: Long, end: Long): Option[Seq[(Long, Long)]] = {
-    val cu = RebucketLog.cushionMs
-    cuttableWindow(t, start, end)
-      .flatMap { events =>
-      // a diff can only cut around events lying STRICTLY inside: an
-      // endpoint inside a zone leaves that snapshot's mapping ambiguous
-      if (events.exists { case (ts0, ts1, _, _) =>
-          !(start < ts0 - cu && end > ts1 + cu) }) None
-      else {
-        val pts = start +: events.flatMap { case (ts0, ts1, _, _) =>
-          Seq(ts0 - cu, ts1 + cu) } :+ end
-        Some(pts.grouped(2).map { case Seq(a, b) => (a, b) }.toSeq)
-      }
-    }
-  }
-
-  /** Zero-shuffle per-bucket diff of one same-mapping segment; None when
-    * the segment's snapshots don't fit one bucket layout after all
-    * (defensive) or the merge ops need the aggregate fallback. */
-  private def diffSegment(t: TableInfo, a: Long, b: Long): Option[DataFrame] = {
-    val na = RebucketLog.bucketNumAt(a, t.properties, t.bucketNum)
-    val nb = RebucketLog.bucketNumAt(b, t.properties, t.bucketNum)
-    if (na != nb) return None
-    val ts = t.copy(bucketNum = na)
-    val of = resolver.filesUptoTime(tablePath, a)
-    val nf = resolver.filesUptoTime(tablePath, b)
-    if (graft.read.BucketMergeRead.supports(ts, schema, of) &&
-        graft.read.BucketMergeRead.supports(ts, schema, nf))
-      Some(graft.read.BucketMergeRead.diffRead(spark, ts, schema, of, nf))
-    else None
-  }
-
-  /** Cross-re-bucket diff fallback: per-partition bucket-merged snapshot
-    * pairing when the merge ops allow it (bucket ids are ignored, so it
-    * serves down-buckets too — stale ids only made the per-bucket gate
-    * refuse), else the join form. */
-  private def diffFallback(t: TableInfo, start: Long, end: Long): DataFrame = {
-    val oldFiles = resolver.filesUptoTime(tablePath, start)
-    val newFiles = resolver.filesUptoTime(tablePath, end)
-    val ok = graft.read.BucketMergeRead.opsSupported(t, schema) &&
-      (oldFiles.iterator ++ newFiles.iterator).forall(_.file.bucketId >= 0)
-    if (ok) graft.read.BucketMergeRead.diffRead(spark, t, schema,
-      oldFiles, newFiles, bucketMerged = true)
-    else diffViaJoin(start, end)
-  }
-
-  /** Compose consecutive change feeds — d1 over (s0, s1], d2 over
-    * (s1, s2], ... — into the exact feed over (s0, sN]: per key, the
-    * window PREIMAGE is the first feed that saw the key's (its snapshot
-    * state at s0; later feeds' preimages equal earlier feeds' postimages
-    * by construction), the window POSTIMAGE the last feed's, and equal
-    * pre/post elide (A -> B -> A nets to no change — exactly what a
-    * direct two-snapshot diff reports). Every shuffle here is over CHANGE
-    * ROWS only — never a snapshot. */
-  private def composeDiffs(parts: Seq[DataFrame]): DataFrame = {
-    val ct = "_change_type"
-    // the full merge identity: range columns lead (a hash key may repeat
-    // across range partitions; the per-bucket diff kernel compares the
-    // same composite key)
-    val pks = (info.rangeColumns ++ info.hashColumns).distinct
-    val qc = graft.util.SchemaUtil.qcol _
-    val cols = schema.fieldNames.toSeq
-    // one row per key: (_pre struct?, _post struct?, _in=true)
-    def shaped(d: DataFrame): DataFrame =
-      d.groupBy(pks.map(qc): _*).agg(
-        first(when(col(ct).isin("delete", "update_preimage"),
-          struct(cols.map(qc): _*)), ignoreNulls = true).as("_pre"),
-        first(when(col(ct).isin("insert", "update_postimage"),
-          struct(cols.map(qc): _*)), ignoreNulls = true).as("_post"))
-        .withColumn("_in", lit(true))
-    def compose(l: DataFrame, r: DataFrame): DataFrame = {
-      val lx = l.select((pks.map(qc) :+ col("_pre").as("_lp") :+
-        col("_post").as("_lq") :+ col("_in").as("_li")): _*)
-      val rx = r.select((pks.map(qc) :+ col("_pre").as("_rp") :+
-        col("_post").as("_rq") :+ col("_in").as("_ri")): _*)
-      lx.join(rx, pks, "full_outer").select((pks.map(qc) :+
-        when(coalesce(col("_li"), lit(false)), col("_lp"))
-          .otherwise(col("_rp")).as("_pre") :+
-        when(coalesce(col("_ri"), lit(false)), col("_rq"))
-          .otherwise(col("_lq")).as("_post") :+
-        lit(true).as("_in")): _*)
-    }
-    val folded = parts.map(shaped).reduceLeft(compose)
-    val noChange = org.apache.spark.sql.types.ArrayType(StructType(Seq(
-      StructField("r", StructType(schema.fields)),
-      StructField("t", org.apache.spark.sql.types.StringType))))
-    val change = when(col("_pre").isNull && col("_post").isNotNull,
-        array(struct(col("_post").as("r"), lit("insert").as("t"))))
-      .when(col("_post").isNull && col("_pre").isNotNull,
-        array(struct(col("_pre").as("r"), lit("delete").as("t"))))
-      .when(col("_pre").isNotNull && col("_post").isNotNull &&
-          !(col("_pre") <=> col("_post")),
-        array(struct(col("_pre").as("r"), lit("update_preimage").as("t")),
-          struct(col("_post").as("r"), lit("update_postimage").as("t"))))
-      .otherwise(lit(null).cast(noChange))
-    folded.select(explode(change).as("_gc"))
-      .select((cols.map(c =>
-        col(s"_gc.r.`${c.replace("`", "``")}`").as(c)) :+
-        col("_gc.t").as(ct)): _*)
-  }
-
-  /** Join-based CDF form — the fallback [[diff]] uses when the bucket
-    * kernel can't (custom agg-only merge ops), kept callable for the
-    * kernel-vs-join probe (`tools/DiffProbe`). Shuffles BOTH snapshots on
-    * the PK. */
+  /** Join-based CDF form — the fallback [[diff]] uses when the diff scan
+    * can't (custom agg-only merge ops, negative bucket ids), kept callable
+    * for the kernel-vs-join probe (`tools/DiffProbe`). Shuffles BOTH
+    * snapshots on the merge key: range columns lead it, as in the merge
+    * itself (a hash key may repeat across range partitions). */
   private[graft] def diffViaJoin(startTime: Long, endTime: Long): DataFrame = {
     val ct = "_change_type"
-    val pks = info.hashColumns
+    val pks = (info.rangeColumns ++ info.hashColumns).distinct
     val cols = schema.fieldNames.toSeq
     def pack(df: DataFrame, as: String): DataFrame = df.select(
       struct(pks.map(graft.util.SchemaUtil.qcol): _*).as("_gk"),
@@ -2764,12 +2592,6 @@ case class CompactionOptions(
     newBucketNum: Option[Int] = None)
 
 object GraftTable {
-  /** Test toggle: route cross-re-bucket diffs through the per-partition
-    * bucket-merged pairing instead of the segment composition — the
-    * equivalence ORACLE of SplitWindowSuite (the two forms must agree on
-    * any history). Plan-time only. */
-  @volatile private[graft] var forceBucketMergedDiff = false
-
   /** Replication cursor ([[GraftTable.replicateFrom]]): the source commit
     * timestamp this replica has applied up to. */
   val ReplicaCursorProp = "graft.replica.cursor"
@@ -2781,19 +2603,15 @@ object GraftTable {
   /** Wall-clock key->bucket MAPPING-CHANGE events
     * ("start:end:oldN:newN,..." ms, oldest first, pruned to the last 256 —
     * one entry per re-bucket or bucket-reverting restore; a massive
-    * rewrite op, so the list stays tiny). Two consumers:
-    * [[GraftTable.diff]] windows overlapping an event pair the snapshots
-    * per PARTITION (bucket ids are not comparable across a mapping change
-    * — [[graft.read.BucketMergeRead.diffRdd]] bucketMerged), and
+    * rewrite op, so the list stays tiny). Two consumers: every read and
+    * diff of a file set plans it under the mapping(s) its files' commits
+    * were written with ([[graft.meta.RebucketLog.epochsOf]] — bucket ids
+    * are not comparable across a mapping change), and
     * [[GraftTable.restoreToTimestamp]] replays the event log to restore
     * the bucketNum in effect at the target boundary (RESTORE pointing
     * old-mapping files under a new bucketNum would plant the
     * duplicate-key state RebucketMixSuite pins). */
   val RebucketIntervalsProp: String = graft.meta.RebucketLog.Prop
-
-  private[tables] def rebucketOverlaps(props: Map[String, String],
-      tsA: Long, tsB: Long): Boolean =
-    graft.meta.RebucketLog.overlaps(props, tsA, tsB)
 
   private[tables] def bucketNumAt(ts: Long,
       props: Map[String, String], current: Int): Int =

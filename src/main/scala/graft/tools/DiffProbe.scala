@@ -9,13 +9,15 @@ import graft.tables.GraftTable
   * lineitem-scale PK table, applies an update + delete + upsert mix, then
   * times the ZERO-SHUFFLE bucket kernel against the full-outer-join form on
   * the identical version pair (min of 3 each, correctness cross-checked
-  * row-for-row first). */
+  * row-for-row first). Then the same pair on a window across an 8->16
+  * re-bucket: an 8-bucket copy of the table takes an upsert, the re-bucket
+  * and a second upsert back to back, and the diff over all three is timed
+  * against the join form. Runs on `local[*]`. */
 object DiffProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master("local[*]")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.extensions", "graft.sql.GraftSparkExtensions")
@@ -43,16 +45,30 @@ object DiffProbe {
       .withColumn("l_quantity", col("l_quantity") * 2))
     val ts2 = t.lastCommitTs
 
-    val kernel = t.diff(ts1, ts2)
-    val joined = t.diffViaJoin(ts1, ts2)
-    val nk = kernel.count(); val nj = joined.count()
-    require(nk == nj && kernel.exceptAll(joined).isEmpty
-      && joined.exceptAll(kernel).isEmpty,
-      s"kernel ($nk rows) and join ($nj rows) forms disagree")
-    println(s"[diffprobe] rows=$nk over ${li.count()} source rows; " +
-      "forms agree row-for-row")
-    time("diff kernel (zero-shuffle)")(kernel.count())
-    time("diff via full-outer join")(joined.count())
+    def compare(tag: String, tbl: GraftTable, a: Long, b: Long): Unit = {
+      val kernel = tbl.diff(a, b)
+      val joined = tbl.diffViaJoin(a, b)
+      val nk = kernel.count(); val nj = joined.count()
+      require(nk == nj && kernel.exceptAll(joined).isEmpty
+        && joined.exceptAll(kernel).isEmpty,
+        s"$tag: kernel ($nk rows) and join ($nj rows) forms disagree")
+      println(s"[diffprobe] $tag: rows=$nk over ${li.count()} source rows; " +
+        s"forms agree row-for-row; kernel tasks=${kernel.rdd.getNumPartitions}")
+      time(s"$tag: diff kernel (zero-shuffle)")(kernel.count())
+      time(s"$tag: diff via full-outer join")(joined.count())
+    }
+    compare("32 buckets", t, ts1, ts2)
+
+    val rb = GraftTable.create(spark, li, dir + "-rebucket",
+      hashColumns = Seq("lid"), bucketNum = 8)
+    val rb1 = rb.lastCommitTs
+    rb.upsert(li.filter(col("lid") % 7 === 0)
+      .withColumn("l_quantity", col("l_quantity") + 1))
+    rb.compaction(graft.tables.CompactionOptions(newBucketNum = Some(16)),
+      _ => true)
+    rb.upsert(li.filter(col("lid") % 13 === 0)
+      .withColumn("l_quantity", col("l_quantity") * 2))
+    compare("8->16 re-bucket window", rb, rb1, rb.lastCommitTs)
     spark.stop()
   }
 }

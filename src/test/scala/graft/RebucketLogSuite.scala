@@ -2,31 +2,43 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.meta.RebucketLog
+import graft.meta.{DataFileInfo, RebucketLog, ResolvedFile}
 
 /** Unit pins for the mapping-change event log (graft.meta.RebucketLog):
-  * open/close lifecycle, overlap cushions, bucketNum replay, pruning +
+  * open/close lifecycle, epoch assignment, bucketNum replay, pruning +
   * horizon. The event log is what keeps incremental/diff windows exact
   * across re-buckets (CdcModelCheckSuite drives the end-to-end part). */
 class RebucketLogSuite extends AnyFunSuite {
 
   private val empty = Map.empty[String, String]
 
+  /** A file committed at `ts` (ms). */
+  private def at(ts: Long): ResolvedFile =
+    ResolvedFile(DataFileInfo(s"f$ts", "add", 1L, 0), 0, "-5", ts)
+
+  /** Epoch counts of a set of files committed at `tss`, oldest first;
+    * None when the set's mapping is ambiguous. */
+  private def epochs(props: Map[String, String], current: Int,
+      tss: Long*): Option[Seq[Int]] =
+    RebucketLog.epochsOf(props, current, tss.map(at)).map(_.map(_._1))
+
   test("open marker overlaps every window past its start and closes in place") {
     val open = RebucketLog.appendOpen(empty, ts0 = 10000L, oldN = 4, newN = 8)
-    // a crash between flip and publish leaves exactly this state: every
-    // window reaching past ts0 must be treated as mapping-ambiguous
-    assert(RebucketLog.overlaps(open, 20000L, 1e15.toLong))
-    assert(RebucketLog.overlaps(open, 0L, 10000L))
-    assert(!RebucketLog.overlaps(open, 0L, 8000L), "fully before ts0-1000")
+    // a crash between flip and publish leaves exactly this state: a set
+    // reaching past ts0 spans both mappings, split at the flip
+    assert(epochs(open, 8, 5000L, 20000L, 1e15.toLong) == Some(Seq(4, 8)))
+    assert(epochs(open, 8, 20000L, 1e15.toLong) == Some(Seq(8)))
+    assert(epochs(open, 8, 1000L, 8000L) == Some(Seq(4)), "fully before ts0")
+    assert(epochs(open, 8, 5000L, 10000L).isEmpty,
+      "a commit stamped exactly at the flip cannot be ordered")
     // bucketNum replay still works with the open end
     assert(RebucketLog.bucketNumAt(5000L, open, current = 8) == 4)
     assert(RebucketLog.bucketNumAt(20000L, open, current = 8) == 8)
 
     val closed = RebucketLog.close(open, ts1 = 30000L)
-    assert(!RebucketLog.overlaps(closed, 40000L, 50000L),
-      "a closed event no longer flags later windows")
-    assert(RebucketLog.overlaps(closed, 25000L, 40000L))
+    assert(epochs(closed, 8, 40000L, 50000L) == Some(Seq(8)),
+      "a closed event no longer splits later sets")
+    assert(epochs(closed, 8, 5000L, 25000L, 40000L) == Some(Seq(4, 8)))
     assert(closed(RebucketLog.Prop) == "10000:30000:4:8")
   }
 
@@ -35,7 +47,7 @@ class RebucketLogSuite extends AnyFunSuite {
     val retried = RebucketLog.appendOpen(crashed, 2000L, 8, 16)
     val done = RebucketLog.close(retried, 5000L)
     assert(done(RebucketLog.Prop) == "1000:5000:4:8,2000:5000:8:16")
-    assert(!RebucketLog.overlaps(done, 7000L, 9000L))
+    assert(epochs(done, 16, 7000L, 9000L) == Some(Seq(16)))
   }
 
   test("pruning keeps open markers, records the horizon, and bucketNumAt " +
@@ -59,14 +71,19 @@ class RebucketLogSuite extends AnyFunSuite {
 
   test("windows reaching past the prune horizon or under a pending restore " +
     "are conservatively mapping-ambiguous") {
-    val horizoned = Map(RebucketLog.HorizonProp -> "5000")
-    assert(RebucketLog.overlaps(horizoned, 1000L, 9000L),
-      "a window starting before the horizon may span a pruned event")
-    assert(!RebucketLog.overlaps(horizoned, 6000L, 9000L),
-      "a window fully past the horizon with no events is single-mapping")
+    val horizoned = Map(RebucketLog.HorizonProp -> "5000",
+      RebucketLog.Prop -> "7000:7500:4:8")
+    assert(epochs(horizoned, 8, 1000L, 9000L).isEmpty,
+      "a file committed before the horizon may predate a pruned event")
+    assert(epochs(horizoned, 8, 6000L, 9000L) == Some(Seq(4, 8)),
+      "files past the horizon replay the retained events")
     val pending = Map(graft.meta.MetaStore.RestorePendingProp -> "1234")
-    assert(RebucketLog.overlaps(pending, 999999L, 9999999L),
-      "an unfinished restore makes every window mapping-ambiguous")
+    assert(epochs(pending, 8, 999999L, 9999999L).isEmpty,
+      "an unfinished restore makes every set mapping-ambiguous")
+    assert(epochs(empty, 8, 0L, 9000L) == Some(Seq(8)),
+      "no recorded event: one mapping, whatever the provenance")
+    assert(epochs(horizoned, 8, 0L, 9000L).isEmpty,
+      "an unknown commit timestamp is ambiguous once events exist")
   }
 
   test("legacy closed-format strings parse unchanged") {
@@ -74,7 +91,7 @@ class RebucketLogSuite extends AnyFunSuite {
     assert(RebucketLog.bucketNumAt(50L, props, current = 2) == 4)
     assert(RebucketLog.bucketNumAt(250L, props, current = 2) == 8)
     assert(RebucketLog.bucketNumAt(500L, props, current = 2) == 2)
-    assert(RebucketLog.overlaps(props, 150L, 350L))
-    assert(!RebucketLog.overlaps(props, 1500L, 3500L))
+    assert(epochs(props, 2, 50L, 250L, 500L) == Some(Seq(4, 8, 2)))
+    assert(epochs(props, 2, 1500L, 3500L) == Some(Seq(2)))
   }
 }

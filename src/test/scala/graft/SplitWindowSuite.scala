@@ -3,37 +3,22 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, max_by}
 
-import graft.meta.TableInfo
+import graft.meta.{RebucketLog, TableInfo}
 import graft.read.GraftRead
 import graft.tables.{CompactionOptions, GraftTable}
 
 /** The split read for re-bucket-straddling windows (one scan task per
-  * bucket of the final mapping, GraftScan.epochPartitions): every
+  * bucket of the final mapping, GraftScan.epochPartitions; for a diff, one
+  * per final bucket pairing both snapshots, GraftDiffScan): every
   * assertion here runs the SAME window twice, once through the split and
   * once through the cross-bucket one-task-per-partition merge (the
-  * r14-proven oracle, forced via the plan-time toggles), and demands
+  * r14-proven oracle, forced via the plan-time toggle), and demands
   * row-identical results — plus the parallelism claim that motivates the
   * split. */
 class SplitWindowSuite extends SparkFixture {
   import spark.implicits._
-
-  // histories here are built in milliseconds: shrink the clock cushion so
-  // the split planner can actually cut (with the production 1 s cushion
-  // every fast-test delta lands "inside" an event zone and the planner
-  // correctly falls back to the cross path — itself covered below by the
-  // ambiguous-history rounds that keep the default-cushion behavior)
-  private val cushion = 5L
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    graft.meta.RebucketLog.cushionMs = cushion
-  }
-  override def afterAll(): Unit = {
-    graft.meta.RebucketLog.cushionMs = 1000L
-    super.afterAll()
-  }
-  /** Step past the cushion so the next commit is outside any event zone. */
-  private def tick(): Unit = Thread.sleep(3 * cushion)
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -42,24 +27,54 @@ class SplitWindowSuite extends SparkFixture {
     * split-path rows for additional assertions. */
   private def bothWays(what: String)(mk: => DataFrame): Seq[String] = {
     GraftRead.forceCrossBucketRead = false
-    GraftTable.forceBucketMergedDiff = false
     val split = rows(mk)
     GraftRead.forceCrossBucketRead = true
-    GraftTable.forceBucketMergedDiff = true
-    val cross = try rows(mk) finally {
-      GraftRead.forceCrossBucketRead = false
-      GraftTable.forceBucketMergedDiff = false
-    }
+    val cross = try rows(mk) finally GraftRead.forceCrossBucketRead = false
     assert(split == cross,
       s"$what: split vs cross-bucket diverged\nsplit:\n${split.mkString("\n")}" +
         s"\ncross:\n${cross.mkString("\n")}")
     split
   }
 
+  /** Run `body` under job group `group` and return its result with the
+    * (tasks, shuffle bytes read, shuffle bytes written) of every stage its
+    * jobs ran. */
+  private def stagesOf[T](group: String)(body: => T): (T, Seq[(Int, Long, Long)]) = {
+    val readStages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val completed =
+      new java.util.concurrent.ConcurrentHashMap[Int, StageInfo]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(readStages.add(_))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        completed.put(e.stageInfo.stageId, e.stageInfo)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      val out = try body finally spark.sparkContext.clearJobGroup()
+      // listener events are async; give the bus a moment to drain
+      Thread.sleep(500)
+      (out, readStages.toArray(Array.empty[Integer]).toSeq
+        .flatMap(id => Option(completed.get(id.intValue)))
+        .map(st => (st.numTasks,
+          st.taskMetrics.shuffleReadMetrics.totalBytesRead,
+          st.taskMetrics.shuffleWriteMetrics.bytesWritten)))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Re-bucket flips recorded inside (a, b]. */
+  private def flipsIn(t: GraftTable, a: Long, b: Long): Int =
+    t.info.properties.get(RebucketLog.Prop).toSeq.flatMap(_.split(","))
+      .count { e => val ts0 = e.split(":")(0).toLong; ts0 > a && ts0 <= b }
+
   test("random histories: incremental + diff across re-buckets are " +
-    "byte-equal between the split and cross-bucket paths (multi-event " +
-    "windows common — readSplitWindow accepts N epochs, so the soak must " +
-    "routinely hand it 2-3 mixed up/down flips per window)") {
+    "byte-equal between the final-bucket partitions and the cross-bucket " +
+    "merge (multi-flip windows common — the epoch planner accepts N " +
+    "epochs, so the soak must routinely hand it 2-3 mixed up/down flips " +
+    "per window)") {
     val rnd = new scala.util.Random(1515)
     var windowsChecked = 0
     var windowsMultiEvent = 0
@@ -101,7 +116,6 @@ class SplitWindowSuite extends SparkFixture {
               t.upsert(Seq((k, s"w${rnd.nextInt(9)}", "insert",
                 rnd.nextInt(100))).toDF("id", "data", "op", s"extra$round"))
           }
-          tick()
           boundaries :+= t.lastCommitTs
         }
         // windows: full history + a few random sub-windows
@@ -112,9 +126,7 @@ class SplitWindowSuite extends SparkFixture {
         }
         windows.distinct.foreach { case (a, b) =>
           windowsChecked += 1
-          if (graft.meta.RebucketLog.overlapping(
-              t.info.properties, a, b).size >= 2)
-            windowsMultiEvent += 1
+          if (flipsIn(t, a, b) >= 2) windowsMultiEvent += 1
           bothWays(s"round $round incremental($a,$b) cdc=$cdc") {
             t.incremental(a, b)
           }
@@ -138,11 +150,8 @@ class SplitWindowSuite extends SparkFixture {
         hashColumns = Seq("id"), bucketNum = 2,
         properties = Map(TableInfo.mergeOpProp("v") -> "sum_all"))
       val t0 = t.lastCommitTs
-      tick()
       t.upsert(Seq((1L, Option.empty[Int], "y")).toDF("id", "v", "pad")) // poison 1
-      tick()
       t.compaction(CompactionOptions(newBucketNum = Some(3)), _ => true)
-      tick()
       t.upsert(Seq((1L, Some(7), "z"), (2L, Some(4), "z")).toDF("id", "v", "pad"))
       // window starts AFTER the initial insert: key 1 folds (null, 7) ->
       // poisoned null; key 2 folds (4) -> 4. The one-merge and the split
@@ -161,13 +170,9 @@ class SplitWindowSuite extends SparkFixture {
         (1 to 8).map(i => (i.toLong, s"a$i")).toDF("id", "data"), path,
         hashColumns = Seq("id"), bucketNum = 2)
       val t0 = t.lastCommitTs
-      tick()
       t.upsert(Seq((100L, "newcomer")).toDF("id", "data")) // epoch-1 insert
-      tick()
       t.compaction(CompactionOptions(newBucketNum = Some(4)), _ => true)
-      tick()
       t.deleteTombstone($"id" === 100L || $"id" === 3L) // epoch-2 tombstone
-      tick()
       t.upsert(Seq((3L, "revived")).toDF("id", "data")) // epoch-2 revive
       // a non-CDC tombstone publishes as Rewrite, which ABORTS incremental
       // delivery for the partition over ANY window containing it — the
@@ -199,12 +204,9 @@ class SplitWindowSuite extends SparkFixture {
         Seq((1L, "a"), (2L, "b")).toDF("id", "data"), path,
         hashColumns = Seq("id"), bucketNum = 2)
       val t0 = t.lastCommitTs
-      tick()
       // epoch 1 adds column extra for key 1 only
       t.upsert(Seq((1L, "a2", 41)).toDF("id", "data", "extra"))
-      tick()
       t.compaction(CompactionOptions(newBucketNum = Some(3)), _ => true)
-      tick()
       // epoch 2 writes key 1 WITHOUT extra: the old value must survive
       // (mask semantics), not be nulled by the newer run
       t.upsert(Seq((1L, "a3")).toDF("id", "data"))
@@ -222,47 +224,104 @@ class SplitWindowSuite extends SparkFixture {
         (1 to 400).map(i => (i.toLong, s"a$i")).toDF("id", "data"), path,
         hashColumns = Seq("id"), bucketNum = 8)
       val t0 = t.lastCommitTs
-      tick()
       t.upsert((1 to 400).map(i => (i.toLong, s"b$i")).toDF("id", "data"))
-      tick()
       t.compaction(CompactionOptions(newBucketNum = Some(16)), _ => true)
-      tick()
       t.upsert((1 to 400).map(i => (i.toLong, s"c$i")).toDF("id", "data"))
-      // the read's own jobs (by job group) and every completed stage
-      val readStages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-      val completed =
-        new java.util.concurrent.ConcurrentHashMap[Int, StageInfo]()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(
-              _.getProperty("spark.jobGroup.id") == "split-window"))
-            e.stageIds.foreach(readStages.add(_))
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-          completed.put(e.stageInfo.stageId, e.stageInfo)
+      GraftRead.forceCrossBucketRead = false
+      val (got, shape) = stagesOf("split-window") {
+        t.incremental(t0, t.lastCommitTs).collect()
       }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        GraftRead.forceCrossBucketRead = false
-        spark.sparkContext.setJobGroup("split-window", "split-window read")
-        val got = try t.incremental(t0, t.lastCommitTs).collect()
-          finally spark.sparkContext.clearJobGroup()
-        // listener events are async; give the bus a moment to drain
-        Thread.sleep(500)
-        assert(got.length == 400)
-        assert(got.map(_.getString(1)).forall(_.startsWith("c")),
-          "last epoch must win per key")
-        val seen = readStages.toArray(Array.empty[Integer]).toSeq
-          .flatMap(id => Option(completed.get(id.intValue)))
-        val shape = seen.map(st => (st.numTasks,
-          st.taskMetrics.shuffleReadMetrics.recordsRead,
-          st.taskMetrics.shuffleWriteMetrics.recordsWritten))
-        assert(seen.size == 1 && seen.head.numTasks >= 16,
-          s"expected one stage of >=16 tasks; (tasks, shuffle read, " +
-            s"shuffle write) per stage: $shape")
-        assert(shape.forall { case (_, r, w) => r == 0 && w == 0 },
-          s"expected no shuffle; (tasks, shuffle read, shuffle write) per " +
-            s"stage: $shape")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(got.length == 400)
+      assert(got.map(_.getString(1)).forall(_.startsWith("c")),
+        "last epoch must win per key")
+      assert(shape.size == 1 && shape.head._1 >= 16,
+        s"expected one stage of >=16 tasks; (tasks, shuffle bytes read, " +
+          s"shuffle bytes written) per stage: $shape")
+      assert(shape.forall { case (_, r, w) => r == 0 && w == 0 },
+        s"expected no shuffle; (tasks, shuffle bytes read, shuffle bytes " +
+          s"written) per stage: $shape")
+    }
+  }
+
+  test("a diff across an 8->16 re-bucket with upserts on both sides of the " +
+    "flip runs one stage of >=16 tasks and no shuffle, rows equal to the " +
+    "cross path and a plain-Spark model") {
+    withTempPath { path =>
+      val init = (1 to 400).map(i => (i.toLong, s"a$i")).toDF("id", "data")
+      val before = (1 to 400 by 2).map(i => (i.toLong, s"b$i")).toDF("id", "data")
+      val after = ((1 to 400 by 3) ++ (401 to 450))
+        .map(i => (i.toLong, s"c$i")).toDF("id", "data")
+      val t = GraftTable.create(spark, init, path,
+        hashColumns = Seq("id"), bucketNum = 8)
+      val t0 = t.lastCommitTs
+      t.upsert(before)
+      t.compaction(CompactionOptions(newBucketNum = Some(16)), _ => true)
+      t.upsert(after)
+      val t1 = t.lastCommitTs
+      GraftRead.forceCrossBucketRead = false
+      val (got, shape) = stagesOf("split-diff")(rows(t.diff(t0, t1)))
+      assert(shape.size == 1 && shape.head._1 >= 16,
+        s"expected one stage of >=16 tasks; (tasks, shuffle bytes read, " +
+          s"shuffle bytes written) per stage: $shape")
+      assert(shape.forall { case (_, r, w) => r == 0 && w == 0 },
+        s"expected no shuffle; (tasks, shuffle bytes read, shuffle bytes " +
+          s"written) per stage: $shape")
+      assert(bothWays("diff across 8->16")(t.diff(t0, t1)) == got)
+      // plain-Spark model: the newest write per key, compared with the
+      // initial rows on the key
+      val newest = Seq(init, before, after).zipWithIndex
+        .map { case (d, v) => d.withColumn("_v", lit(v)) }.reduce(_ union _)
+        .groupBy("id").agg(max_by(col("data"), col("_v")).as("data"))
+      val model = init.as("o").join(newest.as("n"), Seq("id"), "full_outer")
+        .select(col("id"), col("o.data").as("od"), col("n.data").as("nd"))
+        .as[(Long, Option[String], Option[String])].collect().toSeq
+        .flatMap {
+          case (k, None, Some(n)) => Seq(s"[$k,$n,insert]")
+          case (k, Some(o), None) => Seq(s"[$k,$o,delete]")
+          case (k, Some(o), Some(n)) if o != n =>
+            Seq(s"[$k,$o,update_preimage]", s"[$k,$n,update_postimage]")
+          case _ => Nil
+        }.sorted
+      assert(got == model)
+      assert(got.size == 2 * 267 + 50, got.size)
+    }
+  }
+
+  test("a non-CDC diff plans one DSv2 scan with no exchange on " +
+    "single-mapping, straddling (8->16, 16->8, 8->12) and ambiguous windows") {
+    def planOf(df: DataFrame): String = {
+      df.collect()
+      df.queryExecution.executedPlan.toString
+    }
+    for ((oldN, newN) <- Seq((8, 16), (16, 8), (8, 12))) {
+      withTempPath { path =>
+        val t = GraftTable.create(spark,
+          (1 to 200).map(i => (i.toLong, s"a$i")).toDF("id", "data"), path,
+          hashColumns = Seq("id"), bucketNum = oldN)
+        val t0 = t.lastCommitTs
+        t.upsert((1 to 200 by 2).map(i => (i.toLong, s"b$i")).toDF("id", "data"))
+        val t1 = t.lastCommitTs
+        t.compaction(CompactionOptions(newBucketNum = Some(newN)), _ => true)
+        t.upsert((1 to 200 by 3).map(i => (i.toLong, s"c$i")).toDF("id", "data"))
+        val t2 = t.lastCommitTs
+        val windows = Seq("single" -> (t0, t1), "straddling" -> (t0, t2))
+        for ((shape, (a, b)) <- windows) {
+          val plan = planOf(t.diff(a, b))
+          assert(plan.contains("BatchScan") && plan.contains("GraftDiffScan") &&
+            !plan.contains("Exchange") && !plan.contains("ExistingRDD"),
+            s"$oldN->$newN $shape:\n$plan")
+          bothWays(s"$oldN->$newN $shape")(t.diff(a, b))
+        }
+        // an unfinished restore makes every file set mapping-ambiguous:
+        // both snapshots pair per range partition, still one scan
+        graft.meta.MetaStore.default.updateProperties(path)(_ +
+          (graft.meta.MetaStore.RestorePendingProp -> "0:0"))
+        val plan = planOf(t.diff(t0, t2))
+        assert(plan.contains("GraftDiffScan") && !plan.contains("Exchange") &&
+          !plan.contains("ExistingRDD"), s"$oldN->$newN ambiguous:\n$plan")
+        assert(t.diff(t0, t2).rdd.getNumPartitions == 1)
+        bothWays(s"$oldN->$newN ambiguous")(t.diff(t0, t2))
+      }
     }
   }
 
@@ -281,16 +340,12 @@ class SplitWindowSuite extends SparkFixture {
           bucketNum = 2,
           properties = Map(TableInfo.CdcColumnProp -> "op"))
         val t0 = t.lastCommitTs
-        tick()
         t.upsert(keys.filter(_ % 2 == 0).map(k =>
           (k.toLong, part(k), s"w$k", "insert")).toDF("id", "part", "data", "op"))
-        tick()
         t.compaction(CompactionOptions(newBucketNum = Some(3 + round)), _ => true)
-        tick()
         // partition-scoped delta: only p0 moves in the new epoch
         t.upsert(keys.filter(k => k % nParts == 0).map(k =>
           (k.toLong, part(k), s"x$k", "insert")).toDF("id", "part", "data", "op"))
-        tick()
         t.dropPartition(s"part=p${nParts - 1}")
         val head = t.lastCommitTs
         bothWays(s"round $round partitioned incremental") {
@@ -312,11 +367,8 @@ class SplitWindowSuite extends SparkFixture {
         (1 to 8).map(i => (i.toLong, s"a$i")).toDF("id", "data"), path,
         hashColumns = Seq("id"), bucketNum = 2)
       val t0 = t.lastCommitTs
-      tick()
       t.upsert(Seq((9L, "x")).toDF("id", "data"))
-      tick()
       t.compaction(CompactionOptions(newBucketNum = Some(4)), _ => true)
-      tick()
       t.deleteTombstone($"id" === 3L) // Rewrite commit inside the window
       intercept[graft.meta.NonIncrementalWindowException] {
         t.incremental(t0, t.lastCommitTs, strict = true).collect()
@@ -324,20 +376,16 @@ class SplitWindowSuite extends SparkFixture {
     }
   }
 
-  test("diff across a re-bucket: segment composition elides A->B->A and " +
-    "nets insert+delete to nothing") {
+  test("diff across a re-bucket elides A->B->A and nets insert+delete " +
+    "to nothing") {
     withTempPath { path =>
       val t = GraftTable.create(spark,
         Seq((1L, "A"), (2L, "keep"), (3L, "gone")).toDF("id", "data"), path,
         hashColumns = Seq("id"), bucketNum = 2)
       val t0 = t.lastCommitTs
-      tick()
       t.upsert(Seq((1L, "B"), (9L, "temp")).toDF("id", "data")) // epoch 1
-      tick()
       t.compaction(CompactionOptions(newBucketNum = Some(4)), _ => true)
-      tick()
       t.upsert(Seq((1L, "A"), (4L, "new")).toDF("id", "data")) // back to A
-      tick()
       t.deleteTombstone($"id" === 9L || $"id" === 3L)
       val got = bothWays("diff compose") {
         t.diff(t0, t.lastCommitTs)

@@ -19,9 +19,9 @@ class StreamRebucketSuite extends SparkFixture {
   import spark.implicits._
 
   private def flipTs(t: GraftTable): Long = {
-    val evs = RebucketLog.overlapping(t.info.properties, 0L, Long.MaxValue)
+    val evs = t.info.properties.get(RebucketLog.Prop).toSeq.flatMap(_.split(","))
     assert(evs.size == 1, s"expected one re-bucket event, got $evs")
-    evs.head._1
+    evs.head.split(":")(0).toLong
   }
 
   test("DSv2 catch-up offsets cut at the flip; both sides plan per-bucket") {
