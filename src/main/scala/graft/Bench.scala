@@ -580,10 +580,9 @@ object Bench {
 
     // bucketed join (library API): the two co-bucketed graft tables are
     // INPUTS, so they build untimed (symmetric with the spj_join_sql entry
-    // below) and only the zero-exchange join itself is timed. Probe-measured
-    // at sf0.1: the O(1)-memory RDD merge-join path (0.23-0.33 s join-only)
-    // beats the Catalyst SPJ path (0.28-0.69 s) — the r2->r3 "regression"
-    // was entirely the table writes being timed inside the query.
+    // below) and only the zero-exchange join itself is timed. Both entries
+    // time the same plan, a storage-partitioned sort-merge join: one
+    // through `bucketedJoin`, one through SQL over catalog tables.
     try {
       val cstIn = spark.read.parquet(s"$sfDir/customer.parquet")
         .selectExpr("c_custkey AS custkey", "c_name", "c_mktsegment")
@@ -596,7 +595,7 @@ object Bench {
       val bjr = GraftTable.create(spark, ordIn,
         graft.tools.ProbeTmp.dir("graft-bench-bjr-"),
         hashColumns = Seq("custkey"), bucketNum = cpus.toInt)
-      bjl.bucketedJoin(bjr).count() // warm-up (JIT the merge-join path)
+      bjl.bucketedJoin(bjr).count() // warm-up
       results("bucketed_join") = medianOf3 { bjl.bucketedJoin(bjr).count() }
     } catch { case e: Throwable =>
       System.err.println(s"[bench] bucketed_join scenario failed: ${e.getMessage}")

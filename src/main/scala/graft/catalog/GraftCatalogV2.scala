@@ -383,6 +383,24 @@ class GraftCatalogV2 extends TableCatalog with SupportsNamespaces
   // ---------------------------------------------------------- functions
 
   override def listFunctions(namespace: Array[String]): Array[Identifier] =
+    GraftFunctionCatalog.listFunctions(namespace)
+
+  override def loadFunction(ident: Identifier): UnboundFunction =
+    GraftFunctionCatalog.loadFunction(ident)
+}
+
+/** The catalog of graft's functions alone: `bucket` ([[GraftBucketFunction]]).
+  * Every library relation carries it
+  * ([[org.apache.spark.sql.graft.StreamShim.dsv2Df]]), so Spark resolves the
+  * scan's reported `bucket(n, pk)` partitioning and plans storage-partitioned
+  * joins between library reads. It serves no tables: a relation holding a
+  * pinned file set (`snapshotAt`, `incremental`) is never reloaded through
+  * it. [[GraftCatalogV2]] serves the same functions by delegating here. */
+object GraftFunctionCatalog extends FunctionCatalog {
+  override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = ()
+  override def name(): String = "graft"
+
+  override def listFunctions(namespace: Array[String]): Array[Identifier] =
     Array(Identifier.of(Array.empty[String], "bucket"))
 
   override def loadFunction(ident: Identifier): UnboundFunction =

@@ -1,11 +1,8 @@
 package graft.read
 
-import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
@@ -43,8 +40,8 @@ import graft.write.TransactionalWrite
   * partition readers run for every merged read, a file set spanning a
   * re-bucket included, and the snapshot diff kernel
   * ([[SnapshotDiffIterator]], [[TeeIterator]]) that [[GraftDiffScan]]'s
-  * readers run. Its RDD entry point serves what no scan plans yet:
-  * [[readRdd]] (the bucketed join).
+  * readers run. It plans no read itself: every merged read, the bucketed
+  * join's two sides included, is a [[GraftScan]].
   */
 object BucketMergeRead {
 
@@ -59,14 +56,6 @@ object BucketMergeRead {
     * both-paths property against vacuously passing on fallback-only data). */
   private[graft] val deltaShapeCount =
     new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** One run of one bucket: files sorted by partition desc + the run's
-    * physical-column presence mask over the read schema (schema evolution:
-    * files written before a column existed mark it absent — absent is NOT
-    * an explicit null, MergeParquetScan.scala:211-257) + whether the run is
-    * a key-only tombstone run ([[graft.meta.Tombstone]]). */
-  private case class BucketGroup(
-      bucket: Int, runs: Seq[(Seq[PartitionedFile], Array[Boolean], Boolean)])
 
   /** Presence mask of one run's physical columns over the read schema. */
   def presentMask(schema: StructType, existCols: String): Array[Boolean] =
@@ -162,52 +151,8 @@ object BucketMergeRead {
     }
   }
 
-  private def bucketGroups(table: TableInfo, schema: StructType,
-      files: Seq[ResolvedFile]): Seq[BucketGroup] =
-    (0 until table.bucketNum).map { b =>
-      val runs = orderedRuns(table, schema, files.filter(_.file.bucketId == b))
-        .map { case (fs, mask, tomb) =>
-          (fs.map { f =>
-            PartitionedFile(InternalRow.empty, SparkPath.fromPathString(f.file.path),
-              0L, f.file.size)
-          }, mask, tomb)
-        }
-      BucketGroup(b, runs)
-    }
-
-  /** The merged rows as an RDD whose partition index == bucket id (the
-    * basis for co-located bucketed joins, SURVEY.md §2.4 J4). */
-  def readRdd(
-      spark: SparkSession,
-      table: TableInfo,
-      schema: StructType,
-      files: Seq[ResolvedFile])
-    : org.apache.spark.rdd.RDD[InternalRow] = {
-    val reader = org.apache.spark.sql.graft.StreamShim.parquetReadFunction(spark, schema)
-    val groups = bucketGroups(table, schema, files)
-
-    val keyIdx = (table.rangeColumns ++ table.hashColumns).map(schema.fieldIndex)
-    val keyTypes = keyIdx.map(schema.fields(_).dataType)
-    val merges = fieldMerges(table, schema)
-    val keyIdxArr = keyIdx.toArray
-    val keyTypesArr = keyTypes.toArray
-    val cap = BoundedMerge.cap(spark, schema)
-
-    spark.sparkContext
-      .parallelize(groups, math.max(1, groups.size))
-      .mapPartitions { it =>
-        val readFn = reader.forTask()
-        val proj = UnsafeProjection.create(schema.fields.map(_.dataType))
-        it.flatMap { g =>
-          BoundedMerge.iterator(readFn, g.runs.map(_._1).toIndexedSeq,
-            g.runs.map(_._2).toArray, g.runs.map(_._3).toArray,
-            keyIdxArr, keyTypesArr, merges, cap).map(proj)
-        }
-      }
-  }
-
   /** Per-output-field merge specs for a table + read schema — shared by the
-    * RDD path and the DSv2 partition readers. sum_last/joined_last collapse
+    * scan and diff partition readers. sum_last/joined_last collapse
     * to sum/join at read time: each run already holds only its last value
     * per key (dedup-on-write applied the intra-batch last-writer-wins). */
   def fieldMerges(table: TableInfo, schema: StructType): Array[FieldMerge] =

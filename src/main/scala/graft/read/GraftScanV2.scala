@@ -35,6 +35,9 @@ import graft.write.TransactionalWrite
   *   (spark.sql.sources.v2.bucketing.enabled) plans joins between
   *   co-bucketed graft tables with ZERO exchanges — the Catalyst-integrated
   *   rendition of the reference's DeltaJoin (SetPartitionAndOrdering.scala).
+  *   It covers catalog tables and library reads alike (`toDF`, pinned
+  *   snapshots, `GraftTable.bucketedJoin`): a library read resolves
+  *   `bucket` through [[graft.catalog.GraftFunctionCatalog]].
   */
 /** Shared key for the packed per-scan merge-operator option (M4). */
 object ExtractMergeOpProjectionOption {

@@ -1589,9 +1589,55 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
       partitionFilters, condition)
 
   /** Shuffle-free equi-join with another table bucketed on the same PK
-    * (J4 delta join — see [[graft.read.BucketedJoin]]). */
-  def bucketedJoin(other: GraftTable): DataFrame =
-    graft.read.BucketedJoin.join(this, other)
+    * (SURVEY.md §2.4 J4; reference: rules/SetPartitionAndOrdering.scala).
+    *
+    * A sort-merge join of the two tables' live-file reads. Both scans
+    * report `bucket(n, pk)` partitioning and their (range, pk) order, so
+    * Spark plans a storage-partitioned join: no exchange on either side,
+    * and no sort when neither table has range columns. CDC delete rows are
+    * elided on both sides, as in every snapshot read. Inner join on the
+    * hash columns; output = keys ++ left non-keys ++ right non-keys, a
+    * right column whose name the left side also has renamed `<name>_r`.
+    *
+    * The checks below are what make the plan exchange-free, so a pair that
+    * fails one is refused rather than joined with a shuffle. */
+  def bucketedJoin(other: GraftTable): DataFrame = {
+    val li = info; val ri = other.info
+    require(li.hasPrimaryKey && ri.hasPrimaryKey,
+      "bucketedJoin requires primary-key tables on both sides")
+    require(li.hashColumns == ri.hashColumns,
+      s"hash columns differ: ${li.hashColumns} vs ${ri.hashColumns}")
+    require(li.bucketNum == ri.bucketNum,
+      s"bucket counts differ: ${li.bucketNum} vs ${ri.bucketNum}")
+    val ls = schema; val rs = other.schema
+    val keys = li.hashColumns
+    keys.foreach { k =>
+      require(ls(k).dataType == rs(k).dataType,
+        s"join key '$k' type mismatch: ${ls(k).dataType} vs ${rs(k).dataType}")
+    }
+    val lFiles = liveFiles; val rFiles = other.liveFiles
+    require(graft.read.BucketMergeRead.supports(li, ls, lFiles)
+      && graft.read.BucketMergeRead.supports(ri, rs, rFiles),
+      "bucketedJoin requires bucket-merge-readable tables (no schema drift)")
+    // bucket-index pairing assumes BOTH sides' files were hashed under the
+    // CURRENT count's mapping: mid re-bucket (open marker / crashed
+    // attempt) or mid restore recovery a side can carry another mapping,
+    // and its scan then reports no partitioning to pair by
+    Seq(("left", li, lFiles), ("right", ri, rFiles)).foreach {
+      case (side, ti, fs) =>
+        require(RebucketLog.settledAt(ti.properties, ti.bucketNum, fs),
+          s"bucketedJoin: the $side table's key->bucket mapping is not " +
+            "settled (re-bucket in progress, a crashed re-bucket's open " +
+            "marker, or an unfinished restore); finish or repair() it, or " +
+            "use a regular join until it completes")
+    }
+    val rRenamed = rs.fieldNames.map { c =>
+      val q = graft.util.SchemaUtil.qcol(c)
+      if (!keys.contains(c) && ls.fieldNames.contains(c)) q.as(c + "_r") else q
+    }
+    GraftRead.read(spark, li, lFiles).hint("merge")
+      .join(GraftRead.read(spark, ri, rFiles).select(rRenamed.toIndexedSeq: _*), keys)
+  }
 
   /** SQL MERGE INTO, restricted translation (C5,
     * PreprocessTableMergeInto.scala:17-92): condition must be PK equality,

@@ -88,25 +88,9 @@ object Probe {
     val t2 = GraftTable.create(spark, ordAgg,
       java.nio.file.Files.createTempDirectory("bjr-").toFile.getAbsolutePath,
       hashColumns = Seq("custkey"), bucketNum = 32)
-    time("bucketedJoin (RDD path) 1")(t1.bucketedJoin(t2).count())
-    time("bucketedJoin (RDD path) 2")(t1.bucketedJoin(t2).count())
-
-    // SPJ path: same tables through the catalog, join-only timed
-    spark.conf.set("spark.sql.catalog.graft_cat", "graft.catalog.GraftCatalogV2")
-    spark.conf.set("spark.graft.warehouse",
-      java.nio.file.Files.createTempDirectory("probe-wh-").toFile.getAbsolutePath)
-    cst.createOrReplaceTempView("probe_l")
-    ordAgg.createOrReplaceTempView("probe_r")
-    spark.sql("CREATE TABLE graft_cat.p.l PARTITIONED BY (bucket(32, custkey)) " +
-      "AS SELECT * FROM probe_l")
-    spark.sql("CREATE TABLE graft_cat.p.r PARTITIONED BY (bucket(32, custkey)) " +
-      "AS SELECT * FROM probe_r")
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val spjSql = "SELECT l.custkey, c_name, c_mktsegment, n_orders " +
-      "FROM graft_cat.p.l l JOIN graft_cat.p.r r ON l.custkey = r.custkey"
-    time("SPJ SQL join 1")(spark.sql(spjSql).count())
-    time("SPJ SQL join 2")(spark.sql(spjSql).count())
+    // a storage-partitioned join: no exchange, no sort
+    time("bucketedJoin (SPJ) 1")(t1.bucketedJoin(t2).count())
+    time("bucketedJoin (SPJ) 2")(t1.bucketedJoin(t2).count())
 
     // ---------------- dedup_minhash breakdown --------------------------
     graft.functions.GraftFunctions.register(spark)
@@ -133,6 +117,8 @@ object Probe {
         .createTempDirectory("graft-probe-clus-").toFile.getAbsolutePath
       val ct = GraftTable.create(spark, li.repartition(32), cdir)
       ct.cluster(Seq("l_shipdate"), numFiles = 32)
+      spark.conf.set("spark.graft.warehouse",
+        java.nio.file.Files.createTempDirectory("probe-wh-").toFile.getAbsolutePath)
       graft.catalog.GraftCatalog.register(spark, "default.probe_li", cdir)
       spark.conf.set("spark.sql.catalog.graft_cat", "graft.catalog.GraftCatalogV2")
       // l_shipdate is TIMESTAMP_NTZ in the testdata: a LocalDateTime literal

@@ -9,7 +9,7 @@ import graft.meta.TableInfo
 /** Typed ordering over partition-desc strings.
   *
   * A MOR run concatenates one bucket's files across range partitions
-  * (BucketMergeRead.bucketGroups); the k-way merge then compares rows with
+  * (BucketMergeRead.orderedRuns); the k-way merge then compares rows with
   * TYPED (rangeCols ++ pkCols) comparators (RowComp: nulls first, per-type
   * primitive compares). The run is only sorted under that comparator if the
   * files are concatenated in the TYPED order of their range values — the

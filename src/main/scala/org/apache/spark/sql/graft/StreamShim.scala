@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 
 /** Lives under org.apache.spark.sql to reach private[sql] internals — the
   * same integration technique the reference uses (its Spark module is rooted
-  * at org/apache/spark/sql/lakesoul). Only used by the streaming source:
-  * DSv1 Source.getBatch must return a DataFrame flagged isStreaming. */
+  * at org/apache/spark/sql/lakesoul): streaming DataFrames for the DSv1
+  * source, DSv2 relations for the library reads, and the parquet
+  * reader/writer handles the merge and the write paths share. */
 object StreamShim {
   def asStreaming(df: DataFrame): DataFrame = {
     val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -18,15 +19,6 @@ object StreamShim {
     val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     spark.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = false)
-  }
-
-  /** DataFrame over an RDD of InternalRow (bucket-merge read output). */
-  def dfFromInternalRows(
-      session: org.apache.spark.sql.SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val spark = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    spark.internalCreateDataFrame(rdd, schema, isStreaming = false)
   }
 
   /** Catalyst Expression of a Column (private[sql] in Spark 4). */
@@ -116,14 +108,19 @@ object StreamShim {
   }
 
   /** DataFrame over a DSv2 Table handle (logical DataSourceV2Relation —
-    * private[sql] create, hence this shim): library snapshot reads route
-    * through the same GraftScanV2 the SQL catalog uses, so they get filter
-    * pushdown, KeyGroupedPartitioning, and the columnar merge. */
+    * private[sql] create, hence this shim): library reads route through the
+    * same GraftScanV2 the SQL catalog uses, so they get filter pushdown,
+    * KeyGroupedPartitioning, and the columnar merge. The relation's catalog
+    * is [[graft.catalog.GraftFunctionCatalog]], which serves functions only:
+    * Spark resolves the reported `bucket(n, pk)` through it, so a join of
+    * two co-bucketed library reads plans no exchange, and with no table
+    * catalog and no identifier nothing can reload the table (a pinned file
+    * set stays pinned). */
   def dsv2Df(
       session: org.apache.spark.sql.SparkSession,
       table: org.apache.spark.sql.connector.catalog.Table): DataFrame = {
     val rel = org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-      .create(table, None, None)
+      .create(table, Some(graft.catalog.GraftFunctionCatalog), None)
     ofRows(session, rel)
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import graft.tables.GraftTable
 
@@ -25,6 +27,59 @@ class BucketedJoinSuite extends SparkFixture {
         // the whole point: no shuffle in the physical plan
         val plan = joined.queryExecution.executedPlan.toString
         assert(!plan.contains("Exchange"), s"unexpected exchange:\n$plan")
+        // both sides are DSv2 graft scans, no RDD read
+        assert(graftScans(joined) == 2, s"expected two GraftScans:\n$plan")
+        assert(!plan.contains("Scan ExistingRDD"), s"unexpected RDD scan:\n$plan")
+      }
+    }
+  }
+
+  private def graftScans(j: DataFrame): Int =
+    j.queryExecution.sparkPlan.collect {
+      case b: BatchScanExec if b.scan.isInstanceOf[graft.read.GraftScan] => b
+    }.size
+
+  /** A sort-merge join straight over two graft scans: no exchange, no sort. */
+  private def assertStoragePartitioned(j: DataFrame): Unit = {
+    val plan = j.queryExecution.executedPlan.toString
+    assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
+    assert(!plan.contains("Exchange"), s"unexpected exchange:\n$plan")
+    assert(!plan.contains("Sort "), s"unexpected sort:\n$plan")
+    assert(graftScans(j) == 2, s"expected two GraftScans:\n$plan")
+  }
+
+  test("toDF joins of co-bucketed tables plan storage-partitioned joins") {
+    // library relations resolve the scans' bucket(n, pk) partitioning, so
+    // a join of two reads needs no exchange, and their reported pk order
+    // leaves the sort-merge join no sort
+    withTempPath { p1 =>
+      withTempPath { p2 =>
+        val l = (1 to 300).map(i => (i.toLong, s"l$i")).toDF("id", "lv")
+        val r = (151 to 450).map(i => (i.toLong, i * 2)).toDF("id", "rv")
+        val t1 = GraftTable.create(spark, l, p1, hashColumns = Seq("id"), bucketNum = 4)
+        val t2 = GraftTable.create(spark, r, p2, hashColumns = Seq("id"), bucketNum = 4)
+        // a delta run on each side: updated, new and newly matching keys
+        val lDelta = Seq((200L, "L200"), (500L, "L500")).toDF("id", "lv")
+        val rDelta = Seq((200L, 999), (10L, 20)).toDF("id", "rv")
+        t1.upsert(lDelta)
+        t2.upsert(rDelta)
+        val lRows = l.join(lDelta, Seq("id"), "left_anti").union(lDelta)
+        val rRows = r.join(rDelta, Seq("id"), "left_anti").union(rDelta)
+        val expected = lRows.join(rRows, "id")
+
+        val joined = t1.toDF.hint("merge").join(t2.toDF, "id")
+        assertStoragePartitioned(joined)
+        assertSameRows(joined, expected)
+
+        // a pinned snapshot keeps its files through a later upsert
+        val pinnedTs = t1.history.map(_._2).max
+        Thread.sleep(3)
+        t1.upsert(Seq((200L, "L200b"), (300L, "L300b")).toDF("id", "lv"))
+        val pinned = t1.snapshotAt(pinnedTs).hint("merge").join(t2.toDF, "id")
+        assertStoragePartitioned(pinned)
+        assertSameRows(pinned, expected)
+        assert(t1.toDF.join(t2.toDF, "id").filter($"id" === 200L)
+          .head.getString(1) == "L200b")
       }
     }
   }
